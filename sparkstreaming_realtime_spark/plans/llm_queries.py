@@ -1098,26 +1098,22 @@ def streaming_ivf_serve_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "served")
 
     def serve_batch(batch_df, batch_id: int) -> None:
-        from ..streaming.sinks import _step
-
-        with _step(f"ivfserve b{batch_id} plan"):
-            queries = batch_df.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("__qv"),
-            )
-            res = sim.ivf_serve(
-                spark,
-                idx,
-                queries,
-                k=_KNN_JOIN_K,
-                probes=_IVF_KNN_PROBES,
-                exclude=F.col("vec_id") % _KNN_JOIN_MOD != 0,
-            )
+        queries = batch_df.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("__qv"),
+        )
+        res = sim.ivf_serve(
+            spark,
+            idx,
+            queries,
+            k=_KNN_JOIN_K,
+            probes=_IVF_KNN_PROBES,
+            exclude=F.col("vec_id") % _KNN_JOIN_MOD != 0,
+        )
         # overwrite-by-batch-dir: replayed epochs land idempotently
-        with _step(f"ivfserve b{batch_id} write"):
-            res.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch={batch_id}")
-            )
+        res.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch={batch_id}")
+        )
 
     q = run_available_now(
         qstream,

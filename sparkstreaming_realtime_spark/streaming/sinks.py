@@ -22,48 +22,14 @@ from .store import (
     COMPACT_EVERY,
     SubFold,
     compact_additive,
+    load_manifest,
     read_additive,
+    read_buckets,
     run_concurrent,
     store_parts,
+    swap_buckets,
     write_rows_parquet,
 )
-
-#: env flag: print per-step wall times inside the sink writers to
-#: stderr — the measure-first tool (guide §1) behind the optimization
-#: rounds' per-batch cost accounting. Off (zero overhead) unless set.
-STEP_TIMERS_ENV = "SPARK_GRAFT_STEP_TIMERS"
-
-
-class _step:
-    """Context manager: ``with _step("label"):`` prints the block's
-    wall time to stderr when :data:`STEP_TIMERS_ENV` is set."""
-
-    __slots__ = ("label", "t0")
-
-    def __init__(self, label: str):
-        self.label = label
-
-    def __enter__(self):
-        if os.environ.get(STEP_TIMERS_ENV):
-            import time
-
-            self.t0 = time.perf_counter()
-        else:
-            self.t0 = None
-        return self
-
-    def __exit__(self, *exc):
-        if self.t0 is not None:
-            import sys
-            import time
-
-            print(
-                f"[step] {self.label}: {time.perf_counter() - self.t0:.3f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-        return False
-
 
 def kafka_sink_options(
     topic: str,
@@ -114,7 +80,9 @@ def _overlap_compact(
     the manifest publish and the batch write completing replays the
     batch (offsets uncommitted), which overwrites its dirs and no-ops
     the already-advanced compaction — the same convergence argument as
-    the sequential order."""
+    the sequential order. Until that replay, an external reader sees
+    the folded view plus the partial ``batch=<id>`` dir (the known
+    window named in streaming/store.py)."""
     thunks = list(write_thunks)
     if compact_every:
         thunks.append(
@@ -122,7 +90,7 @@ def _overlap_compact(
                 spark, path, batch_id, folds, compact_every=compact_every
             )
         )
-    run_concurrent(thunks)
+    run_concurrent(spark, thunks)
 
 
 def idempotent_parquet_sink(
@@ -251,50 +219,6 @@ def _bucket_of(n_buckets: int, *cols) -> "F.Column":
     return F.pmod(F.hash(*cols), F.lit(int(n_buckets)))
 
 
-#: the bucketed-store manifest. Versioned layout::
-#:
-#:     <store>/_STORE.json          # atomic os.replace publish:
-#:                                  # {"n_buckets": N,
-#:                                  #  "ver": {"<bucket>": version},
-#:                                  #  "gc": [stale dir names]}
-#:     <store>/b=<bucket>-v<ver>/   # one parquet dir per LIVE bucket
-#:
-#: The manifest is the single commit point: a micro-batch stages its
-#: touched buckets as NEW version directories (old versions untouched
-#: in place), then publishes the manifest — readers resolve one
-#: manifest and see a CONSISTENT store (no torn window mixing pre-
-#: and post-batch buckets, which the in-place per-bucket rename swap
-#: had), and they never mutate anything (recovery/GC runs only in the
-#: write path). Superseded versions are reclaimed one batch LATER
-#: (the manifest's ``gc`` hand-off), giving a concurrent reader a
-#: full micro-batch interval of grace. ``n_buckets`` persists in the
-#: manifest, so reopening a store with a different value is a loud
-#: ValueError instead of silently splitting keys' state across two
-#: bucket layouts.
-_STORE_META = "_STORE.json"
-
-
-def _load_bucket_meta(path: str) -> dict | None:
-    import json
-
-    try:
-        with open(os.path.join(path, _STORE_META)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _publish_bucket_meta(path: str, meta: dict) -> None:
-    import json
-
-    tmp = os.path.join(path, _STORE_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, _STORE_META))
-
-
 def _bucket_meta(
     path: str, n_buckets: int | None, sizing: DataFrame | None = None
 ) -> dict:
@@ -308,7 +232,7 @@ def _bucket_meta(
     sizes itself from ``sizing`` (its batch-0 state frame) via
     :func:`_auto_buckets`. An explicit value is a pin — it still
     raises on reopen mismatch."""
-    meta = _load_bucket_meta(path)
+    meta = load_manifest(path)
     if meta is None:
         if n_buckets is None:
             n_buckets = _auto_buckets(sizing)
@@ -322,134 +246,31 @@ def _bucket_meta(
     return meta
 
 
-def _bucket_dir(bucket: int, version: int) -> str:
-    return f"b={int(bucket)}-v{int(version)}"
-
-
-def _read_buckets(spark, path: str, bucket_ids=None) -> DataFrame:
-    """Read a bucketed state store from one manifest snapshot; with
-    ``bucket_ids`` only the touched buckets' CURRENT version dirs are
-    even listed — the pruning the old layout got from a partition
-    filter, without exposing readers to in-flight writers. Never
-    mutates the store. Rows come back without ``__b`` (callers
-    re-derive it from the key columns — same hash, same value)."""
-    meta = _load_bucket_meta(path)
-    if meta is None or not meta["ver"]:
-        # never-written store: surface the same missing-path error
-        # the legacy layout raised
-        return spark.read.parquet(os.path.join(path, "b=*"))
-    ver = meta["ver"]
-    if bucket_ids is not None:
-        wanted = {str(int(b)) for b in bucket_ids}
-        keys = [k for k in ver if k in wanted]
-    else:
-        keys = list(ver)
-    dirs = [os.path.join(path, _bucket_dir(int(k), ver[k])) for k in keys]
-    if not dirs:
-        # all touched buckets are new: an empty, correctly-typed frame
-        any_dir = os.path.join(
-            path, _bucket_dir(int(next(iter(ver))), ver[next(iter(ver))])
-        )
-        return spark.read.parquet(any_dir).filter(F.lit(False))
-    return spark.read.parquet(*dirs)
-
-
-def _touched_buckets(incoming: DataFrame) -> list[int]:
-    """The distinct ``__b`` values of a batch — bounded by
-    STATE_BUCKETS rows, so the collect is a constant-sized plan."""
-    return sorted(
+def _bucketed(incoming: DataFrame, path: str, n_buckets, *keys):
+    """Open a bucket-version store for one batch: load (or size) its
+    manifest, tag ``incoming`` with its bucket ``__b`` of ``keys``,
+    and collect the touched buckets — at most n_buckets rows, so the
+    collect is a constant-sized plan. Returns (incoming, manifest,
+    sorted touched bucket ids)."""
+    meta = _bucket_meta(path, n_buckets, sizing=incoming)
+    incoming = incoming.withColumn(
+        "__b", _bucket_of(meta["n_buckets"], *keys)
+    )
+    buckets = sorted(
         r["__b"] for r in incoming.select("__b").distinct().collect()
     )
+    return incoming, meta, buckets
 
 
-def _swap_buckets(
-    out: DataFrame, path: str, bucket_ids: list[int], meta: dict
-) -> None:
-    """Manifest-committed bucket-granular state replacement: stage
-    ``out`` (which carries ``__b``) partitioned by bucket, rename
-    each staged bucket in as a NEW version directory (old versions
-    stay in place untouched), then atomically publish the manifest.
-
-    - Untouched buckets are never read, rewritten, or even listed —
-      per-batch I/O tracks the touched buckets, not the store.
-    - Readers resolve one manifest: they see the whole pre-batch
-      store or the whole post-batch store, never a torn mix, and a
-      crash at ANY point before the publish leaves the old manifest
-      pointing at fully-intact old versions (no recovery dance with
-      aside copies — the old data was never moved).
-    - A touched bucket with no staged output (possible only for
-      stores where a key can be evicted, e.g. dim tombstones) drops
-      out of the manifest — leaving it would resurrect evicted keys.
-    - Superseded version dirs go on the manifest's ``gc`` list and
-      are reclaimed at the NEXT swap (one-interval reader grace);
-      version dirs a crash orphaned before their publish are swept by
-      :func:`_recover_buckets` in the write path only.
-    """
-    nxt = path + ".next"
-    shutil.rmtree(nxt, ignore_errors=True)
-    # co-locate each bucket in one task before the partitioned write:
-    # upstream shuffles (id-dedup, per-user aggregates) scatter every
-    # bucket across every task, and partitionBy would then emit
-    # n_tasks × n_buckets tiny files per swap — the shuffle is sized
-    # by the TOUCHED slice only and keeps the store at ~1 file/bucket
-    out = out.repartition(max(len(bucket_ids), 1), F.col("__b"))
-    out.write.mode("overwrite").partitionBy("__b").parquet(nxt)
-    os.makedirs(path, exist_ok=True)
-    # last swap's superseded versions have had a full batch interval
-    # of reader grace — reclaim them now
-    for d in meta.get("gc", []):
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    staged = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(nxt)
-        if d.startswith("__b=")
-    }
-    ver = dict(meta["ver"])
-    next_gc: list[str] = []
-    for b in sorted(staged | {int(x) for x in bucket_ids}):
-        old = ver.get(str(b))
-        if b in staged:
-            new_v = 0 if old is None else int(old) + 1
-            os.rename(
-                os.path.join(nxt, f"__b={b}"),
-                os.path.join(path, _bucket_dir(b, new_v)),
-            )
-            ver[str(b)] = new_v
-        else:
-            ver.pop(str(b), None)
-        if old is not None:
-            next_gc.append(_bucket_dir(b, int(old)))
-    _publish_bucket_meta(
-        path,
-        {"n_buckets": int(meta["n_buckets"]), "ver": ver, "gc": next_gc},
+def _cdc_rows(batch_df: DataFrame, ord_cols: tuple[str, ...]) -> DataFrame:
+    """The CDC sinks' incoming write rows, keyed by (table, id)."""
+    return batch_df.select(
+        "table",
+        F.get_json_object("data", "$.id").alias("id"),
+        "data",
+        "op",
+        *[F.col(c) for c in ord_cols],
     )
-    shutil.rmtree(nxt, ignore_errors=True)
-
-
-def _recover_buckets(path: str) -> None:
-    """WRITE-PATH-ONLY sweep of crash leftovers: version directories
-    no manifest references (a swap that died between its renames and
-    its publish) and half-written staging dirs. Read paths never call
-    this — a reader must not rmtree state out from under a live
-    writer (nor can it here: everything swept is invisible to every
-    manifest snapshot)."""
-    meta = _load_bucket_meta(path)
-    if meta is not None and os.path.isdir(path):
-        live = {
-            _bucket_dir(int(k), v) for k, v in meta["ver"].items()
-        } | set(meta.get("gc", []))
-        for d in os.listdir(path):
-            if d.startswith("b=") and d not in live:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    shutil.rmtree(path + ".next", ignore_errors=True)
-    # pre-manifest layouts staged via .aside are not produced anymore;
-    # a leftover from an older engine version is plain garbage here
-    shutil.rmtree(path + ".aside", ignore_errors=True)
-
-
-def _has_buckets(path: str) -> bool:
-    meta = _load_bucket_meta(path)
-    return meta is not None and bool(meta["ver"])
 
 
 #: env flag: after every funnel/transition event-store swap, scan the
@@ -468,7 +289,7 @@ def _assert_unique_ids(spark, path: str) -> None:
     if not os.environ.get(STRICT_IDS_ENV):
         return
     dup = (
-        _read_buckets(spark, path)
+        read_buckets(spark, path)
         .groupBy("__id")
         .agg(F.count("*").alias("__n"))
         .filter(F.col("__n") > 1)
@@ -506,15 +327,15 @@ def dim_upsert_sink(
 
     Per batch: merge the incoming dim rows with the current snapshot
     via ``operators.cdc.dim_snapshot`` (max_by on the carried write
-    order, delete tombstones evict), then atomically swap the snapshot
-    directory (write to ``.next``, rename). Replayed batches re-merge
+    order, delete tombstones evict), then commit the touched buckets
+    through the store manifest. Replayed batches re-merge
     the same rows into the same result — max_by is idempotent on
     duplicates — so at-least-once delivery composes to exactly-once
     state (T5).
 
     Snapshot state is hash-bucketed by (table, id) — versioned
-    ``b=<bucket>-v<ver>`` dirs behind a manifest,
-    :func:`_swap_buckets` — so a micro-batch reads and rewrites ONLY
+    ``b=<bucket>-v<ver>`` dirs behind the store manifest
+    (streaming/store.py) — so a micro-batch reads and rewrites ONLY
     the buckets its keys hash into: per-batch I/O is
     O(touched_keys × store/n_buckets), not O(store). A delete
     that empties a bucket drops it from the manifest (leaving it
@@ -527,29 +348,20 @@ def dim_upsert_sink(
     from ..operators.cdc import dim_snapshot
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_buckets(path)
         cols = ["table", "id", "data", "op", *ord_cols]
-        incoming = batch_df.select(
-            "table",
-            F.get_json_object("data", "$.id").alias("id"),
-            "data",
-            "op",
-            *[F.col(c) for c in ord_cols],
+        incoming, meta, buckets = _bucketed(
+            _cdc_rows(batch_df, ord_cols), path, n_buckets, "table", "id"
         )
-        meta = _bucket_meta(path, n_buckets, sizing=incoming)
-        nb = meta["n_buckets"]
-        incoming = incoming.withColumn(
-            "__b", _bucket_of(nb, "table", "id")
-        )
-        buckets = _touched_buckets(incoming)
         if not buckets:
             return
-        if _has_buckets(path):
+        nb = meta["n_buckets"]
+        if meta["ver"]:
             # prior snapshot rows of the TOUCHED buckets re-enter the
             # merge as latest-so-far writes (op=U) with their stored
             # order columns; untouched buckets are never read
-            prior = _read_buckets(spark, path, buckets).select(*cols)
+            prior = read_buckets(
+                batch_df.sparkSession, path, buckets
+            ).select(*cols)
             merged = prior.unionByName(incoming.select(*cols))
         else:
             merged = incoming.select(*cols)
@@ -566,7 +378,7 @@ def dim_upsert_sink(
             .select(*cols)
             .withColumn("__b", _bucket_of(nb, "table", "id"))
         )
-        _swap_buckets(out, path, buckets, meta)
+        swap_buckets(out, path, buckets, meta)
 
     return write
 
@@ -575,7 +387,7 @@ def read_dim_snapshot(spark, path: str) -> DataFrame:
     """The live last-write-wins dim snapshot from
     :func:`dim_upsert_sink` state — one manifest snapshot, never
     mutates the store."""
-    return _read_buckets(spark, path)
+    return read_buckets(spark, path)
 
 
 def scd2_sink(
@@ -597,7 +409,7 @@ def scd2_sink(
       intervals but emit no version), with its recomputed interval
       columns, hash-bucketed by (table, id) — versioned
       ``b=<bucket>-v<ver>`` dirs behind a manifest
-      (:func:`_swap_buckets`). Replays dedupe on the total write
+      (:func:`store.swap_buckets`). Replays dedupe on the total write
       order (table, id, ord_cols), so at-least-once delivery composes
       to exactly-once history (T5); the dedup is valid per bucket
       because a write's duplicates share its key, hence its bucket.
@@ -616,31 +428,20 @@ def scd2_sink(
     from pyspark.sql import Window
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_buckets(path)
         state_cols = ["table", "id", "data", "op", *ord_cols,
                       "version", "valid_from", "valid_to", "is_current"]
         write_cols = ["table", "id", "data", "op", *ord_cols]
         first_ord = ord_cols[0]
-        incoming = batch_df.select(
-            "table",
-            F.get_json_object("data", "$.id").alias("id"),
-            "data",
-            "op",
-            *[F.col(c) for c in ord_cols],
+        incoming, meta, buckets = _bucketed(
+            _cdc_rows(batch_df, ord_cols), path, n_buckets, "table", "id"
         )
-        meta = _bucket_meta(path, n_buckets, sizing=incoming)
-        nb = meta["n_buckets"]
-        incoming = incoming.withColumn(
-            "__b", _bucket_of(nb, "table", "id")
-        )
-        buckets = _touched_buckets(incoming)
         if not buckets:
             return
-        if _has_buckets(path):
-            prior = _read_buckets(spark, path, buckets).withColumn(
-                "__b", _bucket_of(nb, "table", "id")
-            )
+        nb = meta["n_buckets"]
+        if meta["ver"]:
+            prior = read_buckets(
+                batch_df.sparkSession, path, buckets
+            ).withColumn("__b", _bucket_of(nb, "table", "id"))
             touched = incoming.select("table", "id").distinct().select(
                 F.col("table").alias("__tt"), F.col("id").alias("__ti")
             )
@@ -678,7 +479,7 @@ def scd2_sink(
             if untouched is None
             else untouched.unionByName(recomputed)
         )
-        _swap_buckets(out, path, buckets, meta)
+        swap_buckets(out, path, buckets, meta)
 
     return write
 
@@ -689,7 +490,7 @@ def read_scd2(spark, path: str) -> DataFrame:
     carry no version row. Resolves one manifest snapshot; never
     mutates the store."""
     return (
-        _read_buckets(spark, path)
+        read_buckets(spark, path)
         .filter(F.col("op") != "D")
         .select(
             "table", "id", "data", "version",
@@ -928,6 +729,88 @@ def read_line_counts(spark, path: str) -> DataFrame:
     return _sum_fold(("line_fp",), "n_docs")(read_additive(spark, path))
 
 
+def _touched_user_sink(
+    path: str,
+    derived: str,
+    recompute,
+    user_col: str,
+    type_col: str,
+    ts_col: str,
+    id_col: str,
+    n_buckets: int | None,
+    stages: list[str] | None = None,
+):
+    """The two-store touched-user recompute behind :func:`funnel_sink`
+    and :func:`transition_sink`. ``<path>/events`` keeps every event
+    (of ``stages``, when given), deduped on ``id_col``;
+    ``<path>/<derived>`` keeps ``recompute(events)`` per user. Both
+    stores are bucketed by user with ONE layout: the events store
+    sizes (or pins) n_buckets and the derived store adopts it. Per
+    batch, only the touched users recompute, from their full event
+    slice; untouched users in touched buckets carry over.
+
+    Crash ordering: events commits BEFORE the derived store. A crash
+    at any point replays the batch (offsets commit only after this
+    writer returns); the id-dedup makes the events merge idempotent
+    and the recompute deterministic, so every crash point converges."""
+    ev_path = os.path.join(path, "events")
+    d_path = os.path.join(path, derived)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        src = batch_df
+        if stages is not None:
+            src = src.filter(F.col(type_col).isin(list(stages)))
+        incoming, ev_meta, buckets = _bucketed(
+            src.select(
+                F.col(user_col).alias("__u"),
+                F.col(type_col).alias("__type"),
+                F.col(ts_col).alias("__ts"),
+                F.col(id_col).alias("__id"),
+            ),
+            ev_path, n_buckets, "__u",
+        )
+        if not buckets:
+            return
+        nb = ev_meta["n_buckets"]
+        d_meta = _bucket_meta(d_path, nb)
+        merged = incoming
+        if ev_meta["ver"]:
+            merged = (
+                read_buckets(spark, ev_path, buckets)
+                .withColumn("__b", _bucket_of(nb, "__u"))
+                .unionByName(incoming)
+                .dropDuplicates(["__id"])
+            )
+        # Measured and rejected: materializing ``merged`` once and
+        # running the two swaps as concurrent jobs off its blocks took
+        # a transition_sink batch from 0.87 s to 1.35 s at sf0.1. The
+        # extra materialize job costs ~0.33 s, and both swaps then
+        # read row-oriented DISK_ONLY blocks where the recompute below
+        # re-reads the events swap's freshly written columnar parquet.
+        # The serial write-then-reread is the faster shape. It needs
+        # no checkpoint (the swap stages its plan while the old
+        # version dirs are still in place), and re-reading the commit
+        # avoids a localCheckpoint's unreplicated executor-local
+        # blocks.
+        swap_buckets(merged, ev_path, buckets, ev_meta)
+        _assert_unique_ids(spark, ev_path)
+        touched = incoming.select("__u").distinct()
+        out = recompute(
+            _semi_on_user(
+                read_buckets(spark, ev_path, buckets), touched, "left_semi"
+            )
+        ).withColumn("__b", _bucket_of(nb, "__u"))
+        if d_meta["ver"]:
+            prior = read_buckets(spark, d_path, buckets).withColumn(
+                "__b", _bucket_of(nb, "__u")
+            )
+            out = _semi_on_user(prior, touched, "left_anti").unionByName(out)
+        swap_buckets(out, d_path, buckets, d_meta)
+
+    return write
+
+
 def funnel_sink(
     path: str,
     stages: list[str],
@@ -946,7 +829,7 @@ def funnel_sink(
     retroactively move t_0 and cascade through every later stage), so
     the sink keeps two state tables under ``path``, each hash-bucketed
     by user (``__b = pmod(hash(user), n_buckets)``; manifest-committed
-    versioned bucket dirs, :func:`_swap_buckets`):
+    versioned bucket dirs, :func:`store.swap_buckets`):
 
     - ``events``: every funnel-stage event seen, deduped on
       ``id_col`` — replays merge to the identical store, so
@@ -960,7 +843,7 @@ def funnel_sink(
     Per-batch I/O is confined to the TOUCHED buckets: the merge, the
     id-dedup, the carry-over anti-join, and the swap all read and
     rewrite only ``__b`` partitions the batch's users hash into —
-    untouched buckets are never listed (see :func:`_swap_buckets`).
+    untouched buckets are never listed (see :func:`store.swap_buckets`).
     Cost per batch is therefore O(touched_buckets × bucket_size) ≈
     O(touched_users × store/n_buckets), NOT O(store): at production
     scale size ``n_buckets`` so a bucket is a normal parquet
@@ -969,75 +852,23 @@ def funnel_sink(
     rewrites everything — that is the dense case where a full pass is
     genuinely required.)
 
-    Crash ordering: events swaps BEFORE times. A crash at any point
-    replays the batch (offsets commit only after this writer returns)
-    against recovered per-bucket state — the id-dedup makes the merge
-    idempotent and the recompute deterministic, so every crash point
-    converges. NULL user ids are kept (they bucket on the hash seed
-    and join null-safely), matching the batch operator's windowing.
-    Read the live funnel with :func:`read_funnel`."""
+    Crash ordering: events commits BEFORE times, and every crash
+    point converges on replay (see :func:`_touched_user_sink`). NULL
+    user ids are kept (they bucket on the hash seed and join
+    null-safely), matching the batch operator's windowing. Read the
+    live funnel with :func:`read_funnel`."""
     from ..operators.funnel import funnel_times
 
-    ev_path = os.path.join(path, "events")
-    t_path = os.path.join(path, "times")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_buckets(ev_path)
-        _recover_buckets(t_path)
-        incoming = batch_df.filter(
-            F.col(type_col).isin(list(stages))
-        ).select(
-            F.col(user_col).alias("__u"),
-            F.col(type_col).alias("__type"),
-            F.col(ts_col).alias("__ts"),
-            F.col(id_col).alias("__id"),
-        )
-        # the events store sizes (or pins) B; the times store adopts
-        # the SAME resolved value — both are keyed by user, and the
-        # two sub-stores must share one hash layout
-        ev_meta = _bucket_meta(ev_path, n_buckets, sizing=incoming)
-        nb = ev_meta["n_buckets"]
-        t_meta = _bucket_meta(t_path, nb)
-        incoming = incoming.withColumn("__b", _bucket_of(nb, "__u"))
-        buckets = _touched_buckets(incoming)
-        if not buckets:
-            return
-        if _has_buckets(ev_path):
-            merged = (
-                _read_buckets(spark, ev_path, buckets)
-                .withColumn("__b", _bucket_of(nb, "__u"))
-                .unionByName(incoming)
-                .dropDuplicates(["__id"])
-            )
-        else:
-            merged = incoming
-        # _swap_buckets computes the plan into `.next` while the old
-        # directories are still in place, so no checkpoint is needed;
-        # afterwards RE-READ the swapped buckets so the recompute
-        # scans the new snapshot directly (no localCheckpoint —
-        # unreplicated executor-local blocks, the materialize.py r2
-        # lesson)
-        _swap_buckets(merged, ev_path, buckets, ev_meta)
-        _assert_unique_ids(spark, ev_path)
-        store = _read_buckets(spark, ev_path, buckets)
-        touched = incoming.select("__u").distinct()
-        recomputed = funnel_times(
-            _semi_on_user(store, touched, "left_semi"),
-            list(stages), user_col="__u", type_col="__type", ts_col="__ts",
-        ).withColumn("__b", _bucket_of(nb, "__u"))
-        if _has_buckets(t_path):
-            prior = _read_buckets(spark, t_path, buckets).withColumn(
-                "__b", _bucket_of(nb, "__u")
-            )
-            out = _semi_on_user(prior, touched, "left_anti").unionByName(
-                recomputed
-            )
-        else:
-            out = recomputed
-        _swap_buckets(out, t_path, buckets, t_meta)
-
-    return write
+    return _touched_user_sink(
+        path,
+        "times",
+        lambda ev: funnel_times(
+            ev, list(stages), user_col="__u", type_col="__type",
+            ts_col="__ts",
+        ),
+        user_col, type_col, ts_col, id_col, n_buckets,
+        stages=stages,
+    )
 
 
 def read_funnel(spark, path: str, stages: list[str]) -> DataFrame:
@@ -1047,7 +878,7 @@ def read_funnel(spark, path: str, stages: list[str]) -> DataFrame:
 
     t_path = os.path.join(path, "times")
     return funnel_counts_from_times(
-        _read_buckets(spark, t_path), list(stages)
+        read_buckets(spark, t_path), list(stages)
     )
 
 
@@ -1112,7 +943,7 @@ def transition_sink(
 
     Two user-hash-bucketed state tables under ``path``
     (manifest-committed versioned bucket dirs, see :func:`funnel_sink`
-    and :func:`_swap_buckets` for the layout contract):
+    and :func:`store.swap_buckets` for the layout contract):
     ``events`` (all transition-relevant events, deduped on ``id_col``
     — replays merge to the identical store, T5; valid per bucket
     because an event's duplicates share its user's bucket) and
@@ -1128,71 +959,15 @@ def transition_sink(
     matrix with :func:`read_transition`."""
     from ..operators.funnel import transition_pairs_by_user
 
-    ev_path = os.path.join(path, "events")
-    p_path = os.path.join(path, "pairs")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_buckets(ev_path)
-        _recover_buckets(p_path)
-        incoming = batch_df.select(
-            F.col(user_col).alias("__u"),
-            F.col(type_col).alias("__type"),
-            F.col(ts_col).alias("__ts"),
-            F.col(id_col).alias("__id"),
-        )
-        # events sizes (or pins) B; pairs adopts the same layout
-        ev_meta = _bucket_meta(ev_path, n_buckets, sizing=incoming)
-        nb = ev_meta["n_buckets"]
-        p_meta = _bucket_meta(p_path, nb)
-        incoming = incoming.withColumn("__b", _bucket_of(nb, "__u"))
-        buckets = _touched_buckets(incoming)
-        if not buckets:
-            return
-        if _has_buckets(ev_path):
-            merged = (
-                _read_buckets(spark, ev_path, buckets)
-                .withColumn("__b", _bucket_of(nb, "__u"))
-                .unionByName(incoming)
-                .dropDuplicates(["__id"])
-            )
-        else:
-            merged = incoming
-        # NOTE (r15 A/B, guide §1.3 — measured and REJECTED): eagerly
-        # materializing ``merged`` once and running the two swaps as
-        # concurrent jobs off its blocks (the "overlap the dependent
-        # swaps" idea carried from r14) measured WORSE, 0.87 s/batch
-        # → 1.35 s/batch at sf0.1: the extra materialize job costs
-        # ~0.33 s, and both swap jobs then read row-oriented DISK_ONLY
-        # blocks where the pairs recompute previously re-read the
-        # events swap's freshly-written COLUMNAR parquet. The serial
-        # write-then-reread shape below is the measured floor.
-        with _step(f"trans b{batch_id} ev swap"):
-            _swap_buckets(merged, ev_path, buckets, ev_meta)
-        _assert_unique_ids(spark, ev_path)
-        store = _read_buckets(spark, ev_path, buckets)
-        touched = incoming.select("__u").distinct()
-        recomputed = transition_pairs_by_user(
-            _semi_on_user(store, touched, "left_semi"),
-            gap_seconds=gap_seconds,
-            user_col="__u",
-            type_col="__type",
-            ts_col="__ts",
-            order_col="__id",
-        ).withColumn("__b", _bucket_of(nb, "__u"))
-        if _has_buckets(p_path):
-            prior = _read_buckets(spark, p_path, buckets).withColumn(
-                "__b", _bucket_of(nb, "__u")
-            )
-            out = _semi_on_user(prior, touched, "left_anti").unionByName(
-                recomputed
-            )
-        else:
-            out = recomputed
-        with _step(f"trans b{batch_id} pairs swap"):
-            _swap_buckets(out, p_path, buckets, p_meta)
-
-    return write
+    return _touched_user_sink(
+        path,
+        "pairs",
+        lambda ev: transition_pairs_by_user(
+            ev, gap_seconds=gap_seconds, user_col="__u", type_col="__type",
+            ts_col="__ts", order_col="__id",
+        ),
+        user_col, type_col, ts_col, id_col, n_buckets,
+    )
 
 
 def read_transition(spark, path: str) -> DataFrame:
@@ -1205,7 +980,7 @@ def read_transition(spark, path: str) -> DataFrame:
 
     p_path = os.path.join(path, "pairs")
     pairs = (
-        _read_buckets(spark, p_path)
+        read_buckets(spark, p_path)
         .groupBy("from_event", "to_event")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -1509,12 +1284,10 @@ def copurchase_sink(
             # concurrent jobs each recompute the not-yet-cached rolled
             # partitions), then the two sub-writes read the same
             # blocks into disjoint dirs as concurrent jobs (§2.6).
-            with _step(f"copur b{batch_id} count"):
-                n_baskets = rolled.count()
-            with _step(f"copur b{batch_id} baskets"):
-                write_rows_parquet(
-                    f"{base}/baskets", [("n", "bigint")], [(n_baskets,)]
-                )
+            n_baskets = rolled.count()
+            write_rows_parquet(
+                f"{base}/baskets", [("n", "bigint")], [(n_baskets,)]
+            )
 
             def _pairs() -> None:
                 _pair_counts(rolled, 1).write.mode("overwrite").parquet(
@@ -1532,15 +1305,14 @@ def copurchase_sink(
 
             # pairs/items land in disjoint dirs of THIS batch and the
             # compaction folds only PRIOR batches — all concurrent
-            with _step(f"copur b{batch_id} pairs+items+compact"):
-                _overlap_compact(
-                    [_pairs, _items],
-                    batch_df.sparkSession,
-                    path,
-                    batch_id,
-                    _COPURCHASE_FOLDS,
-                    compact_every,
-                )
+            _overlap_compact(
+                [_pairs, _items],
+                batch_df.sparkSession,
+                path,
+                batch_id,
+                _COPURCHASE_FOLDS,
+                compact_every,
+            )
         finally:
             # the rolled frame is per-batch scratch; holding its
             # blocks across a long stream would pile up per batch

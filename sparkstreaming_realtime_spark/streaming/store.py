@@ -1,63 +1,78 @@
-"""Store layout + commit protocol for the additive sink family.
+"""Store layouts and the one commit protocol of the streaming sinks.
 
-Every additive sink (sinks.py: rollup_sum_sink, retention_sink,
-count_min_sink, kmv_sink, line_count_sink, bm25_index_sink,
-copurchase_sink, idempotent_parquet_sink) writes one ``batch=<id>``
-directory per micro-batch — the deterministic per-batch location that
-turns at-least-once delivery into exactly-once output (a replayed
-batch OVERWRITES its previous attempt; the engine analog of the
-reference's ES doc-id upserts, MyEsUtils.scala:41-52). Correct, but
-unbounded: at the reference's 2 s trigger cadence
-(RealtimeApp settings) a store accretes ~43k directories/day, and
-read-side listing + planning cost grows with stream LIFETIME — fine
-at a 4-batch fixture, not the layout you'd run at 100 TB.
+Every stateful sink keeps its state in a directory (the *store*) whose
+live content is named by ONE manifest, ``<store>/_MANIFEST.json``. This
+module is the only code that reads, publishes, garbage-collects and
+recovers it. Two layouts share the protocol.
 
-This module bounds it with manifest-committed compaction:
-
-``<store>/_MANIFEST.json``  (atomic ``os.replace`` publish)::
+**Additive segments + tail** (idempotent_parquet_sink, rollup_sum_sink,
+retention_sink, count_min_sink, kmv_sink, line_count_sink,
+bm25_index_sink, copurchase_sink, quality_gate_sink's accepted store).
+Each micro-batch writes one ``batch=<id>`` dir, a deterministic
+function of the batch id, so a replayed batch OVERWRITES its previous
+attempt: at-least-once delivery composes to exactly-once output (the
+engine analog of the reference's ES doc-id upserts,
+MyEsUtils.scala:41-52). Compaction keeps the dir count independent of
+stream lifetime::
 
     {"gen": 3,                       # compaction generation
      "upto": 57,                     # batch ids <= upto are folded
      "segments": {"": ["seg=3"]},    # committed base, per sub-store
-     "gc": ["seg=2", "batch=41"]}    # stale dirs, grace-deferred
+     "gc": ["seg=2", "batch=41"]}    # dropped by this commit
 
-- **Live view** = committed segments ∪ tail ``batch=<id>`` dirs with
-  ``id > upto`` (:func:`store_parts`). Without a manifest this
-  degrades to exactly the old glob-everything behavior.
-- **Fold mode** (aggregated stores): compaction folds base ∪ tail
-  into ONE new segment with the store's own merge (key-wise integer
-  sum, set-distinct, k-smallest). The base never outgrows the key
-  cardinality, so periodic re-folds stay O(keys), not O(history) —
-  read cost becomes O(keys + tail), independent of stream lifetime.
-- **Append mode** (identity stores: raw rows, BM25 postings/doclen):
-  compaction consolidates ONLY the tail into a new segment and never
-  rewrites the whole store. Segments are SIZE-TIERED (r14): once
-  :data:`TIER_FANOUT` of them accumulate, the smallest ``fanout``
-  merge into one — the LSM leveling rule, so the segment count stays
-  O(fanout · log(data)) instead of growing one-per-generation with
-  stream lifetime, and each row is rewritten O(log_fanout(data))
-  times total, never the O(data²) a rewrite-the-world scheme would
-  cost.
-- **Exactly-once under replay**: only ids ``< batch_id`` fold.
-  Structured Streaming runs epochs sequentially and replays at most
-  the in-flight batch, so everything below the current id is
-  committed; the in-flight batch stays in the tail where its replay
-  overwrites as before. After a fold, a replayed compaction is a
-  no-op (``upto`` already covers the folded ids).
-- **Crash safety**: the manifest publish is the single commit point.
-  A crash before it leaves a partial ``seg-<gen>`` that the replayed
-  batch rmtree's and rebuilds; a crash after it leaves stale dirs
-  that the manifest's ``gc`` list reclaims on the NEXT compaction.
-- **Reader grace**: readers resolve one manifest and never mutate
-  the store. Dirs a new manifest drops are deleted one compaction
-  LATER (the ``gc`` hand-off), so a reader concurrent with a writer
-  has a full compaction interval (``compact_every`` micro-batches)
-  to finish against its snapshot.
+- The live view is the segments plus the tail ``batch=<id>`` dirs with
+  ``id > upto`` (:func:`store_parts`); without a manifest, every
+  ``batch=<id>`` dir.
+- *Fold mode* (aggregated stores) rewrites base ∪ tail into one
+  segment with the store's own merge (key-wise integer sum,
+  set-distinct, k-smallest), so the base stays O(keys).
+- *Append mode* (identity stores: raw rows, BM25 postings/doclen)
+  consolidates only the tail into a new segment. Segments are
+  size-tiered: once :data:`TIER_FANOUT` exist, the smallest ``fanout``
+  merge into one (the LSM leveling rule), so the segment count stays
+  O(fanout · log data) and each row is rewritten O(log_fanout data)
+  times.
+- Only ids strictly below the in-flight batch fold. Structured
+  Streaming replays at most the in-flight batch, so its replay still
+  overwrites the tail, and a replayed compaction is a no-op (``upto``
+  already covers the folded ids).
 
-At 100 TB scale this is the LSM discipline every table format
+**Bucket versions** (dim_upsert_sink, scd2_sink, funnel_sink,
+transition_sink). Keyed state is hash-bucketed into ``n_buckets``
+buckets, one ``b=<bucket>-v<ver>`` dir per live bucket::
+
+    {"n_buckets": 8,                 # fixed when the store is created
+     "ver": {"3": 2, "5": 0},        # live version of each bucket
+     "gc": ["b=3-v1"]}               # dropped by this commit
+
+A micro-batch stages only the buckets its keys hash into, moves them
+in as NEW version dirs (nothing live is moved or rewritten) and
+publishes (:func:`swap_buckets`). Untouched buckets are never read,
+rewritten or listed.
+
+**The protocol**, the same for both layouts:
+
+- *Commit.* The manifest publish (tmp + fsync + ``os.replace``) is the
+  single commit point. Readers resolve one manifest, see the whole
+  store before or after a commit, never a mix, and never mutate it.
+- *GC hand-off.* A commit lists the dirs it stops serving under
+  ``gc``; the NEXT commit deletes them, so a reader holding the older
+  manifest has one full commit interval to finish.
+- *Recovery.* A protocol dir (``seg=*``, ``b=*``) that the manifest
+  neither serves nor lists for gc is garbage from a commit that
+  crashed before its publish. Only the write path deletes it, right
+  before its next commit (:func:`_reclaim`); the crashed batch replays
+  from the streaming checkpoint and rebuilds.
+- *Known window.* ``sinks._overlap_compact`` runs a batch's write and
+  the prior tail's compaction concurrently. If the compaction publishes
+  and the batch write fails, an external reader sees the folded view
+  plus a partial ``batch=<id>`` dir until the replay overwrites it.
+  The engine's own readers run between batches and never see it.
+
+At 100 TB scale this is the discipline every table format
 (Iceberg/Delta/Hudi) applies to streaming upserts — manifest-pointed
-segments, deferred tombstone GC — expressed on plain parquet so the
-test environment needs no extra dependency.
+files, deferred GC — expressed on plain parquet and local ``os``
+calls, so the test environment needs no extra dependency.
 """
 
 from __future__ import annotations
@@ -69,6 +84,7 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: default compaction cadence: fold once this many committed batch
 #: directories accumulate in the tail. Test-scale value — at the
@@ -137,6 +153,26 @@ def _publish_manifest(path: str, manifest: dict) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, os.path.join(path, _MANIFEST))
+
+
+def _reclaim(path: str, m: dict) -> None:
+    """Write path only, right before a commit: delete the dirs the
+    current manifest ``m`` handed to gc (their readers had one commit
+    interval), and every protocol dir it neither serves nor lists —
+    the garbage of a commit that crashed before its publish."""
+    gc = m.get("gc", [])
+    keep = {d.split("/")[0] for d in gc}
+    keep |= {s.split("/")[0] for segs in m.get("segments", {}).values()
+             for s in segs}
+    keep |= {_bucket_dir(b, v) for b, v in m.get("ver", {}).items()}
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        names = []
+    garbage = [n for n in names
+               if n.startswith(("seg=", "b=")) and n not in keep]
+    for d in gc + garbage:
+        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
 def batch_ids(path: str) -> list[int]:
@@ -240,12 +276,12 @@ def write_rows_parquet(
     identically (int64/binary parquet types are engine-neutral).
 
     ``schema`` is [(name, type)] with type in {"bigint", "string"}.
-    Same replay discipline as a Spark overwrite: stage into a tmp dir
-    then swap — a replayed micro-batch rebuilds the identical dir,
-    and a crash mid-swap is overwritten by the replay."""
-    import glob
-    import uuid
-
+    The dir holds exactly one data file, ``part-00000.parquet``: it is
+    staged as a hidden file beside it (Spark readers skip ``.``-names)
+    and ``os.replace``-d over it, so a reader sees the previous
+    attempt or this one, never a missing dir. A crashed attempt's
+    staging file has the same fixed name and is overwritten by the
+    replay."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -255,41 +291,32 @@ def write_rows_parquet(
         for i, (_n, t) in enumerate(schema)
     ]
     table = pa.table(dict(zip((n for n, _t in schema), arrays)))
-    # a crash between a previous attempt's staging and rename orphans
-    # its tmp sibling inside the batch dir (each attempt uses a fresh
-    # uuid) — reclaim stale ones before staging (r14 ADVICE)
-    for stale in glob.glob(f"{path}.tmp-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    # local-store swap (same visibility contract as the Spark
-    # overwrite it replaced: a concurrent reader can observe the dir
-    # briefly missing; the parity readers only run between batches)
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
 
-def run_concurrent(thunks: list) -> list:
+def run_concurrent(spark, thunks: list) -> list:
     """Run independent Spark-job-submitting thunks as CONCURRENT jobs
     (guide §2.6 — actions are only sequential because driver code
     calls them sequentially). Each worker is wrapped in
-    ``pyspark.inheritable_thread_target`` so it inherits the calling
-    thread's JVM-thread-local properties (job group / description /
-    scheduler pool) under pinned-thread mode — cancelling the caller's
-    job group therefore cancels jobs submitted from these threads too,
-    and UI labels stay attached. Returns results in submission order;
-    the first raised exception propagates."""
+    ``pyspark.inheritable_thread_target(spark)`` so it inherits the
+    calling thread's session tags and JVM-thread-local properties (job
+    group / description / scheduler pool) under pinned-thread mode —
+    cancelling the caller's job group or tag therefore cancels jobs
+    submitted from these threads too, and UI labels stay attached.
+    Returns results in submission order; the first raised exception
+    propagates."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
-        ]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]
 
 
@@ -327,7 +354,7 @@ def compact_additive(
     and the in-flight batch keeps its replay-overwrite contract.
 
     Returns True when a compaction ran. Crash-safe around the single
-    manifest publish (see module docstring); replay-idempotent (a
+    manifest publish (see the module protocol); replay-idempotent (a
     re-run sees ``upto`` already advanced and no-ops)."""
     m = load_manifest(path) or {
         "gen": -1, "upto": -1, "segments": {}, "gc": []
@@ -337,15 +364,9 @@ def compact_additive(
         return False
     gen = m["gen"] + 1
     seg_root = f"seg={gen}"
-    # a crashed previous attempt at THIS generation (tail segment or
-    # tier merge) is garbage the old manifest never referenced —
-    # rebuild from scratch
-    shutil.rmtree(os.path.join(path, seg_root), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, f"{seg_root}-m"), ignore_errors=True)
-    # last round's dropped dirs have had a full compaction interval
-    # of reader grace — reclaim them now
-    for d in m.get("gc", []):
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    # also clears a crashed earlier attempt at this generation
+    _reclaim(path, m)
+
     def _fold_sub(sub: str, spec: SubFold) -> tuple[str, list[str], list[str]]:
         """Fold ONE sub-store; returns (sub, its segment list, its gc
         entries). Sub-stores touch disjoint directories, so the folds
@@ -413,10 +434,11 @@ def compact_additive(
     new_segments: dict[str, list[str]] = {}
     next_gc: list[str] = []
     results = run_concurrent(
+        spark,
         [
             (lambda sub=sub, spec=spec: _fold_sub(sub, spec))
             for sub, spec in folds.items()
-        ]
+        ],
     )
     for sub, segs, gc in results:
         new_segments[sub] = segs
@@ -432,3 +454,86 @@ def compact_additive(
         },
     )
     return True
+
+
+def _bucket_dir(bucket, version) -> str:
+    return f"b={int(bucket)}-v{int(version)}"
+
+
+def read_buckets(spark, path: str, bucket_ids=None) -> DataFrame:
+    """Read a bucket-version store from one manifest snapshot; with
+    ``bucket_ids`` only those buckets' CURRENT version dirs are even
+    listed — the pruning a partition filter would give, without
+    exposing readers to in-flight writers. Never mutates the store.
+    Rows come back without ``__b`` (callers re-derive it from the key
+    columns — same hash, same value)."""
+    m = load_manifest(path)
+    if m is None or not m["ver"]:
+        # never-written store: surface the missing-path error a read
+        # of the empty layout raises
+        return spark.read.parquet(os.path.join(path, "b=*"))
+    ver = m["ver"]
+    if bucket_ids is None:
+        keys = list(ver)
+    else:
+        wanted = {str(int(b)) for b in bucket_ids}
+        keys = [k for k in ver if k in wanted]
+    if not keys:
+        # all requested buckets are new: an empty, correctly-typed frame
+        k = next(iter(ver))
+        return spark.read.parquet(
+            os.path.join(path, _bucket_dir(k, ver[k]))
+        ).filter(F.lit(False))
+    return spark.read.parquet(
+        *[os.path.join(path, _bucket_dir(k, ver[k])) for k in keys]
+    )
+
+
+def swap_buckets(
+    out: DataFrame, path: str, bucket_ids: list[int], m: dict
+) -> None:
+    """Commit one micro-batch of a bucket-version store. ``out``
+    carries ``__b`` and holds the whole new content of the touched
+    buckets ``bucket_ids``; ``m`` is the manifest it was computed
+    from. Stage ``out`` partitioned by bucket, move each staged bucket
+    in as a NEW version dir, then publish.
+
+    - A touched bucket with no staged rows (a dim tombstone emptied
+      it) drops out of the manifest — keeping it would resurrect the
+      evicted keys.
+    - Superseded versions go on the manifest's ``gc`` list; the next
+      commit deletes them. A crash anywhere before the publish leaves
+      the old manifest pointing at intact old versions; what the
+      crash left behind is reclaimed by the next write."""
+    nxt = path + ".next"
+    shutil.rmtree(nxt, ignore_errors=True)
+    # co-locate each bucket in one task before the partitioned write:
+    # upstream shuffles (id-dedup, per-user aggregates) scatter every
+    # bucket across every task, and partitionBy would then emit
+    # n_tasks × n_buckets tiny files per swap — the shuffle is sized
+    # by the TOUCHED slice only and keeps the store at ~1 file/bucket
+    out = out.repartition(max(len(bucket_ids), 1), F.col("__b"))
+    out.write.mode("overwrite").partitionBy("__b").parquet(nxt)
+    os.makedirs(path, exist_ok=True)
+    _reclaim(path, m)
+    staged = {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(nxt)
+        if d.startswith("__b=")
+    }
+    ver = dict(m["ver"])
+    gc: list[str] = []
+    for b in sorted(staged | {int(x) for x in bucket_ids}):
+        old = ver.get(str(b))
+        if b in staged:
+            ver[str(b)] = 0 if old is None else int(old) + 1
+            os.rename(
+                os.path.join(nxt, f"__b={b}"),
+                os.path.join(path, _bucket_dir(b, ver[str(b)])),
+            )
+        else:
+            ver.pop(str(b), None)
+        if old is not None:
+            gc.append(_bucket_dir(b, old))
+    _publish_manifest(path, {**m, "ver": ver, "gc": gc})
+    shutil.rmtree(nxt, ignore_errors=True)

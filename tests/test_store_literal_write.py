@@ -7,6 +7,8 @@ first)."""
 
 import os
 
+import pytest
+
 from sparkstreaming_realtime_spark.streaming.store import (
     write_rows_parquet,
 )
@@ -39,3 +41,34 @@ def test_unions_with_spark_written_parquet(spark, tmp_path):
     df = spark.read.parquet(a, b)
     got = {(r["n_docs"], r["sum_dl"]) for r in df.collect()}
     assert got == {(3, 30), (4, 40)}
+
+
+def test_crash_between_staging_and_publish_then_rewrite(tmp_path, monkeypatch):
+    """The one data file is published by ``os.replace`` over a fixed
+    name: a crash after staging leaves the previous file readable, and
+    the rewrite leaves exactly one data file and no staging leftover —
+    also under a path holding glob metacharacters."""
+    import pyarrow.parquet as pq
+
+    from sparkstreaming_realtime_spark.streaming import store as st
+
+    p = os.path.join(str(tmp_path), "st[x]", "batch=0", "stats")
+    write_rows_parquet(p, [("n", "bigint")], [(1,)])
+
+    class _CrashingOs:
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        def replace(self, *_a):
+            raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(st, "os", _CrashingOs())
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        write_rows_parquet(p, [("n", "bigint")], [(2,)])
+    monkeypatch.undo()
+    assert len(os.listdir(p)) == 2  # the staged file was left behind
+    data = os.path.join(p, "part-00000.parquet")
+    assert pq.read_table(data).to_pydict() == {"n": [1]}
+    write_rows_parquet(p, [("n", "bigint")], [(3,)])
+    assert os.listdir(p) == ["part-00000.parquet"]
+    assert pq.read_table(data).to_pydict() == {"n": [3]}

@@ -558,9 +558,11 @@ def test_snapshot_swap_survives_crash_between_renames(spark, tmp_path):
     import os
 
     from sparkstreaming_realtime_spark.streaming.sinks import (
-        _load_bucket_meta,
         read_scd2,
         scd2_sink,
+    )
+    from sparkstreaming_realtime_spark.streaming.store import (
+        load_manifest,
     )
 
     b1 = spark.createDataFrame(
@@ -572,7 +574,7 @@ def test_snapshot_swap_survives_crash_between_renames(spark, tmp_path):
     hist = str(tmp_path / "hist")
     sink = scd2_sink(hist)
     sink(b1, 0)
-    meta = _load_bucket_meta(hist)
+    meta = load_manifest(hist)
     # simulate the crash window: for every live bucket, an orphaned
     # NEXT version dir exists (renamed in, garbage content) but the
     # manifest was never published — exactly the on-disk state if the
@@ -594,7 +596,7 @@ def test_snapshot_swap_survives_crash_between_renames(spark, tmp_path):
     assert not os.path.exists(hist + ".next")
     # every on-disk version dir is accounted for by the manifest
     # (live or gc-pending) — no orphans survive recovery
-    meta2 = _load_bucket_meta(hist)
+    meta2 = load_manifest(hist)
     referenced = {
         f"b={int(k)}-v{v}" for k, v in meta2["ver"].items()
     } | set(meta2["gc"])
@@ -607,7 +609,7 @@ def test_snapshot_swap_survives_crash_between_renames(spark, tmp_path):
     )
 
     assert json.loads(
-        open(os.path.join(hist, "_STORE.json")).read()
+        open(os.path.join(hist, "_MANIFEST.json")).read()
     )["n_buckets"] == AUTO_BUCKET_MIN
 
 
@@ -996,14 +998,14 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, tmp_path):
     sink = transition_sink(path, n_buckets=8)
     sink(b1, 0)
 
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        _load_bucket_meta,
+    from sparkstreaming_realtime_spark.streaming.store import (
+        load_manifest,
     )
 
     def listing(store):
         """bucket id → (current version dir, its sorted file list)."""
         root = os.path.join(path, store)
-        meta = _load_bucket_meta(root)
+        meta = load_manifest(root)
         return {
             int(k): (
                 f"b={int(k)}-v{v}",
@@ -1280,12 +1282,13 @@ def test_auto_bucket_sizing_scales_with_state(spark, tmp_path, monkeypatch):
     a 100 TB store) and pins the choice in the manifest; reopening
     with the default ADOPTS the persisted value."""
     from sparkstreaming_realtime_spark.streaming import sinks as sk
+    from sparkstreaming_realtime_spark.streaming.store import load_manifest
 
     def mk(path):
         return sk.dim_upsert_sink(str(tmp_path / path))
 
     def meta_b(path):
-        return sk._load_bucket_meta(str(tmp_path / path))["n_buckets"]
+        return load_manifest(str(tmp_path / path))["n_buckets"]
 
     tiny = spark.createDataFrame(
         [("user_info", '{"id":1,"v":1}', "I", 1000, 1)], CDC_SCHEMA
