@@ -23,14 +23,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: plain-identifier test for the one-``F.expr``-call fast path below.
-#: Anything else (Column objects, qualified/backtick-needing names)
-#: takes the original lambda-HOF path — same expression either way.
+#: Anything else (Column objects, qualified names) takes the original
+#: lambda-HOF path — same expression either way.
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _ref(c: Column | str) -> str | None:
-    """SQL-safe reference for ``c`` when it is a plain column NAME."""
-    return c if isinstance(c, str) and _IDENT.match(c) else None
+    """Backtick-quoted SQL reference for ``c`` when it is a plain
+    column NAME; quoting makes a name such as ``current_date`` resolve
+    as the column, not as the SQL function of that name."""
+    return f"`{c}`" if isinstance(c, str) and _IDENT.match(c) else None
 
 # Why two construction paths per function: the lambda-HOF builders
 # (`F.zip_with(..., lambda ...)`) cost ~30-50 py4j round trips per

@@ -11,6 +11,19 @@ Scale notes: AQE on (runtime coalesce + skew-join), shuffle
 partitions sized by env for local runs but left to the cluster
 manager on a real deployment, UTC session timezone pinned so results
 hash-match the DuckDB oracle.
+
+Streaming checkpoints commit through Spark's
+``FileSystemBasedCheckpointFileManager`` instead of the default
+``FileContextBasedCheckpointFileManager``. Every micro-batch renames
+its offset-log and commit-log entries and each state-store delta and
+checksum file into place. On ``file:`` the FileContext rename calls
+``getFileLinkStatus`` on both paths, and without Hadoop's native
+library each call forks a ``readlink`` process; the FileSystem rename
+is a plain ``File.renameTo``. Both managers check that the target is
+absent and then rename (neither is atomic on the local FS), and both
+keep the Hadoop ``.crc`` and Spark checksum files. A stock session
+keeps Spark's default manager and gets the same results with more
+forks.
 """
 
 from __future__ import annotations
@@ -61,6 +74,14 @@ def get_spark(
         # which vanilla Spark rejects; read as bigint-nanos and
         # normalize in sources.files.events_with_ts
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the default FileContext manager forks a `readlink` per path
+        # on every checkpoint rename when libhadoop is absent; this one
+        # renames with File.renameTo, same check-then-rename semantics
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -101,7 +101,13 @@ def run_available_now(
 ):
     """T1/T5 binding: drain everything available as micro-batches,
     write through ``sink_fn`` (foreachBatch), commit offsets in the
-    checkpoint (S3/S4/K10 built in), then stop."""
+    checkpoint (S3/S4/K10 built in), then stop.
+
+    Under ``session.get_spark`` the checkpoint and state-store files
+    commit through ``FileSystemBasedCheckpointFileManager``, whose
+    rename forks no ``readlink`` on ``file:`` (see the session module
+    docstring). A stock session keeps Spark's default manager: same
+    results, more forked processes per batch."""
     return (
         df.writeStream.foreachBatch(sink_fn)
         .option("checkpointLocation", checkpoint)
@@ -124,8 +130,11 @@ def run_processing_time(
     plan and state semantics to :func:`run_available_now` (the tests'
     bounded trigger); only the trigger differs, so everything the
     AvailableNow suites pin — cross-batch state, replay idempotency,
-    offset restore — holds verbatim under this binding. Returns the
-    running query; callers own ``awaitTermination``."""
+    offset restore — holds verbatim under this binding. The checkpoint
+    commits through the same manager as :func:`run_available_now`
+    (``FileSystemBasedCheckpointFileManager`` under
+    ``session.get_spark``, Spark's default on a stock session). Returns
+    the running query; callers own ``awaitTermination``."""
     return (
         df.writeStream.foreachBatch(sink_fn)
         .option("checkpointLocation", checkpoint)

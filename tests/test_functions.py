@@ -159,6 +159,48 @@ def test_vector_expr_fast_path_bit_equals_lambda_path(spark):
                 ), (dtype, k, r1[k], r2[k])
 
 
+def test_vector_expr_fast_path_quotes_column_names(spark):
+    """Columns named like a SQL function (``current_date``) or a
+    reserved word (``union``) resolve as the columns on the one-``F.expr``
+    path, bit-equal to the lambda path, also when the session enforces
+    reserved keywords (without the quoting, the first parses as the
+    function and the second fails to parse)."""
+    import struct
+
+    from sparkstreaming_realtime_spark.functions.vectors import dot, l2_sq
+
+    rows = [
+        ([1.5, -2.0, 3.25], [0.1, 4.0, -1.7]),
+        ([0.3, 0.7, -9.1], [2.2, -0.4, 5.0]),
+    ]
+    key = "spark.sql.ansi.enforceReservedKeywords"
+    try:
+        for enforce in ("false", "true"):
+            spark.conf.set(key, enforce)
+            for name in ("current_date", "union"):
+                df = spark.createDataFrame(
+                    rows, f"`{name}` array<double>, b array<double>"
+                )
+                cols = (name, "b")
+                fast = df.select(
+                    dot(*cols).alias("d"),
+                    l2_sq(*cols).alias("s"),
+                    cosine_similarity(*cols).alias("c"),
+                ).collect()
+                slow = df.select(
+                    dot(*map(F.col, cols)).alias("d"),
+                    l2_sq(*map(F.col, cols)).alias("s"),
+                    cosine_similarity(*map(F.col, cols)).alias("c"),
+                ).collect()
+                for r1, r2 in zip(fast, slow):
+                    for k in ("d", "s", "c"):
+                        assert struct.pack("<d", r1[k]) == struct.pack(
+                            "<d", r2[k]
+                        ), (enforce, name, k)
+    finally:
+        spark.conf.unset(key)
+
+
 def test_salted_join_matches_plain_join(spark):
     """Skew-salted join must be row-for-row identical to the plain
     join it replaces — on data with one hot key."""

@@ -148,6 +148,103 @@ def test_checkpoint_restores_offsets(spark, tmp_path):
     assert got == [("m1", "2024-01-01"), ("m9", "2024-01-01")]
 
 
+def test_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """The session commits checkpoints through
+    ``FileSystemBasedCheckpointFileManager`` (a plain ``File.renameTo``,
+    no forked ``readlink``) with the contract of Spark's default
+    manager: a non-overwriting ``createAtomic`` onto an existing file
+    fails and keeps the old bytes, and ``cancel()`` leaves no temp
+    file behind."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    fm = mgr.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()), hconf
+    )
+    assert fm.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    def write(rel: str, data: bytes, cancel: bool = False) -> None:
+        out = fm.createAtomic(
+            jvm.org.apache.hadoop.fs.Path((tmp_path / rel).as_uri()), False
+        )
+        out.write(bytearray(data))
+        out.cancel() if cancel else out.close()
+
+    write("log/0", b"old")
+    with pytest.raises(Py4JJavaError) as err:
+        write("log/0", b"new")
+    exists = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "log" / "0").read_bytes() == b"old"
+
+    write("cancelled/0", b"partial", cancel=True)
+    assert list((tmp_path / "cancelled").iterdir()) == []
+
+
+def test_get_spark_keeps_checkpoint_integrity_defaults(spark):
+    """Switching the checkpoint manager must not switch off an
+    integrity check: no checksum or local-FS implementation key is set,
+    so Spark's checkpoint checksums stay at their default (on)."""
+    keys = [k for k, _ in spark.sparkContext.getConf().getAll()]
+    for banned in ("fileChecksum", "fs.file.impl", "AbstractFileSystem.file.impl"):
+        assert not [k for k in keys if banned in k], banned
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+        == "true"
+    )
+
+
+def test_dau_drain_checksums_state_and_restarts_without_replay(spark, tmp_path):
+    """Every state-store delta of a 2-batch DAU drain carries both the
+    Hadoop ``.N.delta.crc`` and Spark's ``N.delta.crc`` checksum file,
+    and a restart on the same checkpoint runs only new batch ids and
+    keeps the dedup state."""
+    import glob
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+
+    def entry(mid, ts):
+        return {"mid": mid, "last_page_id": None, "page_id": "home",
+                "event_time": f"2024-01-01 {ts}"}
+
+    _write_jsonl(f"{src}/b1.json", seq=1,
+                 rows=[entry("m1", "08:00:00"), entry("m2", "08:01:00")])
+    _write_jsonl(f"{src}/b2.json", seq=2,
+                 rows=[entry("m1", "09:00:00"), entry("m3", "09:01:00")])
+    seen: list[tuple[int, list[str]]] = []
+
+    def sink(bdf, bid):
+        seen.append((bid, sorted(r["mid"] for r in bdf.collect())))
+
+    def drain():
+        stream = file_stream(spark, src, PAGE_SCHEMA, max_files_per_trigger=1)
+        _drain(streaming_dau_dedup(stream), sink, ckpt)
+
+    drain()
+    assert [m for _, ms in seen for m in ms] == ["m1", "m2", "m3"]
+    deltas = glob.glob(f"{ckpt}/state/*/*/*.delta")
+    assert deltas
+    for path in deltas:
+        d, name = os.path.split(path)
+        assert os.path.exists(f"{d}/.{name}.crc"), path
+        assert os.path.exists(f"{d}/{name}.crc"), path
+
+    first_ids = [bid for bid, _ in seen]
+    seen.clear()
+    _write_jsonl(f"{src}/b3.json", seq=3,
+                 rows=[entry("m2", "10:00:00"), entry("m4", "10:01:00")])
+    drain()
+    assert min(bid for bid, _ in seen) > max(first_ids)
+    assert [m for _, ms in seen for m in ms] == ["m4"]
+
+
 def test_idempotent_sink_replay_overwrites(spark, tmp_path):
     """T5: replaying the same batch id must not duplicate output —
     the engine analog of ES doc-id overwrites (MyEsUtils.scala:47)."""
