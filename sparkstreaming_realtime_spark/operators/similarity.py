@@ -20,12 +20,14 @@ transfer):
 
 from __future__ import annotations
 
+import os
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from ..streaming import store
 
 
 def query_vector(emb: DataFrame, vec_id: int, id_col: str = "vec_id") -> DataFrame:
@@ -399,14 +401,15 @@ def ivf_append(
     inverted lists; re-training is a separate offline job) and land
     them under ``<path>/delta/batch=<id>/cell=<c>``.
 
-    The per-batch directory is a deterministic function of the batch
-    id, so a replayed batch OVERWRITES its previous attempt —
-    at-least-once delivery composes to exactly-once index content
-    (the same T5 move as idempotent_parquet_sink). Assignment is the
-    same in-row codegen argmax as the build (zero corpus shuffle;
-    only the new batch moves), and ``cell`` stays a partition column,
-    so :func:`ivf_search`'s pruned scan prunes deltas exactly like
-    the base corpus."""
+    ``<path>/delta`` is an additive store (streaming/store.py) and
+    this is its per-batch write: the directory is a deterministic
+    function of the batch id, so a replayed batch OVERWRITES its
+    previous attempt — at-least-once delivery composes to exactly-once
+    index content (the same T5 move as idempotent_parquet_sink).
+    Assignment is the same in-row codegen argmax as the build (zero
+    corpus shuffle; only the new batch moves), and ``cell`` stays a
+    partition column, so :func:`ivf_search`'s pruned scan prunes
+    deltas exactly like the base corpus."""
     spark = new_vectors.sparkSession
     cents = load_centroids(spark, index_path)
     (
@@ -419,327 +422,100 @@ def ivf_append(
     invalidate_ivf_layout(index_path)
 
 
-#: Name of the folded-batch manifest a compaction stages INSIDE its
-#: new corpus: underscore-prefixed, so Spark's file index ignores it
-#: (like ``_SUCCESS``) while every reader/rerun can see exactly which
-#: delta batches the corpus already contains.
-IVF_FOLDED_MARKER = "_FOLDED"
+#: compaction spec of the delta store: append mode (the deltas hold
+#: disjoint vectors, so a fold is pure consolidation), each segment
+#: re-partitioned by ``cell`` so the pruned scan prunes it like the
+#: base corpus.
+_IVF_DELTA_FOLDS = {
+    "": store.SubFold(partition_by="cell", use_base_path=True)
+}
 
-
-def _ivf_fs(spark, index_path: str):
-    """(jvm, FileSystem, Path-class) for the index location — the
-    Hadoop FS API, never os/shutil: the only home of a 100 TB index
-    is HDFS/S3, where local-file calls silently no-op. Local paths
-    resolve to the local FS through the same interface."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, Path
-
-
-def _read_folded_ids(jvm, fs, Path, corpus: str) -> list[str]:
-    """Batch-dir names recorded in the corpus's folded manifest
-    (empty when no manifest — the steady state). Read with a plain
-    JDK Scanner, not commons-io: commons-io is only a TRANSITIVE
-    dependency of the Spark distribution, and a future distro shading
-    or dropping it would break manifest reads at runtime — during the
-    rare crash-cleanup window, the worst possible moment."""
-    marker = Path(f"{corpus}/{IVF_FOLDED_MARKER}")
-    if not fs.exists(marker):
-        return []
-    stream = fs.open(marker)
-    try:
-        scanner = jvm.java.util.Scanner(stream, "UTF-8").useDelimiter("\\A")
-        text = scanner.next() if scanner.hasNext() else ""
-    finally:
-        stream.close()
-    return [ln for ln in text.splitlines() if ln.strip()]
-
-
-def _rename_or_raise(fs, Path, src: str, dst: str) -> None:
-    """Hadoop ``FileSystem.rename`` signals failure with a ``False``
-    RETURN, not an exception (unlike the os.rename it replaced) — a
-    silently failed swap rename would let a compaction proceed into
-    its delta-delete/cleanup steps from an UNSWAPPED state, exactly
-    the corruption the manifest protocol exists to prevent. Every
-    swap/manifest rename goes through this raising wrapper."""
-    if not fs.rename(Path(src), Path(dst)):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-#: serve-path layout cache: :func:`read_ivf_corpus`'s driver-side
-#: probe (recovery check + folded manifest read + delta listing) is
-#: 4-6 py4j FS round-trips PER SEARCH over an appended index —
-#: measured as the whole of emb_ivf_append_topk's r6 +40% serve
-#: regression. The layout only changes through this module's mutators
-#: (build/append/compact/recover), each of which invalidates, so
-#: within a session the full probe runs once per index STATE — the
-#: same contract as the centroid/codebook literal caches in
-#: plans/llm_queries.py. Cross-SESSION writers are covered by a
-#: one-round-trip validity stamp: each entry records the delta dir's
-#: (exists, mtime) at probe time, and a hit re-checks just that
-#: stamp — an external append (new batch dir) or compaction (batch
-#: dirs deleted / dir swept) moves the mtime and forces a re-probe.
-#: Caveat: mtime granularity is filesystem-dependent (1 s on some),
-#: so an external mutation inside the same tick as the probe can
-#: serve one stale read; :func:`invalidate_ivf_layout` remains the
-#: explicit escape hatch for tighter coordination. Keys are
-#: normalized (trailing-slash-stripped) so path aliases share one
-#: entry.
-_IVF_LAYOUT_CACHE: dict[str, tuple[tuple, list[str]]] = {}
-
-
-def _layout_key(index_path: str) -> str:
-    # '/x' and '/x/' must hit (and invalidate) the SAME entry — a
-    # mutator invoked under an alias spelling would otherwise leave a
-    # reader's entry stale despite same-session mutation
-    return index_path.rstrip("/")
-
-
-def _delta_stamp(fs, Path, delta_dir: str) -> tuple:
-    """One-FS-call freshness stamp for the cached layout: the delta
-    dir's existence + mtime. Appends create batch dirs under it,
-    compactions delete them (and may sweep the dir) — either moves
-    the parent mtime on HDFS/S3A/local alike."""
-    try:
-        st = fs.getFileStatus(Path(delta_dir))
-        return (True, st.getModificationTime())
-    except Exception:  # FileNotFoundException via py4j
-        return (False, -1)
-
-
-#: relation-frame cache beside the layout cache (r15): the resolved
-#: corpus DataFrame (base ∪ pending deltas) keyed by the layout it was
-#: built from — a `spark.read.parquet` costs ~0.1 s of driver-side
-#: file listing + schema inference PER CALL, paid per micro-batch in
-#: the streaming serve path for an index that did not change. An
-#: entry serves only while (stamp, pending) still match the layout
-#: cache's current probe AND the caller is the same SparkSession (a
-#: frame cannot outlive its session); every mutator invalidates.
+#: relation-frame caches: a ``spark.read.parquet`` costs ~0.1 s of
+#: driver-side file listing + schema inference per call, paid per
+#: micro-batch in the streaming serve path for an index that did not
+#: change. An entry serves only to the session that built it (a frame
+#: cannot outlive its session) and only while its stamp still matches
+#: the disk: the delta store's :func:`store.layout_stamp` for the
+#: corpus, the ``centroids`` dir mtime for the centroid table. Both
+#: stamps are local ``os`` calls (tens of µs), re-read on every search,
+#: so a mutation by another session is seen on the next read.
 _IVF_FRAME_CACHE: dict[str, tuple] = {}
-
-#: same idea for the tiny centroid table: static per index by
-#: contract (re-training is a separate offline job — build_ivf_index
-#: overwrites it and invalidates). Keyed per session like the corpus
-#: frames. An EXTERNAL session rewriting centroids in place without
-#: a rebuild is outside every maintenance contract in this module.
 _IVF_CENTROID_FRAME_CACHE: dict[str, tuple] = {}
 
 
+def _layout_key(index_path: str) -> str:
+    # '/x' and '/x/' must hit (and invalidate) the SAME entry
+    return index_path.rstrip("/")
+
+
 def invalidate_ivf_layout(index_path: str | None = None) -> None:
-    """Drop the cached pending-delta layout for ``index_path`` (or
-    all indexes) — needed only when an external session mutates an
-    index this session is serving within the stamp's mtime
-    granularity (see ``_IVF_LAYOUT_CACHE``)."""
-    if index_path is None:
-        _IVF_LAYOUT_CACHE.clear()
-        _IVF_FRAME_CACHE.clear()
-        _IVF_CENTROID_FRAME_CACHE.clear()
-    else:
-        _IVF_LAYOUT_CACHE.pop(_layout_key(index_path), None)
-        _IVF_FRAME_CACHE.pop(_layout_key(index_path), None)
-        _IVF_CENTROID_FRAME_CACHE.pop(_layout_key(index_path), None)
+    """Drop the cached relation frames for ``index_path`` (or all
+    indexes). The stamps already catch every mutation a reader can
+    see; this only releases the frames early."""
+    for cache in (_IVF_FRAME_CACHE, _IVF_CENTROID_FRAME_CACHE):
+        if index_path is None:
+            cache.clear()
+        else:
+            cache.pop(_layout_key(index_path), None)
 
 
 def read_ivf_centroids(spark, index_path: str) -> DataFrame:
     """The index's centroid table as a DataFrame, relation-cached per
-    (index, session) — see :data:`_IVF_CENTROID_FRAME_CACHE`."""
+    (index, session, centroids mtime) — see :data:`_IVF_FRAME_CACHE`."""
     key = _layout_key(index_path)
+    mtime = os.stat(f"{key}/centroids").st_mtime_ns
     cached = _IVF_CENTROID_FRAME_CACHE.get(key)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
+    if cached is not None and cached[0] is spark and cached[1] == mtime:
+        return cached[2]
     df = spark.read.parquet(f"{key}/centroids")
-    _IVF_CENTROID_FRAME_CACHE[key] = (spark, df)
+    _IVF_CENTROID_FRAME_CACHE[key] = (spark, mtime, df)
     return df
 
 
-def _delta_batches(fs, Path, delta_dir: str) -> list[str]:
-    if not fs.exists(Path(delta_dir)):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(Path(delta_dir))
-        if st.getPath().getName().startswith("batch=")
-    )
-
-
-def _sweep_empty_delta_dir(fs, Path, delta_dir: str) -> None:
-    """Drop ``delta/`` once its last batch is folded — with a
-    non-recursive delete, so a batch appended concurrently makes the
-    call fail harmlessly instead of destroying new data."""
-    p = Path(delta_dir)
-    try:
-        if fs.exists(p) and len(fs.listStatus(p)) == 0:
-            fs.delete(p, False)
-    except Exception:
-        pass  # a concurrent append landed — leave it for next cycle
-
-
 def ivf_compact(spark, index_path: str) -> int:
-    """Fold accumulated delta batches into the base inverted lists —
-    the maintenance companion of :func:`ivf_append`: every appended
-    batch adds a delta layer the search must union, so after N
-    batches each probe opens N+1 file sets per cell. Compaction
-    rewrites base+deltas as one ``partitionBy(cell)`` corpus (same
-    layout the original build produced) and swaps it in with the
-    rename-aside protocol, all through the Hadoop FileSystem API (so
-    it runs where a 100 TB index actually lives — HDFS/S3 — not just
-    a local disk).
-
-    Crash safety is manifest-based: the staged corpus carries a
-    ``_FOLDED`` file naming exactly the delta batches it absorbed
-    (written AFTER the stage completes — its presence certifies a
-    complete stage). After the swap, precisely those batch dirs are
-    deleted; a crash in between leaves a corpus whose manifest tells
-    both :func:`read_ivf_corpus` and the recovery pre-scan which
-    deltas are already inside, so the rows are never double-served
-    and a rerun never re-folds them — while batches appended DURING
-    the compaction survive untouched for the next cycle. Returns the
-    number of delta batches folded (0 = nothing to do). Centroids
-    are untouched: re-training is the separate offline job it always
-    was."""
-    jvm, fs, Path = _ivf_fs(spark, index_path)
-    # invalidate up front, not just on success: a crash mid-compact
-    # must not leave a pre-compact layout cached past the mutation
-    invalidate_ivf_layout(index_path)
-    _recover_ivf_corpus(spark, index_path)
-    delta_dir = f"{index_path}/delta"
-    batches = _delta_batches(fs, Path, delta_dir)
-    if not batches:
-        return 0
-    base, nxt, old = (
-        f"{index_path}/corpus",
-        f"{index_path}/.corpus.next",
-        f"{index_path}/.corpus.old",
-    )
-    # merge base + EXACTLY the snapshot the manifest will name — a
-    # batch appended while this job runs must NOT be baked into the
-    # corpus unlisted (it would stay in delta/ and be served twice)
-    base_df = spark.read.parquet(base)
-    delta = (
-        spark.read.option("basePath", delta_dir)
-        .parquet(*[f"{delta_dir}/{b}" for b in batches])
-        .drop("batch")
-    )
-    merged = base_df.unionByName(delta.select(*base_df.columns))
-    (
-        merged.repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(nxt)
-    )
-    # manifest last: only a COMPLETE stage carries one (atomic
-    # create-then-rename so a half-written manifest never certifies)
-    tmp = Path(f"{nxt}/.{IVF_FOLDED_MARKER}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(("\n".join(batches) + "\n").encode("utf-8"))
-    finally:
-        out.close()
-    _rename_or_raise(fs, Path, str(tmp), f"{nxt}/{IVF_FOLDED_MARKER}")
-    if fs.exists(Path(old)):
-        fs.delete(Path(old), True)
-    _rename_or_raise(fs, Path, base, old)
-    _rename_or_raise(fs, Path, nxt, base)
-    for b in batches:
-        fs.delete(Path(f"{delta_dir}/{b}"), True)
-    fs.delete(Path(old), True)
-    fs.delete(Path(f"{base}/{IVF_FOLDED_MARKER}"), False)
-    _sweep_empty_delta_dir(fs, Path, delta_dir)
-    invalidate_ivf_layout(index_path)
-    return len(batches)
-
-
-def _recover_ivf_corpus(spark, index_path: str) -> None:
-    """Finish whatever a crashed compaction left half-done, from
-    evidence on disk: a missing base with an aside copy (crash
-    between the two renames) restores the aside; a base carrying a
-    ``_FOLDED`` manifest (crash after the swap, before cleanup)
-    deletes exactly the delta batches the manifest names — they are
-    already inside the corpus — then the stale aside and the
-    manifest itself. Every path is idempotent, so recovery composes
-    with concurrent appends and repeated reruns."""
-    jvm, fs, Path = _ivf_fs(spark, index_path)
-    base, old = f"{index_path}/corpus", f"{index_path}/.corpus.old"
-    if not fs.exists(Path(base)) and fs.exists(Path(old)):
-        _rename_or_raise(fs, Path, old, base)
-    folded = _read_folded_ids(jvm, fs, Path, base)
-    if folded:
-        for b in folded:
-            fs.delete(Path(f"{index_path}/delta/{b}"), True)
-        fs.delete(Path(old), True)
-        fs.delete(Path(f"{base}/{IVF_FOLDED_MARKER}"), False)
-        _sweep_empty_delta_dir(fs, Path, f"{index_path}/delta")
-    invalidate_ivf_layout(index_path)
+    """Fold every committed delta batch into one segment of the delta
+    store — the maintenance companion of :func:`ivf_append`: each
+    appended batch adds a layer the search must open per probed
+    cell, and a fold turns them back into one. One
+    :func:`store.compact_additive` in append mode: only the delta
+    tail is rewritten (the built ``corpus`` is never touched), the
+    manifest publish is the single commit point, and a crash anywhere
+    before it leaves the index serving the unfolded tail. A replayed
+    batch id the manifest already covers is never served again nor
+    re-folded; batches appended during the fold stay in the tail.
+    Returns the number of delta batches folded (0 = nothing to do).
+    Centroids are untouched: re-training is the separate offline job
+    it always was."""
+    delta = f"{_layout_key(index_path)}/delta"
+    upto = (store.load_manifest(delta) or {"upto": -1})["upto"]
+    ids = [i for i in store.batch_ids(delta) if i > upto]
+    if ids:
+        store.compact_additive(
+            spark, delta, ids[-1] + 1, _IVF_DELTA_FOLDS, compact_every=1
+        )
+    return len(ids)
 
 
 def read_ivf_corpus(spark, index_path: str) -> DataFrame:
-    """The index's full corpus: the base build plus every appended
-    delta batch NOT already folded into the base (the ``_FOLDED``
-    manifest is authoritative during a compaction's cleanup window,
-    so a crash mid-cleanup never double-serves a vector). Both
-    layers carry ``cell`` as a partition column, so a cell-routed
-    join prunes the scan on each layer.
-
-    The layout probe (recovery check, manifest read, delta listing —
-    all driver-side FS I/O) is cached per index path and invalidated
-    by every mutator in this module; a cache hit still pays ONE FS
-    round-trip to validate the delta-dir stamp, so an external
-    session's append/compact forces a re-probe instead of serving a
-    permanently stale layout (see ``_IVF_LAYOUT_CACHE``). If the
-    cached layout turns out unreadable anyway — an external process
-    crashed mid-compact after the stamp was taken — the entry is
-    dropped and the read retries once through the full
-    probe/recovery path before surfacing the error."""
+    """The index's full corpus: the base build unioned with the delta
+    store's live view (its segments plus every unfolded batch, from
+    one manifest snapshot — streaming/store.py). Every layer carries
+    ``cell`` as a partition column, so a cell-routed join prunes the
+    scan on each layer. Relation-cached per session while the delta
+    store's stamp is unchanged (see :data:`_IVF_FRAME_CACHE`)."""
     key = _layout_key(index_path)
-    corpus = f"{key}/corpus"
-    delta_dir = f"{key}/delta"
-    jvm, fs, Path = _ivf_fs(spark, index_path)
-    cached = _IVF_LAYOUT_CACHE.get(key)
-    if cached is not None and cached[0] != _delta_stamp(fs, Path, delta_dir):
-        cached = None  # external mutation since the probe — re-probe
-    if cached is None:
-        if not fs.exists(Path(corpus)) and fs.exists(
-            Path(f"{key}/.corpus.old")
-        ):
-            _recover_ivf_corpus(spark, index_path)
-        stamp = _delta_stamp(fs, Path, delta_dir)
-        folded = set(_read_folded_ids(jvm, fs, Path, corpus))
-        pending = [
-            b for b in _delta_batches(fs, Path, delta_dir) if b not in folded
-        ]
-        cached = (stamp, pending)
-        _IVF_LAYOUT_CACHE[key] = cached
-        fresh_probe = True
-    else:
-        fresh_probe = False
-    pending = cached[1]
-    # relation-frame hit: same layout, same session — skip the
-    # spark.read listing/inference entirely (~0.1 s per call)
-    fkey = (cached[0], tuple(pending))
-    fcached = _IVF_FRAME_CACHE.get(key)
-    if fcached is not None and fcached[0] == fkey and fcached[1] is spark:
-        return fcached[2]
-    try:
-        base = spark.read.parquet(corpus)
-        if pending:
-            delta = (
-                spark.read.option("basePath", delta_dir)
-                .parquet(*[f"{delta_dir}/{b}" for b in pending])
-                .drop("batch")
-            )
-            base = base.unionByName(delta.select(*base.columns))
-        _IVF_FRAME_CACHE[key] = (fkey, spark, base)
-        return base
-    except Exception:
-        if fresh_probe:
-            raise  # the probe itself just ran — the index is broken
-        # cached layout went unreadable (external crash mid-compact
-        # after the stamp was taken): self-heal through the
-        # probe/recovery path once, as the pre-cache code always did
-        invalidate_ivf_layout(index_path)
-        return read_ivf_corpus(spark, index_path)
-
+    delta = f"{key}/delta"
+    # stamp BEFORE resolving the view: a commit in between leaves a
+    # frame newer than its stamp, which the next read just re-reads
+    stamp = store.layout_stamp(delta)
+    cached = _IVF_FRAME_CACHE.get(key)
+    if cached is not None and cached[0] is spark and cached[1] == stamp:
+        return cached[2]
+    corpus = spark.read.parquet(f"{key}/corpus")
+    for part in store.store_parts(spark, delta, use_base_path=True):
+        corpus = corpus.unionByName(part.select(*corpus.columns))
+    _IVF_FRAME_CACHE[key] = (spark, stamp, corpus)
+    return corpus
 
 def ivf_search(
     spark,

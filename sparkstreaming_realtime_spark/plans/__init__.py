@@ -8,392 +8,59 @@ from . import llm_queries  # noqa: F401 — populates REGISTRY on import
 from . import log_queries  # noqa: F401 — populates REGISTRY on import
 from . import cdc_queries  # noqa: F401 — populates REGISTRY on import
 
-#: Gate-visibility ordering. CORRECTNESS_r02 recorded rows for exactly
-#: the first 50 registered queries (module registration order), so a
-#: capped harness would starve whole families registered later. The
-#: registry is re-ordered so every operator family — ES/serving,
-#: TPC-H, log split, CDC, LLM dedup/similarity/text, multimodal,
-#: warehouse, and the end-to-end streaming parities — lands inside the
-#: first 50; the remainder (verified equally, just later) follows.
-#: r8 rotation (supersedes r6's; the r1–r7 union is all-green, so the
-#: window holds): (a) the THREE queries new in r8 — cluster-pruned
-#: SemDeDup, the idempotent-sink replay parity (K5/T5's first
-#: driver-hashed row), and the observe-metrics fold parity; (b) the
-#: queries whose CODE paths changed in r8, so the driver re-verifies
-#: the edits: doc_dup_clusters / emb_semantic_dedup /
-#: emb_semantic_dedup_auto (the star-contraction fixpoint fix rides
-#: under all three via connected_components); and (c) one
-#: already-green sentinel per operator family (a family-wide
-#: regression still flags inside the cap). Displaced to the tail for
-#: room: emb_ivf_recall_curve, doc_frame_sample, emb_pq_topk — each
-#: green r6–r7 with a same-family sentinel still inside the window.
+#: Gate-visibility ordering. A capped harness records rows for only the
+#: first 50 registered queries, so the registry is re-ordered by this
+#: list: every operator family keeps at least one row inside the first
+#: 50, and a query whose code path changed is rotated into the window,
+#: displacing a long-green row of a family that keeps in-window
+#: coverage. Unlisted queries follow in registration order; every
+#: query, in the window or not, is still verified by
+#: scripts/check_oracle.py and pytest.
 _PRIORITY = [
-    # serving / DAU sentinels (A1, endpoint)
     "dau_total_by_day", "dau_realtime_endpoint",
-    # log-split sentinel (P4/P5 projection)
-    # (multiplex_route_counts rotated to the tail r12 for the NEW
-    # streaming key-skew parity below — green r1-r11; the log-split
-    # family keeps log_split_page in-window and P9's streaming twin
-    # streaming_multiplex_parity stays in the tail's green union)
     "log_split_page",
-    # CDC sentinels (P10/P11 routing; the SCD2 family's sentinel is
-    # streaming_scd2_parity below, which compares against the batch
-    # operator and so covers both). r12 rotation theme: the six
-    # registry queries the driver's 50-row window has NEVER hashed
-    # (VERDICT r11 #2) come in; six long-green sentinels whose
-    # families keep in-window coverage go to the tail
-    # (cdc_dim_snapshot rotated to the tail r12 — green r3-r11; the
-    # CDC family keeps cdc_route_counts + cdc_snapshot_diff in-window)
     "cdc_route_counts",
-    # NEW r11 session 4: snapshot reconciliation — the CDC-vs-full-
-    # re-export convergence diff (sliding_window_rollup rotated to
-    # the tail for it — green r10-r11; the window family keeps
-    # hourly_window_rollup + streaming_sliding_rollup_parity
-    # in-window)
     "cdc_snapshot_diff",
-    # ROTATED IN r13: the bucketed-state sink rewrite (funnel_sink /
-    # transition_sink / scd2_sink / dim_upsert_sink now hash-bucket
-    # their state by key and rewrite only TOUCHED buckets per batch)
-    # changes these two sinks' code paths, so the driver must re-hash
-    # their end-to-end parities (funnel + transition twins are already
-    # in-window below). corpus_overlap_sketch and revenue_anomaly_days
-    # rotated to the tail for them — green r11-r12; the KMV family
-    # keeps doc_shingle/lang_distinct_sketch + the streaming parity
-    # in-window, the timeseries family keeps revenue_rolling_windows +
-    # streaming_anomaly_parity
     "streaming_scd2_parity", "streaming_cdc_dim_parity",
-    # NEW this round: byte-exact PCM16 audio features
     "doc_audio_windows",
-    # ES query-surface: the RANKED form (BM25 — ES's default
-    # similarity — over the document corpus)
-    # (stats_by_item_segment rotated to the tail r12 — green r1-r11;
-    # the ES family keeps doc_bm25_search + doc_phrase_search and the
-    # serving family keeps dau_realtime_endpoint in-window)
     "doc_bm25_search",
-    # NEW r13: the BM25 index's streaming twin — per-batch inverted-
-    # index shards over disjoint documents (postings/doclen/additive
-    # stats), query served from the merged index through the SHARED
-    # bm25_rank fold (same oracle as doc_bm25_search).
-    # doc_ngram_jaccard_dedup rotated to the tail for it — green r12;
-    # the dedup family keeps doc_split_leakage + curation funnel +
-    # line-dedup parity in-window
     "streaming_bm25_parity",
-    # ROTATED IN r14: the additive-store compaction rewrite
-    # (streaming/store.py — manifest-committed segments behind every
-    # batch=<id> sink) changes read_sink's code path, so the driver
-    # must re-hash the idempotent-sink parity end to end
-    # (doc_phrase_search rotated to the tail for it — green
-    # r11s4-r13; the ES family keeps doc_bm25_search +
-    # streaming_bm25_parity in-window)
     "streaming_idempotent_sink_parity",
-    # joins / rollups / TPC-H / extension sentinels
-    # (hourly_window_rollup rotated to the tail r12 for the NEW
-    # streaming co-purchase parity below — green r1-r11; the window
-    # family keeps revenue_rolling_windows +
-    # streaming_sliding_rollup_parity + streaming_anomaly_parity
-    # in-window)
     "order_wide_join",
-    # NEW r10: event-sequence analytics — ordered funnel + retention
-    # cohorts (shipping_priority and doc_gopher_filters rotated to
-    # the tail for them — green r1-r9 / r3-r9; TPC-H keeps
-    # order_wide_join + pricing_summary in-window, text-quality keeps
-    # doc_quality_bands + doc_lm_perplexity)
-    # NEW r11 session 2: first-order Markov transitions within
-    # sessions (user_retention_cohorts rotated to the tail for it —
-    # green r10; the sequence family keeps user_funnel + the matrix)
     "event_transition_matrix",
-    # NEW r12: the matrix's incremental twin — touched-user recompute
-    # over a deduped event store (transitions are NOT
-    # batch-decomposable; same oracle as event_transition_matrix)
     "streaming_transition_parity",
-    # NEW r13: retention's incremental twin — per-batch distinct
-    # (user, day) sets, distinct-over-union + the shared
-    # retention_from_active fold at read; a late older event moves
-    # its user's cohort retroactively (same oracle as
-    # user_retention_cohorts). doc_bpe_compression rotated to the
-    # tail for it — green r11s4-r12; the BPE family keeps
-    # doc_bpe_learn_merges in-window
     "streaming_retention_parity",
-    # NEW r11 session 4: linear revenue attribution over the bucketed
-    # touch range join (events_gap_filled_resample rotated to the
-    # tail for it — green r10-r11; the timeseries family keeps the
-    # rolling/anomaly pair in-window)
-    # ROTATED IN r14: count-min stores now compact (read_count_min
-    # folds segments ∪ tail), so the heavy-hitters parity must
-    # re-hash (order_touch_attribution rotated to the tail for it —
-    # green r11s4-r13; the attribution family keeps
-    # streaming_attribution_parity, which shares its oracle)
     "streaming_heavy_hitters_parity", "streaming_attribution_parity",
-    # NEW r10: zero-filled time-series resample (events_asof_last_order
-    # rotated to the tail for it — green r4-r9, the as-of operator
-    # stays pytest-pinned and in the r1-r9 green union)
-    # warehouse maintenance + quality gate
-    # (warehouse_compaction_roundtrip rotated to the tail r12 for the
-    # NEW streaming transition parity below — green r5-r11; the
-    # warehouse family keeps events_quality_expectations +
-    # warehouse_schema_evolution in-window)
     "events_quality_expectations",
-    # NEW r11 session 4: schema drift end-to-end — the two-era
-    # mergeSchema read (streaming_quality_gate_parity rotated to the
-    # tail for it — green r5-r10; the expectations family keeps
-    # events_quality_expectations in-window and the gate parity stays
-    # pytest-pinned)
     "warehouse_schema_evolution",
-    # NEW r11: per-nation rolling/cumulative revenue windows over the
-    # pre-aggregated daily rollup (zordered_two_dim_lookup rotated to
-    # the tail for it — green r10; warehouse keeps
-    # warehouse_compaction_roundtrip + clustered/bucketed tail rows),
-    # and the exact-integer z-score anomaly tripwire over the same
-    # rollup (emb_ivf_compact_topk rotated to the tail — green r6-r10,
-    # emb_ivf_append_topk keeps the persisted-index family in-window)
     "revenue_rolling_windows",
-    # text-stats / quality family: per-doc unigram Shannon entropy —
-    # the zero-shuffle information-theoretic quality signal
-    # (streaming_dau_dedup_parity rotated to the tail r11s4 — green
-    # r2-r10; doc_quality_bands rotated to the tail r12 — green
-    # r5-r11; the quality family keeps events_quality_expectations +
-    # doc_token_entropy in-window)
-    # ROTATED IN r14: the quality gate's accepted store now compacts
-    # (append-mode segments; quarantine/verdicts stay per-batch audit
-    # dirs), so the gate parity re-hashes (doc_token_entropy rotated
-    # to the tail for it — green r5-r13; the quality family keeps
-    # events_quality_expectations in-window)
     "streaming_quality_gate_parity",
-    # NEW r11 session 4: BPE merge learning — tokenizer training over
-    # the word-frequency vocabulary, the whole loop oracle-replayed
-    # (doc_exact_k_sample rotated to the tail for it — green r1-r10;
-    # the sampling family keeps emb_cluster_balanced_sample's r9-r10
-    # union green and doc_stratified_sample in the r1-r7 union)
     "doc_bpe_learn_merges",
-    # NEW r11 session 4 (cont.): the BPE ENCODE side (learn + apply +
-    # per-language compression report) and the join-key skew profiler
-    # (exact-integer Gini, the pre-salting diagnostic) —
-    # streaming_idempotent_sink_parity and
-    # streaming_observe_metrics_parity rotated to the tail for them
-    # (green r8-r10; the streaming block keeps five end-to-end
-    # parities in-window and both stay pytest-pinned)
     "events_key_skew",
-    # NEW r12: the skew profiler's incremental twin — per-batch key
-    # counts via rollup_sum_sink, histogram/Gini/top-k at read time
-    # over the folded counts (same oracle as events_key_skew)
     "streaming_key_skew_parity",
-    # NEW r13: the statsByItem SERVING store's end-to-end twin —
-    # additive exact-cents partials at the query-agnostic
-    # (part, name, segment, band) grain via rollup_sum_sink, analyzed
-    # match-AND + grouping applied at read over the merged store
-    # (same oracle as stats_by_item_segment, which rotated to the
-    # tail r12 and stays covered by this row's shared oracle).
-    # doc_topk_similar rotated to the tail for it — green r12; the
-    # similarity family keeps six in-window rows
     "streaming_item_stats_parity",
-    # (pricing_summary rotated to the tail r12 — green r1-r11 incl.
-    # the r6 money-path edit; TPC-H keeps order_wide_join plus the
-    # revenue rollup/anomaly pair in-window)
-    # NEVER-HASHED r12: cluster-balanced quota sampling — returns the
-    # sampling family to the window (doc_exact_k_sample went to the
-    # tail r11s4; green in every session replica since r9)
     "emb_cluster_balanced_sample",
-    # dedup / cluster / split family (doc_chunk_dedup_stride rotated
-    # to the tail — green r3–r5, family still covered by
-    # doc_exact_dedup/doc_minhash_near_dup — to make room for the NEW
-    # product-quantized ANN query). NEW r8 session 2: the line-dedup
-    # pair (corpus boilerplate gate + zero-shuffle within-doc
-    # collapse) and the quality-aware keep-longest survivor —
-    # doc_hash_split / doc_resize_images / bucketed_colocated_join
-    # rotated to the tail for them (green r1–r7 / r6–r7 / r5–r7;
-    # sampling, multimodal, and warehouse families each keep ≥2
-    # in-window sentinels)
-    # NEW r9: ExactSubstr arbitrary-offset repeated-substring removal
-    # (doc_intra_line_dedup rotated to the tail for it — green r8 +
-    # pytest-pinned zero-shuffle shape; the line family keeps
-    # doc_line_dedup + streaming_line_dedup_parity in-window)
-    # NEW r10: integer-arithmetic PageRank — the numeric iterative
-    # loop beside the set-valued components family (emb_feature_extract
-    # rotated to the tail for it — green r2-r9, multimodal keeps
-    # doc_audio_windows in-window)
-    # (order_graph_pagerank rotated to the tail r11s4 for
-    # doc_phrase_search — green r10-r11 incl. the supplier-id fix;
-    # the graph family keeps the triangle + link-prediction pair
-    # in-window)
-    # (doc_line_dedup rotated to the tail r11s4 for the streaming
-    # attribution parity — green r8s2-r10; the line family keeps
-    # streaming_line_dedup_parity in-window, which replays the same
-    # batch oracle)
-    # NEW r10: record linkage — segment-blocked edit-distance entity
-    # resolution (doc_exact_dedup rotated to the tail for it — green
-    # r1-r9, the dedup family keeps five in-window rows)
     "customer_fuzzy_match",
-    # NEW r11 session 4: the train/test contamination audit — near-
-    # dup pairs crossing split boundaries under per-doc vs per-source
-    # policies (customer_fuzzy_match keeps the linkage family;
-    # user_funnel rotated to the tail for it — green r10-r11, the
-    # sequence family keeps event_transition_matrix in-window)
     "doc_split_leakage",
-    # NEVER-HASHED r12: token n-gram Jaccard near-dup (the exact-
-    # verify sibling of MinHash banding) and TF-IDF cosine top-k doc
-    # similarity — both green in every session replica, never inside
-    # the driver window before
-    # (sampling family note: doc_exact_k_sample rotated to the tail
-    # r11s4 for doc_bpe_learn_merges — green r1-r10;
-    # doc_temperature_resample / doc_stratified_sample went to the
-    # tail in earlier rounds, emb_cluster_balanced_sample keeps the
-    # quota-window shape in the r9-r10 union)
-    # NEW r11 session 2: market-basket co-purchase pairs with lift —
-    # the within-basket pair-enumeration shape (emb_kmeans_clusters
-    # rotated to the tail for it — green r6-r10, and the Lloyd loop
-    # stays in-window inside the clustered-SemDeDup rows, which train
-    # k-means end to end)
     "part_copurchase_pairs",
-    # NEW r12: incremental co-purchase maintenance — per-batch
-    # pair/item/basket partials, read-time support threshold + lift
-    # over the folded counts (same oracle as part_copurchase_pairs)
     "streaming_copurchase_parity",
-    # NEW r11 session 4: exact triangle counting (degree-ordered
-    # orientation over the support-1 co-purchase graph) and
-    # common-neighbor/Adamic-Adar link prediction over the strong
-    # (support-2) graph — the graph-analytics pair beside PageRank
-    # (emb_semantic_dedup_clustered_auto and streaming_scd2_parity
-    # rotated to the tail for them — green r8s2-r10 / r5-r10; the
-    # clustered-SemDeDup family keeps two in-window rows and the SCD2
-    # family's batch oracle cdc_scd2_history stays in the r1-r10
-    # green union)
     "part_copurchase_triangles",
-    # NEW r13: the EXACT threshold-pruned link prediction (hub-probe
-    # lower bound τ on the k-th common_n + the min-degree containment
-    # bound drop wedge pairs BEFORE the pair shuffle — PROBE_r13: 60×
-    # shuffle reduction on a skewed graph, exact no-op on uniform).
-    # Shares part_link_prediction's oracle and exercises a superset
-    # of its code path, so the unpruned row rotates to the tail for
-    # it — green r11s4-r12
     "part_link_prediction_pruned",
-    # LLM dedup/similarity (re-verify the r6 width edits: the 6×6
-    # re-pin, the width-adaptive auto oracle's first hash row, the
-    # Hadoop-FS index maintenance behind append + NEW compact, and
-    # the NEW binary sign-bit + Hamming two-stage search —
-    # emb_truncated_overlap rotated to the tail for it, green r5)
-    # (doc_minhash_near_dup rotated to the tail r11s4 for the
-    # DDSketch pair — green r1-r10; the dedup family keeps
-    # doc_dup_clusters + doc_line_dedup + the curation funnel
-    # in-window, and emb_semantic_decontaminate stays in-window
-    # because its code path changed this session)
-    # (emb_semantic_dedup and emb_semantic_dedup_clustered rotated to
-    # the tail r12 — green r4-r11 / r8-r11; the similarity family
-    # keeps the auto + clustered_banded + decontaminate + hard-
-    # negatives rows in-window, and the pinned-knob twins stay
-    # guarded by FIXED_KNOB_GUARD_N + tests)
     "emb_semantic_decontaminate",
     "corpus_curation_funnel_v2",
     "emb_semantic_dedup_auto",
-    # NEW r8: cluster-pruned SemDeDup (the published recipe — pairs
-    # only within k-means clusters, coarse quantizer shared with the
-    # IVF index). emb_ivf_recall_curve rotated to the tail for it
-    # (green r1–r7; similarity family still has six in-window rows)
     "emb_semantic_dedup_clustered_banded",
-    # NEW r8 session 2: the auto-k clustered variant (k ∝ N — the
-    # published SemDeDup scale knob; emb_knn_join rotated to the
-    # tail for it, green r6–r7, emb_ivf_knn_join keeps the kNN-join
-    # shape verified in the r1–r7 union)
-    # NEW r10: cross-frame LSH decontamination (emb_ivfpq_topk
-    # rotated to the tail for it — green r8s2-r9, emb_ivf_append/
-    # compact keep the persisted-index family in-window)
-    # NEW r11 session 3: hard-negative mining — the banded form of
-    # the kNN join (doc_lm_perplexity rotated to the tail for it —
-    # green r2-r10; the quality family keeps doc_quality_bands +
-    # events_quality_expectations in-window)
     "emb_hard_negatives",
-    # NEVER-HASHED r12: the IVF persisted-index family's first driver
-    # rows — auto-tuned (nlist/nprobe ∝ N) IVF top-k and the
-    # streaming serve-from-index parity; before this the whole family
-    # lived in the tail + pytest
     "emb_ivf_auto_topk", "streaming_ivf_serve_parity",
-    # streaming parities (+ NEW r8: the idempotent-sink replay parity
-    # — K5/T5's first driver-hashed row — and the observe-metrics
-    # fold parity; doc_frame_sample and emb_pq_topk rotated to the
-    # tail for them, both green r6–r7 with doc_resize_images /
-    # emb_ivfpq_topk keeping their families in-window); last in the
-    # top-50 block: if the cap is a count they're inside it, if a
-    # time budget the cheap queries above have already banked rows
-    # NEW r10: ingest-time decontamination (events_table_profile
-    # rotated to the tail for it — green r5-r9; the profiling family
-    # keeps streaming_state_profile_parity in-window)
     "streaming_decontaminate_parity",
-    # NEW r10: the sliding-window rollup under real streaming state
-    # (streaming_heavy_hitters_parity rotated to the tail for it —
-    # green r5-r9; the sketch family keeps doc_heavy_hitters_sketch's
-    # oracle and the replay pytest)
     "streaming_sliding_rollup_parity",
-    # NEW r8 session 2: incremental line-count maintenance + the
-    # retroactive boilerplate gate (same oracle as doc_line_dedup)
     "streaming_line_dedup_parity",
-    # NEVER-HASHED r12: the funnel family's end-to-end streaming twin
-    # (incremental stage counts under micro-batches vs the batch
-    # funnel oracle)
     "streaming_funnel_parity",
-    # NEW r11: the KMV distinct-count sketch family — the estimate
-    # with its accuracy audit, the union->k-smallest merge under real
-    # micro-batches, and the cross-corpus Jaccard overlap from the
-    # same sketch algebra (doc_pii_scrub, streaming_state_profile_
-    # parity, doc_exact_substr_dedup rotated to the tail for them —
-    # green r2-r10 / r5-r10 / r9-r10; the quality family keeps
-    # doc_quality_bands + events_quality_expectations in-window,
-    # profiling keeps events_table_profile's r1-r10 union green, the
-    # dedup family keeps five in-window rows)
     "doc_shingle_distinct_sketch", "streaming_distinct_sketch_parity",
-    # NEW r11 session 2: per-group KMV (one-pass per-language
-    # vocabulary estimates) and the anomaly tripwire over an
-    # incrementally-maintained rollup (doc_dup_keep_longest and
-    # emb_cells_arrow_assign rotated to the tail — green r8-r10 /
-    # r9-r10; dedup keeps four in-window rows, the Arrow matmul path
-    # stays pytest-pinned and in the r9-r10 green union)
-    # (doc_lang_distinct_sketch rotated to the tail r14 for the NEW
-    # hybrid RRF search — green r11s2-r13; the KMV family keeps
-    # doc_shingle_distinct_sketch + streaming_distinct_sketch_parity
-    # in-window)
     "streaming_anomaly_parity",
-    # NEW r11 session 4: DDSketch quantiles — the mergeable
-    # percentile member completing the sketch trio (batch + additive
-    # streaming twin share one oracle; corpus_overlap_sketch and
-    # doc_lang_distinct_sketch's sibling rotations above keep the KMV
-    # family at three in-window rows, and the two displaced here —
-    # value_percentiles / dau_approx_vs_exact never held window slots
-    # this round, so the pair displaces emb_semantic_decontaminate
-    # and emb_ivf_append_topk — green r10 / r5-r10; the similarity
-    # family keeps the clustered-SemDeDup pair + hard negatives +
-    # streaming_decontaminate_parity in-window, the IVF family stays
-    # pinned by its tail union and pytest)
     "events_value_ddsketch", "streaming_ddsketch_parity",
-    # NEW r11 session 4: sketch-driven winsorized scaling — the
-    # p01/p99 clip bounds come FROM the DDSketch, so the robust mean
-    # is two scans at any size (doc_dup_clusters rotated to the tail
-    # for it — green r1-r10; the dedup family keeps doc_line_dedup,
-    # the curation funnel, and keep-longest's tail union, and the
-    # components loop stays pinned by tests + the clustered SemDeDup
-    # rows' shared quantizer)
-    # (events_winsorized_stats rotated to the tail r14 for the NEW
-    # hybrid parity below — green r11s4-r13; the DDSketch family
-    # keeps events_value_ddsketch + streaming_ddsketch_parity
-    # in-window)
-    # NEW r14: hybrid retrieval — reciprocal-rank fusion (Cormack et
-    # al. 2009 k=60, the ES ``rrf`` retriever) of the exact BM25
-    # top-10 and the brute-cosine top-10, exact-integer
-    # SCALE div (k + rank) scores; and its end-to-end streaming twin,
-    # where BOTH branches serve from streaming-maintained stores
-    # (term-clustered BM25 index + idempotent embeddings store, each
-    # compacted mid-run) — same oracle, so the maintained indexes
-    # must reproduce the one-shot fusion bit-for-bit
     "doc_hybrid_rrf_search",
     "streaming_hybrid_rrf_parity",
-    # tail (51+): green in earlier driver artifacts, still verified
-    # every session by scripts/check_oracle.py (full registry) and
-    # pytest. r13 displacements first: corpus_overlap_sketch (r11-r12),
-    # revenue_anomaly_days (r11-r12), doc_topk_similar (r12),
-    # part_link_prediction (r11s4-r12; superset code path stays
-    # in-window via the pruned row), doc_ngram_jaccard_dedup (r12),
-    # doc_bpe_compression (r11s4-r12).
-    # r12 displacements: cdc_dim_snapshot (r3-r11),
-    # stats_by_item_segment (r1-r11), emb_semantic_dedup (r4-r11),
-    # emb_semantic_dedup_clustered (r8-r11), doc_quality_bands
-    # (r5-r11), pricing_summary (r1-r11)
     "corpus_overlap_sketch", "revenue_anomaly_days", "doc_topk_similar",
     "part_link_prediction", "doc_ngram_jaccard_dedup",
     "doc_bpe_compression",

@@ -983,15 +983,15 @@ def _ivf_appended_index_path(
 )
 def emb_ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search over a COMPACTED index: the same 80%-base + two-delta
-    fixture as emb_ivf_append_topk, but ivf_compact folds the delta
-    layers into the base inverted lists before the search
-    (operators/similarity.py:ivf_compact — Hadoop-FS rename-aside
-    swap with a folded-batch manifest). Compaction is layout-only by
-    contract, so this query shares the append query's oracle
-    literally: identical routing, identical top-k, from one file set
-    per cell instead of three. Both the fold (returns 2 batches the
-    first time) and the served results are therefore under the
-    driver's hash gate."""
+    fixture as emb_ivf_append_topk, but ivf_compact folds the two
+    delta batches into one segment of the delta store before the
+    search (operators/similarity.py:ivf_compact — one append-mode
+    store.compact_additive, committed by the store manifest).
+    Compaction is layout-only by contract, so this query shares the
+    append query's oracle literally: identical routing, identical
+    top-k, from two file sets per cell instead of three. Both the
+    fold (returns 2 batches the first time) and the served results
+    are therefore under the oracle's hash check."""
     key = (spark.sparkContext.applicationId, sf_dir, "compacted")
     if key not in _IVF_INDEX_CACHE:
         idx = _ivf_appended_index_path(spark, sf_dir, "compact")

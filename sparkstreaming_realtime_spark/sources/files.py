@@ -110,7 +110,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark-written DIRECTORY tables, where the probe is never needed;
     porting this helper off local disk means swapping the probe to
     the Hadoop FileSystem API, the pattern in
-    operators/similarity.py:_ivf_fs)."""
+    materialize.py:_delete_fs_path)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"

@@ -609,13 +609,15 @@ def quality_gate_sink(
 def ivf_append_sink(index_path: str, vec_col: str = "embedding"):
     """Streaming IVF index maintenance: each micro-batch of new
     vectors routes to the FIXED learned centroids and lands in its
-    own ``delta/batch=<id>`` layer (operators/similarity.py:
-    ivf_append) — the deterministic per-batch location makes replays
-    overwrite their previous attempt (T5 idempotence), and
-    ``ivf_search`` serves the base + all deltas with the same
-    cell-pruned scan. Centroid re-training stays a separate offline
-    job, exactly how production IVF deployments absorb a continuous
-    ingest stream."""
+    own ``delta/batch=<id>`` dir of the index's delta store, an
+    additive store in append mode (streaming/store.py;
+    operators/similarity.py:ivf_append) — the deterministic per-batch
+    location makes replays overwrite their previous attempt (T5
+    idempotence), and ``ivf_search`` serves the base + the delta
+    store's live view with the same cell-pruned scan.
+    ``ivf_compact`` folds the committed deltas into a segment.
+    Centroid re-training stays a separate offline job, exactly how
+    production IVF deployments absorb a continuous ingest stream."""
     from ..operators.similarity import ivf_append
 
     def write(batch_df: DataFrame, batch_id: int) -> None:

@@ -7,7 +7,9 @@ recovers it. Two layouts share the protocol.
 
 **Additive segments + tail** (idempotent_parquet_sink, rollup_sum_sink,
 retention_sink, count_min_sink, kmv_sink, line_count_sink,
-bm25_index_sink, copurchase_sink, quality_gate_sink's accepted store).
+bm25_index_sink, copurchase_sink, quality_gate_sink's accepted store,
+and the IVF index's ``delta`` store: ivf_append_sink writes it,
+operators/similarity.py:ivf_compact folds it).
 Each micro-batch writes one ``batch=<id>`` dir, a deterministic
 function of the batch id, so a replayed batch OVERWRITES its previous
 attempt: at-least-once delivery composes to exactly-once output (the
@@ -26,8 +28,8 @@ stream lifetime::
 - *Fold mode* (aggregated stores) rewrites base ∪ tail into one
   segment with the store's own merge (key-wise integer sum,
   set-distinct, k-smallest), so the base stays O(keys).
-- *Append mode* (identity stores: raw rows, BM25 postings/doclen)
-  consolidates only the tail into a new segment. Segments are
+- *Append mode* (identity stores: raw rows, BM25 postings/doclen, IVF
+  deltas) consolidates only the tail into a new segment. Segments are
   size-tiered: once :data:`TIER_FANOUT` exist, the smallest ``fanout``
   merge into one (the LSM leveling rule), so the segment count stays
   O(fanout · log data) and each row is rewritten O(log_fanout data)
@@ -35,7 +37,10 @@ stream lifetime::
 - Only ids strictly below the in-flight batch fold. Structured
   Streaming replays at most the in-flight batch, so its replay still
   overwrites the tail, and a replayed compaction is a no-op (``upto``
-  already covers the folded ids).
+  already covers the folded ids). ``ivf_compact`` runs after its
+  batch's write has landed and folds that batch too; a replay of it
+  rewrites a dir at or below ``upto``, which is never served and is
+  deleted by the next commit with the rest of the gc list.
 
 **Bucket versions** (dim_upsert_sink, scd2_sink, funnel_sink,
 transition_sink). Keyed state is hash-bucketed into ``n_buckets``
@@ -188,6 +193,30 @@ def batch_ids(path: str) -> list[int]:
             except ValueError:
                 pass
     return sorted(out)
+
+
+def layout_stamp(path: str) -> tuple:
+    """A cheap local stamp of an additive store's live view: the
+    manifest bytes plus ``(name, st_mtime_ns)`` of each ``batch=<id>``
+    dir. A commit rewrites the manifest and an append or a replay
+    (which rewrites its dir) moves a tail entry, so while the stamp is
+    unchanged, :func:`store_parts` resolves the same files. Readers
+    use it to key relation caches."""
+    try:
+        with open(os.path.join(path, _MANIFEST), "rb") as f:
+            manifest = f.read()
+    except OSError:
+        manifest = b""
+    try:
+        with os.scandir(path) as it:
+            tail = sorted(
+                (e.name, e.stat().st_mtime_ns)
+                for e in it
+                if e.name.startswith("batch=")
+            )
+    except FileNotFoundError:
+        tail = []
+    return manifest, tuple(tail)
 
 
 def _tail_dirs(path: str, upto: int, sub: str) -> list[str]:

@@ -550,11 +550,10 @@ def test_ivf_append_replay_is_idempotent_and_served(spark, tmp_path):
 
 
 def test_ivf_frame_cache_reuses_relation_and_invalidates(spark, tmp_path):
-    """The relation-frame cache (r15): a second read of an unchanged
-    index returns the SAME DataFrame object (no re-listing), a
-    mutator drops the entry, and the rebuilt frame reflects the
-    mutation — so the cache can never serve a stale corpus through
-    the in-process maintenance flows."""
+    """The relation-frame cache: a second read of an unchanged index
+    returns the SAME DataFrame object (no re-listing), a mutator drops
+    the entry, and a stale entry — one a mutation by another session
+    never dropped — is never served: the delta store's stamp moved."""
     base = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0), (3, [0.0, 1.0], 1)],
         "vec_id long, embedding array<float>, label int",
@@ -566,91 +565,65 @@ def test_ivf_frame_cache_reuses_relation_and_invalidates(spark, tmp_path):
     assert f1 is f2  # relation reused, not re-listed
     c1 = sim.read_ivf_centroids(spark, path)
     assert sim.read_ivf_centroids(spark, path) is c1
+    # a DIFFERENT session must never be handed another session's frame
+    _, mtime, frame = sim._IVF_CENTROID_FRAME_CACHE[path]
+    sim._IVF_CENTROID_FRAME_CACHE[path] = (object(), mtime, frame)
+    assert sim.read_ivf_centroids(spark, path) is not c1
     late = spark.createDataFrame(
         [(10, [0.95, 0.05], 0)],
         "vec_id long, embedding array<float>, label int",
     )
+    pre_append = sim._IVF_FRAME_CACHE[path]
     sim.ivf_append(late, path, batch_id=0)
     assert path not in sim._IVF_FRAME_CACHE  # append invalidates
+    # an append this session did not see: the pre-append entry is
+    # back, and the next read still serves the appended vector
+    sim._IVF_FRAME_CACHE[path] = pre_append
     f3 = sim.read_ivf_corpus(spark, path)
     assert f3 is not f1
     assert {r["vec_id"] for r in f3.collect()} == {1, 2, 3, 10}
-    # a DIFFERENT session must never be handed another session's frame
-    sim._IVF_CENTROID_FRAME_CACHE[path] = (object(), "not-a-frame")
-    assert sim.read_ivf_centroids(spark, path) is not c1
-    sim.invalidate_ivf_layout(path)
-    assert path not in sim._IVF_CENTROID_FRAME_CACHE
-
-
-def test_ivf_layout_cache_serves_without_fs_probe_and_invalidates(
-    spark, tmp_path, monkeypatch
-):
-    """The serve-path layout cache (r7, stamped r8): repeated
-    searches over a stable index must not re-run the full
-    driver-side FS probe (manifest read + delta listing — the
-    measured r6 serve regression); a hit pays only the one-call
-    delta-dir stamp check, so an EXTERNAL session's mutation forces
-    a re-probe; a cached layout that turns out unreadable (external
-    crash) self-heals through one retry; and every in-process
-    mutator invalidates outright."""
-    import time
-
-    base = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0), (3, [0.0, 1.0], 1)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(base, dim=2, path=path, n_cells=2, iters=1)
-    assert path not in sim._IVF_LAYOUT_CACHE  # build invalidates
-    sim.read_ivf_corpus(spark, path)
-    stamp, pending = sim._IVF_LAYOUT_CACHE[path]
-    assert pending == [] and stamp[1] == -1  # probe ran; no delta dir
-    # count full probes from here: a cache hit must serve on the
-    # stamp check ALONE, never re-listing the delta dir
-    calls = {"n": 0}
-    orig_probe = sim._delta_batches
-
-    def counting(fs, Path, d):
-        calls["n"] += 1
-        return orig_probe(fs, Path, d)
-
-    monkeypatch.setattr(sim, "_delta_batches", counting)
-    sim.read_ivf_corpus(spark, path)
-    assert calls["n"] == 0  # pure hit: no full probe
-    # poison the entry with a PHANTOM layout under the true stamp: the
-    # hit serves it (proving the probe was skipped), the read of the
-    # nonexistent batch fails, and the self-heal retry re-probes once
-    # and repairs the entry — the external-crash recovery contract
-    sim._IVF_LAYOUT_CACHE[path] = (stamp, ["batch=999"])
-    ids = {r["vec_id"] for r in sim.read_ivf_corpus(spark, path).collect()}
-    assert ids == {1, 2, 3}
-    assert calls["n"] == 1  # exactly one healing re-probe
-    assert sim._IVF_LAYOUT_CACHE[path][1] == []
-    late = spark.createDataFrame(
-        [(10, [0.95, 0.05], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    # external-writer simulation: append, then restore the pre-append
-    # entry as if this session had cached before the other session's
-    # append — the STAMP mismatch (new delta dir mtime) must force a
-    # re-probe instead of serving the stale empty layout forever
-    pre_append = sim._IVF_LAYOUT_CACHE[path]
-    time.sleep(0.02)  # keep the two stamps apart at mtime granularity
-    sim.ivf_append(late, path, batch_id=0)
-    assert path not in sim._IVF_LAYOUT_CACHE  # append invalidates
-    sim._IVF_LAYOUT_CACHE[path] = pre_append
-    ids = {r["vec_id"] for r in sim.read_ivf_corpus(spark, path).collect()}
-    assert ids == {1, 2, 3, 10}
-    assert sim._IVF_LAYOUT_CACHE[path][1] == ["batch=0"]
+    assert sim.read_ivf_corpus(spark, path) is f3
+    # so does a compaction: the folded index reads the same rows
+    pre_compact = sim._IVF_FRAME_CACHE[path]
     assert sim.ivf_compact(spark, path) == 1
-    assert path not in sim._IVF_LAYOUT_CACHE  # compact invalidates
-    ids = {r["vec_id"] for r in sim.read_ivf_corpus(spark, path).collect()}
-    assert ids == {1, 2, 3, 10}
-    # the external-writer escape hatch clears without a mutator, and
+    sim._IVF_FRAME_CACHE[path] = pre_compact
+    f4 = sim.read_ivf_corpus(spark, path)
+    assert f4 is not f3
+    assert {r["vec_id"] for r in f4.collect()} == {1, 2, 3, 10}
     # path aliases ('/x/' vs '/x') resolve to the same entry
-    assert path in sim._IVF_LAYOUT_CACHE
+    sim.read_ivf_centroids(spark, path)
     sim.invalidate_ivf_layout(path + "/")
-    assert path not in sim._IVF_LAYOUT_CACHE
+    assert path not in sim._IVF_CENTROID_FRAME_CACHE
+    assert path not in sim._IVF_FRAME_CACHE
+
+
+def test_ivf_centroid_cache_sees_a_rebuilt_index(spark, tmp_path):
+    """A rebuild rewrites ``centroids``; a centroid frame cached
+    before it (as another session's rebuild would leave it) must not
+    serve the old centroids."""
+    path = str(tmp_path / "ivf")
+    schema = "vec_id long, embedding array<float>, label int"
+    sim.build_ivf_index(
+        spark.createDataFrame(
+            [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1)], schema
+        ),
+        dim=2, path=path, n_cells=2, iters=1,
+    )
+    old = sim.load_centroids(spark, path)
+    stale = sim._IVF_CENTROID_FRAME_CACHE[path]
+    sim.build_ivf_index(
+        spark.createDataFrame(
+            [(1, [1.0, 1.0], 0), (2, [-1.0, 1.0], 1)], schema
+        ),
+        dim=2, path=path, n_cells=2, iters=1,
+    )
+    sim._IVF_CENTROID_FRAME_CACHE[path] = stale
+    new = sim.load_centroids(spark, path)
+    assert new != old
+    assert new == sorted(
+        (int(r["cell"]), [float(x) for x in r["centroid"]])
+        for r in spark.read.parquet(f"{path}/centroids").collect()
+    )
 
 
 def test_ivf_append_serving_prunes_both_layers(spark, tmp_path):
@@ -687,13 +660,12 @@ def test_ivf_append_serving_prunes_both_layers(spark, tmp_path):
 
 
 def test_ivf_compact_folds_deltas_and_preserves_search(spark, tmp_path):
-    """Delta compaction: folding appended batches into the base
-    inverted lists must change layout only — every search result is
-    identical before and after, the delta dir is gone, a second run
-    is a no-op, and a simulated crash between the two renames
-    recovers to a servable index."""
-    import os
-
+    """Delta compaction: folding appended batches into one segment of
+    the delta store must change layout only — every search result is
+    identical before and after, and a second run is a no-op. A replay
+    of a folded batch is not served twice; a batch appended after the
+    fold serves and folds next time."""
+    from sparkstreaming_realtime_spark.streaming import store as st
     from sparkstreaming_realtime_spark.streaming.sinks import (
         ivf_append_sink,
     )
@@ -724,78 +696,21 @@ def test_ivf_compact_folds_deltas_and_preserves_search(spark, tmp_path):
 
     before = search()
     assert sim.ivf_compact(spark, path) == 2
-    assert not os.path.exists(f"{path}/delta")
+    assert st.load_manifest(f"{path}/delta")["segments"] == {"": ["seg=0"]}
     assert search() == before
     assert sim.ivf_compact(spark, path) == 0  # idempotent
-    # crash window: base renamed aside, replacement missing
-    os.rename(f"{path}/corpus", f"{path}/.corpus.old")
-    assert search() == before  # read path self-recovers
-    assert not os.path.exists(f"{path}/.corpus.old")
-
-
-def test_ivf_compact_crash_after_swap_never_double_serves(spark, tmp_path):
-    """The OTHER compaction crash window: the new corpus (which
-    already contains the delta rows) swapped in, but the job died
-    before deleting the delta dirs. The corpus's _FOLDED manifest
-    names exactly the absorbed batches, so (a) reads skip them —
-    no vector is ever served twice, (b) a rerun deletes them without
-    re-folding — duplicates never persist into the corpus, and (c) a
-    batch appended DURING the crashed compaction (absent from the
-    manifest) still serves and still folds."""
-    import os
-
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        ivf_append_sink,
-    )
-
-    base = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0),
-         (3, [0.0, 1.0], 1), (4, [0.1, 0.9], 1)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    path = str(tmp_path / "ivf")
-    sim.build_ivf_index(base, dim=2, path=path, n_cells=2, iters=1)
-    append = ivf_append_sink(path)
-    ten = spark.createDataFrame(
-        [(10, [0.95, 0.05], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    append(ten, 0)
-    q = sim.query_vector(base, 1)
-
-    def search():
-        return sorted(
-            (r["vec_id"], r["cos"])
-            for r in sim.ivf_search(
-                spark, path, q, k=10, exclude_id=1, probes=2
-            ).collect()
-        )
-
+    append(spark.createDataFrame(
+        [(11, [0.05, 0.95], 1)], "vec_id long, embedding array<float>, label int"
+    ), 1)  # the streaming checkpoint replays the folded batch
+    assert search() == before
+    assert sim.ivf_compact(spark, path) == 0
+    append(spark.createDataFrame(
+        [(12, [0.9, 0.05], 0)], "vec_id long, embedding array<float>, label int"
+    ), 2)
+    after = search()
+    assert sorted(v for v, _ in after) == sorted(v for v, _ in before) + [12]
     assert sim.ivf_compact(spark, path) == 1
-    expect = search()
-    # reconstruct the crash state: corpus already holds batch=0's
-    # rows (it was just folded), the delta dir reappears with the
-    # SAME batch (as if cleanup never ran), the manifest names it —
-    # plus batch=7, appended mid-compaction, NOT in the manifest
-    append(ten, 0)
-    eleven = spark.createDataFrame(
-        [(11, [0.05, 0.95], 1)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    append(eleven, 7)
-    with open(f"{path}/corpus/_FOLDED", "w") as fh:
-        fh.write("batch=0\n")
-    with_new = search()
-    assert [v for v, _ in with_new].count(10) == 1  # never double-served
-    assert 11 in [v for v, _ in with_new]           # unfolded batch serves
-    # rerun: recovery drops batch=0 without re-folding, folds batch=7
-    assert sim.ivf_compact(spark, path) == 1
-    assert not os.path.exists(f"{path}/delta")
-    assert not os.path.exists(f"{path}/corpus/_FOLDED")
-    assert search() == with_new
-    assert sorted(v for v, _ in search()) == sorted(
-        v for v, _ in expect
-    ) + [11]
+    assert search() == after
 
 
 def test_predict_lang_markers(spark):

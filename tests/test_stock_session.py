@@ -54,7 +54,7 @@ SMOKE = [
     "zordered_two_dim_lookup",
     "warehouse_compaction_roundtrip",
     "emb_ivf_append_topk",
-    # r6 additions: compacted-index serving (Hadoop-FS fold + swap),
+    # r6 additions: compacted-index serving (store fold + manifest),
     # the resize mapInPandas path, and the streaming gate's
     # foreachBatch routing — all stock-session-sensitive surfaces
     "emb_ivf_compact_topk",
