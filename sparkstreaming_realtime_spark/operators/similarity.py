@@ -435,7 +435,7 @@ _IVF_DELTA_FOLDS = {
 #: micro-batch in the streaming serve path for an index that did not
 #: change. An entry serves only to the session that built it (a frame
 #: cannot outlive its session) and only while its stamp still matches
-#: the disk: the delta store's :func:`store.layout_stamp` for the
+#: the disk: the delta store's :func:`store.live_dirs` for the
 #: corpus, the ``centroids`` dir mtime for the centroid table. Both
 #: stamps are local ``os`` calls (tens of µs), re-read on every search,
 #: so a mutation by another session is seen on the next read.
@@ -507,7 +507,7 @@ def read_ivf_corpus(spark, index_path: str) -> DataFrame:
     delta = f"{key}/delta"
     # stamp BEFORE resolving the view: a commit in between leaves a
     # frame newer than its stamp, which the next read just re-reads
-    stamp = store.layout_stamp(delta)
+    stamp = store.live_dirs(delta)
     cached = _IVF_FRAME_CACHE.get(key)
     if cached is not None and cached[0] is spark and cached[1] == stamp:
         return cached[2]

@@ -35,9 +35,10 @@ def write_warehouse(
     """Write a dt-partitioned warehouse table. With
     ``partitionOverwriteMode=dynamic``, ``overwrite`` replaces only
     the partitions present in ``df`` — an idempotent per-day rewrite,
-    not a table wipe."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    not a table wipe. The mode is a write option, not a session conf:
+    the streaming stores' partitioned writes rely on the static mode
+    (a replay deletes the whole ``batch=<id>`` dir, and the write ends
+    with a ``_SUCCESS`` marker that dynamic mode does not write)."""
     if target_files is not None:
         # explicit numPartitions: AQE coalescing respects user-pinned
         # counts, so a hot day really does split into ~target_files
@@ -47,6 +48,7 @@ def write_warehouse(
         )
     (
         df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by)
         .parquet(path)
     )

@@ -25,6 +25,19 @@ stream lifetime::
 - The live view is the segments plus the tail ``batch=<id>`` dirs with
   ``id > upto`` (:func:`store_parts`); without a manifest, every
   ``batch=<id>`` dir.
+- *Visibility.* A tail dir holds a committed batch once its
+  ``_SUCCESS`` marker exists: Spark writes the marker after the job
+  commit (Hadoop's ``mapreduce.fileoutputcommitter.marksuccessfuljobs``,
+  true by default), and ``mode("overwrite")`` deletes the dir first,
+  so a replay leaves the live set and comes back with a new marker.
+  Both hold under Spark's default static ``partitionOverwriteMode``;
+  the dynamic mode writes no marker and keeps partitions a replay
+  does not rewrite.
+  :func:`live_dirs` applies this rule and names each live dir by
+  ``(name, st_ino, st_mtime_ns)`` (the marker's stat for a tail dir,
+  the dir's own for a segment), which is what per-dir read caches key
+  on. :func:`store_parts` reads every tail dir; the engine's own
+  readers run between batches.
 - *Fold mode* (aggregated stores) rewrites base ∪ tail into one
   segment with the store's own merge (key-wise integer sum,
   set-distinct, k-smallest), so the base stays O(keys).
@@ -195,28 +208,38 @@ def batch_ids(path: str) -> list[int]:
     return sorted(out)
 
 
-def layout_stamp(path: str) -> tuple:
-    """A cheap local stamp of an additive store's live view: the
-    manifest bytes plus ``(name, st_mtime_ns)`` of each ``batch=<id>``
-    dir. A commit rewrites the manifest and an append or a replay
-    (which rewrites its dir) moves a tail entry, so while the stamp is
-    unchanged, :func:`store_parts` resolves the same files. Readers
-    use it to key relation caches."""
-    try:
-        with open(os.path.join(path, _MANIFEST), "rb") as f:
-            manifest = f.read()
-    except OSError:
-        manifest = b""
-    try:
-        with os.scandir(path) as it:
-            tail = sorted(
-                (e.name, e.stat().st_mtime_ns)
-                for e in it
-                if e.name.startswith("batch=")
-            )
-    except FileNotFoundError:
-        tail = []
-    return manifest, tuple(tail)
+def live_dirs(path: str, sub: str = "") -> tuple:
+    """The dirs of one manifest snapshot that hold committed data, as
+    ``(name, st_ino, st_mtime_ns)`` with ``name`` relative to the
+    store: the manifest's segments, then the tail ``batch=<id>`` dirs
+    (``batch=<id>/<sub>`` for a sub-store) with ``id > upto`` whose
+    ``_SUCCESS`` marker exists. A segment's identity is its dir's
+    stat, a tail dir's is its marker's (see the visibility rule in the
+    module docstring). Readers that cache per-dir results key them on
+    these tuples; a missing or unwritten store has none."""
+    for attempt in (0, 1):
+        m = load_manifest(path) or {"upto": -1, "segments": {}}
+        out = []
+        try:
+            for seg in m["segments"].get(sub, []):
+                st = os.stat(os.path.join(path, seg))
+                out.append((seg, st.st_ino, st.st_mtime_ns))
+        except FileNotFoundError:
+            # a newer manifest already handed this segment to gc and
+            # the commit after it deleted it: re-read the manifest
+            if attempt:
+                raise
+            continue
+        for i in batch_ids(path):
+            if i <= m["upto"]:
+                continue
+            name = f"batch={i}/{sub}" if sub else f"batch={i}"
+            try:
+                st = os.stat(os.path.join(path, name, "_SUCCESS"))
+            except FileNotFoundError:
+                continue
+            out.append((name, st.st_ino, st.st_mtime_ns))
+        return tuple(out)
 
 
 def _tail_dirs(path: str, upto: int, sub: str) -> list[str]:

@@ -60,6 +60,8 @@ SMOKE = [
     "emb_ivf_compact_topk",
     "doc_resize_images",
     "streaming_quality_gate_parity",
+    # the store-backed /statsByItem fold (pyarrow over the store dirs)
+    "streaming_item_stats_parity",
 ]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_STOCK_SF", "/root/testdata/sf0.001")

@@ -62,6 +62,8 @@ def test_partition_values_lists_days_without_scanning(spark, tmp_path):
 
 def test_dynamic_overwrite_replaces_only_present_days(spark, tmp_path):
     path = str(tmp_path / "dau")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
     write_warehouse(
         _dau(spark, [("2024-01-01", "m1", 1), ("2024-01-02", "m2", 2)]), path
     )
@@ -71,6 +73,9 @@ def test_dynamic_overwrite_replaces_only_present_days(spark, tmp_path):
         (str(r["dt"]), r["mid"]) for r in read_warehouse(spark, path).collect()
     )
     assert got == [("2024-01-01", "m1"), ("2024-01-02", "m2b")]
+    # the dynamic mode is per write: later writes in the session (the
+    # streaming stores') keep the session's mode
+    assert spark.conf.get(key) == mode
 
 
 def test_target_files_spreads_a_hot_day(spark, tmp_path):
