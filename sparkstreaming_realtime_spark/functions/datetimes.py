@@ -37,7 +37,7 @@ def _as_timestamp(ts: Column | str, df: DataFrame | None = None) -> Column:
     string column name on it) is available, branch on the schema's
     dataType — zero per-row cost. The per-row regex heuristic only
     remains as the last-ditch fallback for bare-Column callers, where
-    no schema exists to inspect (ADVICE r1: digit-count sniffing
+    no schema exists to inspect (digit-count sniffing
     misclassifies pre-1973 millis and 12+-digit strings)."""
     c = F.col(ts) if isinstance(ts, str) else ts
     dtype = None

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 #: struct field names interpolate into SQL text — restrict to plain
 #: identifiers so a quote or other metacharacter can't produce a
-#: broken/unintended expression (r14 ADVICE; all callers pass
+#: broken/unintended expression (all callers pass
 #: constants, but the function is public)
 _FIELD_NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 

@@ -72,7 +72,7 @@ def _py_tokenize(q: str) -> list[str]:
     classes; ``[\\W_]`` with UNICODE is the exact complement (``\\w``
     = letters + digits + underscore), so the three tokenizers (Spark
     field side, this query side, the DuckDB oracle regex) all split
-    on the same character set (ADVICE r1)."""
+    on the same character set."""
     import re
 
     return [t for t in re.split(r"[\W_]+", q.lower(), flags=re.UNICODE) if t]

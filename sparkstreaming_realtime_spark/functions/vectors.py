@@ -5,7 +5,7 @@ Used by the similarity-search operators (embeddings table,
 TESTDATA.md). At 100 TB this beats a Pandas UDF for moderate
 dimensions (≤~1k) because no Arrow transfer happens at all.
 
-Measured dead end (r6, don't retry): statically unrolling the dot to
+Measured dead end (don't retry): statically unrolling the dot to
 64 ``F.get(a,i)*F.get(b,i)`` terms — nominally whole-stage-codegen
 where the ``aggregate`` fold is interpreted — ran **4.7× SLOWER**
 (11.1 s vs 2.3 s on a 1.4M-pair verify at dim 64, local[32]): each
@@ -37,9 +37,9 @@ def _ref(c: Column | str) -> str | None:
 # Why two construction paths per function: the lambda-HOF builders
 # (`F.zip_with(..., lambda ...)`) cost ~30-50 py4j round trips per
 # expression — ~0.12 s per cosine_similarity at plan-BUILD time,
-# paid per micro-batch in every streaming similarity plan (the
-# r14 constant-literal lesson, applied to the expression tree
-# itself). Parsing the identical expression from one SQL string is
+# paid per micro-batch in every streaming similarity plan (as with
+# large constant literals: one SQL string beats a py4j-built
+# tree). Parsing the identical expression from one SQL string is
 # a single crossing and yields the same resolved tree: identical
 # zip-then-fold shape, identical left-to-right float evaluation
 # order, so results are bit-equal (pinned by tests/test_functions).

@@ -70,7 +70,7 @@ def linear_attribution(
         F.col(channel_col).alias("__ch"),
         F.col(event_id).alias("__eid"),
     ).withColumn("__b", F.explode(F.array(esec, esec + 1)))
-    # one representation for BOTH bounds (ADVICE r11): full-precision
+    # one representation for BOTH bounds: full-precision
     # timestamp comparisons, so sub-second touches at exactly ots-w are
     # excluded and at ots included, matching the documented
     # (ots-w, ots] semantics and the oracle's INTERVAL arithmetic. The

@@ -122,7 +122,7 @@ def _rolled_items(
 
 #: the in-row pair enumeration as ONE SQL string: the nested-lambda
 #: F.transform build costs ~115 ms of py4j round trips per plan
-#: (measured r15) — paid per micro-batch in copurchase_sink — while
+#: (measured) — paid per micro-batch in copurchase_sink — while
 #: F.expr parses the identical tree in one crossing. ``__items`` is
 #: the fixed internal column _rolled_items emits.
 _PAIR_STRUCTS_SQL = (

@@ -40,13 +40,13 @@ def dedup_first_daily(
     ``tiebreak`` defaults to the key itself, which makes the result
     deterministic only when (dt, key, ts) is unique — pass a unique
     column (event id) whenever two records of one key can share a
-    timestamp (ADVICE r1).
+    timestamp.
 
     Scale: one shuffle on (dt, key) — as a ``min_by`` AGGREGATION, not
     a rank window: partial aggregation runs map-side, so each map
     partition ships one candidate row per (dt, key) instead of every
-    duplicate through the exchange (VERDICT r1: a row_number window
-    gets no partial agg). State is a plain aggregation in batch; the
+    duplicate through the exchange (a row_number window gets no
+    partial agg). State is a plain aggregation in batch; the
     streaming binding uses ``dropDuplicates`` + watermark
     (streaming/pipelines.py).
     """

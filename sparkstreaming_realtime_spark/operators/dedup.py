@@ -90,7 +90,7 @@ def exact_dedup(
 
     Shape: ``groupBy(fingerprint)`` — a single shuffle on the hash,
     with map-side partial min/count. No window function (a
-    row_number window would lose partial aggregation; VERDICT r1)."""
+    row_number window would lose partial aggregation)."""
     return (
         docs.select(fingerprint(text_col).alias("fp"), F.col(id_col))
         .groupBy("fp")
@@ -230,7 +230,7 @@ def near_dup_pairs(
     # across incremental corpus versions). materialize() is
     # cluster-durable (DISK_ONLY persist / reliable checkpoint),
     # unlike localCheckpoint whose unreplicated executor-local blocks
-    # die with one lost executor (VERDICT r2 #3).
+    # die with one lost executor.
     sh = materialize(sh)
     cands = lsh_candidate_pairs(
         lsh_buckets(minhash_signature(sh), id_col), id_col, max_bucket
@@ -849,8 +849,8 @@ def _star_contraction_labels(
     ``max(max_rounds, 64)`` alternations (2^64-height forests cannot
     exist on real ids) converts a would-be infinite loop from a
     logic bug into a loud ``RuntimeError`` instead of silently
-    returning partial, wrong cluster labels — the r7 defect pinned
-    by ``test_connected_components_self_loops_dropped_consistently``."""
+    returning partial, wrong cluster labels (pinned by
+    ``test_connected_components_self_loops_dropped_consistently``)."""
 
     def half(E: DataFrame, large: bool) -> DataFrame:
         mins = E.groupBy("node").agg(F.min("nbr").alias("mn"))
@@ -1344,8 +1344,7 @@ def intra_line_dedup(
     :func:`line_dedup` (whose posexplode of NULL emits no rows) and
     the DuckDB unnest oracle, so the two operators and the oracle
     agree on corpora with missing text instead of this one emitting
-    a (doc_id, NULL, NULL, NULL) row the siblings never produce
-    (r8 ADVICE).
+    a (doc_id, NULL, NULL, NULL) row the siblings never produce.
 
     Returns (doc_id, text_clean, n_lines, n_removed)."""
     docs = docs.filter(F.col(text_col).isNotNull())

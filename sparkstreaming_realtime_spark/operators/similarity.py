@@ -178,7 +178,7 @@ def assign_cell_scored(
 
 #: assign_cell's literal-centroid argmax leaves whole-stage codegen
 #: once the expression tree carries a few hundred centroid structs
-#: (measured r8: 384 s for ONE 200k-row assign at k=391 vs ~1 s at
+#: (measured: 384 s for ONE 200k-row assign at k=391 vs ~1 s at
 #: k=8 — interpreted HOF evaluation, not compute, is the cost).
 #: Above this k, assignment switches to the Arrow matmul path
 #: (:func:`assign_cells_arrow`): one BLAS matmul per batch instead of
@@ -200,7 +200,7 @@ def assign_cells_arrow(
     :func:`knn_join` partial-top-k pattern): each batch is ONE numpy
     matmul against the broadcast centroid matrix.
 
-    Why not stay JVM-side like the small-k literal path? Measured r8
+    Why not stay JVM-side like the small-k literal path? Measured
     at 200k vectors × k=391 × dim 64: the literal in-row argmax took
     384 s, a broadcast-join + encoded-scalar max 192 s, an
     explode-fan-out 199 s — every DataFrame shape pays per-(row·cell)
@@ -219,9 +219,9 @@ def assign_cells_arrow(
     path's ``max(struct(cos, -cell))``. Rounding is explicit
     half-away-from-zero (Spark ROUND / DuckDB semantics; np.round's
     half-to-even would diverge exactly on the boundaries that decide
-    ties — r8 ADVICE). Float64 summation order can still differ from
+    ties). Float64 summation order can still differ from
     the JVM fold by an ulp near a boundary; the equivalence test
-    pins real data and the r9 registry twin
+    pins real data and the registry twin
     (emb_cells_arrow_assign) oracle-hashes this path end-to-end."""
     from .dedup import spread
 
@@ -246,7 +246,7 @@ def assign_cells_arrow(
             # HALF-AWAY-FROM-ZERO at 6dp, exactly Spark's ROUND /
             # the DuckDB oracle — np.round is half-to-even, which
             # could flip an argmax on an exact .5e-6 boundary when
-            # BLAS summation order lands there (r8 ADVICE)
+            # BLAS summation order lands there
             r6 = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
             best = np.argmax(r6, axis=1)
             yield pd.DataFrame(
@@ -288,8 +288,8 @@ def train_kmeans_cells(
     """Learn IVF cells: deterministic-seeded spherical k-means, Lloyd
     iterations as DataFrame ops. This is the OFFLINE index-build job —
     it scans the corpus iters+1 times and is run once (see
-    :func:`build_ivf_index`), never on the query path (the r3 review's
-    per-query-centroid-scan fix).
+    :func:`build_ivf_index`), never on the query path (no query
+    re-scans the corpus for centroids).
 
     - seeds: the ``n_cells`` vectors ranked first by
       hash60('ivfseed:' || id) — deterministic (no RNG, no seed
@@ -416,6 +416,9 @@ def ivf_append(
         new_vectors.withColumn("cell", assign_cell(vec_col, cents))
         .repartition(F.col("cell"))
         .write.mode("overwrite")
+        # a store tail dir: replaced whole on a replay and served once
+        # its _SUCCESS exists, whatever the session's overwrite mode
+        .option("partitionOverwriteMode", "static")
         .partitionBy("cell")
         .parquet(f"{index_path}/delta/batch={batch_id}")
     )
@@ -624,8 +627,8 @@ def auto_lsh_params(
     base_bands: int = RH_BANDS,
     base_rows: int = RH_ROWS,
 ) -> tuple[int, int]:
-    """(bands, rows_per_band) derived from corpus size ``n`` — the r4
-    scaling probe proved a FIXED band width goes quadratic (candidate
+    """(bands, rows_per_band) derived from corpus size ``n`` — a
+    scaling probe showed a FIXED band width goes quadratic (candidate
     pairs grow O(bands · N² / 2^rows_per_band): ×12.9 cost at ×10 rows
     with the pinned 4-bit default), so width must grow with log₂(N).
 

@@ -4,7 +4,7 @@ quality scoring, language identification.
 All pure column expressions over ``tokenize``'s arrays — the same
 token alphabet (``[\\p{L}\\p{N}]`` runs) the match/dedup operators
 use, so every text op in the engine agrees on what a token is
-(ADVICE r1: one alphabet, derived everywhere). Per-row, zero-shuffle
+(one alphabet, derived everywhere). Per-row, zero-shuffle
 feature extraction; the only shuffles are the final small group-bys.
 """
 

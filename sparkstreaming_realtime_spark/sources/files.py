@@ -4,7 +4,7 @@ The reference's only batch "source" is Redis point reads; its stream
 sources are Kafka (SURVEY §2.1). The engine's warehouse is parquet,
 so this module owns the data-shape quirks of the driver tables —
 chiefly that every temporal column's parquet encoding is a moving
-target across driver regenerations (r1: ``TIMESTAMP(NANOS)``; r2:
+target across driver regenerations (``TIMESTAMP(NANOS)``, or
 plain ``timestamp[us]`` → ``TIMESTAMP_NTZ`` under Spark 4). All reads
 go through :func:`read_table`, which dispatches on the ACTUAL schema
 per column (see :func:`_normalize_temporal`) instead of assuming any
@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 
 #: temporal columns per driver table — every one has shipped (or could
-#: ship, per the r1/r2 regenerations) as TIMESTAMP(NANOS),
+#: ship, across driver regenerations) as TIMESTAMP(NANOS),
 #: timestamp[us] (→ TIMESTAMP_NTZ in Spark 4), or native TIMESTAMP.
 TEMPORAL_COLS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
@@ -32,8 +32,8 @@ TEMPORAL_COLS: dict[str, tuple[str, ...]] = {
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in TEMPORAL_COLS:
         # The driver regenerates these tables between rounds with
-        # varying parquet timestamp encodings (r1: TIMESTAMP(NANOS),
-        # r2: plain timestamp[us] → TIMESTAMP_NTZ). Callers may hand
+        # varying parquet timestamp encodings (TIMESTAMP(NANOS), or
+        # plain timestamp[us] → TIMESTAMP_NTZ). Callers may hand
         # us an arbitrary session (the driver harness does), so set
         # both confs defensively here, not only in session.get_spark():
         # nanosAsLong makes NANOS readable at all (as bigint, converted
@@ -51,7 +51,7 @@ def _normalize_temporal(df: DataFrame, col: str, to_ltz: bool) -> DataFrame:
     """Normalize one temporal column regardless of how the parquet
     encoded it (nanos-as-long, native micros, or TIMESTAMP_NTZ).
     Dispatch on the actual schema — never assume the driver's data
-    shape (the r1 AND r2 blocker class).
+    shape (a NANOS or NTZ column must read the same).
 
     ``to_ltz``: events.ts additionally needs TIMESTAMP (not NTZ) —
     ``unix_millis`` & co. reject NTZ. The date-valued columns
@@ -77,8 +77,8 @@ def _normalize_temporal(df: DataFrame, col: str, to_ltz: bool) -> DataFrame:
             df = df.withColumn(col, F.col(col).cast("timestamp_ntz"))
     elif to_ltz and isinstance(dt, T.TimestampNTZType):
         # The NTZ→TIMESTAMP cast is value-preserving ONLY under the
-        # UTC session tz pinned above (the r2 failure class downgraded
-        # from loud to silent without it).
+        # UTC session tz pinned above (without it the cast shifts
+        # values silently instead of failing).
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 

@@ -120,7 +120,11 @@ def idempotent_parquet_sink(
         def _batch() -> None:
             out = os.path.join(path, f"batch={batch_id}")
             deduped = batch_df.dropDuplicates(list(key_cols))
-            writer = deduped.write.mode("overwrite")
+            # static whatever the session says: a replay must replace
+            # the whole dir, and the store serves it once _SUCCESS exists
+            writer = deduped.write.mode("overwrite").option(
+                "partitionOverwriteMode", "static"
+            )
             if partition_col and partition_col in batch_df.columns:
                 writer = writer.partitionBy(partition_col)
             writer.parquet(out)
@@ -1093,7 +1097,7 @@ def bm25_index_sink(path: str, id_col: str = "doc_id",
     postings to its terms and reuses the one-shot scorer verbatim,
     so serving cost never re-reads document text.
 
-    Postings are TERM-CLUSTERED (r14): each batch range-partitions
+    Postings are TERM-CLUSTERED: each batch range-partitions
     its postings by ``term`` and sorts within files, so every
     parquet row group carries a tight ``[min_term, max_term]``
     stat and a query's ``term IN (...)`` predicate pushes down to

@@ -30,9 +30,10 @@ stream lifetime::
   commit (Hadoop's ``mapreduce.fileoutputcommitter.marksuccessfuljobs``,
   true by default), and ``mode("overwrite")`` deletes the dir first,
   so a replay leaves the live set and comes back with a new marker.
-  Both hold under Spark's default static ``partitionOverwriteMode``;
-  the dynamic mode writes no marker and keeps partitions a replay
-  does not rewrite.
+  Both hold only under the static ``partitionOverwriteMode`` (the
+  dynamic mode writes no marker and keeps partitions a replay does not
+  rewrite), so the stores' own partitioned writes pass ``static`` as a
+  write option whatever the session's mode.
   :func:`live_dirs` applies this rule and names each live dir by
   ``(name, st_ino, st_mtime_ns)`` (the marker's stat for a tail dir,
   the dir's own for a segment), which is what per-dir read caches key
@@ -377,18 +378,19 @@ def _write_segment(path: str, rel: str, df: DataFrame, spec: SubFold) -> None:
     ``range_by`` re-clusters (range partition + in-file sort, so
     min/max row-group stats keep pruning), ``partition_by``
     co-locates each value before ``partitionBy`` (writing straight
-    off a many-task plan emits n_tasks × n_values tiny files)."""
-    writer = df.write.mode("overwrite")
+    off a many-task plan emits n_tasks × n_values tiny files). The
+    overwrite is static whatever the session's mode (module
+    docstring, *Visibility*)."""
     if spec.range_by and spec.range_by in df.columns:
         df = df.repartitionByRange(
             spec.range_by
         ).sortWithinPartitions(spec.range_by)
-        writer = df.write.mode("overwrite")
-    if spec.partition_by and spec.partition_by in df.columns:
-        df = df.repartition(spec.partition_by)
-        writer = df.write.mode("overwrite").partitionBy(
-            spec.partition_by
-        )
+    part = spec.partition_by if spec.partition_by in df.columns else None
+    if part:
+        df = df.repartition(part)
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if part:
+        writer = writer.partitionBy(part)
     writer.parquet(os.path.join(path, rel))
 
 

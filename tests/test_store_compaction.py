@@ -413,3 +413,43 @@ def test_overlap_compact_joins_all_jobs_and_propagates_errors(
             [lambda: (_ for _ in ()).throw(RuntimeError("boom"))],
             spark, path, 9, {"": SubFold()}, 2,
         )
+
+
+def test_store_writes_stay_static_under_a_dynamic_session(spark, tmp_path):
+    """A session in ``partitionOverwriteMode=dynamic`` does not leak
+    into the stores' own partitioned writes: a tail dir is served (its
+    ``_SUCCESS`` marker exists), a replay with fewer ``dt`` values
+    leaves no stale partition, and segments carry their marker too."""
+    from sparkstreaming_realtime_spark.streaming.store import live_dirs
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "raw")
+    sink = idempotent_parquet_sink(
+        path, key_cols=("k",), partition_col="dt", compact_every=2
+    )
+
+    def batch(b, days):
+        return spark.createDataFrame(
+            [(f"r{b}_{d}", f"2024-01-0{d}") for d in days], "k string, dt string"
+        )
+
+    spark.conf.set(key, "dynamic")
+    try:
+        sink(batch(0, [1, 2]), 0)
+        assert "batch=0" in [d[0] for d in live_dirs(path)]
+        sink(batch(0, [1]), 0)
+        assert os.listdir(os.path.join(path, "batch=0", "dt=2024-01-01"))
+        assert not os.path.exists(os.path.join(path, "batch=0", "dt=2024-01-02"))
+        assert [r["k"] for r in read_sink(spark, path).collect()] == ["r0_1"]
+        for b in (1, 2, 3):
+            sink(batch(b, [1, 2]), b)
+    finally:
+        spark.conf.set(key, before)
+    served = [d[0] for d in live_dirs(path)]
+    segs = [d for d in served if d.startswith("seg=")]
+    assert segs and "batch=3" in served
+    for seg in segs:
+        assert os.path.exists(os.path.join(path, seg, "_SUCCESS"))
+    got = sorted(r["k"] for r in read_sink(spark, path).collect())
+    assert got == ["r0_1"] + [f"r{b}_{d}" for b in (1, 2, 3) for d in (1, 2)]
