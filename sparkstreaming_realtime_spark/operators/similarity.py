@@ -412,15 +412,12 @@ def ivf_append(
     deltas exactly like the base corpus."""
     spark = new_vectors.sparkSession
     cents = load_centroids(spark, index_path)
-    (
+    store.write_batch(
         new_vectors.withColumn("cell", assign_cell(vec_col, cents))
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        # a store tail dir: replaced whole on a replay and served once
-        # its _SUCCESS exists, whatever the session's overwrite mode
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/delta/batch={batch_id}")
+        .repartition(F.col("cell")),
+        f"{index_path}/delta",
+        batch_id,
+        partition_by="cell",
     )
     invalidate_ivf_layout(index_path)
 

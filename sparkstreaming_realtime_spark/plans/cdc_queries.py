@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..operators import cdc
 from ..operators.dau import dedup_first_daily
 from ..functions.datetimes import hr_col
-from .queries import _money_sum_sql, _stream_t, _t, register
+from .queries import _drain, _money_sum_sql, _stream_t, _t, register
 
 #: synthesis mapping (keep in lockstep with _synthesize_cdc)
 #: event_type → Maxwell type; user_id % 5 → table (4 → unknown table,
@@ -234,16 +234,21 @@ def streaming_cdc_dim_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch merge and replay idempotency are additionally pinned
     by tests/test_streaming.py."""
     from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..schemas import ODS_BASE_DB_SCHEMA
-    from ..sources.files import events_with_ts
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import dim_upsert_sink, read_dim_snapshot
 
+    snap = engine_tmpdir("dim_parity_") + "/snapshot"
+    _drain(_streamed_dims(spark, sf_dir), dim_upsert_sink(snap), "dimp")
+    return read_dim_snapshot(spark, snap).select("table", "id", "data")
+
+
+def _streamed_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Maxwell dim branch over the streamed events table: synthesize
+    the CDC envelope, parse, normalize the op and route the dim rows."""
+    from ..schemas import ODS_BASE_DB_SCHEMA
+    from ..sources.files import events_with_ts
+
     _t(spark, sf_dir, "events")  # sets the temporal read confs
-    raw = _stream_t(spark, sf_dir, "events")
-    env = _synthesize_cdc(events_with_ts(raw))
+    env = _synthesize_cdc(events_with_ts(_stream_t(spark, sf_dir, "events")))
     parsed = env.select(
         F.from_json("value", ODS_BASE_DB_SCHEMA).alias("j"),
         "ts_ms",
@@ -255,16 +260,7 @@ def streaming_cdc_dim_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_ms",
         "event_id",
     )
-    dims = cdc.route_dims(cdc.normalize_op(parsed))
-    snap = engine_tmpdir("dim_parity_") + "/snapshot"
-    q = run_available_now(
-        dims,
-        dim_upsert_sink(snap),
-        checkpoint=engine_tmpdir("dim_parity_ckpt_"),
-        query_name="dimp_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
-    return read_dim_snapshot(spark, snap).select("table", "id", "data")
+    return cdc.route_dims(cdc.normalize_op(parsed))
 
 
 @register(
@@ -393,36 +389,10 @@ def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and replay idempotency are additionally pinned by
     tests/test_streaming.py."""
     from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..schemas import ODS_BASE_DB_SCHEMA
-    from ..sources.files import events_with_ts
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_scd2, scd2_sink
 
-    _t(spark, sf_dir, "events")  # sets the temporal read confs
-    raw = _stream_t(spark, sf_dir, "events")
-    env = _synthesize_cdc(events_with_ts(raw))
-    parsed = env.select(
-        F.from_json("value", ODS_BASE_DB_SCHEMA).alias("j"),
-        "ts_ms",
-        "event_id",
-    ).select(
-        F.col("j.type").alias("type"),
-        F.col("j.table").alias("table"),
-        F.col("j.data").alias("data"),
-        "ts_ms",
-        "event_id",
-    )
-    dims = cdc.route_dims(cdc.normalize_op(parsed))
     hist = engine_tmpdir("scd2_parity_") + "/history"
-    q = run_available_now(
-        dims,
-        scd2_sink(hist),
-        checkpoint=engine_tmpdir("scd2_parity_ckpt_"),
-        query_name="scd2p_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(_streamed_dims(spark, sf_dir), scd2_sink(hist), "scd2p")
     return read_scd2(spark, hist)
 
 

@@ -19,7 +19,7 @@ from ..operators import dedup as dd
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators import textstats as ts
-from .queries import _stream_t, _t, register
+from .queries import _drain, _staged_stream, _stream_t, _t, register
 
 # --- shared SQL fragments (one token alphabet everywhere: ADVICE r1) ---
 
@@ -1074,26 +1074,20 @@ def streaming_ivf_serve_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the production serve loop: continuous query stream,
     frozen index, per-batch probes-bounded partition-pruned scans."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_sink
+    from ..streaming.store import write_batch
 
     idx = _ivf_index_path(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     root = engine_tmpdir("ivf_serve_parity_")
-    qdir = os.path.join(root, "queries")
-    # spill the query batch as 4 files → 4 real micro-batches
-    emb.filter(F.col("vec_id") % _KNN_JOIN_MOD == 0).select(
-        "vec_id", "embedding"
-    ).repartition(4).write.mode("overwrite").parquet(qdir)
-    schema = spark.read.parquet(qdir).schema
-    qstream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(qdir)
+    qstream = _staged_stream(
+        spark,
+        emb.filter(F.col("vec_id") % _KNN_JOIN_MOD == 0).select(
+            "vec_id", "embedding"
+        ),
+        root,
     )
     out = os.path.join(root, "served")
 
@@ -1110,18 +1104,9 @@ def streaming_ivf_serve_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             probes=_IVF_KNN_PROBES,
             exclude=F.col("vec_id") % _KNN_JOIN_MOD != 0,
         )
-        # overwrite-by-batch-dir: replayed epochs land idempotently
-        res.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
+        write_batch(res, out, batch_id)
 
-    q = run_available_now(
-        qstream,
-        serve_batch,
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="ivfserve_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(qstream, serve_batch, "ivfserve")
     return read_sink(spark, out)
 
 
@@ -1679,20 +1664,10 @@ def streaming_line_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaning, which per-batch filtering could never give). Checked
     against the same DuckDB oracle as doc_line_dedup."""
     from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import line_count_sink, read_line_counts
 
-    raw = _stream_t(spark, sf_dir, "documents")
     path = engine_tmpdir("ld_parity_") + "/counts"
-    q = run_available_now(
-        raw,
-        line_count_sink(path),
-        checkpoint=engine_tmpdir("ld_parity_ckpt_"),
-        query_name="ldp_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(_stream_t(spark, sf_dir, "documents"), line_count_sink(path), "ldp")
     docs = _t(spark, sf_dir, "documents")
     return dd.line_dedup(docs, counts=read_line_counts(spark, path))
 
@@ -1838,24 +1813,15 @@ def streaming_heavy_hitters_parity(spark: SparkSession, sf_dir: str) -> DataFram
     sketches must equal the one-shot batch sketch exactly — the
     associativity that makes count-min a streaming/distributable
     aggregate, checked against the DuckDB oracle. Replay idempotency
-    is additionally pinned by tests/test_streaming.py."""
-    from ..materialize import engine_tmpdir
-    import uuid
-
+    and compaction are pinned by tests/test_additive_sinks.py."""
     from ..functions.text import tokenize
-    from ..streaming.pipelines import run_available_now
+    from ..materialize import engine_tmpdir
     from ..streaming.sinks import count_min_sink, read_count_min
 
     raw = _stream_t(spark, sf_dir, "documents")
     items = raw.select(F.explode(tokenize("text")).alias("item"))
     path = engine_tmpdir("cm_parity_") + "/cells"
-    q = run_available_now(
-        items,
-        count_min_sink(path),
-        checkpoint=engine_tmpdir("cm_parity_ckpt_"),
-        query_name="cmp_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(items, count_min_sink(path), "cmp")
     return read_count_min(spark, path)
 
 
@@ -1963,23 +1929,14 @@ def streaming_distinct_sketch_parity(
     shingle recurs across batches: a corpus-top-k hash is top-k
     within its own batch. The oracle rebuilds the corpus sketch from
     scratch; all 256 integer values must match."""
-    import uuid
-
     from ..materialize import engine_tmpdir
     from ..operators.dedup import shingle_sets
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import kmv_sink, read_kmv
 
     raw = _stream_t(spark, sf_dir, "documents")
     items = shingle_sets(raw).select(F.explode("shingles").alias("item"))
     path = engine_tmpdir("kmv_parity_") + "/sketch"
-    q = run_available_now(
-        items,
-        kmv_sink(path),
-        checkpoint=engine_tmpdir("kmv_parity_ckpt_"),
-        query_name="kmv_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(items, kmv_sink(path), "kmv")
     return read_kmv(spark, path)
 
 
@@ -2454,25 +2411,20 @@ def streaming_decontaminate_parity(spark: SparkSession, sf_dir: str) -> DataFram
     shape: screen new training data against frozen benchmarks as it
     lands, not in a later full-corpus pass."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_sink
+    from ..streaming.store import write_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     evalset = emb.filter(F.col("vec_id") % _DECON_MOD == 0)
     root = engine_tmpdir("decon_parity_")
-    tdir = os.path.join(root, "train")
-    emb.filter(F.col("vec_id") % _DECON_MOD != 0).select(
-        "vec_id", "embedding"
-    ).repartition(4).write.mode("overwrite").parquet(tdir)
-    schema = spark.read.parquet(tdir).schema
-    tstream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(tdir)
+    tstream = _staged_stream(
+        spark,
+        emb.filter(F.col("vec_id") % _DECON_MOD != 0).select(
+            "vec_id", "embedding"
+        ),
+        root,
     )
     out = os.path.join(root, "flagged")
     n = _corpus_count(sf_dir)
@@ -2480,8 +2432,7 @@ def streaming_decontaminate_parity(spark: SparkSession, sf_dir: str) -> DataFram
     # across micro-batches, so its band buckets + norms materialize
     # here and every batch plan joins against the tiny cached frames
     # instead of re-compiling and re-running the eval-side plane
-    # projection (measured ~16 s -> see PERF.md, the per-batch cost
-    # was plan-compile dominated)
+    # projection (the per-batch cost was plan-compile dominated)
     idx = sim.prepare_eval_index(
         evalset, dim=_EMB_DIM, bands=_LSH_PIN, rows_per_band=_LSH_PIN
     )
@@ -2495,18 +2446,9 @@ def streaming_decontaminate_parity(spark: SparkSession, sf_dir: str) -> DataFram
             approx_count=n,
             eval_index=idx,
         )
-        # overwrite-by-batch-dir: replayed epochs land idempotently
-        res.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
+        write_batch(res, out, batch_id)
 
-    q = run_available_now(
-        tstream,
-        flag_batch,
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="decon_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(tstream, flag_batch, "decon")
     return read_sink(spark, out)
 
 
@@ -3247,37 +3189,22 @@ def streaming_bm25_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-equal doc_bm25_search. The oracle IS its oracle,
     unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import bm25_index_sink, read_bm25_index
 
     docs = _t(spark, sf_dir, "documents")
     root = engine_tmpdir("bm25_parity_")
-    src = os.path.join(root, "src")
-    docs.select("doc_id", "text").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
     index = os.path.join(root, "index")
     # compact_every=2: one mid-run fold — postings/doclen consolidate
     # into an immutable append segment, the additive stats rows fold
     # to one; the served ranking must still hash-equal the one-shot
     # corpus search (streaming/store.py)
-    q = run_available_now(
-        stream,
+    _drain(
+        _staged_stream(spark, docs.select("doc_id", "text"), root),
         bm25_index_sink(index, compact_every=2),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="bm25_" + uuid.uuid4().hex[:8],
+        "bm25",
     )
-    q.awaitTermination()
     return read_bm25_index(spark, index, list(_BM25_TERMS), k=10)
 
 
@@ -3366,11 +3293,10 @@ def streaming_hybrid_rrf_parity(
     exact-integer rrf_fuse, and the oracle IS doc_hybrid_rrf_search's
     oracle, unchanged."""
     import os
-    import uuid
+    from concurrent.futures import ThreadPoolExecutor
 
     from ..materialize import engine_tmpdir
     from ..operators import retrieval as rt
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import (
         bm25_index_sink,
         idempotent_parquet_sink,
@@ -3379,54 +3305,40 @@ def streaming_hybrid_rrf_parity(
     )
 
     root = engine_tmpdir("hybrid_parity_")
-
-    def streamed(src_df, src_name, sink, n_parts=4):
-        src = os.path.join(root, src_name)
-        src_df.repartition(n_parts).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = run_available_now(
-            stream,
-            sink,
-            checkpoint=os.path.join(root, f"ckpt_{src_name}"),
-            query_name=f"hyb_{src_name}_" + uuid.uuid4().hex[:8],
-        )
-        q.awaitTermination()
-
     index = os.path.join(root, "index")
     emb_store = os.path.join(root, "emb")
+
+    def streamed(src_df, tag, sink):
+        stream = _staged_stream(spark, src_df, engine_tmpdir(f"hyb_{tag}_"))
+        _drain(stream, sink, f"hyb_{tag}")
+
     # the two maintenance pipelines are INDEPENDENT (separate sources,
     # separate stores) — run them as concurrent streaming queries so
     # the light embeddings stream back-fills executor capacity the
     # lexical pipeline's micro-batch tails leave idle (guide §2.6);
     # each runs exactly the work it ran sequentially
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_docs = pool.submit(
-            streamed,
-            _t(spark, sf_dir, "documents").select("doc_id", "text"),
-            "docs",
-            bm25_index_sink(index, compact_every=2),
-        )
-        fut_emb = pool.submit(
-            streamed,
-            _t(spark, sf_dir, "embeddings"),
-            "emb",
-            idempotent_parquet_sink(
-                emb_store,
-                key_cols=("vec_id",),
-                partition_col=None,
-                compact_every=2,
+        futs = [
+            pool.submit(
+                streamed,
+                _t(spark, sf_dir, "documents").select("doc_id", "text"),
+                "docs",
+                bm25_index_sink(index, compact_every=2),
             ),
-        )
-        fut_docs.result()
-        fut_emb.result()
+            pool.submit(
+                streamed,
+                _t(spark, sf_dir, "embeddings"),
+                "emb",
+                idempotent_parquet_sink(
+                    emb_store,
+                    key_cols=("vec_id",),
+                    partition_col=None,
+                    compact_every=2,
+                ),
+            ),
+        ]
+        for f in futs:
+            f.result()
     bm = read_bm25_index(spark, index, list(_BM25_TERMS), k=10)
     emb = read_sink(spark, emb_store)
     q = sim.query_vector(emb, _QUERY_VEC_ID)
@@ -4042,22 +3954,22 @@ def streaming_curation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     depend on the whole corpus mix, so a real pipeline computes them
     from the accumulated store, not per batch — runs over what the
     stream kept. Same protocol as the other streaming parities
-    (file source → foreachBatch → AvailableNow → read the store);
-    cross-batch first-wins and replay idempotency are pinned by
-    tests/test_streaming.py::test_curation_sink_across_micro_batches."""
-    from ..materialize import engine_tmpdir
-
+    (file source → foreachBatch → AvailableNow → read the store).
+    Cross-batch first-wins is pinned by
+    tests/test_streaming.py::test_curation_sink_across_micro_batches,
+    replay idempotency by
+    tests/test_streaming.py::test_curation_sink_replay_keeps_its_batch."""
     from ..functions.hashing import hash60
-    from ..streaming.pipelines import curation_sink, run_available_now
+    from ..materialize import engine_tmpdir
+    from ..streaming.pipelines import curation_sink
 
-    raw = _stream_t(spark, sf_dir, "documents")
     base = engine_tmpdir("curation_")
     corpus_path, stats_path = f"{base}/corpus", f"{base}/stats"
-    q = run_available_now(
-        raw, curation_sink(corpus_path, stats_path), f"{base}/ckpt",
-        query_name="curation",
+    _drain(
+        _stream_t(spark, sf_dir, "documents"),
+        curation_sink(corpus_path, stats_path),
+        "curation",
     )
-    q.awaitTermination()
     kept = spark.read.parquet(corpus_path)
     stats = (
         spark.read.parquet(stats_path)

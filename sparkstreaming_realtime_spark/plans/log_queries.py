@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import log_split as ls
-from .queries import _stream_t, _t, register
+from .queries import _drain, _stream_t, _t, register
 
 #: shared derivations (keep in lockstep with synthesize_ods_log)
 _COMMON_SQL = """
@@ -174,27 +174,20 @@ def streaming_multiplex_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are pinned batch-side by the log_split_* oracles and
     streaming-side by tests/test_streaming.py's multiplex test."""
     import glob
-    from ..materialize import engine_tmpdir
-    import uuid
 
+    from ..materialize import engine_tmpdir
     from ..sources.files import events_with_ts
-    from ..streaming.pipelines import multiplex_sink, run_available_now
+    from ..streaming.pipelines import multiplex_sink
+    from ..streaming.store import batch_dir
 
     _t(spark, sf_dir, "events")  # sets the temporal read confs
     raw = _stream_t(spark, sf_dir, "events")
-    env = ls.synthesize_ods_log(events_with_ts(raw))
     base = engine_tmpdir("mux_parity_")
-    q = run_available_now(
-        env,
-        multiplex_sink(base),
-        checkpoint=engine_tmpdir("mux_parity_ckpt_"),
-        query_name="muxp_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(ls.synthesize_ods_log(events_with_ts(raw)), multiplex_sink(base), "muxp")
     counts = []
     for name in ("error", "page", "display", "action", "start"):
         dirs = [
-            d for d in glob.glob(f"{base}/{name}/batch=*")
+            d for d in glob.glob(batch_dir(f"{base}/{name}", "*"))
             if glob.glob(f"{d}/*.parquet")
         ]
         n = spark.read.parquet(*dirs).count() if dirs else 0

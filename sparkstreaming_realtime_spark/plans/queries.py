@@ -88,6 +88,41 @@ def _stream_t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return stream_table(spark, sf_dir, name)
 
 
+def _staged_stream(spark: SparkSession, df: DataFrame, root: str, by=None):
+    """Stage ``df`` as 4 parquet files under ``<root>/src`` and stream
+    them back one file per micro-batch: 4 real micro-batches of an
+    arbitrary split, or, with ``by``, of a split that keeps all rows of
+    one ``by`` value in one batch."""
+    import os
+
+    src = os.path.join(root, "src")
+    staged = df.repartition(4, by) if by is not None else df.repartition(4)
+    staged.write.mode("overwrite").parquet(src)
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(src)
+    )
+
+
+def _drain(stream: DataFrame, sink, tag: str):
+    """Drain ``stream`` through the ``foreachBatch`` writer ``sink``
+    (``run_available_now``) to its end, under a fresh query name and an
+    engine-owned checkpoint. Returns the finished query."""
+    import uuid
+
+    from ..materialize import engine_tmpdir
+    from ..streaming.pipelines import run_available_now
+
+    q = run_available_now(
+        stream, sink, checkpoint=engine_tmpdir(f"{tag}_ckpt_"),
+        query_name=f"{tag}_{uuid.uuid4().hex[:8]}",
+    )
+    q.awaitTermination()
+    return q
+
+
 # deterministic money aggregation (see functions/money.py for the
 # rationale and the shared Spark/DuckDB integer-cents contract);
 # module-local aliases keep the 30+ oracle f-strings below readable
@@ -386,9 +421,6 @@ def streaming_quality_gate_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     events_quality_expectations (same compiler), and quarantine
     replay/empty-batch behavior is pytest-pinned."""
     from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import quality_gate_sink
 
     _t(spark, sf_dir, "events")  # sets the temporal read confs
@@ -397,14 +429,11 @@ def streaming_quality_gate_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         ("pass", [("not_null", "event_id", 0.0)]),
         ("fail", [("row_count", 0, 0)]),
     ):
-        raw = _stream_t(spark, sf_dir, "events")
-        q = run_available_now(
-            raw,
+        _drain(
+            _stream_t(spark, sf_dir, "events"),
             quality_gate_sink(f"{root}/{tag}", suite),
-            checkpoint=f"{root}/ckpt_{tag}",
-            query_name="qgate_" + uuid.uuid4().hex[:8],
+            "qgate",
         )
-        q.awaitTermination()
     accepted = (
         spark.read.parquet(f"{root}/pass/accepted")
         .groupBy("event_type")
@@ -444,29 +473,19 @@ def streaming_idempotent_sink_parity(spark: SparkSession, sf_dir: str) -> DataFr
     the duplicate-key collapse are unit-pinned by
     tests/test_streaming.py (test_idempotent_sink_replay_overwrites);
     this row puts the same writer under the driver's hash gate."""
-    import os
     from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import idempotent_parquet_sink, read_sink
+    from ..streaming.store import batch_dir
 
     _t(spark, sf_dir, "events")  # sets the temporal read confs
     root = engine_tmpdir("idem_parity_")
     sink = idempotent_parquet_sink(
         root, key_cols=("event_id",), partition_col=None
     )
-    q = run_available_now(
-        _stream_t(spark, sf_dir, "events"),
-        sink,
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="idem_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(_stream_t(spark, sf_dir, "events"), sink, "idem")
     # replay epoch 0 exactly as a recovered driver would re-deliver
     # it: same rows, same batch id, same writer
-    replay = spark.read.parquet(os.path.join(root, "batch=0"))
-    sink(replay, 0)
+    sink(spark.read.parquet(batch_dir(root, 0)), 0)
     return (
         read_sink(spark, root)
         .groupBy("event_type")
@@ -510,11 +529,7 @@ def streaming_observe_metrics_parity(spark: SparkSession, sf_dir: str) -> DataFr
     a lost batch, a double-counted batch, or an accumulator that
     missed rows shifts a value and breaks the hash. Zero extra scans:
     the metrics ride the batch execution itself."""
-    import os
-    from ..materialize import engine_tmpdir
-    import uuid
-
-    from ..streaming.pipelines import run_available_now, with_batch_metrics
+    from ..streaming.pipelines import with_batch_metrics
 
     _t(spark, sf_dir, "events")  # sets the temporal read confs
     observed = with_batch_metrics(
@@ -531,14 +546,11 @@ def streaming_observe_metrics_parity(spark: SparkSession, sf_dir: str) -> DataFr
             "max_event_s": F.max(F.unix_timestamp("event_time")),
         },
     )
-    root = engine_tmpdir("observe_parity_")
-    q = run_available_now(
+    q = _drain(
         observed,
         lambda df, _bid: df.write.format("noop").mode("overwrite").save(),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="obs_" + uuid.uuid4().hex[:8],
+        "obs",
     )
-    q.awaitTermination()
     n_rows = n_null = cents = 0
     mn = mx = None
     for p in q.recentProgress:
@@ -1504,12 +1516,10 @@ def streaming_item_stats_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     request and the result must hash-equal the fact-scan
     ``stats_by_item_segment``. The oracle IS its oracle, unchanged."""
     import os
-    import uuid
 
     from ..functions.money import money_units
     from ..materialize import engine_tmpdir
     from ..serving import ITEM_STATS_KEYS, stats_by_item_store_frame
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import rollup_sum_sink
 
     l = _t(spark, sf_dir, "lineitem")
@@ -1517,16 +1527,8 @@ def streaming_item_stats_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     root = engine_tmpdir("itemstats_parity_")
-    src = os.path.join(root, "src")
-    l.select("l_orderkey", "l_partkey", "l_extendedprice").repartition(
-        4
-    ).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
+    stream = _staged_stream(
+        spark, l.select("l_orderkey", "l_partkey", "l_extendedprice"), root
     )
     band = (
         F.when(F.col("c_acctbal") < 2000, "low")
@@ -1546,13 +1548,11 @@ def streaming_item_stats_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     state = os.path.join(root, "state")
-    q = run_available_now(
+    _drain(
         wide,
         rollup_sum_sink(state, key_cols=ITEM_STATS_KEYS, value_col="cents"),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="itemstats_" + uuid.uuid4().hex[:8],
+        "itemstats",
     )
-    q.awaitTermination()
     return stats_by_item_store_frame(
         spark, state, _ITEM_QUERY, "segment",
         group_alias="segment", amount_alias="sum_amount",
@@ -2980,11 +2980,11 @@ def streaming_state_profile_parity(spark: SparkSession, sf_dir: str) -> DataFram
     (DAU:*/ORDERJOIN:* keyed state, DwdDauApp.scala:83-100).
     Cross-batch accumulation order is pinned by
     tests/test_streaming.py::test_apply_in_pandas_with_state_accumulates."""
-    import os
-    from ..materialize import engine_tmpdir
     import uuid
 
+    from ..materialize import engine_tmpdir
     from ..streaming.stateful import running_profiles
+    from ..streaming.store import batch_dir, write_batch
 
     _t(spark, sf_dir, "events")  # sets the temporal read confs
     raw = _stream_t(spark, sf_dir, "events")
@@ -2995,7 +2995,7 @@ def streaming_state_profile_parity(spark: SparkSession, sf_dir: str) -> DataFram
     out_dir = engine_tmpdir("profile_parity_")
 
     def sink(bdf: DataFrame, bid: int) -> None:
-        bdf.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={bid}"))
+        write_batch(bdf, out_dir, bid)
 
     q = (
         running_profiles(keyed)
@@ -3010,7 +3010,7 @@ def streaming_state_profile_parity(spark: SparkSession, sf_dir: str) -> DataFram
     )
     q.awaitTermination()
     prof = spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "batch=*")
+        batch_dir(out_dir, "*")
     )
     return (
         prof.groupBy("key")
@@ -3552,34 +3552,21 @@ def streaming_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot batch funnel; the oracle is user_funnel's,
     unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import funnel_sink, read_funnel
 
-    ev = _t(spark, sf_dir, "events")
-    root = engine_tmpdir("funnel_parity_")
-    src = os.path.join(root, "src")
-    ev.select(
+    ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.col("ts").cast("timestamp").alias("event_time"),
-    ).repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
     )
+    root = engine_tmpdir("funnel_parity_")
     state = os.path.join(root, "state")
-    q = run_available_now(
-        stream,
+    _drain(
+        _staged_stream(spark, ev, root),
         funnel_sink(state, list(_FUNNEL_STAGES)),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="funnel_" + uuid.uuid4().hex[:8],
+        "funnel",
     )
-    q.awaitTermination()
     return read_funnel(spark, state, list(_FUNNEL_STAGES))
 
 
@@ -3630,37 +3617,24 @@ def streaming_retention_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     day) rows — facts are never rescanned. The oracle is
     user_retention_cohorts', unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_retention, retention_sink
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", F.col("ts").cast("timestamp").alias("event_time")
     )
     root = engine_tmpdir("retention_parity_")
-    src = os.path.join(root, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
     state = os.path.join(root, "state")
     # compact_every=1: every batch folds the committed tail into a
     # new manifest generation (streaming/store.py), so this row
     # hash-gates the WHOLE compaction lifecycle — fold, atomic
     # manifest publish, deferred GC — against the batch oracle
-    q = run_available_now(
-        stream,
+    _drain(
+        _staged_stream(spark, ev, root),
         retention_sink(state, compact_every=1),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="retention_" + uuid.uuid4().hex[:8],
+        "retention",
     )
-    q.awaitTermination()
     return read_retention(spark, state)
 
 
@@ -3821,11 +3795,8 @@ def streaming_anomaly_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     its successors' baselines; the merge-then-detect order makes that
     correct by construction. Must equal the one-shot batch query
     bit-for-bit (same oracle as revenue_anomaly_days)."""
-    import uuid
-
     from ..materialize import engine_tmpdir
     from ..operators.timeseries import anomaly_days
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_rollup_sum, rollup_sum_sink
 
     c = _t(spark, sf_dir, "customer")
@@ -3843,13 +3814,7 @@ def streaming_anomaly_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     path = engine_tmpdir("rollup_parity_") + "/rollup"
-    q = run_available_now(
-        stream,
-        rollup_sum_sink(path, ("nation", "d"), "rev_cents"),
-        checkpoint=engine_tmpdir("rollup_parity_ckpt_"),
-        query_name="anom_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(stream, rollup_sum_sink(path, ("nation", "d"), "rev_cents"), "anom")
     daily = read_rollup_sum(spark, path, ("nation", "d"), "rev_cents")
     flagged = anomaly_days(
         daily, "nation", "d", "rev_cents",
@@ -3931,38 +3896,25 @@ def streaming_copurchase_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     which per-batch thresholding could never give). The oracle IS
     part_copurchase_pairs's, unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import copurchase_sink, read_copurchase
 
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
     )
     root = engine_tmpdir("copur_parity_")
-    src = os.path.join(root, "src")
-    li.repartition(4, F.col("basket")).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
     state = os.path.join(root, "state")
     # compact_every=2: the 4-batch stream folds once mid-run, so the
     # read merges a compacted segment WITH live tail batches — the
     # mixed shape a long-lived store always has (streaming/store.py)
-    q = run_available_now(
-        stream,
+    _drain(
+        _staged_stream(spark, li, root, by=F.col("basket")),
         copurchase_sink(
             state, basket_col="basket", item_col="item", compact_every=2
         ),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="copur_" + uuid.uuid4().hex[:8],
+        "copur",
     )
-    q.awaitTermination()
     return read_copurchase(spark, state, k=20, min_pair_support=2)
 
 
@@ -4023,10 +3975,8 @@ def streaming_transition_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maintained counts must hash-equal the one-shot
     event_transition_matrix. The oracle IS its oracle, unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_transition, transition_sink
 
     ev = _t(spark, sf_dir, "events").select(
@@ -4034,23 +3984,8 @@ def streaming_transition_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").alias("event_time"),
     )
     root = engine_tmpdir("trans_parity_")
-    src = os.path.join(root, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
     state = os.path.join(root, "state")
-    q = run_available_now(
-        stream,
-        transition_sink(state),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="trans_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(_staged_stream(spark, ev, root), transition_sink(state), "trans")
     return read_transition(spark, state)
 
 
@@ -4310,34 +4245,21 @@ def streaming_key_skew_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     current per batch; profiling a 100 TB key never rescans facts.
     The oracle IS events_key_skew's, unchanged."""
     import os
-    import uuid
 
     from ..materialize import engine_tmpdir
     from ..operators.profiling import key_skew_profile
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_rollup_sum, rollup_sum_sink
 
     ev = _t(spark, sf_dir, "events").select(
         F.col("user_id").alias("key"), F.lit(1).cast("bigint").alias("n")
     )
     root = engine_tmpdir("kskew_parity_")
-    src = os.path.join(root, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
     state = os.path.join(root, "state")
-    q = run_available_now(
-        stream,
+    _drain(
+        _staged_stream(spark, ev, root),
         rollup_sum_sink(state, key_cols=("key",), value_col="n"),
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="kskew_" + uuid.uuid4().hex[:8],
+        "kskew",
     )
-    q.awaitTermination()
     merged = read_rollup_sum(spark, state, key_cols=("key",), value_col="n")
     return key_skew_profile(df=None, key_col="key", k=10, counts=merged)
 
@@ -4505,11 +4427,8 @@ def streaming_ddsketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. This is how a 100 TB pipeline serves live percentile
     dashboards: the fact scan is incremental; a new quantile or a
     changed q never reprocesses facts."""
-    import uuid
-
     from ..materialize import engine_tmpdir
     from ..operators.sketches import DD_ALPHA, _dd_ln_gamma, dd_quantiles
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_rollup_sum, rollup_sum_sink
 
     stream = _stream_t(spark, sf_dir, "events").select(
@@ -4520,13 +4439,7 @@ def streaming_ddsketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).alias("one"),
     )
     path = engine_tmpdir("ddsketch_parity_") + "/sketch"
-    q = run_available_now(
-        stream,
-        rollup_sum_sink(path, ("event_type", "bucket"), "one"),
-        checkpoint=engine_tmpdir("ddsketch_parity_ckpt_"),
-        query_name="dds_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(stream, rollup_sum_sink(path, ("event_type", "bucket"), "one"), "dds")
     merged = read_rollup_sum(
         spark, path, ("event_type", "bucket"), "one"
     ).select("event_type", "bucket", F.col("one").alias("n"))
@@ -4697,13 +4610,10 @@ def streaming_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle IS order_touch_attribution's, unchanged. This is the
     production shape: attribute conversions as they land, never a
     full-history recompute."""
-    import os
-    import uuid
-
     from ..materialize import engine_tmpdir
     from ..operators.attribution import linear_attribution
-    from ..streaming.pipelines import run_available_now
     from ..streaming.sinks import read_sink
+    from ..streaming.store import write_batch
 
     events = _t(spark, sf_dir, "events")
     orders_stream = _stream_t(spark, sf_dir, "orders").select(
@@ -4712,24 +4622,15 @@ def streaming_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.add_months("o_orderdate", 348).cast("timestamp").alias("ots"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    root = engine_tmpdir("attr_parity_")
-    out = os.path.join(root, "partials")
+    out = engine_tmpdir("attr_parity_") + "/partials"
 
     def attribute_batch(batch_df, batch_id: int) -> None:
         res = linear_attribution(
             batch_df, events, window_seconds=7 * 24 * 3600
         )
-        res.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
+        write_batch(res, out, batch_id)
 
-    q = run_available_now(
-        orders_stream,
-        attribute_batch,
-        checkpoint=os.path.join(root, "ckpt"),
-        query_name="attr_" + uuid.uuid4().hex[:8],
-    )
-    q.awaitTermination()
+    _drain(orders_stream, attribute_batch, "attr")
     return (
         read_sink(spark, out)
         .groupBy("channel")

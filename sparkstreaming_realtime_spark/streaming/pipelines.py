@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.datetimes import dt_col
 from ..functions.money import money_sum
+from .store import batch_dir, batch_ids, write_batch
 
 
 def streaming_dau_dedup(
@@ -242,8 +243,7 @@ def multiplex_sink(base_path: str):
         batch_df.persist()
         try:
             for name, branch in log_split(batch_df).items():
-                out = os.path.join(base_path, name, f"batch={batch_id}")
-                branch.write.mode("overwrite").parquet(out)
+                write_batch(branch, os.path.join(base_path, name), batch_id)
         finally:
             batch_df.unpersist()
 
@@ -272,14 +272,16 @@ def curation_sink(
     pipeline snapshots them from the accumulated store — exactly what
     the parity query does after draining.
 
+    A batch checks its fingerprints only against the COMMITTED corpus
+    batches below its own id, so a replay never sees its own earlier
+    attempt as an earlier claim.
+
     Cross-batch semantics note: with in-order batches the kept
     FINGERPRINT set equals the batch funnel's; the surviving
     representative per fp is the earliest batch's min-id (the batch
     funnel picks the global min-id). Identical when dups share a
     batch or arrive id-ordered; pinned by
     tests/test_streaming.py::test_curation_sink_across_micro_batches."""
-    import os
-
     from ..functions.text import tokenize
     from ..operators import textstats as ts
     from ..operators.dedup import fingerprint, spread
@@ -302,38 +304,43 @@ def curation_sink(
                 "doc_id", "lang", "fp", pass_q.alias("pass_q")
             ).persist()
             try:
-                scored.groupBy("lang").agg(
+                stats = scored.groupBy("lang").agg(
                     F.count("*").cast("bigint").alias("n_raw"),
                     F.sum(F.when(F.col("pass_q"), 1).otherwise(0))
                     .cast("bigint").alias("n_quality"),
-                ).write.mode("overwrite").parquet(
-                    os.path.join(stats_path, f"batch={batch_id}")
                 )
+                write_batch(stats, stats_path, batch_id)
                 q = scored.filter("pass_q")
                 # within-batch first-wins: min doc_id per fingerprint
                 win = q.join(
                     q.groupBy("fp").agg(F.min("doc_id").alias("doc_id")),
                     ["fp", "doc_id"],
                 )
-                try:
-                    corpus = spark.read.parquet(corpus_path)
-                except Exception:
-                    corpus = None
+                corpus = _committed_below(spark, corpus_path, batch_id)
                 if corpus is not None and not corpus.isEmpty():
                     # grown-corpus first-wins: an fp claimed by an
                     # earlier batch rejects this batch's doc
                     win = win.join(
                         corpus.select("fp").distinct(), "fp", "left_anti"
                     )
-                win.select("doc_id", "lang", "fp").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(corpus_path, f"batch={batch_id}"))
+                write_batch(
+                    win.select("doc_id", "lang", "fp"), corpus_path, batch_id
+                )
             finally:
                 scored.unpersist()
         finally:
             batch_df.unpersist()
 
     return write
+
+
+def _committed_below(spark, path: str, batch_id: int) -> DataFrame | None:
+    """The committed ``batch=<id>`` dirs of ``path`` with ids below
+    ``batch_id`` as one frame (None when there are none). The in-flight
+    batch's own earlier attempt is not among them, so a replay reads
+    what its first attempt read."""
+    prior = [batch_dir(path, i) for i in batch_ids(path) if i < batch_id]
+    return spark.read.parquet(*prior) if prior else None
 
 
 def corpus_dedup_sink(corpus_path: str, rejected_path: str, threshold: float = 0.6):
@@ -348,11 +355,10 @@ def corpus_dedup_sink(corpus_path: str, rejected_path: str, threshold: float = 0
     new×corpus collisions via ``near_dup_join``. Kept docs land in
     ``corpus_path/batch=<id>``, rejects (with the kept doc they
     duplicate) in ``rejected_path/batch=<id>`` — per-batch-id
-    overwrite makes replay idempotent (T5). At 100 TB the corpus
-    signature table would be persisted and appended instead of
+    overwrite makes replay idempotent (T5); the corpus a batch checks
+    against is the committed batches below its own id. At 100 TB the
+    corpus signature table would be persisted and appended instead of
     re-derived per batch; the observable semantics are identical."""
-    import os
-
     from ..operators.dedup import near_dup_join, near_dup_pairs
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -369,10 +375,7 @@ def corpus_dedup_sink(corpus_path: str, rejected_path: str, threshold: float = 0
                 "doc_id",
                 "left_anti",
             ).persist()
-            try:
-                corpus = spark.read.parquet(corpus_path)
-            except Exception:
-                corpus = None
+            corpus = _committed_below(spark, corpus_path, batch_id)
             if corpus is not None and not corpus.isEmpty():
                 hits = near_dup_join(survivors, corpus, threshold=threshold)
                 kept = survivors.join(
@@ -383,13 +386,9 @@ def corpus_dedup_sink(corpus_path: str, rejected_path: str, threshold: float = 0
             else:
                 hits = None
                 kept = survivors
-            kept.write.mode("overwrite").parquet(
-                os.path.join(corpus_path, f"batch={batch_id}")
-            )
+            write_batch(kept, corpus_path, batch_id)
             rejected = intra if hits is None else intra.unionByName(hits)
-            rejected.write.mode("overwrite").parquet(
-                os.path.join(rejected_path, f"batch={batch_id}")
-            )
+            write_batch(rejected, rejected_path, batch_id)
             survivors.unpersist()
         finally:
             batch_df.unpersist()

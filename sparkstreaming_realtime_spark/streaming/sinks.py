@@ -21,13 +21,14 @@ from pyspark.sql import functions as F
 from .store import (
     COMPACT_EVERY,
     SubFold,
+    batch_dir,
     compact_additive,
     load_manifest,
-    read_additive,
     read_buckets,
+    read_folded,
     run_concurrent,
-    store_parts,
     swap_buckets,
+    write_batch,
     write_rows_parquet,
 )
 
@@ -60,30 +61,41 @@ def kafka_sink_options(
     return opts
 
 
-def _overlap_compact(
-    write_thunks: list,
+def write_additive(
     spark,
     path: str,
     batch_id: int,
-    folds: dict,
-    compact_every: int,
+    folds: dict[str, SubFold],
+    frames: dict[str, DataFrame],
+    compact_every: int = COMPACT_EVERY,
+    extra: dict[str, DataFrame] | None = None,
 ) -> None:
-    """Run a batch's write thunk(s) and the PRIOR tail's compaction as
-    CONCURRENT jobs (guide §2.6). Safe by construction:
-    ``compact_additive`` folds only batch ids strictly BELOW
-    ``batch_id`` — fully-committed directories the current batch never
-    touches — and stages its segment under ``seg=<gen>``, disjoint
-    from every ``batch=<id>`` dir the write thunks produce. The
-    manifest publish stays compaction's single commit point, and the
-    foreachBatch writer returns only after BOTH join, so the streaming
-    checkpoint still commits after all output landed. A crash between
-    the manifest publish and the batch write completing replays the
-    batch (offsets uncommitted), which overwrites its dirs and no-ops
-    the already-advanced compaction — the same convergence argument as
-    the sequential order. Until that replay, an external reader sees
-    the folded view plus the partial ``batch=<id>`` dir (the known
-    window named in streaming/store.py)."""
-    thunks = list(write_thunks)
+    """The one write path of the additive sinks. Each sub-frame of
+    ``frames`` ({sub: DataFrame}) lands in its ``batch=<id>`` dir
+    (:func:`store.write_batch`, partitioned by ``folds[sub]
+    .partition_by``), each frame of ``extra`` ({store path: DataFrame})
+    in that store's ``batch=<id>`` dir, and the PRIOR tail's
+    compaction runs with them as CONCURRENT jobs. Safe by
+    construction: ``compact_additive`` folds only batch ids strictly
+    BELOW ``batch_id``, which this batch never touches, and stages its
+    segment under ``seg=<gen>``, disjoint from every ``batch=<id>``
+    dir. The manifest publish stays compaction's single commit point,
+    and this returns only after every job joined, so the streaming
+    checkpoint commits after all output landed. A crash between the
+    manifest publish and the batch write completing replays the batch
+    (offsets uncommitted), which overwrites its dirs and no-ops the
+    already-advanced compaction. Until that replay, an external reader
+    sees the folded view plus the partial ``batch=<id>`` dir (the
+    known window named in streaming/store.py)."""
+    thunks = [
+        (lambda sub=sub, df=df: write_batch(
+            df, path, batch_id, sub, folds[sub].partition_by))
+        for sub, df in frames.items()
+    ]
+    thunks += [
+        (lambda p=p, df=df: write_batch(df, p, batch_id))
+        for p, df in (extra or {}).items()
+    ]
     if compact_every:
         thunks.append(
             lambda: compact_additive(
@@ -91,6 +103,83 @@ def _overlap_compact(
             )
         )
     run_concurrent(spark, thunks)
+
+
+def additive_sink(path: str, folds: dict[str, SubFold], partials,
+                  compact_every: int = COMPACT_EVERY):
+    """The ``foreachBatch`` writer of an additive store: per batch,
+    ``partials(batch_df)`` gives the ``{sub: DataFrame}`` that
+    :func:`write_additive` lands beside the prior tail's compaction.
+    Output location is a function of the batch id alone, so a replayed
+    batch overwrites its previous attempt (T5/K5)."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        write_additive(batch_df.sparkSession, path, batch_id, folds,
+                       partials(batch_df), compact_every)
+
+    return write
+
+
+# -- the additive-sink spec table -------------------------------------
+# One ``{sub: SubFold}`` per store. The sink writes per-batch partials
+# under it, compaction folds with it, and the reader (store.read_folded)
+# applies the same fold, so a compacted store reads as the uncompacted one.
+
+
+def _sum_fold(key_cols: tuple[str, ...], value_col: str):
+    """Key-wise exact integer SUM (bigint)."""
+
+    def fold(df: DataFrame) -> DataFrame:
+        return df.groupBy(*key_cols).agg(
+            F.sum(value_col).cast("bigint").alias(value_col)
+        )
+
+    return fold
+
+
+def _raw_spec(partition_col: str | None = None) -> dict[str, SubFold]:
+    """Raw rows in append mode; ``basePath`` reads resolve any ``dt=``
+    layer below ``batch=<id>``."""
+    return {"": SubFold(partition_by=partition_col, use_base_path=True)}
+
+
+def _sum_spec(key_cols: tuple[str, ...], value_col: str) -> dict[str, SubFold]:
+    return {"": SubFold(fold=_sum_fold(key_cols, value_col))}
+
+
+def _kmv_spec(k: int) -> dict[str, SubFold]:
+    """Distinct hashes, then the k smallest: idempotent, associative
+    and commutative."""
+    return {"": SubFold(
+        fold=lambda df: df.select("h").distinct().orderBy("h").limit(k)
+    )}
+
+
+_COUNT_MIN = _sum_spec(("row", "col"), "c")
+_LINE_COUNTS = _sum_spec(("line_fp",), "n_docs")
+#: user-day activity is a set: union then distinct
+_RETENTION = {"": SubFold(fold=lambda df: df.select("__u", "__d").distinct())}
+#: postings/doclen rows are disjoint across batches (batches partition
+#: documents), so they consolidate in append mode, postings re-clustered
+#: by term so compacted segments prune like fresh batches; the one-row
+#: stats frames fold to exact integer sums (avgdl divides at read time)
+_BM25 = {
+    "postings": SubFold(range_by="term"),
+    "doclen": SubFold(),
+    "stats": SubFold(fold=lambda df: df.agg(
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
+    )),
+}
+#: key-wise (or global) integer counts over disjoint baskets; the
+#: support threshold stays read-side so it applies to the MERGED counts
+_COPURCHASE = {
+    "pairs": SubFold(fold=_sum_fold(("item_a", "item_b"), "pair_n")),
+    "items": SubFold(fold=_sum_fold(("item",), "n")),
+    "baskets": SubFold(
+        fold=lambda df: df.agg(F.sum("n").cast("bigint").alias("n"))
+    ),
+}
 
 
 def idempotent_parquet_sink(
@@ -103,59 +192,22 @@ def idempotent_parquet_sink(
 
     Per batch: (1) dedup on the doc key inside the batch (the ES
     doc-id collapse, MyEsUtils.scala:41-52); (2) write to
-    ``<path>/batch=<id>`` — replays of the same epoch overwrite the
-    same directory, so at-least-once delivery composes to
-    exactly-once output (the engine analog of doc-id upserts).
-    Readers take ``read_sink(path)``.
-
-    At scale the per-batch directory write is embarrassingly
-    parallel; the dedup is one narrow shuffle on the doc key. The
-    per-batch directories themselves are bounded by append-mode
-    compaction (streaming/store.py): every ``compact_every`` batches
-    the committed tail consolidates into one immutable segment (the
-    ``dt`` layout preserved), so directory counts track segments, not
-    stream lifetime."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        def _batch() -> None:
-            out = os.path.join(path, f"batch={batch_id}")
-            deduped = batch_df.dropDuplicates(list(key_cols))
-            # static whatever the session says: a replay must replace
-            # the whole dir, and the store serves it once _SUCCESS exists
-            writer = deduped.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            )
-            if partition_col and partition_col in batch_df.columns:
-                writer = writer.partitionBy(partition_col)
-            writer.parquet(out)
-
-        _overlap_compact(
-            [_batch],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(partition_by=partition_col, use_base_path=True)},
-            compact_every,
-        )
-
-    return write
+    ``<path>/batch=<id>`` (partitioned by ``partition_col`` when the
+    frame has it) — replays of the same epoch overwrite the same
+    directory, so at-least-once delivery composes to exactly-once
+    output (the engine analog of doc-id upserts). Compaction
+    consolidates the committed tail in append mode with the ``dt``
+    layout preserved. Readers take ``read_sink(path)``."""
+    return additive_sink(
+        path, _raw_spec(partition_col),
+        lambda df: {"": df.dropDuplicates(list(key_cols))}, compact_every,
+    )
 
 
 def read_sink(spark, path: str) -> DataFrame:
-    """Read everything the idempotent sink has committed: compacted
-    segments ∪ live tail (one manifest snapshot, never mutates the
-    store). ``basePath`` anchors the tail read so any ``dt=``
-    partition layer below ``batch=<id>`` resolves; segments carry the
-    same layout at their roots."""
-    parts = store_parts(spark, path, use_base_path=True)
-    if not parts:
-        return spark.read.option("basePath", path).parquet(
-            os.path.join(path, "batch=*")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """Everything the idempotent sink has committed: compacted
+    segments ∪ live tail, from one manifest snapshot."""
+    return read_folded(spark, path, _raw_spec())
 
 
 def reset_sink(path: str) -> None:
@@ -163,13 +215,382 @@ def reset_sink(path: str) -> None:
         shutil.rmtree(path)
 
 
-#: fallback bucket count for hash-bucketed state stores when a
-#: caller pins one explicitly. The DEFAULT path (``n_buckets=None``)
-#: instead SIZES the store at creation — see :func:`_auto_buckets` —
-#: because any fixed knob is wrong off its scale (the
-#: FIXED_KNOB_GUARD_N lesson, similarity.py): 32 buckets on a 100 TB
-#: store means 3 TB rewrites per touched key.
-STATE_BUCKETS = 32
+def count_min_sink(path: str, item_col: str = "item",
+                   depth: int | None = None, width: int | None = None,
+                   compact_every: int = COMPACT_EVERY):
+    """Streaming count-min maintenance: each micro-batch's cell
+    counts land in their own ``batch=<id>`` directory, and the live
+    sketch is the cell-wise SUM over the store — exactly the
+    associative+commutative merge that makes count-min a streaming
+    aggregate (operators/sketches.py). Read with
+    :func:`read_count_min`."""
+    from ..operators import sketches as sk
+
+    d = sk.CM_DEPTH if depth is None else depth
+    w = sk.CM_WIDTH if width is None else width
+    return additive_sink(
+        path, _COUNT_MIN,
+        lambda df: {"": sk.count_min_cells(df, item_col, d, w)},
+        compact_every,
+    )
+
+
+def read_count_min(spark, path: str) -> DataFrame:
+    """The live sketch: cell-wise addition over segments ∪ tail."""
+    return read_folded(spark, path, _COUNT_MIN)
+
+
+def kmv_sink(path: str, item_col: str = "item", k: int | None = None,
+             compact_every: int = COMPACT_EVERY):
+    """Streaming distinct-count sketch maintenance: each micro-batch
+    folds to its own ≤ k-row KMV sketch (operators/sketches.py:
+    kmv_sketch), and the live sketch is union → k smallest distinct
+    over the store. The merge is min-like, so per-batch sketches over
+    ANY batch split merge to the one-shot corpus sketch exactly, even
+    when the same item recurs across batches (a corpus-top-k hash is
+    top-k within its own batch). Read with :func:`read_kmv`."""
+    from ..operators import sketches as sk
+
+    kk = sk.KMV_K if k is None else k
+    return additive_sink(
+        path, _kmv_spec(kk),
+        lambda df: {"": sk.kmv_sketch(df, item_col, kk)}, compact_every,
+    )
+
+
+def read_kmv(spark, path: str, k: int | None = None) -> DataFrame:
+    """The live KMV sketch: distinct over segments ∪ tail, then the k
+    smallest."""
+    from ..operators import sketches as sk
+
+    return read_folded(spark, path, _kmv_spec(sk.KMV_K if k is None else k))
+
+
+def line_count_sink(path: str, text_col: str = "text",
+                    id_col: str = "doc_id",
+                    compact_every: int = COMPACT_EVERY):
+    """Streaming line-frequency maintenance for the boilerplate gate
+    (operators/dedup.py:line_dedup): each micro-batch banks its
+    per-line distinct-document counts. A document's lines all travel
+    in its one row, so counts over DISJOINT batches sum to the corpus
+    distinct count (:func:`read_line_counts`). The gate applies at
+    read time via ``line_dedup(docs, counts=...)``, so a line that
+    crosses the boilerplate threshold in a LATER batch cleans earlier
+    documents too — the semantics of a one-shot batch run."""
+    from ..operators.dedup import line_counts
+
+    return additive_sink(
+        path, _LINE_COUNTS,
+        lambda df: {"": line_counts(df, text_col, id_col)}, compact_every,
+    )
+
+
+def read_line_counts(spark, path: str) -> DataFrame:
+    """The live line counts: fingerprint-wise addition over the store
+    (valid because batches partition the documents)."""
+    return read_folded(spark, path, _LINE_COUNTS)
+
+
+def rollup_sum_sink(path: str, key_cols: tuple[str, ...],
+                    value_col: str = "v",
+                    compact_every: int = COMPACT_EVERY):
+    """Streaming additive-rollup maintenance: each micro-batch banks
+    its per-key integer sums, and the live rollup is the key-wise SUM
+    over the store — exact integer sums are associative and
+    commutative, so ANY batch split merges to the one-shot rollup.
+    Read-side detectors (operators/timeseries.py) run over the merged
+    rollup, so a detector change never reprocesses facts. Read with
+    :func:`read_rollup_sum`."""
+    spec = _sum_spec(key_cols, value_col)
+    return additive_sink(
+        path, spec, lambda df: {"": spec[""].fold(df)}, compact_every
+    )
+
+
+def read_rollup_sum(spark, path: str, key_cols: tuple[str, ...],
+                    value_col: str = "v") -> DataFrame:
+    """The live rollup: key-wise integer SUM over segments ∪ tail."""
+    return read_folded(spark, path, _sum_spec(key_cols, value_col))
+
+
+def retention_sink(path: str, user_col: str = "user_id",
+                   ts_col: str = "event_time",
+                   compact_every: int = COMPACT_EVERY):
+    """Streaming retention-cohort maintenance: each micro-batch banks
+    its distinct (``__u``, ``__d``) user-day frame
+    (operators/funnel.py:active_days). User-day activity is a SET, so
+    distinct-over-union merges ANY batch split (cross-batch repeats
+    included) to the one-shot corpus set, and a late OLDER event moves
+    its user's cohort earlier at read time, which per-batch cohort
+    assignment never could. Read with :func:`read_retention`."""
+    from ..operators.funnel import active_days
+
+    return additive_sink(
+        path, _RETENTION,
+        lambda df: {"": active_days(df, user_col, ts_col)}, compact_every,
+    )
+
+
+def read_retention(spark, path: str) -> DataFrame:
+    """The live retention matrix: the folded user-day set, then the
+    one-shot operator's own fold (funnel.py:retention_from_active)."""
+    from ..operators.funnel import retention_from_active
+
+    return retention_from_active(read_folded(spark, path, _RETENTION))
+
+
+def quality_gate_sink(
+    path: str,
+    expectations: list[tuple],
+    compact_every: int = COMPACT_EVERY,
+):
+    """Streaming data-quality gate: every micro-batch runs the
+    declarative expectation suite (operators/expectations.py — ONE
+    conditional-aggregate scan) and routes WHOLE batches by verdict:
+    passing batches land under ``accepted/batch=<id>``, failing ones
+    under ``quarantine/batch=<id>``, with the verdict frame written
+    beside them (``verdicts/batch=<id>``) so an operator can see which
+    check broke and replay the quarantined batch after a fix.
+
+    This is the reference's error-routing pattern (OdsBaseLogApp's
+    malformed-JSON side channel, P3) at the semantic level: a broken
+    upstream extract poisons everything it shipped, so quality errors
+    route BATCHES. Only the accepted store compacts (quarantined ids
+    leave gaps that ``upto`` covers); quarantine/ and verdicts/ stay
+    one dir per batch as the audit/replay log. Read the accepted
+    stream with ``read_sink(f"{{path}}/accepted")``."""
+    from ..operators.expectations import check_expectations
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        verdict = check_expectations(batch_df, expectations)
+        rows = verdict.collect()  # suite-sized: one row per check
+        ok = all(r["passed"] == 1 for r in rows)
+        extra = {os.path.join(path, "verdicts"): verdict}
+        if not ok:
+            extra[os.path.join(path, "quarantine")] = batch_df
+        write_additive(
+            batch_df.sparkSession, os.path.join(path, "accepted"),
+            batch_id, _raw_spec(), {"": batch_df} if ok else {},
+            compact_every, extra,
+        )
+
+    return write
+
+
+def bm25_index_sink(path: str, id_col: str = "doc_id",
+                    text_col: str = "text",
+                    compact_every: int = COMPACT_EVERY):
+    """Streaming BM25 inverted-index maintenance — the reference's ES
+    architecture for ranked search (PublishDaoImpl.java:58-61 queries
+    a continuously-indexed store; it never re-tokenizes the corpus
+    per query): each micro-batch of documents tokenizes ONCE and
+    lands three sub-frames under its ``batch=<id>`` directory:
+
+    - ``postings``: (doc_id, term, tf) over the FULL batch vocabulary;
+    - ``doclen``: (doc_id, dl);
+    - ``stats``: one additive row (n_docs, sum_dl).
+
+    Batches must partition DOCUMENTS, so per-batch (doc, term) rows
+    are disjoint, df is their per-term count, and N/avgdl fold from
+    the stats rows: the merged index is the one-shot corpus index at
+    any batch split. A query (:func:`read_bm25_index`) filters the
+    merged postings to its terms and reuses the one-shot scorer.
+
+    Postings are TERM-CLUSTERED: each batch range-partitions its
+    postings by ``term`` and sorts within files, so every row group
+    carries a tight ``[min_term, max_term]`` stat and a query's
+    ``term IN (...)`` pushes down to row-group skipping. File count
+    per batch sizes from the batch's postings volume."""
+    from ..functions.text import tokenize
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        import math
+
+        toked = batch_df.select(
+            F.col(id_col).alias("doc_id"),
+            tokenize(text_col).alias("__toks"),
+        )
+        dl = toked.select("doc_id", F.size("__toks").alias("dl"))
+        # one collected aggregate gives the stats row and sizes the
+        # postings files (sum_dl upper-bounds distinct (doc, term)
+        # rows; ~16 parquet bytes per posting)
+        srow = dl.agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0))
+            .cast("bigint")
+            .alias("sum_dl"),
+        ).collect()[0]
+        nf = max(1, min(4096, math.ceil(
+            int(srow["sum_dl"]) * 16 / AUTO_BUCKET_TARGET_BYTES
+        )))
+        # the stats row is already on the driver: a Spark write of one
+        # literal row would cost a whole job per micro-batch
+        write_rows_parquet(
+            batch_dir(path, batch_id, "stats"),
+            [("n_docs", "bigint"), ("sum_dl", "bigint")],
+            [(int(srow["n_docs"]), int(srow["sum_dl"]))],
+        )
+        postings = (
+            toked.select("doc_id", F.explode("__toks").alias("term"))
+            .groupBy("doc_id", "term")
+            .agg(F.count("*").alias("tf"))
+            .repartitionByRange(nf, "term")
+            .sortWithinPartitions("term")
+        )
+        write_additive(
+            batch_df.sparkSession, path, batch_id, _BM25,
+            {"postings": postings, "doclen": dl}, compact_every,
+        )
+
+    return write
+
+
+def read_bm25_index(
+    spark,
+    path: str,
+    query_terms: list[str],
+    k: int = 10,
+    k1: float | None = None,
+    b: float | None = None,
+) -> DataFrame:
+    """Serve a BM25 query from :func:`bm25_index_sink` state: filter
+    the merged postings to the query terms (disjoint across batches —
+    no re-aggregation), count df per term, fold the additive stats
+    rows to (N, avgdl) with the same exact-integer-sum-then-divide
+    arithmetic as the one-shot ``avg(dl)``, and hand the four frames
+    to the SHARED scorer (operators/retrieval.py:bm25_rank) — the
+    result hash-equals the one-shot ``bm25_search`` over the same
+    corpus."""
+    from ..operators import retrieval as rt
+
+    if not query_terms:
+        raise ValueError("read_bm25_index needs at least one query term")
+    terms = sorted({t.lower() for t in query_terms})
+    # the postings files are term-clustered, so this IN predicate
+    # pushes down to parquet row-group skipping
+    tf = read_folded(spark, path, _BM25, "postings").filter(
+        F.col("term").isin(terms)
+    )
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    dl = read_folded(spark, path, _BM25, "doclen")
+    stats = (
+        read_folded(spark, path, _BM25, "stats")
+        .select(
+            F.col("n_docs").alias("__n"),
+            F.col("sum_dl").alias("__s"),
+        )
+        # Spark's avg(long) divides the exact long sum by the count —
+        # the identical double division this fold performs
+        .select(
+            F.col("__n").cast("double").alias("n_docs"),
+            (F.col("__s").cast("double") / F.col("__n").cast("double"))
+            .alias("avgdl"),
+        )
+    )
+    kk1 = rt.BM25_K1 if k1 is None else k1
+    kb = rt.BM25_B if b is None else b
+    return rt.bm25_rank(tf, dfreq, dl, stats, k=k, k1=kk1, b=kb)
+
+
+def copurchase_sink(
+    path: str,
+    basket_col: str = "basket_id",
+    item_col: str = "item_id",
+    max_basket: int | None = None,
+    compact_every: int = COMPACT_EVERY,
+):
+    """Incremental market-basket maintenance: keep the co-purchase
+    pair/item/basket counts (operators/basket.py:copurchase_pairs)
+    current across micro-batches — the `line_count_sink` pattern
+    applied to the a-priori L2 pass. Per batch, the rolled baskets'
+    pair counts (support threshold NOT applied — it belongs to read
+    time over the MERGED counts, so a pair crossing min_support only
+    in a later batch counts retroactively), item presence counts and
+    the basket count land under one ``batch=<id>`` directory.
+
+    Batches must partition BASKETS — every row of a basket travels in
+    one micro-batch (stage the source ``repartition(n, basket_col)``
+    or key the topic by basket id). Then per-batch counts are additive
+    and :func:`read_copurchase` equals the one-shot batch operator
+    exactly. The streaming checkpoint commits offsets only after this
+    writer returns, so every COMMITTED batch has all three frames."""
+    from ..operators.basket import _pair_counts, _rolled_items
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        from ..materialize import release
+
+        rolled = _rolled_items(batch_df, basket_col, item_col, max_basket)
+        try:
+            # count FIRST: one job computes the rolled frame, populates
+            # its materialized blocks and gives the basket count, written
+            # driver-side. Racing all three consumers instead measured
+            # WORSE (6.2 s vs 5.4 s): concurrent jobs each recompute the
+            # not-yet-cached rolled partitions. The pairs/items writes
+            # then read the same blocks as concurrent jobs.
+            n_baskets = rolled.count()
+            write_rows_parquet(
+                batch_dir(path, batch_id, "baskets"),
+                [("n", "bigint")], [(n_baskets,)],
+            )
+            items = (
+                rolled.select(F.explode("__items").alias("item"))
+                .groupBy("item")
+                .agg(F.count("*").cast("bigint").alias("n"))
+            )
+            write_additive(
+                batch_df.sparkSession, path, batch_id, _COPURCHASE,
+                {"pairs": _pair_counts(rolled, 1), "items": items},
+                compact_every,
+            )
+        finally:
+            # the rolled frame is per-batch scratch; holding its
+            # blocks across a long stream would pile up per batch
+            release(rolled)
+
+    return write
+
+
+def read_copurchase(
+    spark,
+    path: str,
+    k: int = 20,
+    min_pair_support: int = 2,
+) -> DataFrame:
+    """The live co-purchase top-k from :func:`copurchase_sink` state:
+    key-wise integer sums over the store (valid because batches
+    partition baskets), support threshold and exact-integer lift
+    applied over the MERGED counts — identical arithmetic to
+    operators/basket.py:copurchase_pairs, so the result hash-equals
+    the one-shot batch operator at any batch split."""
+    pairs = read_folded(spark, path, _COPURCHASE, "pairs").filter(
+        F.col("pair_n") >= min_pair_support
+    )
+    item_n = read_folded(spark, path, _COPURCHASE, "items")
+    n_baskets = read_folded(spark, path, _COPURCHASE, "baskets").select(
+        F.col("n").alias("__n")
+    )
+    na = item_n.select(F.col("item").alias("item_a"), F.col("n").alias("n_a"))
+    nb = item_n.select(F.col("item").alias("item_b"), F.col("n").alias("n_b"))
+    return (
+        pairs.join(na, "item_a")
+        .join(nb, "item_b")
+        .crossJoin(F.broadcast(n_baskets))
+        .select(
+            "item_a",
+            "item_b",
+            "pair_n",
+            "n_a",
+            "n_b",
+            F.round(
+                (F.col("pair_n") * F.col("__n")).cast("double")
+                / (F.col("n_a") * F.col("n_b")).cast("double"),
+                4,
+            ).alias("lift"),
+        )
+        .orderBy(F.desc("pair_n"), F.asc("item_a"), F.asc("item_b"))
+        .limit(k)
+    )
+
 
 #: auto-sizing targets (:func:`_auto_buckets`). A bucket should be a
 #: normal parquet partition at steady state — per-batch I/O is then
@@ -503,113 +924,6 @@ def read_scd2(spark, path: str) -> DataFrame:
     )
 
 
-def _sum_fold(key_cols: tuple[str, ...], value_col: str):
-    """The additive-store merge: key-wise exact integer SUM — shared
-    verbatim by the read path and compaction, so a compacted store
-    folds to the same frame by construction."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            F.sum(value_col).cast("bigint").alias(value_col)
-        )
-
-    return fold
-
-
-def count_min_sink(path: str, item_col: str = "item",
-                   depth: int | None = None, width: int | None = None,
-                   compact_every: int = COMPACT_EVERY):
-    """Streaming count-min maintenance: each micro-batch's cell
-    counts land in their own ``batch=<id>`` directory (deterministic
-    location → a replayed batch OVERWRITES its previous attempt, the
-    T5 idempotence move), and the live sketch is the cell-wise SUM
-    over batch directories — exercising exactly the
-    associative+commutative merge that makes count-min a streaming
-    aggregate (operators/sketches.py). Read with
-    :func:`read_count_min`."""
-    from ..operators import sketches as sk
-
-    d = sk.CM_DEPTH if depth is None else depth
-    w = sk.CM_WIDTH if width is None else width
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        cells = sk.count_min_cells(batch_df, item_col, d, w)
-        _overlap_compact(
-            [
-                lambda: cells.write.mode("overwrite").parquet(
-                    f"{path}/batch={batch_id}"
-                )
-            ],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(fold=_sum_fold(("row", "col"), "c"))},
-            compact_every,
-        )
-
-    return write
-
-
-def quality_gate_sink(
-    path: str,
-    expectations: list[tuple],
-    compact_every: int = COMPACT_EVERY,
-):
-    """Streaming data-quality gate: every micro-batch runs the
-    declarative expectation suite (operators/expectations.py — ONE
-    conditional-aggregate scan) and routes WHOLE batches by verdict:
-    passing batches land under ``accepted/batch=<id>``, failing ones
-    under ``quarantine/batch=<id>`` with the verdict frame written
-    beside them (``verdicts/batch=<id>``) so an operator can see
-    exactly which check broke and replay the quarantined batch after
-    a fix.
-
-    This is the reference's error-routing pattern (OdsBaseLogApp's
-    malformed-JSON side channel, P3) promoted to the semantic level:
-    parse errors route rows, quality errors route BATCHES — a broken
-    upstream extract poisons everything it shipped, and admitting
-    the "good" rows of a bad batch silently shifts the training
-    distribution. Deterministic per-batch directories make replays
-    overwrite (T5); read the accepted stream with
-    ``read_sink(f"{{path}}/accepted")``."""
-    from ..operators.expectations import check_expectations
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        verdict = check_expectations(batch_df, expectations)
-        rows = verdict.collect()  # suite-sized: one row per check
-        ok = all(r["passed"] == 1 for r in rows)
-        dest = "accepted" if ok else "quarantine"
-
-        def _batch() -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(path, dest, f"batch={batch_id}")
-            )
-
-        def _verdict() -> None:
-            verdict.write.mode("overwrite").parquet(
-                os.path.join(path, "verdicts", f"batch={batch_id}")
-            )
-
-        # bound the ACCEPTED store's directory growth (append-mode
-        # consolidation; id gaps from quarantined batches are
-        # fine — `upto` marks them folded, their rows live in the
-        # other stores). quarantine/ and verdicts/ stay one dir
-        # per batch deliberately: they are the audit/replay log,
-        # read per-incident, never folded. The batch write, the
-        # verdict write, and the accepted-store compaction touch
-        # disjoint dirs — concurrent jobs (§2.6).
-        _overlap_compact(
-            [_batch, _verdict],
-            batch_df.sparkSession,
-            os.path.join(path, "accepted"),
-            batch_id,
-            {"": SubFold()},
-            compact_every,
-        )
-
-    return write
-
-
 def ivf_append_sink(index_path: str, vec_col: str = "embedding"):
     """Streaming IVF index maintenance: each micro-batch of new
     vectors routes to the FIXED learned centroids and lands in its
@@ -628,111 +942,6 @@ def ivf_append_sink(index_path: str, vec_col: str = "embedding"):
         ivf_append(batch_df, index_path, batch_id, vec_col=vec_col)
 
     return write
-
-
-def read_count_min(spark, path: str) -> DataFrame:
-    """Merge the live sketch: cell-wise addition over the compacted
-    base ∪ live tail (the count-min merge — the same fold compaction
-    applies, so any compaction point yields the same sketch)."""
-    return _sum_fold(("row", "col"), "c")(read_additive(spark, path))
-
-
-def _kmv_fold(k: int):
-    """The KMV merge: distinct hashes, re-take the k smallest — a
-    min-like (idempotent, associative, commutative) fold shared by
-    the read path and compaction."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.select("h").distinct().orderBy("h").limit(k)
-
-    return fold
-
-
-def kmv_sink(path: str, item_col: str = "item", k: int | None = None,
-             compact_every: int = COMPACT_EVERY):
-    """Streaming distinct-count sketch maintenance: each micro-batch
-    folds to its own ≤ k-row KMV sketch under a deterministic
-    ``batch=<id>`` directory (replays OVERWRITE — the T5 idempotence
-    move), and the live sketch is union → k smallest distinct over
-    the batch directories (operators/sketches.py:kmv_sketch — a
-    min-like merge: idempotent, associative, commutative — so
-    per-batch sketches over ANY batch split merge to the one-shot
-    corpus sketch exactly, even when the same item recurs across
-    batches: a corpus-top-k hash is top-k within its own batch).
-    Read with :func:`read_kmv`."""
-    from ..operators import sketches as sk
-
-    kk = sk.KMV_K if k is None else k
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        sketch = sk.kmv_sketch(batch_df, item_col, kk)
-        _overlap_compact(
-            [
-                lambda: sketch.write.mode("overwrite").parquet(
-                    f"{path}/batch={batch_id}"
-                )
-            ],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(fold=_kmv_fold(kk))},
-            compact_every,
-        )
-
-    return write
-
-
-def read_kmv(spark, path: str, k: int | None = None) -> DataFrame:
-    """Merge the live KMV sketch: distinct over base ∪ tail, re-take
-    the k smallest (the order-statistics merge — ≤ k·n_parts input
-    rows, trivially small; compaction applies the identical fold, so
-    any compaction point yields the same sketch)."""
-    from ..operators import sketches as sk
-
-    kk = sk.KMV_K if k is None else k
-    return _kmv_fold(kk)(read_additive(spark, path))
-
-
-def line_count_sink(path: str, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    compact_every: int = COMPACT_EVERY):
-    """Streaming line-frequency maintenance for the boilerplate gate
-    (operators/dedup.py:line_dedup): each micro-batch's per-line
-    distinct-document counts land in their own ``batch=<id>``
-    directory (deterministic location → a replayed batch OVERWRITES
-    its previous attempt, the T5 idempotence move). Because a
-    document's lines all travel in its one row, per-batch distinct
-    counts over DISJOINT batches sum to the corpus distinct count —
-    the merge :func:`read_line_counts` performs. The expensive half
-    (line explode + count) is incremental per batch; the gate itself
-    applies at read time via ``line_dedup(docs, counts=...)``, so a
-    line that crosses the boilerplate threshold in a LATER batch
-    retroactively cleans earlier documents too — the semantics a
-    one-shot batch run would give."""
-    from ..operators.dedup import line_counts
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        _overlap_compact(
-            [
-                lambda: line_counts(batch_df, text_col, id_col)
-                .write.mode("overwrite")
-                .parquet(f"{path}/batch={batch_id}")
-            ],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(fold=_sum_fold(("line_fp",), "n_docs"))},
-            compact_every,
-        )
-
-    return write
-
-
-def read_line_counts(spark, path: str) -> DataFrame:
-    """Merge the live line counts: fingerprint-wise addition over
-    base ∪ tail (valid because batches partition the documents — see
-    :func:`line_count_sink`; compaction applies the identical fold)."""
-    return _sum_fold(("line_fp",), "n_docs")(read_additive(spark, path))
 
 
 def _touched_user_sink(
@@ -888,47 +1097,6 @@ def read_funnel(spark, path: str, stages: list[str]) -> DataFrame:
     )
 
 
-def rollup_sum_sink(path: str, key_cols: tuple[str, ...],
-                    value_col: str = "v",
-                    compact_every: int = COMPACT_EVERY):
-    """Streaming additive-rollup maintenance: each micro-batch's
-    per-key integer sums land in their own ``batch=<id>`` directory
-    (deterministic location → replays OVERWRITE, T5), and the live
-    rollup is the key-wise SUM over batch directories — integer sums
-    are associative+commutative, so ANY batch split merges to the
-    one-shot batch rollup exactly. The read-side detectors
-    (operators/timeseries.py rolling_metrics / anomaly_days) then run
-    over the merged rollup: the expensive half (fact scan +
-    aggregation) is incremental per batch; the windows/z-tests apply
-    at read time over key × day rows, so a detector change never
-    reprocesses facts. Read with :func:`read_rollup_sum`."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        _overlap_compact(
-            [
-                lambda: batch_df.groupBy(*key_cols)
-                .agg(F.sum(value_col).cast("bigint").alias(value_col))
-                .write.mode("overwrite")
-                .parquet(f"{path}/batch={batch_id}")
-            ],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(fold=_sum_fold(key_cols, value_col))},
-            compact_every,
-        )
-
-    return write
-
-
-def read_rollup_sum(spark, path: str, key_cols: tuple[str, ...],
-                    value_col: str = "v") -> DataFrame:
-    """Merge the live rollup: key-wise integer SUM over the compacted
-    base ∪ live tail (the identical fold compaction applies — exact
-    integer sums commute with any compaction point)."""
-    return _sum_fold(key_cols, value_col)(read_additive(spark, path))
-
-
 def transition_sink(
     path: str,
     gap_seconds: int = 1800,
@@ -993,385 +1161,3 @@ def read_transition(spark, path: str) -> DataFrame:
     return transition_matrix_from_counts(pairs)
 
 
-def _active_days_fold(df: DataFrame) -> DataFrame:
-    """The retention-store merge: set union of (user, day) rows —
-    idempotent, so cross-batch repeats and compaction both collapse."""
-    return df.select("__u", "__d").distinct()
-
-
-def retention_sink(path: str, user_col: str = "user_id",
-                   ts_col: str = "event_time",
-                   compact_every: int = COMPACT_EVERY):
-    """Streaming retention-cohort maintenance — the cheapest member
-    of the additive-twin family, because user-day activity is a SET:
-    each micro-batch folds to its distinct (``__u``, ``__d``) frame
-    (operators/funnel.py:active_days) under a deterministic
-    ``batch=<id>`` directory (replays OVERWRITE, T5), and the live
-    matrix is distinct-over-union at read — set union is idempotent,
-    associative, and commutative, so ANY batch split (cross-batch
-    repeats of the same user-day included) merges to the one-shot
-    corpus set exactly; no atomicity contract needed. A user's cohort
-    (min day) can move EARLIER when an older event arrives late —
-    min over the merged set handles that retroactively, which
-    per-batch cohort assignment never could. The expensive half (the
-    raw-event scan + dedup) is incremental per batch; the read fold
-    (:func:`read_retention`) touches only (user, day) rows, never
-    facts."""
-    from ..operators.funnel import active_days
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        _overlap_compact(
-            [
-                lambda: active_days(batch_df, user_col, ts_col)
-                .write.mode("overwrite")
-                .parquet(f"{path}/batch={batch_id}")
-            ],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            {"": SubFold(fold=_active_days_fold)},
-            compact_every,
-        )
-
-    return write
-
-
-def read_retention(spark, path: str) -> DataFrame:
-    """The live retention matrix from :func:`retention_sink` state:
-    distinct over base ∪ tail (set union is idempotent, so compaction
-    at any point folds to the same set), then the SAME fold as the
-    one-shot operator (funnel.py:retention_from_active)."""
-    from ..operators.funnel import retention_from_active
-
-    return retention_from_active(
-        _active_days_fold(read_additive(spark, path))
-    )
-
-
-def _bm25_stats_fold(df: DataFrame) -> DataFrame:
-    """Fold the additive corpus stats rows to one row of exact
-    integer sums — N and sum_dl commute with any batch/compaction
-    split; avgdl divides at read time only."""
-    return df.agg(
-        F.sum("n_docs").cast("bigint").alias("n_docs"),
-        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-    )
-
-
-#: BM25 store compaction spec: postings/doclen rows are DISJOINT
-#: across batches (batches partition documents), so they consolidate
-#: append-mode — immutable segments, no rewrite of prior postings;
-#: the one-row stats frames fold additively.
-_BM25_FOLDS = {
-    # append-mode consolidation re-clusters the folded tail by term,
-    # so compacted segments prune exactly like fresh batches
-    "postings": SubFold(range_by="term"),
-    "doclen": SubFold(),
-    "stats": SubFold(fold=_bm25_stats_fold),
-}
-
-
-def bm25_index_sink(path: str, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    compact_every: int = COMPACT_EVERY):
-    """Streaming BM25 inverted-index maintenance — the reference's ES
-    architecture for ranked search (PublishDaoImpl.java:58-61 queries
-    a continuously-indexed store; it never re-tokenizes the corpus
-    per query): each micro-batch of documents tokenizes ONCE and
-    lands three frames under its own ``batch=<id>`` directory
-    (deterministic location → a replayed batch OVERWRITES its
-    previous attempt, T5):
-
-    - ``postings``: (doc_id, term, tf) over the FULL batch vocabulary
-      — the index is query-agnostic;
-    - ``doclen``: (doc_id, dl);
-    - ``stats``: one additive row (n_docs, sum_dl).
-
-    Decomposition contract (the line_count_sink document-atomic
-    rule): batches must partition DOCUMENTS — a document's one row
-    travels whole, so per-batch (doc, term) tf rows are DISJOINT
-    across batches, df is their per-term count, and N/avgdl fold from
-    the additive stats rows: the merged index is exactly the one-shot
-    corpus index at any batch split. Per-batch work is O(batch
-    tokens); a query (:func:`read_bm25_index`) filters the merged
-    postings to its terms and reuses the one-shot scorer verbatim,
-    so serving cost never re-reads document text.
-
-    Postings are TERM-CLUSTERED: each batch range-partitions
-    its postings by ``term`` and sorts within files, so every
-    parquet row group carries a tight ``[min_term, max_term]``
-    stat and a query's ``term IN (...)`` predicate pushes down to
-    row-group skipping — the partition-pruning half of an inverted
-    index on plain parquet, with no directory layout, persisted
-    bucket count, or reopen trap (term order is a property of each
-    file independently, so batches, replays, and compacted segments
-    compose freely; file count per batch sizes from the batch's
-    postings volume and may vary batch-to-batch)."""
-    from ..functions.text import tokenize
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        import math
-
-        toked = batch_df.select(
-            F.col(id_col).alias("doc_id"),
-            tokenize(text_col).alias("__toks"),
-        )
-        base = f"{path}/batch={batch_id}"
-        dl = toked.select("doc_id", F.size("__toks").alias("dl"))
-        # one collected aggregate serves double duty: the additive
-        # stats row (written below as a literal frame — cheaper than
-        # the full re-tokenize the old stats write ran) and the
-        # postings file-count sizing (sum_dl upper-bounds distinct
-        # (doc, term) rows; ~16 parquet bytes per posting)
-        srow = dl.agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0))
-            .cast("bigint")
-            .alias("sum_dl"),
-        ).collect()[0]
-        nf = max(
-            1,
-            min(
-                4096,
-                math.ceil(
-                    int(srow["sum_dl"]) * 16 / AUTO_BUCKET_TARGET_BYTES
-                ),
-            ),
-        )
-        # the stats row is ALREADY on the driver (srow above) — a
-        # createDataFrame(...).write round-trip would spend a whole
-        # Spark job (~0.5 s of task+commit overhead) per micro-batch
-        # re-writing one literal row; write it driver-side instead
-        write_rows_parquet(
-            f"{base}/stats",
-            [("n_docs", "bigint"), ("sum_dl", "bigint")],
-            [(int(srow["n_docs"]), int(srow["sum_dl"]))],
-        )
-
-        def _postings() -> None:
-            (
-                toked.select("doc_id", F.explode("__toks").alias("term"))
-                .groupBy("doc_id", "term")
-                .agg(F.count("*").alias("tf"))
-                .repartitionByRange(nf, "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(f"{base}/postings")
-            )
-
-        def _doclen() -> None:
-            dl.write.mode("overwrite").parquet(f"{base}/doclen")
-
-        # postings and doclen land in disjoint dirs of THIS batch and
-        # the compaction folds only PRIOR batches — three concurrent
-        # jobs (§2.6) instead of three back-to-back
-        _overlap_compact(
-            [_postings, _doclen],
-            batch_df.sparkSession,
-            path,
-            batch_id,
-            _BM25_FOLDS,
-            compact_every,
-        )
-
-    return write
-
-
-def read_bm25_index(
-    spark,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float | None = None,
-    b: float | None = None,
-) -> DataFrame:
-    """Serve a BM25 query from :func:`bm25_index_sink` state: filter
-    the merged postings to the query terms (disjoint across batches —
-    no re-aggregation), count df per term, fold the additive stats
-    rows to (N, avgdl) with the same exact-integer-sum-then-divide
-    arithmetic as the one-shot ``avg(dl)``, and hand the four frames
-    to the SHARED scorer (operators/retrieval.py:bm25_rank) — the
-    result hash-equals the one-shot ``bm25_search`` over the same
-    corpus."""
-    from ..operators import retrieval as rt
-
-    if not query_terms:
-        raise ValueError("read_bm25_index needs at least one query term")
-    terms = sorted({t.lower() for t in query_terms})
-    # the postings files are term-clustered (range-partitioned +
-    # sorted at write), so this IN predicate pushes down to parquet
-    # row-group skipping — the scan touches only the files/row
-    # groups whose [min_term, max_term] stats intersect the query
-    tf = read_additive(spark, path, "postings").filter(
-        F.col("term").isin(terms)
-    )
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    dl = read_additive(spark, path, "doclen")
-    stats = (
-        _bm25_stats_fold(read_additive(spark, path, "stats"))
-        .select(
-            F.col("n_docs").alias("__n"),
-            F.col("sum_dl").alias("__s"),
-        )
-        # Spark's avg(long) divides the exact long sum by the count —
-        # the identical double division this fold performs
-        .select(
-            F.col("__n").cast("double").alias("n_docs"),
-            (F.col("__s").cast("double") / F.col("__n").cast("double"))
-            .alias("avgdl"),
-        )
-    )
-    kk1 = rt.BM25_K1 if k1 is None else k1
-    kb = rt.BM25_B if b is None else b
-    return rt.bm25_rank(tf, dfreq, dl, stats, k=k, k1=kk1, b=kb)
-
-
-#: co-purchase store compaction spec: all three frames are key-wise
-#: (or global) exact integer counts over disjoint baskets — pure
-#: additive folds; the support threshold stays read-side so it keeps
-#: applying to the MERGED counts (retroactivity preserved).
-_COPURCHASE_FOLDS = {
-    "pairs": SubFold(fold=_sum_fold(("item_a", "item_b"), "pair_n")),
-    "items": SubFold(fold=_sum_fold(("item",), "n")),
-    "baskets": SubFold(
-        fold=lambda df: df.agg(F.sum("n").cast("bigint").alias("n"))
-    ),
-}
-
-
-def copurchase_sink(
-    path: str,
-    basket_col: str = "basket_id",
-    item_col: str = "item_id",
-    max_basket: int | None = None,
-    compact_every: int = COMPACT_EVERY,
-):
-    """Incremental market-basket maintenance: keep the co-purchase
-    pair/item/basket counts (operators/basket.py:copurchase_pairs)
-    current across micro-batches — the `line_count_sink` pattern
-    applied to the a-priori L2 pass. Per batch, the rolled baskets'
-    pair counts (support threshold NOT applied — it belongs to read
-    time over the MERGED counts, so a pair crossing min_support only
-    in a later batch counts retroactively, exactly like a boilerplate
-    line crossing min_docs), item presence counts, and the basket
-    count land under one ``batch=<id>`` directory (deterministic
-    location → a replayed batch OVERWRITES its previous attempt, T5).
-
-    Decomposition contract (same as line_count_sink's document-atomic
-    rule, one level up): batches must partition BASKETS — every row
-    of a basket travels in one micro-batch (stage the source
-    ``repartition(n, basket_col)`` or key the topic by basket id).
-    Then per-batch counts over disjoint baskets are additive and the
-    merge :func:`read_copurchase` performs equals the one-shot batch
-    operator exactly. Crash ordering: the streaming checkpoint
-    commits offsets only after this writer returns, so every
-    COMMITTED batch has all three frames; a crash mid-batch replays
-    and overwrites — every crash point converges."""
-    from ..operators.basket import _pair_counts, _rolled_items
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        from ..materialize import release
-
-        rolled = _rolled_items(batch_df, basket_col, item_col, max_basket)
-        base = f"{path}/batch={batch_id}"
-        try:
-            # ONE job computes the rolled frame (populating its
-            # materialized blocks) and returns the basket count — the
-            # exact value the baskets store needs, written driver-side
-            # (a Spark write job for one row is ~0.5 s of pure
-            # task/commit overhead). The pairs/items sub-writes then
-            # read the SAME blocks and touch disjoint directories, so
-            # they run as concurrent jobs (guide §2.6) instead of
-            # back-to-back — per-batch wall time drops from
-            # count+pairs+items to count+max(pairs, items).
-            # count FIRST (one job computes the rolled frame and
-            # populates its materialized blocks — racing all three
-            # consumers instead A/B-measured WORSE, 6.2 s vs 5.4 s:
-            # concurrent jobs each recompute the not-yet-cached rolled
-            # partitions), then the two sub-writes read the same
-            # blocks into disjoint dirs as concurrent jobs (§2.6).
-            n_baskets = rolled.count()
-            write_rows_parquet(
-                f"{base}/baskets", [("n", "bigint")], [(n_baskets,)]
-            )
-
-            def _pairs() -> None:
-                _pair_counts(rolled, 1).write.mode("overwrite").parquet(
-                    f"{base}/pairs"
-                )
-
-            def _items() -> None:
-                (
-                    rolled.select(F.explode("__items").alias("item"))
-                    .groupBy("item")
-                    .agg(F.count("*").cast("bigint").alias("n"))
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/items")
-                )
-
-            # pairs/items land in disjoint dirs of THIS batch and the
-            # compaction folds only PRIOR batches — all concurrent
-            _overlap_compact(
-                [_pairs, _items],
-                batch_df.sparkSession,
-                path,
-                batch_id,
-                _COPURCHASE_FOLDS,
-                compact_every,
-            )
-        finally:
-            # the rolled frame is per-batch scratch; holding its
-            # blocks across a long stream would pile up per batch
-            release(rolled)
-
-    return write
-
-
-def read_copurchase(
-    spark,
-    path: str,
-    k: int = 20,
-    min_pair_support: int = 2,
-) -> DataFrame:
-    """The live co-purchase top-k from :func:`copurchase_sink` state:
-    key-wise integer sums over the batch directories (valid because
-    batches partition baskets), support threshold and exact-integer
-    lift applied over the MERGED counts — identical arithmetic to
-    operators/basket.py:copurchase_pairs, so the result hash-equals
-    the one-shot batch operator at any batch split."""
-    pairs = (
-        _sum_fold(("item_a", "item_b"), "pair_n")(
-            read_additive(spark, path, "pairs")
-        )
-        .filter(F.col("pair_n") >= min_pair_support)
-    )
-    item_n = (
-        read_additive(spark, path, "items")
-        .groupBy("item")
-        .agg(F.sum("n").cast("bigint").alias("c"))
-    )
-    n_baskets = (
-        read_additive(spark, path, "baskets")
-        .agg(F.sum("n").cast("bigint").alias("__n"))
-    )
-    na = item_n.select(F.col("item").alias("item_a"), F.col("c").alias("n_a"))
-    nb = item_n.select(F.col("item").alias("item_b"), F.col("c").alias("n_b"))
-    return (
-        pairs.join(na, "item_a")
-        .join(nb, "item_b")
-        .crossJoin(F.broadcast(n_baskets))
-        .select(
-            "item_a",
-            "item_b",
-            "pair_n",
-            "n_a",
-            "n_b",
-            F.round(
-                (F.col("pair_n") * F.col("__n")).cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double"),
-                4,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("pair_n"), F.asc("item_a"), F.asc("item_b"))
-        .limit(k)
-    )

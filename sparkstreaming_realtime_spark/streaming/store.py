@@ -5,12 +5,12 @@ live content is named by ONE manifest, ``<store>/_MANIFEST.json``. This
 module is the only code that reads, publishes, garbage-collects and
 recovers it. Two layouts share the protocol.
 
-**Additive segments + tail** (idempotent_parquet_sink, rollup_sum_sink,
-retention_sink, count_min_sink, kmv_sink, line_count_sink,
-bm25_index_sink, copurchase_sink, quality_gate_sink's accepted store,
-and the IVF index's ``delta`` store: ivf_append_sink writes it,
+**Additive segments + tail** (every store in the spec table of
+streaming/sinks.py, written through ``sinks.write_additive``, and the
+IVF index's ``delta`` store: ivf_append_sink writes it,
 operators/similarity.py:ivf_compact folds it).
-Each micro-batch writes one ``batch=<id>`` dir, a deterministic
+Each micro-batch writes one ``batch=<id>`` dir (:func:`batch_dir`, the
+only code that names it), a deterministic
 function of the batch id, so a replayed batch OVERWRITES its previous
 attempt: at-least-once delivery composes to exactly-once output (the
 engine analog of the reference's ES doc-id upserts,
@@ -82,7 +82,7 @@ rewritten or listed.
   crashed before its publish. Only the write path deletes it, right
   before its next commit (:func:`_reclaim`); the crashed batch replays
   from the streaming checkpoint and rebuilds.
-- *Known window.* ``sinks._overlap_compact`` runs a batch's write and
+- *Known window.* ``sinks.write_additive`` runs a batch's write and
   the prior tail's compaction concurrently. If the compaction publishes
   and the batch write fails, an external reader sees the folded view
   plus a partial ``batch=<id>`` dir until the replay overwrites it.
@@ -194,6 +194,35 @@ def _reclaim(path: str, m: dict) -> None:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
+def batch_dir(path: str, batch_id, sub: str = "") -> str:
+    """The tail dir of micro-batch ``batch_id``: ``<path>/batch=<id>``,
+    or ``<path>/batch=<id>/<sub>`` for a sub-store. ``batch_id="*"``
+    gives the glob over every batch."""
+    return os.path.join(path, _batch_rel(batch_id, sub))
+
+
+def _batch_rel(batch_id, sub: str = "") -> str:
+    return f"batch={batch_id}/{sub}" if sub else f"batch={batch_id}"
+
+
+def write_batch(
+    df: DataFrame, path: str, batch_id, sub: str = "",
+    partition_by: Optional[str] = None,
+) -> None:
+    """Write one micro-batch's frame to its tail dir (:func:`batch_dir`).
+    The overwrite is static whatever the session's mode (module
+    docstring, *Visibility*), so a replay replaces the whole dir and
+    the dir is served once its ``_SUCCESS`` marker exists."""
+    _write_static(df, batch_dir(path, batch_id, sub), partition_by)
+
+
+def _write_static(df: DataFrame, out: str, partition_by: Optional[str]) -> None:
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if partition_by and partition_by in df.columns:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(out)
+
+
 def batch_ids(path: str) -> list[int]:
     try:
         names = os.listdir(path)
@@ -234,7 +263,7 @@ def live_dirs(path: str, sub: str = "") -> tuple:
         for i in batch_ids(path):
             if i <= m["upto"]:
                 continue
-            name = f"batch={i}/{sub}" if sub else f"batch={i}"
+            name = _batch_rel(i, sub)
             try:
                 st = os.stat(os.path.join(path, name, "_SUCCESS"))
             except FileNotFoundError:
@@ -244,13 +273,7 @@ def live_dirs(path: str, sub: str = "") -> tuple:
 
 
 def _tail_dirs(path: str, upto: int, sub: str) -> list[str]:
-    return [
-        os.path.join(path, f"batch={i}", sub)
-        if sub
-        else os.path.join(path, f"batch={i}")
-        for i in batch_ids(path)
-        if i > upto
-    ]
+    return [batch_dir(path, i, sub) for i in batch_ids(path) if i > upto]
 
 
 def store_parts(
@@ -270,8 +293,8 @@ def store_parts(
     segs = [os.path.join(path, seg) for seg in m["segments"].get(sub, [])]
     # ONE multi-path scan over all segments, not one relation per
     # segment: a per-segment union adds planning cost linear in
-    # segment count (PROBE_r14 measured the penalty on the append-
-    # mode store), while a single FileScan over N roots plans once.
+    # segment count on the append-mode store, while a single
+    # FileScan over N roots plans once.
     # Segment dirs are k=v-named (``seg=<gen>``) precisely so the
     # basePath-anchored read parses them as one consistent partition
     # layer (a non-k=v root name here raises
@@ -298,23 +321,24 @@ def store_parts(
     return parts
 
 
-def read_additive(spark, path: str, sub: str = "") -> DataFrame:
-    """Union the store's committed segments with its live tail. On a
-    manifest-less store this reads exactly what the old
-    ``batch=*`` glob read; an empty/missing store raises the same
-    path error the glob did."""
-    parts = store_parts(spark, path, sub)
+def read_folded(spark, path: str, folds: dict, sub: str = "") -> DataFrame:
+    """The live view of sub-store ``sub``, folded with its spec
+    ``folds[sub]``: the union of :func:`store_parts` (read with
+    ``basePath`` when the spec says so), then the spec's merge, the
+    same one compaction applies, so any compaction point reads the
+    same frame. An empty or missing store raises the missing-path
+    error of a read of its ``batch=*`` glob."""
+    spec = folds[sub]
+    parts = store_parts(spark, path, sub, use_base_path=spec.use_base_path)
     if not parts:
-        # no segments, no tail: surface the same missing-path error
-        # the legacy glob read raised
-        glob = os.path.join(path, "batch=*", sub) if sub else os.path.join(
-            path, "batch=*"
-        )
-        return spark.read.parquet(glob)
+        reader = spark.read
+        if spec.use_base_path:
+            reader = reader.option("basePath", path)
+        return reader.parquet(batch_dir(path, "*", sub))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
+    return spec.fold(out) if spec.fold else out
 
 
 def write_rows_parquet(
@@ -385,13 +409,9 @@ def _write_segment(path: str, rel: str, df: DataFrame, spec: SubFold) -> None:
         df = df.repartitionByRange(
             spec.range_by
         ).sortWithinPartitions(spec.range_by)
-    part = spec.partition_by if spec.partition_by in df.columns else None
-    if part:
-        df = df.repartition(part)
-    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
-    if part:
-        writer = writer.partitionBy(part)
-    writer.parquet(os.path.join(path, rel))
+    if spec.partition_by and spec.partition_by in df.columns:
+        df = df.repartition(spec.partition_by)
+    _write_static(df, os.path.join(path, rel), spec.partition_by)
 
 
 def compact_additive(
@@ -432,13 +452,7 @@ def compact_additive(
             reader = reader.option("basePath", path)
         # fold ONLY the committed ids — the in-flight batch (== the
         # max id) stays in the tail where its replay can overwrite
-        fold_paths = [
-            os.path.join(path, f"batch={i}", sub)
-            if sub
-            else os.path.join(path, f"batch={i}")
-            for i in ids
-        ]
-        tail_df = reader.parquet(*fold_paths)
+        tail_df = reader.parquet(*[batch_dir(path, i, sub) for i in ids])
         if spec.use_base_path and "batch" in tail_df.columns:
             tail_df = tail_df.drop("batch")
         prior = m["segments"].get(sub, [])
@@ -497,7 +511,7 @@ def compact_additive(
     for sub, segs, gc in results:
         new_segments[sub] = segs
         next_gc.extend(gc)
-    next_gc.extend(f"batch={i}" for i in ids)
+    next_gc.extend(_batch_rel(i) for i in ids)
     _publish_manifest(
         path,
         {

@@ -1,6 +1,6 @@
 """Additive-store compaction (streaming/store.py): the manifest-
-committed fold that bounds the ``batch=<id>`` directory growth of the
-additive sink family (VERDICT r13's carried scale demand).
+committed fold that keeps the ``batch=<id>`` directory count of the
+additive sink family independent of stream lifetime.
 
 Contract under test, per streaming/store.py:
 - live view (segments ∪ tail) always equals the fold of every batch
@@ -32,6 +32,7 @@ from sparkstreaming_realtime_spark.streaming.sinks import (
     rollup_sum_sink,
 )
 from sparkstreaming_realtime_spark.streaming.store import (
+    batch_dir,
     batch_ids,
     load_manifest,
 )
@@ -78,7 +79,8 @@ def test_rollup_compaction_preserves_sums_and_bounds_dirs(spark, tmp_path):
     pending = {d for d in m["gc"] if d.startswith("batch=")}
     assert pending
     on_disk_folded = {
-        f"batch={i}" for i in batch_ids(path) if i <= m["upto"]
+        os.path.basename(batch_dir(path, i))
+        for i in batch_ids(path) if i <= m["upto"]
     }
     assert on_disk_folded == pending
     for d in m["gc"]:
@@ -362,57 +364,32 @@ def test_append_mode_segments_are_size_tiered(spark, tmp_path, monkeypatch):
 def test_overlap_compact_joins_all_jobs_and_propagates_errors(
     spark, tmp_path
 ):
-    """The write∥compaction overlap (r15, guide §2.6): a sink's
-    ``write`` must return only after BOTH the batch write thunks and
-    the prior-tail compaction finished (the streaming checkpoint
-    commits on return), the folded view must equal the sequential
-    order's, and a failing write thunk must propagate so the epoch is
-    NOT committed."""
+    """The shared additive writer runs a batch's sub-frame writes and
+    the prior tail's compaction as concurrent jobs: ``write_additive``
+    returns only after both finished (the streaming checkpoint commits
+    on return), the folded view equals the sequential order's, and a
+    failing sub-frame write propagates so the epoch is NOT committed."""
     import pytest
     from pyspark.sql import functions as F
 
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        _overlap_compact,
-    )
+    from sparkstreaming_realtime_spark.streaming.sinks import write_additive
     from sparkstreaming_realtime_spark.streaming.store import SubFold
 
     path = str(tmp_path / "store")
-
-    def batch(b):
-        return spark.createDataFrame(
-            [(f"k{i % 3}", i + b) for i in range(5)], "k string, v long"
-        )
-
-    def write(df, bid):
-        _overlap_compact(
-            [
-                lambda: df.write.mode("overwrite").parquet(
-                    f"{path}/batch={bid}"
-                )
-            ],
-            spark,
-            path,
-            bid,
-            {"": SubFold(fold=lambda d: d.groupBy("k").agg(
-                F.sum("v").cast("bigint").alias("v")))},
-            2,
-        )
-
+    folds = {"": SubFold(fold=lambda d: d.groupBy("k").agg(
+        F.sum("v").cast("bigint").alias("v")))}
     for b in range(4):
-        write(batch(b), b)
+        write_additive(spark, path, b, folds, {"": _rollup_fixture(spark, b)}, 2)
     # on return from the compacting batch, manifest AND batch dir are
-    # both present (the join happened before write() returned)
+    # both present (the join happened before write_additive returned)
     m = load_manifest(path)
     assert m is not None and m["upto"] >= 1
     assert 3 in batch_ids(path)
-    got = _got_rollup(spark, path)
-    assert got == _expected_rollup(4)
-    # a failing write thunk propagates out of the overlap
-    with pytest.raises(RuntimeError, match="boom"):
-        _overlap_compact(
-            [lambda: (_ for _ in ()).throw(RuntimeError("boom"))],
-            spark, path, 9, {"": SubFold()}, 2,
-        )
+    assert _got_rollup(spark, path) == _expected_rollup(4)
+    # a failing sub-frame write propagates out of the overlap
+    boom = spark.range(1).select(F.raise_error(F.lit("boom")).alias("k"))
+    with pytest.raises(Exception, match="boom"):
+        write_additive(spark, path, 9, {"": SubFold()}, {"": boom}, 2)
 
 
 def test_store_writes_stay_static_under_a_dynamic_session(spark, tmp_path):

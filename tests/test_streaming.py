@@ -477,6 +477,32 @@ def test_curation_sink_across_micro_batches(spark, tmp_path):
     assert totals == {"en": (4, 3), "de": (1, 1)}
 
 
+def test_curation_sink_replay_keeps_its_batch(spark, tmp_path):
+    """Replaying a batch of the curation funnel rewrites the same kept
+    docs: a batch checks its fingerprints only against the committed
+    batches below it, never against its own earlier attempt."""
+    from sparkstreaming_realtime_spark.streaming.pipelines import curation_sink
+
+    good_a = " ".join(f"alpha{i}" for i in range(40))
+    good_b = " ".join(f"beta{i}" for i in range(40))
+    schema = "doc_id long, lang string, text string"
+    b0 = spark.createDataFrame(
+        [(1, "en", good_a), (2, "en", "spam " * 30)], schema
+    )
+    b1 = spark.createDataFrame([(4, "en", good_a), (5, "de", good_b)], schema)
+    corpus = str(tmp_path / "corpus")
+    sink = curation_sink(corpus, str(tmp_path / "stats"))
+    sink(b0, 0)
+    sink(b1, 1)
+
+    def kept():
+        return sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
+
+    assert kept() == [1, 5]
+    sink(b1, 1)  # replay
+    assert kept() == [1, 5]
+
+
 CDC_SCHEMA = "table string, data string, op string, ts_ms long, event_id long"
 
 
@@ -788,39 +814,6 @@ def test_quality_gate_sink_accepts_empty_batch_with_defined_verdicts(
     gate2 = str(tmp_path / "gate2")
     quality_gate_sink(gate2, [("row_count", 1, 10)])(empty, 0)
     assert os.path.exists(f"{gate2}/quarantine/batch=0")
-
-
-def test_count_min_sink_merges_batches_and_replays_idempotently(
-    spark, tmp_path
-):
-    """Count-min as a streaming aggregate: per-batch sketches merge by
-    cell-wise addition to exactly the one-shot sketch, and a replayed
-    batch overwrites (not double-counts) its contribution."""
-    from sparkstreaming_realtime_spark.operators.sketches import (
-        count_min_cells,
-    )
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        count_min_sink,
-        read_count_min,
-    )
-
-    b1 = spark.createDataFrame([("a",), ("b",), ("a",)], "item string")
-    b2 = spark.createDataFrame([("a",), ("c",)], "item string")
-    path = str(tmp_path / "cells")
-    sink = count_min_sink(path, depth=2, width=8)
-    sink(b1, 0)
-    sink(b2, 1)
-    merged = {(r["row"], r["col"]): r["c"]
-              for r in read_count_min(spark, path).collect()}
-    oneshot = {
-        (r["row"], r["col"]): r["c"]
-        for r in count_min_cells(b1.union(b2), "item", 2, 8).collect()
-    }
-    assert merged == oneshot
-    sink(b2, 1)  # replay: same batch id overwrites its directory
-    replayed = {(r["row"], r["col"]): r["c"]
-                for r in read_count_min(spark, path).collect()}
-    assert replayed == oneshot
 
 
 def test_observe_metrics_surface_per_batch(spark, tmp_path):
@@ -1317,7 +1310,7 @@ def test_key_skew_from_streamed_counts_equals_batch(spark, tmp_path):
 
 
 def test_strict_ids_flags_cross_bucket_duplicate(spark, tmp_path, monkeypatch):
-    """ADVICE r13: event-id dedup in funnel/transition sinks is
+    """Event-id dedup in funnel/transition sinks is
     scoped to the touched buckets, so a duplicate re-delivered under
     a DIFFERENT user id hashes elsewhere and escapes silently. The
     SPARK_GRAFT_STRICT_IDS debug gate turns that contract violation
@@ -1355,8 +1348,7 @@ def test_strict_ids_flags_cross_bucket_duplicate(spark, tmp_path, monkeypatch):
 def test_bucketed_store_pins_n_buckets(spark, tmp_path):
     """The bucket count persists in the store manifest: reopening
     with a different value would silently split each key's state
-    across two incompatible hash layouts, so it must fail loudly
-    (VERDICT r13's silent-API-trap demand)."""
+    across two incompatible hash layouts, so it must fail loudly."""
     from sparkstreaming_realtime_spark.streaming.sinks import (
         dim_upsert_sink,
         read_dim_snapshot,
@@ -1375,8 +1367,8 @@ def test_bucketed_store_pins_n_buckets(spark, tmp_path):
 
 def test_auto_bucket_sizing_scales_with_state(spark, tmp_path, monkeypatch):
     """Default n_buckets=None sizes a NEW store from its batch-0
-    state volume (VERDICT r13 #3: a fixed B=32 means 3 TB buckets on
-    a 100 TB store) and pins the choice in the manifest; reopening
+    state volume (a fixed count of 32 would mean 3 TB buckets on a
+    100 TB store) and pins the choice in the manifest; reopening
     with the default ADOPTS the persisted value."""
     from sparkstreaming_realtime_spark.streaming import sinks as sk
     from sparkstreaming_realtime_spark.streaming.store import load_manifest
