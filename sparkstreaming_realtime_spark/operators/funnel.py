@@ -38,9 +38,8 @@ def funnel_times(
 ) -> DataFrame:
     """Per-user funnel completion times: (``__u``, __t0..__t{k−1}),
     one row per user with at least a stage-0 event, __tk null where
-    the ordered chain stops. The per-user building block of
-    :func:`funnel`, exposed so the streaming sink can recompute the
-    times of TOUCHED users only (streaming/sinks.py:funnel_sink)."""
+    the ordered chain stops. The per-user first step of
+    :func:`funnel`."""
     if not stages:
         raise ValueError("funnel needs at least one stage")
     u = F.col(user_col)
@@ -174,9 +173,24 @@ def transition_matrix(
     the standard sessionization sort, same cost class as
     user_sessions), then a map-side-combinable count into a
     |types|² frame; the row-total join is matrix-sized, broadcast."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(user_col).orderBy(ts_col, order_col)
     pairs = (
-        _lagged_transitions(
-            events, gap_seconds, user_col, type_col, ts_col, order_col
+        events.select(
+            F.col(type_col).alias("to_event"),
+            F.lag(type_col).over(w).alias("from_event"),
+            # microsecond gap arithmetic: a seconds cast TRUNCATES, so
+            # a 1800.5 s gap could round differently than the oracle's
+            # full-precision interval compare — epoch_us is exact in
+            # both engines
+            (
+                F.unix_micros(ts_col) - F.unix_micros(F.lag(ts_col).over(w))
+            ).alias("__gap"),
+        )
+        .filter(
+            F.col("from_event").isNotNull()
+            & (F.col("__gap") <= gap_seconds * 1_000_000)
         )
         .groupBy("from_event", "to_event")
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -184,64 +198,10 @@ def transition_matrix(
     return transition_matrix_from_counts(pairs)
 
 
-def _lagged_transitions(
-    events: DataFrame,
-    gap_seconds: int,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    order_col: str,
-) -> DataFrame:
-    """The shared lag stage: one row per in-session consecutive pair
-    — (user, from_event, to_event), pre-aggregation. Factored out so
-    the streaming maintainer (streaming/sinks.py:transition_sink) and
-    the one-shot matrix count the IDENTICAL pair set."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_col)
-    return events.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("to_event"),
-        F.lag(type_col).over(w).alias("from_event"),
-        # microsecond gap arithmetic: a seconds cast TRUNCATES, so
-        # a 1800.5 s gap could round differently than the oracle's
-        # full-precision interval compare — epoch_us is exact in
-        # both engines
-        (
-            F.unix_micros(ts_col) - F.unix_micros(F.lag(ts_col).over(w))
-        ).alias("__gap"),
-    ).filter(
-        F.col("from_event").isNotNull()
-        & (F.col("__gap") <= gap_seconds * 1_000_000)
-    )
-
-
-def transition_pairs_by_user(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Per-user transition counts (__u, from_event, to_event, n) —
-    the decomposable unit the streaming maintainer keeps current: a
-    user's pair counts depend only on THAT user's ordered events, so
-    recomputing touched users and carrying the rest over merges to
-    the one-shot counts exactly."""
-    return (
-        _lagged_transitions(
-            events, gap_seconds, user_col, type_col, ts_col, order_col
-        )
-        .groupBy("__u", "from_event", "to_event")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
 def transition_matrix_from_counts(pairs: DataFrame) -> DataFrame:
     """Final normalization over exact (from_event, to_event, n)
-    counts — shared verbatim by the one-shot matrix and the
-    streaming read path so both produce bit-identical ``prob``."""
+    counts: one fixed-order double division per cell, so ``prob`` is
+    bit-identical wherever the counts come from."""
     totals = pairs.groupBy("from_event").agg(
         F.sum("n").cast("bigint").alias("__total")
     )

@@ -229,8 +229,8 @@ def streaming_cdc_dim_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dim_upsert_sink`` foreachBatch, AvailableNow) maintaining the
     last-write-wins snapshot across micro-batches — the engine's
     ``jedis.set("DIM:<TABLE>:<id>")`` loop (OdsBaseDbApp.scala:128-140)
-    with merge + atomic snapshot swap instead of point writes. The
-    final snapshot parquet must match the batch oracle exactly;
+    as per-batch writes folded to the newest write per key instead of
+    point writes. The read snapshot must match the batch oracle exactly;
     cross-batch merge and replay idempotency are additionally pinned
     by tests/test_streaming.py."""
     from ..materialize import engine_tmpdir
@@ -382,10 +382,10 @@ def cdc_scd2_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2's STREAMING side end-to-end under the batch oracle: the
     Maxwell dim branch through real Structured Streaming into
-    ``streaming/sinks.py:scd2_sink`` — per batch, only the touched
-    keys' history recomputes (semi/anti split + entity-keyed window),
-    the rest carries over; the accumulated history must equal the
-    batch ``cdc_scd2_history`` exactly. Cross-batch interval closing
+    ``streaming/sinks.py:scd2_sink`` — each batch lands its writes in
+    the sink's store, and the read runs the one-shot ``scd2_history``
+    over the deduped writes; the history must equal the batch
+    ``cdc_scd2_history`` exactly. Cross-batch interval closing
     and replay idempotency are additionally pinned by
     tests/test_streaming.py."""
     from ..materialize import engine_tmpdir

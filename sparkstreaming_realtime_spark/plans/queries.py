@@ -3541,15 +3541,15 @@ def user_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "sequence", "streaming"),
 )
 def streaming_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ordered funnel maintained INCREMENTALLY across real
-    micro-batches (streaming/sinks.py:funnel_sink — the touched-user
-    recompute pattern of scd2_sink): events stream in 4 batches in
+    """The ordered funnel maintained across real micro-batches
+    (streaming/sinks.py:funnel_sink): events stream in 4 batches in
     RANDOM order, so later batches deliver events earlier than ones
     already processed, and a late stage-0 arrival must retroactively
     move t_0 and cascade through the chain — funnel times are not
-    batch-decomposable, which is exactly what this parity pins. The
-    final per-user state folds to the same (stage, n_users) rows as
-    the one-shot batch funnel; the oracle is user_funnel's,
+    batch-decomposable, which is exactly what this parity pins. Each
+    batch lands its stage events in the sink's event store; the read
+    runs the one-shot funnel over the deduped events, so the rows
+    equal the batch funnel's and the oracle is user_funnel's,
     unchanged."""
     import os
 
@@ -3963,16 +3963,15 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "sequence", "extension", "streaming"),
 )
 def streaming_transition_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Markov matrix maintained INCREMENTALLY
-    (streaming/sinks.py:transition_sink — the funnel_sink touched-key
-    pattern): events arrive as a real Structured Streaming source in
-    4 ARBITRARILY-split micro-batches (a random 4-way repartition, so
-    virtually every user's events straddle batches — the worst case:
-    transitions are NOT batch-decomposable, a late event can insert a
-    pair with or break the session gap to an earlier batch's event),
-    each batch merges the deduped event store and recomputes ONLY the
-    touched users' per-user pair counts, and the matrix folded from
-    the maintained counts must hash-equal the one-shot
+    """The Markov matrix maintained across real micro-batches
+    (streaming/sinks.py:transition_sink): events arrive as a real
+    Structured Streaming source in 4 ARBITRARILY-split micro-batches
+    (a random 4-way repartition, so virtually every user's events
+    straddle batches — the worst case: transitions are NOT
+    batch-decomposable, a late event can insert a pair with or break
+    the session gap to an earlier batch's event). Each batch lands
+    its events in the sink's event store; the read runs the one-shot
+    transition matrix over the deduped events, which must hash-equal
     event_transition_matrix. The oracle IS its oracle, unchanged."""
     import os
 

@@ -23,11 +23,8 @@ from .store import (
     SubFold,
     batch_dir,
     compact_additive,
-    load_manifest,
-    read_buckets,
     read_folded,
     run_concurrent,
-    swap_buckets,
     write_batch,
     write_rows_parquet,
 )
@@ -365,9 +362,14 @@ def quality_gate_sink(
         verdict = check_expectations(batch_df, expectations)
         rows = verdict.collect()  # suite-sized: one row per check
         ok = all(r["passed"] == 1 for r in rows)
-        extra = {os.path.join(path, "verdicts"): verdict}
-        if not ok:
-            extra[os.path.join(path, "quarantine")] = batch_df
+        # the verdict is already on the driver: write its rows, not a
+        # second run of the suite
+        write_rows_parquet(
+            batch_dir(os.path.join(path, "verdicts"), batch_id),
+            [(f.name, f.dataType.simpleString()) for f in verdict.schema],
+            [tuple(r) for r in rows],
+        )
+        extra = {} if ok else {os.path.join(path, "quarantine"): batch_df}
         write_additive(
             batch_df.sparkSession, os.path.join(path, "accepted"),
             batch_id, _raw_spec(), {"": batch_df} if ok else {},
@@ -375,6 +377,11 @@ def quality_gate_sink(
         )
 
     return write
+
+
+#: target bytes of one parquet file: :func:`bm25_index_sink` sizes its
+#: postings file count from it
+TARGET_FILE_BYTES = 128 * 2**20
 
 
 def bm25_index_sink(path: str, id_col: str = "doc_id",
@@ -421,7 +428,7 @@ def bm25_index_sink(path: str, id_col: str = "doc_id",
             .alias("sum_dl"),
         ).collect()[0]
         nf = max(1, min(4096, math.ceil(
-            int(srow["sum_dl"]) * 16 / AUTO_BUCKET_TARGET_BYTES
+            int(srow["sum_dl"]) * 16 / TARGET_FILE_BYTES
         )))
         # the stats row is already on the driver: a Spark write of one
         # literal row would cost a whole job per micro-batch
@@ -592,338 +599,6 @@ def read_copurchase(
     )
 
 
-#: auto-sizing targets (:func:`_auto_buckets`). A bucket should be a
-#: normal parquet partition at steady state — per-batch I/O is then
-#: O(touched_keys × target), independent of store size.
-AUTO_BUCKET_TARGET_BYTES = 128 * 2**20
-#: batch-0 volume understates steady-state store size (a stream
-#: accumulates state long after its first micro-batch; only when the
-#: first batch is a seed/backfill are they close). Oversizing is the
-#: cheap direction — buckets beyond the live key count simply never
-#: materialize (a dir exists only when keys hash into it, so the
-#: store degenerates gracefully toward one-dir-per-key), while
-#: undersizing loses the touched-bucket economics until a manual
-#: re-hash — so bias up.
-AUTO_BUCKET_HEADROOM = 8
-#: JSON text overstates parquet-on-disk (columnar + snappy) — the
-#: estimator divides by this before applying the headroom.
-AUTO_BUCKET_JSON_DEFLATION = 4
-#: clamps: enough buckets that even a tiny store keeps per-key
-#: pruning, and a ceiling past which a real table format (row-level
-#: MERGE, manifest-tracked files) is the honest answer — 65536 ×
-#: 128 MB ≈ 8 TB of addressable state per store.
-AUTO_BUCKET_MIN = 8
-AUTO_BUCKET_MAX = 65536
-
-
-def _auto_buckets(sizing: DataFrame) -> int:
-    """Size a NEW bucketed store from its batch-0 state frame: one
-    aggregate estimates the frame's serialized bytes
-    (``octet_length(to_json(struct(*)))`` — no second write, no plan
-    statistics guesswork), deflates JSON→parquet, applies the
-    documented headroom, and targets :data:`AUTO_BUCKET_TARGET_BYTES`
-    per bucket. Runs exactly once per store lifetime (the result is
-    pinned in the store manifest); replays of batch 0 re-derive the
-    same value from the same rows."""
-    import math
-
-    est = sizing.agg(
-        F.sum(F.octet_length(F.to_json(F.struct(*sizing.columns))))
-    ).collect()[0][0]
-    par = (est or 0) / AUTO_BUCKET_JSON_DEFLATION
-    raw = math.ceil(par * AUTO_BUCKET_HEADROOM / AUTO_BUCKET_TARGET_BYTES)
-    return max(AUTO_BUCKET_MIN, min(AUTO_BUCKET_MAX, raw))
-
-
-def _bucket_of(n_buckets: int, *cols) -> "F.Column":
-    """Deterministic state bucket of a key tuple. ``F.hash`` is
-    Murmur3 with a fixed seed, stable across sessions/restarts (the
-    bucket layout must survive the process); a NULL key hashes to the
-    seed, so NULL-keyed rows live in one bucket and round-trip the
-    store instead of being dropped."""
-    return F.pmod(F.hash(*cols), F.lit(int(n_buckets)))
-
-
-def _bucket_meta(
-    path: str, n_buckets: int | None, sizing: DataFrame | None = None
-) -> dict:
-    """Load-or-init the store manifest, enforcing the persisted
-    bucket count: the layout is a pure function of ``n_buckets``, so
-    reopening with a different value would scatter each key's state
-    across two incompatible hash layouts — refuse loudly.
-
-    ``n_buckets=None`` (the default on every bucketed sink) means
-    *adopt*: an existing store keeps its manifest value, a NEW store
-    sizes itself from ``sizing`` (its batch-0 state frame) via
-    :func:`_auto_buckets`. An explicit value is a pin — it still
-    raises on reopen mismatch."""
-    meta = load_manifest(path)
-    if meta is None:
-        if n_buckets is None:
-            n_buckets = _auto_buckets(sizing)
-        return {"n_buckets": int(n_buckets), "ver": {}, "gc": []}
-    if n_buckets is not None and int(meta["n_buckets"]) != int(n_buckets):
-        raise ValueError(
-            f"bucketed store {path} was created with "
-            f"n_buckets={meta['n_buckets']}; reopening with "
-            f"n_buckets={n_buckets} would split keys across layouts"
-        )
-    return meta
-
-
-def _bucketed(incoming: DataFrame, path: str, n_buckets, *keys):
-    """Open a bucket-version store for one batch: load (or size) its
-    manifest, tag ``incoming`` with its bucket ``__b`` of ``keys``,
-    and collect the touched buckets — at most n_buckets rows, so the
-    collect is a constant-sized plan. Returns (incoming, manifest,
-    sorted touched bucket ids)."""
-    meta = _bucket_meta(path, n_buckets, sizing=incoming)
-    incoming = incoming.withColumn(
-        "__b", _bucket_of(meta["n_buckets"], *keys)
-    )
-    buckets = sorted(
-        r["__b"] for r in incoming.select("__b").distinct().collect()
-    )
-    return incoming, meta, buckets
-
-
-def _cdc_rows(batch_df: DataFrame, ord_cols: tuple[str, ...]) -> DataFrame:
-    """The CDC sinks' incoming write rows, keyed by (table, id)."""
-    return batch_df.select(
-        "table",
-        F.get_json_object("data", "$.id").alias("id"),
-        "data",
-        "op",
-        *[F.col(c) for c in ord_cols],
-    )
-
-
-#: env flag: after every funnel/transition event-store swap, scan the
-#: WHOLE store for a write id appearing in more than one row. The
-#: per-bucket ``dropDuplicates(__id)`` is exact ONLY under the
-#: replays-are-identical contract (a duplicate re-delivered with a
-#: DIFFERENT — or NULL-vs-non-NULL — user id hashes to a different
-#: bucket and escapes the dedup, silently corrupting counts); this
-#: check turns that contract violation into a loud failure. O(store)
-#: per batch, so it is debug-mode only — enable in integration tests
-#: or canary streams, never the hot path.
-STRICT_IDS_ENV = "SPARK_GRAFT_STRICT_IDS"
-
-
-def _assert_unique_ids(spark, path: str) -> None:
-    if not os.environ.get(STRICT_IDS_ENV):
-        return
-    dup = (
-        read_buckets(spark, path)
-        .groupBy("__id")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
-    )
-    if dup:
-        ids = [r["__id"] for r in dup]
-        raise AssertionError(
-            f"event-id duplicated ACROSS buckets in {path}: {ids} — a "
-            "replay delivered the same id under a different key, which "
-            "the per-bucket dedup cannot collapse (violates the "
-            "replays-are-identical contract)"
-        )
-
-
-def _semi_on_user(df: DataFrame, touched: DataFrame, how: str) -> DataFrame:
-    """Null-safe touched-user semi/anti join: ``eqNullSafe`` so a
-    NULL user id matches itself — the batch operators window NULL
-    users into one group and count them, and the streaming state must
-    agree (a plain column-name join would silently drop them)."""
-    t = touched.select(F.col("__u").alias("__tu"))
-    return df.join(t, df["__u"].eqNullSafe(t["__tu"]), how)
-
-
-def dim_upsert_sink(
-    path: str,
-    ord_cols: tuple[str, ...] = ("ts_ms", "event_id"),
-    n_buckets: int | None = None,
-):
-    """K4's streaming binding: maintain a last-write-wins dim snapshot
-    across micro-batches — the engine's replacement for the per-row
-    ``jedis.set("DIM:<TABLE>:<id>", json)`` loop
-    (OdsBaseDbApp.scala:128-140).
-
-    Per batch: merge the incoming dim rows with the current snapshot
-    via ``operators.cdc.dim_snapshot`` (max_by on the carried write
-    order, delete tombstones evict), then commit the touched buckets
-    through the store manifest. Replayed batches re-merge
-    the same rows into the same result — max_by is idempotent on
-    duplicates — so at-least-once delivery composes to exactly-once
-    state (T5).
-
-    Snapshot state is hash-bucketed by (table, id) — versioned
-    ``b=<bucket>-v<ver>`` dirs behind the store manifest
-    (streaming/store.py) — so a micro-batch reads and rewrites ONLY
-    the buckets its keys hash into: per-batch I/O is
-    O(touched_keys × store/n_buckets), not O(store). A delete
-    that empties a bucket drops it from the manifest (leaving it
-    would resurrect the evicted key). At 100 TB-scale the same
-    pattern targets a table format with row-level MERGE; the
-    manifest-committed swap keeps the test environment to plain
-    parquet while preserving the observable semantics AND the
-    touched-partition economics. Read with
-    :func:`read_dim_snapshot`."""
-    from ..operators.cdc import dim_snapshot
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        cols = ["table", "id", "data", "op", *ord_cols]
-        incoming, meta, buckets = _bucketed(
-            _cdc_rows(batch_df, ord_cols), path, n_buckets, "table", "id"
-        )
-        if not buckets:
-            return
-        nb = meta["n_buckets"]
-        if meta["ver"]:
-            # prior snapshot rows of the TOUCHED buckets re-enter the
-            # merge as latest-so-far writes (op=U) with their stored
-            # order columns; untouched buckets are never read
-            prior = read_buckets(
-                batch_df.sparkSession, path, buckets
-            ).select(*cols)
-            merged = prior.unionByName(incoming.select(*cols))
-        else:
-            merged = incoming.select(*cols)
-        snap = dim_snapshot(
-            merged.drop("id"), ord_cols=ord_cols
-        )
-        # dim_snapshot drops ord cols; re-derive them for the next merge
-        keep_ord = merged.groupBy("table", "id").agg(
-            *[F.max(c).alias(c) for c in ord_cols]
-        )
-        out = (
-            snap.join(keep_ord, ["table", "id"])
-            .withColumn("op", F.lit("U"))
-            .select(*cols)
-            .withColumn("__b", _bucket_of(nb, "table", "id"))
-        )
-        swap_buckets(out, path, buckets, meta)
-
-    return write
-
-
-def read_dim_snapshot(spark, path: str) -> DataFrame:
-    """The live last-write-wins dim snapshot from
-    :func:`dim_upsert_sink` state — one manifest snapshot, never
-    mutates the store."""
-    return read_buckets(spark, path)
-
-
-def scd2_sink(
-    path: str,
-    ord_cols: tuple[str, ...] = ("ts_ms", "event_id"),
-    n_buckets: int | None = None,
-):
-    """Streaming SCD type-2 maintenance: keep the full versioned dim
-    history (``operators.cdc.scd2_history``'s contract) current across
-    micro-batches.
-
-    Unlike the last-write-wins :func:`dim_upsert_sink`, history rows
-    are never discarded — a new write CLOSES the previously-open
-    version of its key and appends a new one; a late (out-of-order)
-    write splits the interval it lands in. Doing that correctly and
-    incrementally:
-
-    - State = every write ever seen (including deletes, which close
-      intervals but emit no version), with its recomputed interval
-      columns, hash-bucketed by (table, id) — versioned
-      ``b=<bucket>-v<ver>`` dirs behind a manifest
-      (:func:`store.swap_buckets`). Replays dedupe on the total write
-      order (table, id, ord_cols), so at-least-once delivery composes
-      to exactly-once history (T5); the dedup is valid per bucket
-      because a write's duplicates share its key, hence its bucket.
-    - Per batch, ONLY the keys present in the batch recompute: the
-      TOUCHED buckets' prior state splits via null-safe anti/semi
-      join on the touched keys, the touched slice unions the new
-      writes and re-windows (the same entity-keyed window as the
-      batch operator), untouched keys within touched buckets carry
-      over; untouched buckets are never read or rewritten. Per-batch
-      I/O is O(touched_keys × store/n_buckets), not O(store) — at
-      100 TB this is the MERGE-on-key pattern on a table format,
-      expressed on plain parquet via the bucketed swap.
-
-    Read the current history with :func:`read_scd2` (filters the
-    delete markers, projects the SCD2 contract columns)."""
-    from pyspark.sql import Window
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        state_cols = ["table", "id", "data", "op", *ord_cols,
-                      "version", "valid_from", "valid_to", "is_current"]
-        write_cols = ["table", "id", "data", "op", *ord_cols]
-        first_ord = ord_cols[0]
-        incoming, meta, buckets = _bucketed(
-            _cdc_rows(batch_df, ord_cols), path, n_buckets, "table", "id"
-        )
-        if not buckets:
-            return
-        nb = meta["n_buckets"]
-        if meta["ver"]:
-            prior = read_buckets(
-                batch_df.sparkSession, path, buckets
-            ).withColumn("__b", _bucket_of(nb, "table", "id"))
-            touched = incoming.select("table", "id").distinct().select(
-                F.col("table").alias("__tt"), F.col("id").alias("__ti")
-            )
-            key_match = prior["table"].eqNullSafe(
-                touched["__tt"]
-            ) & prior["id"].eqNullSafe(touched["__ti"])
-            untouched = prior.join(touched, key_match, "left_anti").select(
-                *state_cols, "__b"
-            )
-            replay = prior.join(touched, key_match, "left_semi").select(
-                *write_cols
-            )
-            writes = replay.unionByName(incoming.select(*write_cols))
-        else:
-            untouched = None
-            writes = incoming.select(*write_cols)
-        # at-least-once → exactly-once: a replayed batch re-delivers
-        # identical writes; the total write order dedupes them
-        writes = writes.dropDuplicates(["table", "id", *ord_cols])
-        w = Window.partitionBy("table", "id").orderBy(
-            *[F.col(c) for c in ord_cols]
-        )
-        recomputed = (
-            writes.withColumn("version", F.row_number().over(w).cast("int"))
-            .withColumn("valid_to", F.lead(F.col(first_ord)).over(w))
-            .withColumn("valid_from", F.col(first_ord))
-            .withColumn(
-                "is_current", F.col("valid_to").isNull().cast("int")
-            )
-            .select(*state_cols)
-            .withColumn("__b", _bucket_of(nb, "table", "id"))
-        )
-        out = (
-            recomputed
-            if untouched is None
-            else untouched.unionByName(recomputed)
-        )
-        swap_buckets(out, path, buckets, meta)
-
-    return write
-
-
-def read_scd2(spark, path: str) -> DataFrame:
-    """Project the SCD2 contract (operators/cdc.py:scd2_history) out
-    of :func:`scd2_sink` state: delete markers close intervals but
-    carry no version row. Resolves one manifest snapshot; never
-    mutates the store."""
-    return (
-        read_buckets(spark, path)
-        .filter(F.col("op") != "D")
-        .select(
-            "table", "id", "data", "version",
-            "valid_from", "valid_to", "is_current",
-        )
-    )
-
-
 def ivf_append_sink(index_path: str, vec_col: str = "embedding"):
     """Streaming IVF index maintenance: each micro-batch of new
     vectors routes to the FIXED learned centroids and lands in its
@@ -944,86 +619,126 @@ def ivf_append_sink(index_path: str, vec_col: str = "embedding"):
     return write
 
 
-def _touched_user_sink(
+# -- keyed state: the CDC dims and the event-sequence stores -----------
+# Each batch writes its raw rows; the fold (compaction and every read)
+# keeps the state the one-shot operator needs, and the reader runs that
+# operator over it. A batch writes only its own ``batch=<id>`` dir.
+
+
+def _cdc_rows(batch_df: DataFrame, ord_cols: tuple[str, ...]) -> DataFrame:
+    """The CDC sinks' incoming write rows, keyed by (table, id)."""
+    return batch_df.select(
+        "table",
+        F.get_json_object("data", "$.id").alias("id"),
+        "data",
+        "op",
+        *[F.col(c) for c in ord_cols],
+    )
+
+
+def _write_order(df: DataFrame) -> list[str]:
+    """The write-order columns of a CDC store: the sink's ``ord_cols``,
+    written after (table, id, data, op)."""
+    return [c for c in df.columns if c not in ("table", "id", "data", "op")]
+
+
+def _newest_per_key(df: DataFrame) -> DataFrame:
+    """The newest write per (table, id) by the write order, tombstones
+    (op = 'D') kept, so a delete still beats an older write that
+    arrives after it."""
+    newest = F.max_by(F.struct(*df.columns), F.struct(*_write_order(df)))
+    return df.groupBy("table", "id").agg(newest.alias("__n")).select("__n.*")
+
+
+_DIM = {"": SubFold(fold=_newest_per_key)}
+#: every write once: a replayed write has the same key and write order
+_SCD2 = {"": SubFold(fold=lambda df: df.dropDuplicates(
+    ["table", "id", *_write_order(df)]))}
+#: every event once, by its id
+_EVENTS = {"": SubFold(fold=lambda df: df.dropDuplicates(["__id"]))}
+
+
+def dim_upsert_sink(
     path: str,
-    derived: str,
-    recompute,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    id_col: str,
-    n_buckets: int | None,
-    stages: list[str] | None = None,
+    ord_cols: tuple[str, ...] = ("ts_ms", "event_id"),
+    compact_every: int = COMPACT_EVERY,
 ):
-    """The two-store touched-user recompute behind :func:`funnel_sink`
-    and :func:`transition_sink`. ``<path>/events`` keeps every event
-    (of ``stages``, when given), deduped on ``id_col``;
-    ``<path>/<derived>`` keeps ``recompute(events)`` per user. Both
-    stores are bucketed by user with ONE layout: the events store
-    sizes (or pins) n_buckets and the derived store adopts it. Per
-    batch, only the touched users recompute, from their full event
-    slice; untouched users in touched buckets carry over.
+    """K4's streaming binding: maintain a last-write-wins dim snapshot
+    across micro-batches — the engine's replacement for the per-row
+    ``jedis.set("DIM:<TABLE>:<id>", json)`` loop
+    (OdsBaseDbApp.scala:128-140).
 
-    Crash ordering: events commits BEFORE the derived store. A crash
-    at any point replays the batch (offsets commit only after this
-    writer returns); the id-dedup makes the events merge idempotent
-    and the recompute deterministic, so every crash point converges."""
-    ev_path = os.path.join(path, "events")
-    d_path = os.path.join(path, derived)
+    Each batch writes its (table, id, data, op, *ord_cols) rows to its
+    own ``batch=<id>`` dir; a replay overwrites it (T5). The store's
+    fold keeps the newest write per (table, id), delete tombstones
+    included, so compaction bounds the store by the key count and a
+    late write older than a delete stays deleted. A batch writes only
+    its own dir and never rewrites earlier state; the read folds the
+    segment with the tail written since. Read with
+    :func:`read_dim_snapshot`."""
+    return additive_sink(
+        path, _DIM, lambda df: {"": _cdc_rows(df, ord_cols)}, compact_every
+    )
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        src = batch_df
+
+def read_dim_snapshot(spark, path: str) -> DataFrame:
+    """The live last-write-wins dim snapshot from
+    :func:`dim_upsert_sink` state: the folded newest write per key
+    without the tombstones. One manifest snapshot; never mutates the
+    store."""
+    return read_folded(spark, path, _DIM).filter(F.col("op") != "D")
+
+
+def scd2_sink(
+    path: str,
+    ord_cols: tuple[str, ...] = ("ts_ms", "event_id"),
+    compact_every: int = COMPACT_EVERY,
+):
+    """Streaming SCD type-2 maintenance: keep the full versioned dim
+    history (``operators.cdc.scd2_history``'s contract) current across
+    micro-batches. A late (out-of-order) write splits the interval it
+    lands in, and a delete closes the version before it.
+
+    The store holds every write ever seen, deletes included, once per
+    (table, id, *ord_cols): each batch writes its rows to its own
+    ``batch=<id>`` dir and the fold drops replayed duplicates, so
+    at-least-once delivery composes to exactly-once history (T5).
+    :func:`read_scd2` runs the one-shot ``scd2_history`` over the
+    folded writes, so the intervals are recomputed at read time and
+    the read cost grows with the number of writes."""
+    return additive_sink(
+        path, _SCD2, lambda df: {"": _cdc_rows(df, ord_cols)}, compact_every
+    )
+
+
+def read_scd2(spark, path: str) -> DataFrame:
+    """The SCD2 history (operators/cdc.py:scd2_history) of
+    :func:`scd2_sink` state: the one-shot operator over the folded
+    writes. One manifest snapshot; never mutates the store."""
+    from ..operators.cdc import scd2_history
+
+    writes = read_folded(spark, path, _SCD2)
+    return scd2_history(writes, ord_cols=tuple(_write_order(writes)))
+
+
+def _event_sink(path, user_col, type_col, ts_col, id_col, compact_every,
+                stages=None):
+    """The event store behind :func:`funnel_sink` and
+    :func:`transition_sink`: each batch writes its events (of
+    ``stages``, when given) as (__u, __type, __ts, __id) to its own
+    ``batch=<id>`` dir, and the fold keeps each ``id_col`` once."""
+
+    def rows(batch_df: DataFrame) -> dict[str, DataFrame]:
         if stages is not None:
-            src = src.filter(F.col(type_col).isin(list(stages)))
-        incoming, ev_meta, buckets = _bucketed(
-            src.select(
-                F.col(user_col).alias("__u"),
-                F.col(type_col).alias("__type"),
-                F.col(ts_col).alias("__ts"),
-                F.col(id_col).alias("__id"),
-            ),
-            ev_path, n_buckets, "__u",
-        )
-        if not buckets:
-            return
-        nb = ev_meta["n_buckets"]
-        d_meta = _bucket_meta(d_path, nb)
-        merged = incoming
-        if ev_meta["ver"]:
-            merged = (
-                read_buckets(spark, ev_path, buckets)
-                .withColumn("__b", _bucket_of(nb, "__u"))
-                .unionByName(incoming)
-                .dropDuplicates(["__id"])
-            )
-        # Measured and rejected: materializing ``merged`` once and
-        # running the two swaps as concurrent jobs off its blocks took
-        # a transition_sink batch from 0.87 s to 1.35 s at sf0.1. The
-        # extra materialize job costs ~0.33 s, and both swaps then
-        # read row-oriented DISK_ONLY blocks where the recompute below
-        # re-reads the events swap's freshly written columnar parquet.
-        # The serial write-then-reread is the faster shape. It needs
-        # no checkpoint (the swap stages its plan while the old
-        # version dirs are still in place), and re-reading the commit
-        # avoids a localCheckpoint's unreplicated executor-local
-        # blocks.
-        swap_buckets(merged, ev_path, buckets, ev_meta)
-        _assert_unique_ids(spark, ev_path)
-        touched = incoming.select("__u").distinct()
-        out = recompute(
-            _semi_on_user(
-                read_buckets(spark, ev_path, buckets), touched, "left_semi"
-            )
-        ).withColumn("__b", _bucket_of(nb, "__u"))
-        if d_meta["ver"]:
-            prior = read_buckets(spark, d_path, buckets).withColumn(
-                "__b", _bucket_of(nb, "__u")
-            )
-            out = _semi_on_user(prior, touched, "left_anti").unionByName(out)
-        swap_buckets(out, d_path, buckets, d_meta)
+            batch_df = batch_df.filter(F.col(type_col).isin(list(stages)))
+        return {"": batch_df.select(
+            F.col(user_col).alias("__u"),
+            F.col(type_col).alias("__type"),
+            F.col(ts_col).alias("__ts"),
+            F.col(id_col).alias("__id"),
+        )}
 
-    return write
+    return additive_sink(path, _EVENTS, rows, compact_every)
 
 
 def funnel_sink(
@@ -1033,131 +748,64 @@ def funnel_sink(
     type_col: str = "event_type",
     ts_col: str = "event_time",
     id_col: str = "event_id",
-    n_buckets: int | None = None,
+    compact_every: int = COMPACT_EVERY,
 ):
-    """Incremental ORDERED-funnel maintenance: keep the per-user
-    first-touch completion times (operators/funnel.py:funnel_times)
-    current across micro-batches — the stateful-sequence sibling of
-    :func:`scd2_sink`, same touched-key recompute pattern.
+    """Incremental ORDERED-funnel maintenance. Funnel times are NOT
+    batch-decomposable: a late stage-0 event can move t_0 and cascade
+    through every later stage. So the sink keeps the funnel-stage
+    events themselves, each ``id_col`` once (a replay merges to the
+    same store, T5), and :func:`read_funnel` runs the one-shot
+    operator over them.
 
-    Funnel times are NOT batch-decomposable (a late stage-0 event can
-    retroactively move t_0 and cascade through every later stage), so
-    the sink keeps two state tables under ``path``, each hash-bucketed
-    by user (``__b = pmod(hash(user), n_buckets)``; manifest-committed
-    versioned bucket dirs, :func:`store.swap_buckets`):
-
-    - ``events``: every funnel-stage event seen, deduped on
-      ``id_col`` — replays merge to the identical store, so
-      at-least-once delivery composes to exactly-once times (T5).
-      Valid per bucket: an event's duplicates share its user, hence
-      its bucket.
-    - ``times``: the per-user funnel_times frame. Per batch, ONLY the
-      users present in the batch recompute, from their full event
-      slice; untouched users in touched buckets carry over.
-
-    Per-batch I/O is confined to the TOUCHED buckets: the merge, the
-    id-dedup, the carry-over anti-join, and the swap all read and
-    rewrite only ``__b`` partitions the batch's users hash into —
-    untouched buckets are never listed (see :func:`store.swap_buckets`).
-    Cost per batch is therefore O(touched_buckets × bucket_size) ≈
-    O(touched_users × store/n_buckets), NOT O(store): at production
-    scale size ``n_buckets`` so a bucket is a normal parquet
-    partition (~store/128 MB) and a sparse batch touches a sliver of
-    the store. (A batch touching ≥ n_buckets distinct users still
-    rewrites everything — that is the dense case where a full pass is
-    genuinely required.)
-
-    Crash ordering: events commits BEFORE times, and every crash
-    point converges on replay (see :func:`_touched_user_sink`). NULL
-    user ids are kept (they bucket on the hash seed and join
-    null-safely), matching the batch operator's windowing. Read the
-    live funnel with :func:`read_funnel`."""
-    from ..operators.funnel import funnel_times
-
-    return _touched_user_sink(
-        path,
-        "times",
-        lambda ev: funnel_times(
-            ev, list(stages), user_col="__u", type_col="__type",
-            ts_col="__ts",
-        ),
-        user_col, type_col, ts_col, id_col, n_buckets,
-        stages=stages,
-    )
+    A batch writes only its own ``batch=<id>`` dir. The read
+    recomputes from the event store, so its cost grows with the
+    number of events, not the number of users. NULL user ids are
+    kept, as the one-shot operator keeps them."""
+    return _event_sink(path, user_col, type_col, ts_col, id_col,
+                       compact_every, stages=stages)
 
 
 def read_funnel(spark, path: str, stages: list[str]) -> DataFrame:
     """The live funnel (stage_idx, stage, n_users) from
-    :func:`funnel_sink` state."""
-    from ..operators.funnel import funnel_counts_from_times
+    :func:`funnel_sink` state: operators/funnel.py:funnel over the
+    folded events."""
+    from ..operators.funnel import funnel
 
-    t_path = os.path.join(path, "times")
-    return funnel_counts_from_times(
-        read_buckets(spark, t_path), list(stages)
-    )
+    return funnel(read_folded(spark, path, _EVENTS), list(stages),
+                  user_col="__u", type_col="__type", ts_col="__ts")
 
 
 def transition_sink(
     path: str,
-    gap_seconds: int = 1800,
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "event_time",
     id_col: str = "event_id",
-    n_buckets: int | None = None,
+    compact_every: int = COMPACT_EVERY,
 ):
-    """Incremental Markov-transition maintenance: keep the per-user
-    (from_event, to_event) counts (operators/funnel.py:
-    transition_pairs_by_user) current across micro-batches — the
-    :func:`funnel_sink` touched-key recompute pattern, because
-    transitions are NOT batch-decomposable (a late event can insert a
-    pair with, or break the session gap to, an event from an earlier
-    batch — so per-batch pair counting would drift; only a user's
-    FULL ordered slice counts correctly).
+    """Incremental Markov-transition maintenance. Transitions are NOT
+    batch-decomposable: a late event can insert a pair into, or break
+    the session gap of, an earlier batch's sequence. So the sink keeps
+    the events themselves, each ``id_col`` once (a replay merges to
+    the same store, T5), and :func:`read_transition` runs the one-shot
+    ``transition_matrix`` over them.
 
-    Two user-hash-bucketed state tables under ``path``
-    (manifest-committed versioned bucket dirs, see :func:`funnel_sink`
-    and :func:`store.swap_buckets` for the layout contract):
-    ``events`` (all transition-relevant events, deduped on ``id_col``
-    — replays merge to the identical store, T5; valid per bucket
-    because an event's duplicates share its user's bucket) and
-    ``pairs`` (per-user counts; per batch ONLY the users present
-    recompute from their full slice, untouched users in touched
-    buckets carry over). Per-batch I/O is confined to the touched
-    buckets — O(touched_users × store/n_buckets), not O(store); a
-    batch touching ≥ n_buckets distinct users rewrites everything,
-    which is the genuinely-dense case. NULL user ids are kept (hash
-    seed bucket + null-safe joins), matching the batch window's
-    NULL grouping. Crash ordering as in funnel_sink: events swaps
-    first; every crash point replays and converges. Read the live
-    matrix with :func:`read_transition`."""
-    from ..operators.funnel import transition_pairs_by_user
-
-    return _touched_user_sink(
-        path,
-        "pairs",
-        lambda ev: transition_pairs_by_user(
-            ev, gap_seconds=gap_seconds, user_col="__u", type_col="__type",
-            ts_col="__ts", order_col="__id",
-        ),
-        user_col, type_col, ts_col, id_col, n_buckets,
-    )
+    A batch writes only its own ``batch=<id>`` dir. The read
+    recomputes from the event store, so its cost grows with the
+    number of events, not the number of users. NULL user ids are
+    kept, as the one-shot window keeps them."""
+    return _event_sink(path, user_col, type_col, ts_col, id_col,
+                       compact_every)
 
 
 def read_transition(spark, path: str) -> DataFrame:
     """The live transition matrix from :func:`transition_sink` state:
-    per-user counts sum to the corpus counts (users partition the
-    pair set), then the SAME normalization as the one-shot
-    transition_matrix — bit-identical prob at any batch split.
-    Resolves one manifest snapshot; never mutates the store."""
-    from ..operators.funnel import transition_matrix_from_counts
+    operators/funnel.py:transition_matrix (default session gap) over
+    the folded events, bit-identical to the one-shot matrix at any
+    batch split. One manifest snapshot; never mutates the store."""
+    from ..operators.funnel import transition_matrix
 
-    p_path = os.path.join(path, "pairs")
-    pairs = (
-        read_buckets(spark, p_path)
-        .groupBy("from_event", "to_event")
-        .agg(F.sum("n").cast("bigint").alias("n"))
+    return transition_matrix(
+        read_folded(spark, path, _EVENTS),
+        user_col="__u", type_col="__type", ts_col="__ts", order_col="__id",
     )
-    return transition_matrix_from_counts(pairs)
-
-

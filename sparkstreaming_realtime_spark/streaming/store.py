@@ -1,14 +1,15 @@
-"""Store layouts and the one commit protocol of the streaming sinks.
+"""The store layout and the one commit protocol of the streaming sinks.
 
 Every stateful sink keeps its state in a directory (the *store*) whose
 live content is named by ONE manifest, ``<store>/_MANIFEST.json``. This
 module is the only code that reads, publishes, garbage-collects and
-recovers it. Two layouts share the protocol.
+recovers it.
 
-**Additive segments + tail** (every store in the spec table of
-streaming/sinks.py, written through ``sinks.write_additive``, and the
-IVF index's ``delta`` store: ivf_append_sink writes it,
-operators/similarity.py:ivf_compact folds it).
+**Segments + tail.** Every store in the spec table of
+streaming/sinks.py (written through ``sinks.write_additive``; the keyed
+CDC and event-sequence stores among them) and the IVF index's ``delta``
+store (ivf_append_sink writes it, operators/similarity.py:ivf_compact
+folds it) has this one layout.
 Each micro-batch writes one ``batch=<id>`` dir (:func:`batch_dir`, the
 only code that names it), a deterministic
 function of the batch id, so a replayed batch OVERWRITES its previous
@@ -39,9 +40,10 @@ stream lifetime::
   the dir's own for a segment), which is what per-dir read caches key
   on. :func:`store_parts` reads every tail dir; the engine's own
   readers run between batches.
-- *Fold mode* (aggregated stores) rewrites base ∪ tail into one
-  segment with the store's own merge (key-wise integer sum,
-  set-distinct, k-smallest), so the base stays O(keys).
+- *Fold mode* (aggregated and keyed stores) rewrites base ∪ tail into
+  one segment with the store's own merge (key-wise integer sum,
+  set-distinct, k-smallest, newest write per key, dedup on an id), so
+  the base stays O(keys).
 - *Append mode* (identity stores: raw rows, BM25 postings/doclen, IVF
   deltas) consolidates only the tail into a new segment. Segments are
   size-tiered: once :data:`TIER_FANOUT` exist, the smallest ``fanout``
@@ -56,20 +58,7 @@ stream lifetime::
   rewrites a dir at or below ``upto``, which is never served and is
   deleted by the next commit with the rest of the gc list.
 
-**Bucket versions** (dim_upsert_sink, scd2_sink, funnel_sink,
-transition_sink). Keyed state is hash-bucketed into ``n_buckets``
-buckets, one ``b=<bucket>-v<ver>`` dir per live bucket::
-
-    {"n_buckets": 8,                 # fixed when the store is created
-     "ver": {"3": 2, "5": 0},        # live version of each bucket
-     "gc": ["b=3-v1"]}               # dropped by this commit
-
-A micro-batch stages only the buckets its keys hash into, moves them
-in as NEW version dirs (nothing live is moved or rewritten) and
-publishes (:func:`swap_buckets`). Untouched buckets are never read,
-rewritten or listed.
-
-**The protocol**, the same for both layouts:
+**The protocol:**
 
 - *Commit.* The manifest publish (tmp + fsync + ``os.replace``) is the
   single commit point. Readers resolve one manifest, see the whole
@@ -77,11 +66,11 @@ rewritten or listed.
 - *GC hand-off.* A commit lists the dirs it stops serving under
   ``gc``; the NEXT commit deletes them, so a reader holding the older
   manifest has one full commit interval to finish.
-- *Recovery.* A protocol dir (``seg=*``, ``b=*``) that the manifest
-  neither serves nor lists for gc is garbage from a commit that
-  crashed before its publish. Only the write path deletes it, right
-  before its next commit (:func:`_reclaim`); the crashed batch replays
-  from the streaming checkpoint and rebuilds.
+- *Recovery.* A ``seg=*`` dir that the manifest neither serves nor
+  lists for gc is garbage from a commit that crashed before its
+  publish. Only the write path deletes it, right before its next
+  commit (:func:`_reclaim`); the crashed batch replays from the
+  streaming checkpoint and rebuilds.
 - *Known window.* ``sinks.write_additive`` runs a batch's write and
   the prior tail's compaction concurrently. If the compaction publishes
   and the batch write fails, an external reader sees the folded view
@@ -103,7 +92,6 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 #: default compaction cadence: fold once this many committed batch
 #: directories accumulate in the tail. Test-scale value — at the
@@ -179,17 +167,15 @@ def _reclaim(path: str, m: dict) -> None:
     current manifest ``m`` handed to gc (their readers had one commit
     interval), and every protocol dir it neither serves nor lists —
     the garbage of a commit that crashed before its publish."""
-    gc = m.get("gc", [])
+    gc = m["gc"]
     keep = {d.split("/")[0] for d in gc}
-    keep |= {s.split("/")[0] for segs in m.get("segments", {}).values()
-             for s in segs}
-    keep |= {_bucket_dir(b, v) for b, v in m.get("ver", {}).items()}
+    keep |= {s.split("/")[0] for segs in m["segments"].values() for s in segs}
     try:
         names = os.listdir(path)
     except FileNotFoundError:
         names = []
     garbage = [n for n in names
-               if n.startswith(("seg=", "b=")) and n not in keep]
+               if n.startswith("seg=") and n not in keep]
     for d in gc + garbage:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
@@ -352,7 +338,8 @@ def write_rows_parquet(
     with pyarrow on the driver costs milliseconds and reads back
     identically (int64/binary parquet types are engine-neutral).
 
-    ``schema`` is [(name, type)] with type in {"bigint", "string"}.
+    ``schema`` is [(name, type)] with type in {"bigint", "int",
+    "double", "string"}.
     The dir holds exactly one data file, ``part-00000.parquet``: it is
     staged as a hidden file beside it (Spark readers skip ``.``-names)
     and ``os.replace``-d over it, so a reader sees the previous
@@ -362,7 +349,8 @@ def write_rows_parquet(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pa_types = {"bigint": pa.int64(), "string": pa.string()}
+    pa_types = {"bigint": pa.int64(), "int": pa.int32(),
+                "double": pa.float64(), "string": pa.string()}
     arrays = [
         pa.array([r[i] for r in rows], type=pa_types[t])
         for i, (_n, t) in enumerate(schema)
@@ -522,86 +510,3 @@ def compact_additive(
         },
     )
     return True
-
-
-def _bucket_dir(bucket, version) -> str:
-    return f"b={int(bucket)}-v{int(version)}"
-
-
-def read_buckets(spark, path: str, bucket_ids=None) -> DataFrame:
-    """Read a bucket-version store from one manifest snapshot; with
-    ``bucket_ids`` only those buckets' CURRENT version dirs are even
-    listed — the pruning a partition filter would give, without
-    exposing readers to in-flight writers. Never mutates the store.
-    Rows come back without ``__b`` (callers re-derive it from the key
-    columns — same hash, same value)."""
-    m = load_manifest(path)
-    if m is None or not m["ver"]:
-        # never-written store: surface the missing-path error a read
-        # of the empty layout raises
-        return spark.read.parquet(os.path.join(path, "b=*"))
-    ver = m["ver"]
-    if bucket_ids is None:
-        keys = list(ver)
-    else:
-        wanted = {str(int(b)) for b in bucket_ids}
-        keys = [k for k in ver if k in wanted]
-    if not keys:
-        # all requested buckets are new: an empty, correctly-typed frame
-        k = next(iter(ver))
-        return spark.read.parquet(
-            os.path.join(path, _bucket_dir(k, ver[k]))
-        ).filter(F.lit(False))
-    return spark.read.parquet(
-        *[os.path.join(path, _bucket_dir(k, ver[k])) for k in keys]
-    )
-
-
-def swap_buckets(
-    out: DataFrame, path: str, bucket_ids: list[int], m: dict
-) -> None:
-    """Commit one micro-batch of a bucket-version store. ``out``
-    carries ``__b`` and holds the whole new content of the touched
-    buckets ``bucket_ids``; ``m`` is the manifest it was computed
-    from. Stage ``out`` partitioned by bucket, move each staged bucket
-    in as a NEW version dir, then publish.
-
-    - A touched bucket with no staged rows (a dim tombstone emptied
-      it) drops out of the manifest — keeping it would resurrect the
-      evicted keys.
-    - Superseded versions go on the manifest's ``gc`` list; the next
-      commit deletes them. A crash anywhere before the publish leaves
-      the old manifest pointing at intact old versions; what the
-      crash left behind is reclaimed by the next write."""
-    nxt = path + ".next"
-    shutil.rmtree(nxt, ignore_errors=True)
-    # co-locate each bucket in one task before the partitioned write:
-    # upstream shuffles (id-dedup, per-user aggregates) scatter every
-    # bucket across every task, and partitionBy would then emit
-    # n_tasks × n_buckets tiny files per swap — the shuffle is sized
-    # by the TOUCHED slice only and keeps the store at ~1 file/bucket
-    out = out.repartition(max(len(bucket_ids), 1), F.col("__b"))
-    out.write.mode("overwrite").partitionBy("__b").parquet(nxt)
-    os.makedirs(path, exist_ok=True)
-    _reclaim(path, m)
-    staged = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(nxt)
-        if d.startswith("__b=")
-    }
-    ver = dict(m["ver"])
-    gc: list[str] = []
-    for b in sorted(staged | {int(x) for x in bucket_ids}):
-        old = ver.get(str(b))
-        if b in staged:
-            ver[str(b)] = 0 if old is None else int(old) + 1
-            os.rename(
-                os.path.join(nxt, f"__b={b}"),
-                os.path.join(path, _bucket_dir(b, ver[str(b)])),
-            )
-        else:
-            ver.pop(str(b), None)
-        if old is not None:
-            gc.append(_bucket_dir(b, old))
-    _publish_manifest(path, {**m, "ver": ver, "gc": gc})
-    shutil.rmtree(nxt, ignore_errors=True)

@@ -2,8 +2,8 @@
 one table: five batches at ``compact_every=2`` (so the store holds
 segments AND a live tail), then a replay of the last batch, the one
 whose write ran the second fold. The live
-read must equal the sink's fold of all rows in one shot, before and
-after the replay. A second table pins how many Spark jobs each sink's
+read must equal the one-shot operator over all rows, before and after
+the replay. A second table pins how many Spark jobs each sink's
 ``write`` launches on a batch that does not compact and on one that
 does, so a refactor of the shared writer cannot add a job unseen.
 
@@ -18,7 +18,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from sparkstreaming_realtime_spark.operators import basket, dedup, funnel
+from sparkstreaming_realtime_spark.operators import basket, cdc, dedup, funnel
 from sparkstreaming_realtime_spark.operators import retrieval, sketches
 from sparkstreaming_realtime_spark.streaming import sinks
 
@@ -75,6 +75,39 @@ def _baskets(spark, b):
          (f"bq{b}", "x"), (f"bq{b}", f"solo{b % 3}")],
         "b string, i string",
     )
+
+
+def _cdc(spark, b):
+    # ids recur across batches; write times run out of batch order, so
+    # a later batch carries writes older than ones already folded,
+    # deletes included
+    return spark.createDataFrame(
+        [("user_info", '{"id":%d,"v":%d}' % (k, b),
+          "D" if (b + k) % 4 == 3 else "U", (b * 3 % 5) * 1000 + k, b * 10 + k)
+         for k in range(3)],
+        "table string, data string, op string, ts_ms long, event_id long",
+    )
+
+
+def _event(eid):
+    t0 = dt.datetime(2024, 1, 1, 12)
+    return (eid, eid % 3, ("view", "click", "buy")[(eid // 10 + eid) % 3],
+            t0 + dt.timedelta(minutes=7 * eid % 50))
+
+
+def _typed_events(spark, b):
+    # events arrive out of time order, and each batch re-delivers one
+    # event of the batch before it
+    ids = [b * 10 + i for i in range(4)] + ([b * 10 - 10] if b else [])
+    return spark.createDataFrame(
+        [_event(i) for i in ids],
+        "event_id long, user_id long, event_type string, event_time timestamp",
+    )
+
+
+_STAGES = ["view", "click", "buy"]
+_SCD2_COLS = ("table", "id", "data", "version", "valid_from", "valid_to",
+              "is_current")
 
 
 CASES = {
@@ -150,6 +183,39 @@ CASES = {
                                     k=20, min_pair_support=3),
             "item_a", "item_b", "pair_n", "n_a", "n_b", "lift"),
     ),
+    "dim": (
+        lambda p: sinks.dim_upsert_sink(p, compact_every=2),
+        _cdc,
+        lambda spark, p: _rows(sinks.read_dim_snapshot(spark, p),
+                               "table", "id", "data"),
+        lambda df: _rows(cdc.dim_snapshot(df, ord_cols=("ts_ms", "event_id")),
+                         "table", "id", "data"),
+    ),
+    "scd2": (
+        lambda p: sinks.scd2_sink(p, compact_every=2),
+        _cdc,
+        lambda spark, p: _rows(sinks.read_scd2(spark, p), *_SCD2_COLS),
+        lambda df: _rows(cdc.scd2_history(df), *_SCD2_COLS),
+    ),
+    "funnel": (
+        lambda p: sinks.funnel_sink(p, _STAGES, compact_every=2),
+        _typed_events,
+        lambda spark, p: _rows(sinks.read_funnel(spark, p, _STAGES),
+                               "stage_idx", "stage", "n_users"),
+        lambda df: _rows(funnel.funnel(df.dropDuplicates(["event_id"]),
+                                       _STAGES, ts_col="event_time"),
+                         "stage_idx", "stage", "n_users"),
+    ),
+    "transition": (
+        lambda p: sinks.transition_sink(p, compact_every=2),
+        _typed_events,
+        lambda spark, p: _rows(sinks.read_transition(spark, p),
+                               "from_event", "to_event", "n", "prob"),
+        lambda df: _rows(
+            funnel.transition_matrix(df.dropDuplicates(["event_id"]),
+                                     ts_col="event_time"),
+            "from_event", "to_event", "n", "prob"),
+    ),
 }
 
 
@@ -205,12 +271,16 @@ JOB_BUDGET = {
     "bm25": (6, 15),
     "copurchase": (8, 17),
     "count_min": (2, 5),
+    "dim": (1, 4),
+    "funnel": (1, 4),
     "idempotent": (2, 5),
     "kmv": (3, 6),
     "line_count": (3, 6),
-    "quality_gate": (5, 7),
+    "quality_gate": (3, 5),
     "retention": (2, 5),
     "rollup_sum": (2, 5),
+    "scd2": (1, 4),
+    "transition": (1, 4),
 }
 
 

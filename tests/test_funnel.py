@@ -145,12 +145,11 @@ def test_funnel_sink_untouched_users_carry_over(spark, tmp_path):
 
 
 def test_funnel_sink_null_users_match_batch(spark, tmp_path):
-    """NULL-user parity for the funnel twin (the transition sink's
-    ADVICE fix applies here too): a NULL user's cross-batch chain must
-    round-trip streaming state exactly as the batch operator treats it
-    — funnel_times groups NULL as one user at stage 0 (its stage-1+
-    joins drop NULL by column-name join semantics, in BOTH paths, so
-    shared code keeps parity by construction)."""
+    """A NULL user's cross-batch chain must round-trip streaming state
+    exactly as the batch operator treats it — funnel_times groups NULL
+    as one user at stage 0 (its stage-1+ joins drop NULL by
+    column-name join semantics, in BOTH paths, so shared code keeps
+    parity by construction)."""
     import datetime as dt
 
     from sparkstreaming_realtime_spark.operators.funnel import funnel
@@ -318,8 +317,7 @@ def test_linear_attribution_boundary_inclusive_exclusive(spark):
 
 
 def test_linear_attribution_subsecond_boundary(spark):
-    """ADVICE r11: both window bounds must compare at full timestamp
-    precision. A touch half a second INSIDE the lower bound is
+    """Both window bounds compare at full timestamp precision. A touch half a second INSIDE the lower bound is
     credited; half a second outside (either side) is not. The old
     second-truncated lower bound wrongly excluded the first case."""
     import datetime as dt

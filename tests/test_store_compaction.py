@@ -281,7 +281,7 @@ def test_bm25_postings_are_term_clustered(spark, tmp_path, monkeypatch):
 
     # shrink the per-file target so the test corpus spans several
     # range partitions (production: 128 MB files)
-    monkeypatch.setattr(sk, "AUTO_BUCKET_TARGET_BYTES", 4096)
+    monkeypatch.setattr(sk, "TARGET_FILE_BYTES", 4096)
     path = str(tmp_path / "bm25")
     sink = bm25_index_sink(path, compact_every=0)
     # enough distinct terms to spread over several range partitions

@@ -109,21 +109,24 @@ def _dim_scenario(spark):
         return spark.createDataFrame(rows, CDC_SCHEMA)
 
     return dict(
-        sink=lambda path: dim_upsert_sink(path),
+        sink=lambda path: dim_upsert_sink(path, compact_every=1),
         read=lambda path: sorted(
             map(tuple, read_dim_snapshot(spark, path).collect())
         ),
-        # ids 1 and 6 hash to different buckets (of the 8 a tiny
-        # store gets). The crashed batch rewrites id 1's bucket, whose
-        # previous version is on gc, and a tombstone empties id 6's.
+        # each batch folds the one before it: batch 1's publish is the
+        # first, batch 2 folds batch 1's tombstone of id 6 into seg=1
+        # and deletes batch=0, which batch 1's commit put on gc. Its
+        # late write of id 6 is older than the delete and stays
+        # deleted.
         batches=[
             batch([("user_info", '{"id":1,"v":1}', "I", 1000, 1),
                    ("user_info", '{"id":6,"v":2}', "I", 1001, 2)]),
-            batch([("user_info", '{"id":1,"v":3}', "U", 2000, 3)]),
-            batch([("user_info", '{"id":6,"v":2}', "D", 3000, 4),
-                   ("user_info", '{"id":1,"v":5}', "U", 3001, 5)]),
+            batch([("user_info", '{"id":6,"v":2}', "D", 3000, 3),
+                   ("user_info", '{"id":1,"v":3}', "U", 2000, 4)]),
+            batch([("user_info", '{"id":6,"v":4}', "U", 2000, 5),
+                   ("user_info", '{"id":1,"v":5}', "U", 3001, 6)]),
         ],
-        n_pre=2,
+        n_pre=1,
     )
 
 

@@ -586,6 +586,37 @@ def test_dim_upsert_sink_replay_is_idempotent(spark, tmp_path):
     assert [(r[0], r[1]) for r in first] == [("user_info", "1")]
 
 
+def test_dim_upsert_sink_late_write_older_than_delete_stays_deleted(
+    spark, tmp_path
+):
+    """A write that arrives after a delete of its key but is OLDER
+    than the delete must not bring the key back: the snapshot equals
+    the one-shot dim_snapshot over all writes, which has no id 6."""
+    from sparkstreaming_realtime_spark.operators.cdc import dim_snapshot
+    from sparkstreaming_realtime_spark.streaming.sinks import (
+        dim_upsert_sink,
+        read_dim_snapshot,
+    )
+
+    batches = [
+        [("user_info", '{"id":6,"v":1}', "I", 1000, 1)],
+        [("user_info", '{"id":6,"v":1}', "D", 3000, 2)],
+        [("user_info", '{"id":6,"v":2}', "U", 2000, 3)],
+    ]
+    snap = str(tmp_path / "snap")
+    sink = dim_upsert_sink(snap)
+    for b, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, CDC_SCHEMA), b)
+    got = read_dim_snapshot(spark, snap).collect()
+    want = dim_snapshot(
+        spark.createDataFrame([r for rows in batches for r in rows],
+                              CDC_SCHEMA),
+        ord_cols=("ts_ms", "event_id"),
+    ).collect()
+    assert want == []
+    assert [(r["table"], r["id"], r["data"]) for r in got] == []
+
+
 def test_scd2_sink_builds_history_across_batches(spark, tmp_path):
     """Streaming SCD2: a later batch must CLOSE the open version of a
     key (cross-batch interval closing), deletes close but emit no
@@ -669,73 +700,6 @@ def test_scd2_sink_replay_is_idempotent(spark, tmp_path):
     assert len(first) == 2
 
 
-def test_snapshot_swap_survives_crash_between_renames(spark, tmp_path):
-    """The bucket swap's worst crash point — new version directories
-    renamed into place but the manifest never published — must not
-    lose or corrupt the accumulated state: the old manifest still
-    points at the fully-intact old versions (readers are unaffected),
-    and the next write() sweeps the orphaned versions and rebuilds
-    forward (the crashed batch replays via the checkpoint, so history
-    is complete)."""
-    import json
-    import os
-
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        read_scd2,
-        scd2_sink,
-    )
-    from sparkstreaming_realtime_spark.streaming.store import (
-        load_manifest,
-    )
-
-    b1 = spark.createDataFrame(
-        [("user_info", '{"id":1,"v":10}', "I", 1000, 1)], CDC_SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [("user_info", '{"id":1,"v":11}', "U", 2000, 2)], CDC_SCHEMA
-    )
-    hist = str(tmp_path / "hist")
-    sink = scd2_sink(hist)
-    sink(b1, 0)
-    meta = load_manifest(hist)
-    # simulate the crash window: for every live bucket, an orphaned
-    # NEXT version dir exists (renamed in, garbage content) but the
-    # manifest was never published — exactly the on-disk state if the
-    # process dies between the renames and the manifest os.replace
-    for k, v in meta["ver"].items():
-        orphan = os.path.join(hist, f"b={int(k)}-v{v + 1}")
-        os.makedirs(orphan)
-        with open(os.path.join(orphan, "part-junk.parquet"), "w") as f:
-            f.write("not parquet")
-    # a reader BETWEEN crash and restart sees the committed state
-    pre = read_scd2(spark, hist).collect()
-    assert {(r["id"], r["version"]) for r in pre} == {("1", 1)}
-    sink(b2, 1)  # restart: write-path recovery + the replayed batch
-    got = {
-        (r["id"], r["version"]): (r["valid_from"], r["valid_to"])
-        for r in read_scd2(spark, hist).collect()
-    }
-    assert got == {("1", 1): (1000, 2000), ("1", 2): (2000, None)}
-    assert not os.path.exists(hist + ".next")
-    # every on-disk version dir is accounted for by the manifest
-    # (live or gc-pending) — no orphans survive recovery
-    meta2 = load_manifest(hist)
-    referenced = {
-        f"b={int(k)}-v{v}" for k, v in meta2["ver"].items()
-    } | set(meta2["gc"])
-    on_disk = {d for d in os.listdir(hist) if d.startswith("b=")}
-    assert on_disk <= referenced
-    # the auto-sized bucket count (tiny fixture -> the floor) is
-    # pinned in the manifest and survives crash recovery
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        AUTO_BUCKET_MIN,
-    )
-
-    assert json.loads(
-        open(os.path.join(hist, "_MANIFEST.json")).read()
-    )["n_buckets"] == AUTO_BUCKET_MIN
-
-
 def test_quality_gate_sink_routes_batches_by_verdict(spark, tmp_path):
     """Streaming quality gate: a clean micro-batch lands in accepted,
     a batch with a planted violation lands WHOLE in quarantine (no
@@ -781,6 +745,19 @@ def test_quality_gate_sink_routes_batches_by_verdict(spark, tmp_path):
     assert sorted(
         r["id"] for r in spark.read.parquet(f"{gate}/quarantine").collect()
     ) == [3, 3]
+    # the written verdict reads back as the suite's own verdict frame
+    from sparkstreaming_realtime_spark.operators.expectations import (
+        check_expectations,
+    )
+
+    want = check_expectations(bad_df, suite)
+    got = spark.read.parquet(f"{gate}/verdicts/batch={bad_batch}")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
 
 def test_quality_gate_sink_accepts_empty_batch_with_defined_verdicts(
@@ -998,9 +975,9 @@ def test_copurchase_sink_honors_max_basket_and_support1_read(
 def test_transition_sink_recomputes_touched_users(spark, tmp_path):
     """Transitions are NOT batch-decomposable: a late event inserts a
     pair INTO an earlier batch's sequence (A→C becomes A→B→C). The
-    touched-user recompute must converge to the one-shot matrix, a
-    replayed batch must not drift the counts, and the stale pair
-    (A→C) must be gone after the late arrival."""
+    read must converge to the one-shot matrix, a replayed batch must
+    not drift the counts, and the stale pair (A→C) must be gone after
+    the late arrival."""
     import datetime as dt_
 
     from sparkstreaming_realtime_spark.operators.funnel import (
@@ -1050,17 +1027,13 @@ def test_transition_sink_recomputes_touched_users(spark, tmp_path):
     assert ("A", "B") in pairs and ("B", "C") in pairs
 
 
-def test_bucketed_state_rewrites_only_touched_buckets(spark, tmp_path):
-    """The 100 TB contract of the touched-key sinks: a micro-batch's
-    state I/O is confined to the buckets its users hash into. After a
-    wide first batch populates many buckets, a one-user second batch
-    must leave every OTHER bucket's parquet files byte-identical in
-    place (same file names — a rewrite always generates fresh part
-    files), in both the events store and the pairs store."""
+def test_keyed_state_batch_leaves_earlier_files_in_place(spark, tmp_path):
+    """A batch that does not compact writes only its own
+    ``batch=<id>`` dir: every file the earlier batches left in the
+    store keeps its name, size and mtime, and the batch adds files
+    under ``batch=<id>`` and nowhere else."""
     import datetime as dt_
     import os
-
-    from pyspark.sql import functions as F
 
     from sparkstreaming_realtime_spark.streaming.sinks import (
         transition_sink,
@@ -1078,57 +1051,35 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, tmp_path):
             " event_time timestamp",
         )
 
-    # 40 users × 2 events each → with 8 buckets, every bucket populated
-    b1 = mk(
-        [(2 * u, u, "A", 0) for u in range(40)]
-        + [(2 * u + 1, u, "B", 5) for u in range(40)]
-    )
-    b2 = mk([(1000, 7, "C", 10)])  # touches exactly user 7
     path = str(tmp_path / "trans")
-    sink = transition_sink(path, n_buckets=8)
-    sink(b1, 0)
+    sink = transition_sink(path)
+    sink(mk([(2 * u, u, "A", 0) for u in range(40)]), 0)
+    sink(mk([(2 * u + 1, u, "B", 5) for u in range(40)]), 1)
 
-    from sparkstreaming_realtime_spark.streaming.store import (
-        load_manifest,
-    )
+    def files():
+        out = {}
+        for dp, _dn, fns in os.walk(path):
+            for fn in fns:
+                st = os.stat(os.path.join(dp, fn))
+                out[os.path.relpath(os.path.join(dp, fn), path)] = (
+                    st.st_size, st.st_mtime_ns
+                )
+        return out
 
-    def listing(store):
-        """bucket id → (current version dir, its sorted file list)."""
-        root = os.path.join(path, store)
-        meta = load_manifest(root)
-        return {
-            int(k): (
-                f"b={int(k)}-v{v}",
-                sorted(os.listdir(os.path.join(root, f"b={int(k)}-v{v}"))),
-            )
-            for k, v in meta["ver"].items()
-        }
-
-    ev_before, p_before = listing("events"), listing("pairs")
-    assert len(ev_before) == 8  # every bucket populated
-    touched = spark.range(1).select(
-        F.pmod(F.hash(F.lit(7).cast("long")), F.lit(8)).alias("b")
-    ).collect()[0]["b"]
-    sink(b2, 1)
-    ev_after, p_after = listing("events"), listing("pairs")
-    for store_before, store_after in ((ev_before, ev_after),
-                                      (p_before, p_after)):
-        for b in store_before:
-            if b == touched:
-                # rewritten as a NEW version dir (the old one left in
-                # place for manifest-grace readers)
-                assert store_after[b][0] != store_before[b][0]
-            else:
-                # untouched: SAME version dir, byte-identical listing
-                assert store_after[b] == store_before[b]
+    before = files()
+    assert before
+    sink(mk([(1000, 7, "C", 10)]), 2)  # one user, one event
+    after = files()
+    assert {f: after.get(f) for f in before} == before
+    assert all(f.startswith("batch=2" + os.sep) for f in set(after) - set(before))
+    assert set(after) - set(before)
 
 
 def test_transition_sink_keeps_null_users(spark, tmp_path):
     """NULL user ids must round-trip the streaming state exactly like
     the batch window, which groups all NULLs into one partition and
-    counts their pairs — the null-safe touched-user joins and the
-    hash-seed bucket keep them (a plain equi-join would silently drop
-    them from state)."""
+    counts their pairs, also when the NULL user's events straddle
+    batches."""
     import datetime as dt_
 
     from sparkstreaming_realtime_spark.operators.funnel import (
@@ -1307,102 +1258,3 @@ def test_key_skew_from_streamed_counts_equals_batch(spark, tmp_path):
         [r[c] for c in cols] for r in want
     ]
     assert got[0]["n_rows"] == 13 and got[0]["n_keys"] == 4
-
-
-def test_strict_ids_flags_cross_bucket_duplicate(spark, tmp_path, monkeypatch):
-    """Event-id dedup in funnel/transition sinks is
-    scoped to the touched buckets, so a duplicate re-delivered under
-    a DIFFERENT user id hashes elsewhere and escapes silently. The
-    SPARK_GRAFT_STRICT_IDS debug gate turns that contract violation
-    into a loud failure — and stays quiet on an honest replay."""
-    import datetime as dt_
-
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        STRICT_IDS_ENV,
-        transition_sink,
-    )
-
-    t0 = dt_.datetime(2024, 1, 10, 12, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            [
-                (eid, u, ty, t0 + dt_.timedelta(minutes=m))
-                for eid, u, ty, m in rows
-            ],
-            "event_id long, user_id long, event_type string,"
-            " event_time timestamp",
-        )
-
-    monkeypatch.setenv(STRICT_IDS_ENV, "1")
-    path = str(tmp_path / "trans")
-    sink = transition_sink(path, n_buckets=8)
-    sink(mk([(1, 7, "A", 0), (2, 7, "B", 5)]), 0)
-    # honest replay: same ids, same users — quiet
-    sink(mk([(1, 7, "A", 0), (2, 7, "B", 5)]), 0)
-    # contract violation: id 2 re-delivered under ANOTHER user
-    with pytest.raises(AssertionError, match="duplicated ACROSS buckets"):
-        sink(mk([(2, 23, "B", 5)]), 1)
-
-
-def test_bucketed_store_pins_n_buckets(spark, tmp_path):
-    """The bucket count persists in the store manifest: reopening
-    with a different value would silently split each key's state
-    across two incompatible hash layouts, so it must fail loudly."""
-    from sparkstreaming_realtime_spark.streaming.sinks import (
-        dim_upsert_sink,
-        read_dim_snapshot,
-    )
-
-    rows = [("user_info", '{"id":1,"v":10}', "I", 1000, 1)]
-    batch = spark.createDataFrame(rows, CDC_SCHEMA)
-    snap = str(tmp_path / "snap")
-    dim_upsert_sink(snap, n_buckets=8)(batch, 0)
-    with pytest.raises(ValueError, match="n_buckets=8"):
-        dim_upsert_sink(snap, n_buckets=16)(batch, 1)
-    # the refused write changed nothing
-    got = read_dim_snapshot(spark, snap).select("table", "id").collect()
-    assert [(r["table"], r["id"]) for r in got] == [("user_info", "1")]
-
-
-def test_auto_bucket_sizing_scales_with_state(spark, tmp_path, monkeypatch):
-    """Default n_buckets=None sizes a NEW store from its batch-0
-    state volume (a fixed count of 32 would mean 3 TB buckets on a
-    100 TB store) and pins the choice in the manifest; reopening
-    with the default ADOPTS the persisted value."""
-    from sparkstreaming_realtime_spark.streaming import sinks as sk
-    from sparkstreaming_realtime_spark.streaming.store import load_manifest
-
-    def mk(path):
-        return sk.dim_upsert_sink(str(tmp_path / path))
-
-    def meta_b(path):
-        return load_manifest(str(tmp_path / path))["n_buckets"]
-
-    tiny = spark.createDataFrame(
-        [("user_info", '{"id":1,"v":1}', "I", 1000, 1)], CDC_SCHEMA
-    )
-    big = spark.createDataFrame(
-        [("user_info", '{"id":%d,"v":%d}' % (i, i), "I", 1000 + i, i)
-         for i in range(400)],
-        CDC_SCHEMA,
-    )
-    # production target: a tiny batch clamps to the floor
-    mk("small")(tiny, 0)
-    assert meta_b("small") == sk.AUTO_BUCKET_MIN
-    # shrink the per-bucket target so the sf-test volume exercises
-    # the sizing math: more state -> more buckets, clamped
-    monkeypatch.setattr(sk, "AUTO_BUCKET_TARGET_BYTES", 256)
-    mk("sized")(big, 0)
-    b_sized = meta_b("sized")
-    assert b_sized > sk.AUTO_BUCKET_MIN
-    assert b_sized <= sk.AUTO_BUCKET_MAX
-    # the choice is pinned: a second batch under the DEFAULT adopts
-    # the manifest value even though the target constant changed back
-    monkeypatch.setattr(sk, "AUTO_BUCKET_TARGET_BYTES", 128 * 2**20)
-    mk("sized")(tiny, 1)
-    assert meta_b("sized") == b_sized
-    # ...and the state is intact across the adopt (tiny's id=1
-    # upserts over big's — same key count)
-    got = sk.read_dim_snapshot(spark, str(tmp_path / "sized"))
-    assert got.count() == 400
