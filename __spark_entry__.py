@@ -9,12 +9,13 @@ op is not SQL-expressible).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sparkstreaming_realtime_spark.plans import queries as _queries
 from sparkstreaming_realtime_spark.plans import oracle_sql as _oracle_sql

@@ -59,13 +59,13 @@ HEADLINE = [
     "doc_pii_scrub",
     "doc_source_mix",
     "doc_chunk_dedup",
-    # r4: persisted-index IVF serving (index built once per session —
+    # persisted-index IVF serving (index built once per session —
     # min-of-2 reports steady-state serving, pass 1 includes the
     # build), winnowing pair detection, stride chunk dedup
     "emb_ivf_topk",
     "doc_overlap_spans",
     "doc_chunk_dedup_stride",
-    # r4 session 2: the new operator families — batched kNN retrieval,
+    # the new operator families — batched kNN retrieval,
     # SemDeDup components, SCD2 history build, DSIR scoring, adaptive
     # quality thresholds
     "emb_knn_join",
@@ -82,7 +82,7 @@ HEADLINE = [
     "cdc_scd2_asof_enrich",
     "doc_exact_k_sample",
     "corpus_curation_funnel_v2",
-    # r5: the N-derived-band SemDeDup (the 100 TB scale path; its
+    # the N-derived-band SemDeDup (the 100 TB scale path; its
     # pinned-width twin above stays for oracle comparability), the
     # incremental-IVF append serve, and the warehouse ops trio
     # (z-order skipping, compaction round-trip, quality gate)
@@ -93,31 +93,31 @@ HEADLINE = [
     "events_quality_expectations",
     "doc_audio_windows",
     "emb_truncated_overlap",
-    # r6: compacted-IVF serving (one file set per cell vs append's
+    # compacted-IVF serving (one file set per cell vs append's
     # three), the byte-exact resize path, and the streaming
     # quality-gate routing parity
     "emb_ivf_compact_topk",
     "doc_resize_images",
     "streaming_quality_gate_parity",
-    # r6 session 2: k-means cluster profiling (the SemDeDup/IVF
+    # k-means cluster profiling (the SemDeDup/IVF
     # training job surfaced as a query) and product-quantized ADC
     # serving (codes-only scan + TakeOrdered)
     "emb_kmeans_clusters",
     "emb_pq_topk",
     "emb_ivfpq_topk",
-    # r6 session 3: binary sign-bit quantization + Hamming two-stage
+    # binary sign-bit quantization + Hamming two-stage
     # search (16-byte/vector serving scan, exact-cosine rerank)
     "emb_hamming_topk",
-    # r8: cluster-pruned SemDeDup (the published recipe — candidates
+    # cluster-pruned SemDeDup (the published recipe — candidates
     # bounded by k-means cluster size, coarse quantizer shared with
     # the persisted IVF index) and its cluster-AND-band scale
     # composition
     "emb_semantic_dedup_clustered",
     "emb_semantic_dedup_clustered_banded",
-    # r8: the two new end-to-end streaming parities
+    # the two new end-to-end streaming parities
     "streaming_idempotent_sink_parity",
     "streaming_observe_metrics_parity",
-    # r8 session 2: corpus boilerplate-line removal (explode +
+    # corpus boilerplate-line removal (explode +
     # two-phase distinct-count + AQE-broadcast gate), the zero-shuffle
     # within-doc line collapse (pure projection — the flattest shape
     # in the suite), and the quality-aware keep-longest survivor
@@ -125,26 +125,26 @@ HEADLINE = [
     "doc_line_dedup",
     "doc_intra_line_dedup",
     "doc_dup_keep_longest",
-    # r9: the Arrow matmul assignment path (k=96 — above the
+    # the Arrow matmul assignment path (k=96 — above the
     # LARGE_K_ASSIGN dispatch cutover through training and serving)
     "emb_cells_arrow_assign",
-    # r9 session 2: arbitrary-offset repeated-substring removal
+    # arbitrary-offset repeated-substring removal
     # (ExactSubstr, Lee et al. 2022 — sliding-window hashes, linear in
     # tokens) and the deterministic inverted-index Jaccard twin of the
     # MinHash pair query (df-capped postings — linear at fixed cap)
     "doc_exact_substr_dedup",
     "doc_ngram_jaccard_dedup",
     "doc_topk_similar",
-    # r9 session 2: topic-balanced corpus selection — persisted-
+    # topic-balanced corpus selection — persisted-
     # quantizer cell assignment + hash-ranked exact-k quota per cell
     "emb_cluster_balanced_sample",
-    # r9 session 2: online ANN serving parity — 4 query micro-batches
+    # online ANN serving parity — 4 query micro-batches
     # through the persisted IVF index, batch-keyed idempotent sink
     "streaming_ivf_serve_parity",
-    # r9 session 2: serving through the AUTO-K index (fixed ~512-
+    # serving through the AUTO-K index (fixed ~512-
     # vector cells at any N — the production knob, driver-hashed)
     "emb_ivf_auto_topk",
-    # r10: the five new operator families — BM25 lexical retrieval,
+    # the five new operator families — BM25 lexical retrieval,
     # segment-blocked fuzzy record linkage, the sliding-window rollup
     # pair (batch + watermarked streaming parity), cross-frame
     # semantic decontamination (batch + ingest-time streaming
@@ -156,11 +156,11 @@ HEADLINE = [
     "emb_semantic_decontaminate",
     "streaming_decontaminate_parity",
     "order_graph_pagerank",
-    # r10 session 2: event-sequence analytics + span-bound gap fill
+    # event-sequence analytics + span-bound gap fill
     "user_funnel",
     "user_retention_cohorts",
     "events_gap_filled_resample",
-    # r11: KMV distinct-count sketch (batch estimate + streaming
+    # KMV distinct-count sketch (batch estimate + streaming
     # merge parity + cross-corpus Jaccard overlap) and the rolling/
     # anomaly pair over the per-nation daily revenue rollup
     "doc_shingle_distinct_sketch",
@@ -168,15 +168,15 @@ HEADLINE = [
     "corpus_overlap_sketch",
     "revenue_rolling_windows",
     "revenue_anomaly_days",
-    # r11 session 2: grouped KMV + the incremental-rollup anomaly
+    # grouped KMV + the incremental-rollup anomaly
     # parity + market-basket co-purchase lift
     "doc_lang_distinct_sketch",
     "streaming_anomaly_parity",
     "part_copurchase_pairs",
     "event_transition_matrix",
-    # r11 session 3: banded kNN (hard-negative mining)
+    # banded kNN (hard-negative mining)
     "emb_hard_negatives",
-    # r11 session 4: graph pair, token entropy, BPE train+encode,
+    # graph pair, token entropy, BPE train+encode,
     # key-skew Gini diagnostic
     "part_copurchase_triangles",
     "part_link_prediction",
@@ -193,35 +193,35 @@ HEADLINE = [
     "events_winsorized_stats",
     "streaming_attribution_parity",
     "doc_split_leakage",
-    # r12: incremental co-purchase maintenance (basket-atomic
+    # incremental co-purchase maintenance (basket-atomic
     # micro-batches, read-time support threshold + lift over the
     # folded counts — parity vs part_copurchase_pairs) and the skew
     # profiler's incremental twin (additive key counts, profile at
     # read — parity vs events_key_skew)
     "streaming_copurchase_parity",
     "streaming_key_skew_parity",
-    # r12: the transition matrix's incremental twin (touched-user
+    # the transition matrix's incremental twin (touched-user
     # recompute over the deduped event store — parity vs
     # event_transition_matrix at a random split)
     "streaming_transition_parity",
-    # r13: the statsByItem rollup store's end-to-end twin (additive
+    # the statsByItem rollup store's end-to-end twin (additive
     # exact-cents partials at the query-agnostic part/segment/band
     # grain, match-AND + grouping at read — parity vs
     # stats_by_item_segment)
     "streaming_item_stats_parity",
-    # r13: exact threshold-pruned link prediction (hub-probe τ + the
+    # exact threshold-pruned link prediction (hub-probe τ + the
     # min-degree containment bound cut the pair shuffle map-side;
     # same oracle as part_link_prediction)
     "part_link_prediction_pruned",
-    # r13: streaming BM25 inverted-index maintenance (per-batch
+    # streaming BM25 inverted-index maintenance (per-batch
     # postings/doclen/stats shards over disjoint docs, served through
     # the shared bm25_rank fold; same oracle as doc_bm25_search)
     "streaming_bm25_parity",
-    # r13: retention's incremental twin (per-batch distinct user-day
+    # retention's incremental twin (per-batch distinct user-day
     # sets, distinct-over-union + the shared fold at read; same
     # oracle as user_retention_cohorts)
     "streaming_retention_parity",
-    # r14: hybrid retrieval — exact-integer reciprocal-rank fusion of
+    # hybrid retrieval — exact-integer reciprocal-rank fusion of
     # the BM25 and brute-cosine top-10s, and its end-to-end twin
     # serving BOTH branches from streaming-maintained stores
     # (term-clustered BM25 index + idempotent embeddings store, each
@@ -233,10 +233,9 @@ HEADLINE = [
 #: queries that build a PERSISTED per-(session, sf) index on first
 #: invocation (the offline indexing job). Their docstrings time the
 #: SERVE path — the build belongs to warm-up, not the timed passes:
-#: the r9 sequence probe measured emb_ivf_topk at 11.5 s on the
-#: build-bearing first pass vs 0.6 s steady (and r7/r8 under machine
-#: load recorded the build-contaminated number as the min-of-2,
-#: a phantom 6-9x "regression" two verdicts chased).
+#: emb_ivf_topk measured 11.5 s on the build-bearing first pass vs
+#: 0.6 s steady, and under machine load the build-contaminated pass
+#: can become the min-of-2 (a phantom 6-9x "regression").
 INDEX_BUILDERS = [
     "emb_ivf_topk",
     "emb_ivf_auto_topk",
@@ -292,11 +291,8 @@ def _bench_serving(spark, sf_dir: str) -> dict:
     td = "2024-01-15"  # the registry endpoint queries' pinned day
 
     # build the DAU store once via the real streaming pipeline
-    # (session-scoped dir: swept at process exit, never mid-run)
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix=materialize.ENGINE_TMP_PREFIX + "srvbench_")
-    materialize.track_session_dir(root)
+    # (session-scoped dir: removed at process exit, never mid-run)
+    root = materialize.session_dir("srvbench_" + uuid.uuid4().hex[:8])
     store = os.path.join(root, "dau_store")
     t0 = time.time()
     # stream_table handles both table shapes (single file / directory)
@@ -347,7 +343,7 @@ def _bench_serving(spark, sf_dir: str) -> dict:
             "store build exceeded 600s and was stopped; store-backed "
             "latencies below are against a PARTIAL store"
         )
-    # statsByItem rollup store (r13): additive exact-cents partials at
+    # statsByItem rollup store: additive exact-cents partials at
     # the query-agnostic (part, name, segment, band) grain — same
     # pipeline shape as streaming_item_stats_parity
     from sparkstreaming_realtime_spark.functions.money import money_units
@@ -415,12 +411,11 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     qs = queries()
 
-    # EFFECTIVE parallelism of this run (r14 VERDICT #2): the session
-    # honors $SPARK_GRAFT_CPUS via local[N] (session.py), but earlier
-    # artifacts reported os.cpu_count() — machine CPUs, always 32 —
-    # which made the driver's 8-core scaling probe unattributable
-    # (suspect_cpus_ignored). Parse N out of the actual master so the
-    # artifact records what the run really used.
+    # EFFECTIVE parallelism of this run: the session honors
+    # $SPARK_GRAFT_CPUS via local[N] (session.py), while
+    # os.cpu_count() reports the machine's CPUs, which would make an
+    # 8-core scaling probe unattributable. Parse N out of the actual
+    # master so the artifact records what the run really used.
     master = spark.sparkContext.master
     if master.startswith("local[") and master.rstrip("]")[6:].isdigit():
         n_cpus = int(master.rstrip("]")[6:])
@@ -434,8 +429,8 @@ def main() -> None:
     # synthesis/hash expression trees and would dominate one-shot
     # timings).
     # Per-query failure isolation: one broken query must never kill
-    # the whole artifact (r2 lesson — a single AnalysisException in
-    # warm-up crashed the bench to rc=1 with zero timings recorded).
+    # the whole artifact (a single AnalysisException in warm-up must
+    # not crash the bench to rc=1 with zero timings recorded).
     warm_dir = "/root/testdata/sf0.001"
     errors: dict[str, str] = {}
     for name in HEADLINE:
@@ -498,7 +493,7 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — min-of-2 already stands
                 pass
 
-    # endpoint latency section (r11 VERDICT #5): the serving layer is
+    # endpoint latency section: the serving layer is
     # pytest-curled for correctness; this records its LATENCY against
     # the streaming-maintained store vs the per-request fact scan.
     # Isolated like everything else — a serving failure must not cost
@@ -513,8 +508,8 @@ def main() -> None:
     # Per-query pass lists + relative spread ride along so a reader
     # can separate load noise from real drift WITHOUT re-running:
     # min-of-N is robust to one stall, but persistent machine load
-    # inflates every pass and the min silently drifts (r7: a 6x
-    # phantom regression on emb_ivf_knn_join survived min-of-3).
+    # inflates every pass and the min silently drifts (a 6x phantom
+    # regression on emb_ivf_knn_join once survived min-of-3).
     # rel_spread = (max-min)/min per query; a whole artifact where
     # most queries show large spreads (or where loadavg is high) is
     # a loaded-machine run, not a code regression.
@@ -538,11 +533,9 @@ def main() -> None:
         "loadavg_1m_end": round(os.getloadavg()[0], 2),
         "n_cpus": n_cpus,
         "machine_cpus": os.cpu_count(),
-        # methodology self-description (r9 ADVICE): these queries'
-        # offline index builds ran UNTIMED in warm-up, so their
-        # timings are steady-state serving — artifacts before r9
-        # (old protocol) carried the build in the first pass. The
-        # keys make round-over-round comparisons self-explaining.
+        # methodology self-description: these queries' offline
+        # index builds ran UNTIMED in warm-up, so their timings are
+        # steady-state serving, not build plus serve.
         "prebuilt_indexes": prebuilt,
         "prebuild_sec": prebuild_s,
         "serving": serving,
@@ -552,12 +545,11 @@ def main() -> None:
     print(json.dumps(out))
 
     # The driver's BENCH artifact keeps only a ~2,000-char stdout
-    # TAIL and parses JSON from it — the full line above outgrew that
-    # window in r7 and r8 (both artifacts recorded "parsed": null, so
-    # per-query mins were unrecoverable by the judge). Two fixes,
-    # belt and braces: (1) the full artifact is written to
-    # BENCH_local.json beside this script (committed per round as
-    # BENCH_local_r{N}.json), and (2) the LAST stdout line is a
+    # TAIL and parses JSON from it — the full line above outgrows
+    # that window (the artifact then records "parsed": null and the
+    # per-query mins are lost). Two fixes, belt and braces: (1) the
+    # full artifact is written to BENCH_local.json beside this
+    # script, and (2) the LAST stdout line is a
     # COMPACT summary — same contract keys, queries trimmed to the
     # shared-8 — that always fits inside the tail window whole.
     art = os.path.join(

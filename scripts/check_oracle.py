@@ -7,10 +7,11 @@ value hash. Usage: python scripts/check_oracle.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -56,7 +57,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     if stock:
-        # Environment-coupling guard (VERDICT r1+r2): a *vanilla*
+        # Environment-coupling guard: a *vanilla*
         # session, exactly what the driver harness builds — no UTC
         # pin, no nanosAsLong, no Arrow/AQE confs. Every data-shape
         # normalization must live in read_table, not in get_spark.

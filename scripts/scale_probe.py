@@ -40,7 +40,7 @@ PROBE = [
     "doc_incremental_near_dup",
     "corpus_curation_funnel",
     "emb_ivf_topk",
-    # r4-session operators
+    # embedding, CDC and corpus-curation operators
     "emb_knn_join",
     "emb_semantic_dedup",
     "cdc_scd2_history",
@@ -48,37 +48,37 @@ PROBE = [
     "doc_lm_perplexity",
     "doc_heavy_hitters_sketch",
     "clustered_point_lookup",
-    # r5-session: the skew-safe quota sampler (pre-filter must hold
+    # the skew-safe quota sampler (pre-filter must hold
     # the window's input ~constant per stratum → ratio ≤ ~2) and the
     # N-derived-band SemDeDup (the pinned-width twin goes quadratic
     # by construction; this is the variant a 100 TB caller gets)
     "doc_exact_k_sample",
     "emb_semantic_dedup_auto",
-    # r5-session: index append serve, layout jobs, quality gate, audio
+    # index append serve, layout jobs, quality gate, audio
     "emb_ivf_append_topk",
     "zordered_two_dim_lookup",
     "warehouse_compaction_roundtrip",
     "events_quality_expectations",
     "doc_audio_windows",
-    # r6-session: the 6×6 re-pinned twin (must stop probing
+    # the 6×6 re-pinned twin (must stop probing
     # quadratic), compacted-index serving, byte-sampling resize, and
     # the streaming gate (linear in routed bytes by construction)
     "emb_ivf_compact_topk",
     "doc_resize_images",
     "streaming_quality_gate_parity",
-    # r6 session 2: cluster profiling (training scans + one profile
+    # cluster profiling (training scans + one profile
     # scan — linear by construction), PQ ADC serving (codes-only
     # scan), and the two-level IVF-PQ (partition-pruned codes scan —
     # should probe FLAT like the other routed serves)
     "emb_kmeans_clusters",
     "emb_pq_topk",
     "emb_ivfpq_topk",
-    # r6 session 3: binary Hamming two-stage search — the candidate
+    # binary Hamming two-stage search — the candidate
     # stage is XOR+POPCNT per row (should probe ~linear-in-scan with
     # big 32-core headroom), the rerank stage is constant-size
     "emb_hamming_topk",
-    # r8: the remaining heavies the r7 verdict flagged as never
-    # ×100-probed, plus the new cluster-pruned SemDeDup (candidates
+    # the heavy shapes not probed above, plus the cluster-pruned
+    # SemDeDup (candidates
     # bounded by cluster size — should probe far under the LSH twins)
     "emb_semantic_dedup_clustered",
     "emb_semantic_dedup_clustered_banded",
@@ -87,62 +87,61 @@ PROBE = [
     # probe-only variants (not registry queries): dup_clusters FORCED
     # through the distributed star-contraction fallback
     # (local_threshold=0 skips the union-find cutover, max_iters=2
-    # burns propagation in one round — the r8 fixpoint fix means the
-    # fallback now always contracts to completion, and this measures
+    # burns propagation in one round — the fallback always contracts
+    # to completion, and this measures
     # what that costs at scale), and the auto-width cluster∩band
     # SemDeDup (the registry twin pins 6×6 for its static oracle)
     "doc_dup_clusters_star",
     "emb_semantic_dedup_clustered_banded_auto",
-    # r8 session: corpus boilerplate-line removal (explode + two-phase
+    # corpus boilerplate-line removal (explode + two-phase
     # distinct-count + AQE-broadcast gate — should probe ~linear in
     # corpus lines) and the zero-shuffle within-doc collapse (pure
     # projection — should probe at scan bandwidth, the flattest shape
     # in the suite)
     "doc_line_dedup",
     "doc_intra_line_dedup",
-    # r8 session 2: the auto-k clustered SemDeDup (probe-only — the
+    # the auto-k clustered SemDeDup (probe-only — the
     # published recipe's ACTUAL scale knob, k ∝ N at fixed cell size;
     # see _sdc_auto_k)
     "emb_semantic_dedup_clustered_auto_k",
-    # r9 session: the r8-new shapes never ×100-probed — the
-    # keep-longest survivor policy (re-runs the minhash+components
+    # the keep-longest survivor policy (re-runs the minhash+components
     # chain, then ONE max_by winner join — expect ~doc_dup_clusters'
-    # ratio), and the three r8 streaming parities (each replays its
+    # ratio), and three streaming parities (each replays its
     # batch oracle after the stream, so the probe measures the full
     # parity harness, the shape the driver times)
     "doc_dup_keep_longest",
     "streaming_idempotent_sink_parity",
     "streaming_observe_metrics_parity",
     "streaming_line_dedup_parity",
-    # r9 session: the Arrow matmul assignment registry twin — k=96
+    # the Arrow matmul assignment registry twin — k=96
     # fixed while N grows means N·k dot products, linear in N; the
     # probe confirms the mapInPandas path scales at scan bandwidth
     "emb_cells_arrow_assign",
-    # r9 session: ExactSubstr sliding-window dedup — ~n_tokens hash
+    # ExactSubstr sliding-window dedup — ~n_tokens hash
     # rows (×w the C4 chunker's row count, the price of arbitrary
     # alignment), one content-hash window, one doc-keyed collect;
     # linear by construction, the probe verifies it
     "doc_exact_substr_dedup",
-    # r9 session 2: the deterministic inverted-index Jaccard family —
+    # the deterministic inverted-index Jaccard family —
     # candidate pairs ≤ df_cap/2 × |postings| (linear at the fixed
     # per-gram cap, NOT a corpus-sized knob), and its per-doc
     # group-top-k neighbor ranking (hash aggregate, no corpus window)
     "doc_ngram_jaccard_dedup",
     "doc_topk_similar",
-    # r9 session 2: topic-balanced selection — one assignment scan +
+    # topic-balanced selection — one assignment scan +
     # a pre-filtered per-cell quota window (~4K rows per partition
     # regardless of cluster size); should probe ~linear-in-scan
     "emb_cluster_balanced_sample",
-    # r9 session 2: online serve parity — per-batch probes-bounded
+    # online serve parity — per-batch probes-bounded
     # pruned scans; cost tracks query count × cell size, not corpus
     "streaming_ivf_serve_parity",
     # probe-only: the same serve core through an auto_k_cells index
     # (fixed cell size) — the production knob; see _ivf_serve_auto_k
     "emb_ivf_serve_auto_k",
-    # r9 session 2: single-query serving through the auto-k index —
+    # single-query serving through the auto-k index —
     # per-query cost is probes × ~512 vectors at ANY corpus size
     "emb_ivf_auto_topk",
-    # r10 session: BM25 retrieval (postings filtered to the query's
+    # BM25 retrieval (postings filtered to the query's
     # terms BEFORE the tf shuffle + tiny broadcast scalars — should
     # probe ~linear-in-scan), segment-blocked fuzzy linkage (cap
     # drops degenerate blocks, survivors pair through selective
@@ -156,30 +155,30 @@ PROBE = [
     "customer_fuzzy_match",
     "sliding_window_rollup",
     "streaming_sliding_rollup_parity",
-    # r10 session 2: event-sequence analytics (stage aggregates and
+    # event-sequence analytics (stage aggregates and
     # distinct-activity frames are user-keyed — linear) and the
     # zero-filled resample (grid size is SPAN-bound, so the fill cost
     # is constant while the aggregate scales with events)
     "user_funnel",
     "user_retention_cohorts",
     "events_gap_filled_resample",
-    # r10 session 2: the incremental funnel sink — each of the 4
+    # the incremental funnel sink — each of the 4
     # batches merges the event store and recomputes touched users
     # (at a random 4-way split that is ~every user every batch, the
     # WORST case for the touched-key pattern; real streams touch a
     # sliver)
     "streaming_funnel_parity",
-    # r10 session: integer PageRank — one edges⋈ranks shuffle per
+    # integer PageRank — one edges⋈ranks shuffle per
     # iteration over a linear-in-data edge list, lineage cut per
     # round; should probe ~linear (3 fixed iterations at any N)
     "order_graph_pagerank",
-    # r10 probe-only: decontamination at the AUTO band width (the
+    # probe-only: decontamination at the AUTO band width (the
     # registry twin pins 6×6 for its static oracle and GUARD-raises
     # past 50k train vectors; this is the knob a 100 TB caller gets —
     # per-bucket work |train∩bucket|·|eval∩bucket| stays put as both
     # the corpus and the bucket count grow)
     "emb_semantic_decontaminate_auto",
-    # r11 session: the KMV distinct sketch (map-side WindowGroupLimit
+    # the KMV distinct sketch (map-side WindowGroupLimit
     # prune → every shuffle carries ≤ k·partitions rows; should probe
     # ~linear-in-scan with the md5 projection the only per-row cost),
     # its streaming merge parity (4 batch sketches + a ≤ k·batches
@@ -190,7 +189,7 @@ PROBE = [
     "doc_shingle_distinct_sketch",
     "streaming_distinct_sketch_parity",
     "revenue_rolling_windows",
-    # r11 session 2: cross-corpus overlap (two sketch scans + ≤ 2k-
+    # cross-corpus overlap (two sketch scans + ≤ 2k-
     # integer algebra — should track the shingle scans), grouped KMV
     # (same scan, per-group prune), the anomaly tripwire (same rollup
     # as rolling windows + one more window pass), and its incremental
@@ -199,13 +198,13 @@ PROBE = [
     "doc_lang_distinct_sketch",
     "revenue_anomaly_days",
     "streaming_anomaly_parity",
-    # r11 session 3: within-basket pair enumeration (per-basket work
+    # within-basket pair enumeration (per-basket work
     # C(width, 2), width schema-bounded — should probe ~linear) and
     # the Markov transition matrix (the user_sessions window sort +
     # a map-side count into a |types|² frame — ~the sessions ratio)
     "part_copurchase_pairs",
     "event_transition_matrix",
-    # r11 session 4: triangle counting (oriented wedge work is
+    # triangle counting (oriented wedge work is
     # O(m^1.5) PER COMPONENT and the scaled fixture is factor
     # disjoint copies — so expect ~linear in copies with the 41M-
     # wedge-per-copy constant), link prediction over the SUPPORT-2
@@ -221,12 +220,12 @@ PROBE = [
     "doc_token_entropy",
     "emb_hard_negatives",
     "streaming_decontaminate_parity",
-    # r11 session 4: BPE merge learning — corpus-token shuffle once,
+    # BPE merge learning — corpus-token shuffle once,
     # then 6 vocabulary-sized iterations (type count grows far slower
     # than tokens; the scaled fixture's letter substitution multiplies
     # types ×~26, the worst case for this shape)
     "doc_bpe_learn_merges",
-    # r11 session 4 batch 2: the encode side (adds one corpus scan to
+    # the encode side (adds one corpus scan to
     # the train loop), the skew profiler (key-count shuffle + a
     # histogram-sized window), the two-era mergeSchema roundtrip
     # (write + read + rollup — linear in facts), the DDSketch pair
@@ -242,16 +241,16 @@ PROBE = [
     "doc_phrase_search",
     "order_touch_attribution",
     "cdc_snapshot_diff",
-    # r11 session 4 batch 3: sketch-driven winsorization (two scans
+    # sketch-driven winsorization (two scans
     # by construction) and the incremental attribution parity (4
     # order micro-batches against the static event side)
     "events_winsorized_stats",
     "streaming_attribution_parity",
-    # r11 session 4 batch 4: the contamination audit (the minhash
+    # the contamination audit (the minhash
     # chain — already probed via doc_minhash_near_dup — plus two
     # id-keyed label joins)
     "doc_split_leakage",
-    # r12: the two incremental-twin parities — co-purchase (4
+    # the two incremental-twin parities — co-purchase (4
     # basket-atomic batches, each rolls its baskets and writes three
     # partial frames; merge + threshold + lift at read — expect ~the
     # part_copurchase_pairs ratio plus fixed per-batch write costs)
@@ -259,32 +258,31 @@ PROBE = [
     # at read — expect ~the events_key_skew ratio)
     "streaming_copurchase_parity",
     "streaming_key_skew_parity",
-    # r12: the transition twin — same touched-key recompute economics
+    # the transition twin — same touched-key recompute economics
     # as streaming_funnel_parity (a random 4-way split touches ~every
     # user every batch, the worst case; expect its ratio class)
     "streaming_transition_parity",
-    # r13: the statsByItem rollup-store twin (4 batches of
+    # the statsByItem rollup-store twin (4 batches of
     # stream-static dim joins + additive cents partials; match-AND +
     # grouping over the parts-sized merged store at read — expect
     # ~the stats_by_item_segment ratio plus fixed per-batch writes)
     "streaming_item_stats_parity",
-    # r13: the BM25 inverted-index twin (per-batch tokenize + postings
+    # the BM25 inverted-index twin (per-batch tokenize + postings
     # shards over disjoint docs; query = term-filtered merged postings
     # through the shared scorer — expect ~linear in corpus tokens)
     "streaming_bm25_parity",
-    # r13: threshold-pruned link prediction (NOTE: the ×100 fixture is
+    # threshold-pruned link prediction (NOTE: the ×100 fixture is
     # 100 sparse sf0.01 copies — degree-UNIFORM, so τ degenerates to 1
     # by design and this row measures the prune's overhead-when-idle,
-    # not its win; the win is measured on the skewed fixture in
-    # PROBE_r13)
+    # not its win; the win shows on a skewed fixture)
     "part_link_prediction_pruned",
 ]
 
-# NOTE (r9): at factors where the corpus passes 50k vectors, the
+# NOTE: at factors where the corpus passes 50k vectors, the
 # three PINNED-knob registry twins (emb_semantic_dedup 6×6,
 # emb_semantic_dedup_clustered fixed-k, …_clustered_banded 6×6) now
-# RAISE by design (similarity.FIXED_KNOB_GUARD_N — the guard the r8
-# probe's ×423/×156/×127 measurements motivated). Their probe rows
+# RAISE by design (similarity.FIXED_KNOB_GUARD_N — at ×100 corpus
+# they measured ×423/×156/×127). Their probe rows
 # record the ValueError: that IS the result — the quadratic setting
 # can no longer be lifted into a big job. The auto twins beside them
 # keep probing normally.
@@ -324,8 +322,8 @@ def _sdc_auto_k(spark, sf_dir: str):
     # size stays ~fixed (Abbas et al. use k up to N/2000) — total
     # within-cluster pair work is then N·cell_size/2, LINEAR in N.
     # The registry twin pins k to the persisted IVF quantizer's cell
-    # count for its static oracle; the r8 ×100 probe measured that
-    # fixed-k shape at ×155.8 (quadratic by construction), so THIS is
+    # count for its static oracle; at ×100 corpus that fixed-k shape
+    # measured ×155.8 (quadratic by construction), so THIS is
     # the knob setting a 100 TB caller must use.
     from sparkstreaming_realtime_spark.operators import similarity as sim
     from sparkstreaming_realtime_spark.plans.llm_queries import _EMB_DIM
@@ -334,7 +332,7 @@ def _sdc_auto_k(spark, sf_dir: str):
     emb = read_table(spark, sf_dir, "embeddings")
     n = emb.count()
     # the registry's exact clamp — imported, not re-hardcoded, so the
-    # probe cannot drift from the query it models (r8 ADVICE)
+    # probe cannot drift from the query it models
     k = sim.auto_k_cells(n)
     cents = sim.train_kmeans_cells(emb, dim=_EMB_DIM, n_cells=k, iters=2)
     return sim.semantic_dedup_clustered(
@@ -355,9 +353,8 @@ def _ivf_serve_auto_k(spark, sf_dir: str):
     # measured by the registry row; serve economics are what scale.)
     import hashlib
     import os
-    import tempfile
 
-    from sparkstreaming_realtime_spark.materialize import track_session_dir
+    from sparkstreaming_realtime_spark.materialize import session_dir
     from sparkstreaming_realtime_spark.operators import similarity as sim
     from sparkstreaming_realtime_spark.plans.llm_queries import _EMB_DIM
     from sparkstreaming_realtime_spark.sources.files import read_table
@@ -367,25 +364,20 @@ def _ivf_serve_auto_k(spark, sf_dir: str):
     n = emb.count()
     k = sim.auto_k_cells(n)
     # hashlib, not hash(): PYTHONHASHSEED randomizes str hash per
-    # process, so abs(hash(sf_dir)) paths were non-reproducible across
-    # probe runs (r9 ADVICE); md5 of the abspath is stable forever
+    # process, so a hash(sf_dir) name would differ between probe runs;
+    # md5 of the abspath is stable
     dir_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     tag = f"{spark.sparkContext.applicationId}_{dir_tag}_k{k}"
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_auto_{tag}")
+    path = session_dir(f"ivf_auto_{tag}")
     # gate rebuild on a COMPLETION marker, not on the centroids dir: a
     # build that crashed after writing centroids but before the corpus
-    # left a partial index that later probe rows in the same session
-    # would serve and fail on (r9 ADVICE)
+    # leaves a partial index that later probe rows in the same session
+    # would serve and fail on
     done = os.path.join(path, "_PROBE_BUILD_DONE")
     if not os.path.exists(done):
-        if os.path.exists(path):
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)  # partial build
         sim.build_ivf_index(emb, _EMB_DIM, path, n_cells=k)
         with open(done, "w") as f:
             f.write("ok\n")
-        track_session_dir(path)
     corpus = sim.read_ivf_corpus(spark, path)
     queries = corpus.filter(F.col("vec_id") % 41 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
@@ -458,7 +450,7 @@ def main() -> None:
         ).save()
     rows = {}
     for name in PROBE:
-        # failure isolation (same lesson as bench.py r2): one broken
+        # failure isolation (as in bench.py): one broken
         # query must not void the whole probe's timings
         load0 = os.getloadavg()[0]
         try:
@@ -474,7 +466,7 @@ def main() -> None:
             "ratio": round(ts_ / tb, 2) if tb > 0 else None,
             # per-pass lists + the loadavg bracketing this query: the
             # host is shared, and a neighbor-load spike inflates a
-            # min-of-N silently (the r7 bench lesson) — these fields
+            # min-of-N silently — these fields
             # let a reader spot which ratios were measured under load
             "passes": {"base": pb, "scaled": ps},
             "loadavg_1m": [round(load0, 2), round(os.getloadavg()[0], 2)],

@@ -1,4 +1,5 @@
-"""Cluster-durable DataFrame materialization.
+"""Cluster-durable DataFrame materialization, and the engine's scratch
+root.
 
 ``localCheckpoint`` is tempting for cutting lineage / sharing a
 subtree across plan branches, but it writes blocks to executor-LOCAL
@@ -21,24 +22,42 @@ curation hot paths:
   bounded loops here (label propagation converges in 2–4 rounds).
 
 Callers that finish with an intermediate should ``unpersist()`` it
-explicitly (see :func:`release`).
+explicitly (see :func:`release`). :func:`release_all` drops every
+tracked frame's blocks, and deletes the ``rdd-N`` dirs of tracked
+checkpointed frames under the checkpoint dir the engine installed
+(:func:`ensure_checkpoint_dir`). A deployment-configured checkpoint
+dir is never touched: its retention belongs to the deployment
+(``spark.cleaner.referenceTracking.cleanCheckpoints`` or an external
+policy).
 
-Lifecycle asymmetry to know about: :func:`release` /
-:func:`release_all` drop PERSISTED blocks unconditionally, but a
-reliable checkpoint's files belong to the checkpoint dir and outlive
-the DataFrame. Checkpointed frames are therefore tracked too, and
-``release_all(clean_checkpoints=True)`` (opt-in) deletes their
-``rdd-N`` directories through the Hadoop FileSystem API — only the
-directories of frames the engine itself materialized and has been
-told are finished, never the whole checkpoint dir. Deployments that
-prefer engine-external retention can ignore the flag and set
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (a
-SparkConf, fixed at context creation) or manage the directory
-externally; with neither, iterative callers (dup_clusters checkpoints
-per round) accumulate files until the context stops.
+Scratch root: every local dir the engine creates lives under one root
+per process, ``<tmp>/sparkgraft-<pid>-<starttime>/``, where
+``starttime`` is the kernel start tick of the process (field 22 of
+``/proc/<pid>/stat``). The name is the ownership record: the (pid,
+starttime) pair names one process incarnation, so a recycled pid
+never matches it. The root holds
+
+- per-query dirs from :func:`engine_tmpdir`, deleted by the next
+  :func:`release_all`;
+- session-lived dirs from :func:`session_dir` (persisted index
+  builds), kept until the process exits;
+- the checkpoint dir :func:`ensure_checkpoint_dir` installs.
+
+One ``atexit`` handler removes the root on a normal exit. A SIGKILLed
+or OOM-killed process runs no handler, so the first time a process
+creates its root it deletes every other ``sparkgraft-<pid>-<starttime>``
+root in tmp whose incarnation is not running: a live peer's root
+stays, and so does anything not named like a root. Without ``/proc``
+no liveness can be judged and the sweep deletes nothing.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import re
+import shutil
+import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -50,221 +69,61 @@ from pyspark.sql import DataFrame
 #: (measured ~4× on the bench tail), so cleanup is not optional.
 _LIVE: list[DataFrame] = []
 
-#: checkpointed frames not yet released — their rdd-N directories can
-#: be deleted on request (release_all(clean_checkpoints=True)) once
-#: the caller knows no later plan will re-read them.
+#: checkpointed frames not yet released
 _LIVE_CKPT: list[DataFrame] = []
 
-#: engine-created per-QUERY temp dirs (streaming-parity sinks +
-#: checkpoints, warehouse layout fixtures) — swept by the NEXT
-#: release_all(), exactly like finished frames' blocks: by the time
-#: the registry enters the next query, the previous query's result
-#: has been collected (the same contract the checkpoint sweep already
-#: relies on), so its scratch dirs are dead. Without this sweep a
-#: long session leaks hundreds of dirs (~220 dirs / 670 MB measured).
+#: per-QUERY scratch dirs (streaming-parity sinks + checkpoints,
+#: warehouse layout fixtures), deleted by the NEXT release_all(): by
+#: the time the registry enters the next query, the previous query's
+#: result has been collected, so its scratch dirs are dead. Without
+#: this a long session piles up hundreds of dirs (~220 dirs / 670 MB
+#: measured) until exit.
 _TMP_DIRS: list[str] = []
 
-#: engine-created SESSION-scoped dirs (the persisted IVF index family
-#: — built once, served by every later query in the session) — never
-#: swept mid-session, removed at process exit.
-_SESSION_DIRS: list[str] = []
+#: this process's scratch root, created by the first _root() call
+_ROOT: str | None = None
+_ROOT_NAME = re.compile(r"sparkgraft-(\d+)-(\d+)")
+
+#: the checkpoint dir ensure_checkpoint_dir() itself installed (None
+#: if the deployment configured one first)
+_ENGINE_CKPT_DIR: str | None = None
 
 
-#: directories the single process-exit sweep (:func:`_exit_sweep`)
-#: will rmtree — every engine_tmpdir not yet swept by release_all
-#: plus every session dir. ONE atexit handler total (one
-#: handler per dir grew the atexit table unboundedly over long
-#: sessions); registered lazily on first tracked dir.
-_EXIT_SWEEP_DIRS: list[str] = []
-_EXIT_SWEEP_REGISTERED = False
-
-
-def _exit_sweep() -> None:  # pragma: no cover — runs at interpreter exit
-    import shutil
-
-    for d in _EXIT_SWEEP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _EXIT_SWEEP_DIRS.clear()
-
-
-#: liveness marker dropped in every engine-owned tmp dir: the owning
-#: process's ``pid <starttime>``, where starttime is the kernel's
-#: process start tick (/proc/<pid>/stat field 22) — the (pid,
-#: starttime) pair uniquely names a process INCARNATION, so a
-#: recycled pid (any unrelated long-lived process that later drew the
-#: same number) can never pin an orphaned dir forever the way a bare
-#: os.kill(pid, 0) check could. A dot-prefixed name so Spark's
-#: readers treat it as hidden.
-OWNER_MARKER = ".spark-graft-owner.pid"
-
-#: hard cap for markers whose liveness can only be judged by the
-#: LEGACY bare-pid check (no starttime recorded, or /proc is
-#: unavailable): past this age the sweep reclaims the dir even if
-#: SOME process answers to the pid — without a starttime the answer
-#: could be a recycled pid, and an unbounded benefit of the doubt
-#: would pin the orphan forever.
-LEGACY_MARKER_MAX_AGE = 48 * 3600
-
-
-def _proc_start_time(pid: int):
+def _proc_start_time(pid: int) -> int | None:
     """The kernel start tick of ``pid``, or None when it can't be
     read (process gone, or no /proc on this platform). Field 22 of
     /proc/<pid>/stat, parsed after the last ')' because the comm
     field may itself contain spaces and parens."""
-    import os  # noqa: F401 — platform probe only
-
     try:
         with open(f"/proc/{pid}/stat", "rb") as f:
-            data = f.read()
-        return int(data.rsplit(b")", 1)[1].split()[19])
+            return int(f.read().rsplit(b")", 1)[1].split()[19])
     except (OSError, ValueError, IndexError):
         return None
 
 
-def _track_for_exit(path: str) -> None:
-    global _EXIT_SWEEP_REGISTERED
-    if path not in _EXIT_SWEEP_DIRS:
-        _EXIT_SWEEP_DIRS.append(path)
-        import os
-
-        # liveness marker for CONCURRENT sessions' startup sweeps: a
-        # dir a live peer wrote once and only reads afterward (an IVF
-        # index dir, an idle checkpoint dir) never refreshes its
-        # mtime, so the age rule alone could reclaim it from under
-        # the peer — the pid+starttime marker makes ownership explicit
-        try:
-            pid = os.getpid()
-            start = _proc_start_time(pid)
-            stamp = f"{pid} {start}" if start is not None else str(pid)
-            with open(os.path.join(path, OWNER_MARKER), "w") as f:
-                f.write(stamp)
-        except OSError:  # dir raced away / read-only — age rule applies
-            pass
-    if not _EXIT_SWEEP_REGISTERED:
-        import atexit
-
-        atexit.register(_exit_sweep)
-        _EXIT_SWEEP_REGISTERED = True
-
-
-def _owner_alive(marker_path: str) -> str | None:
-    """Liveness verdict for the process a marker names:
-
-    - ``"verified"`` — the marker carries a starttime and a process
-      with that EXACT (pid, starttime) incarnation is running: the
-      owner is definitively alive, protect the dir unconditionally.
-    - ``"legacy"`` — liveness could only be judged by the bare-pid
-      probe (pre-starttime marker, or no /proc) and SOMETHING answers
-      to the pid: probably the owner, possibly a recycled pid — the
-      sweep protects it only up to :data:`LEGACY_MARKER_MAX_AGE`.
-    - ``None`` — no live owner (missing/unreadable marker, dead pid,
-      or a pid whose current incarnation's starttime differs from the
-      recorded one, i.e. a DETECTED recycle)."""
-    import os
-
-    try:
-        with open(marker_path) as f:
-            fields = f.read().split()
-        pid = int(fields[0])
-        recorded = int(fields[1]) if len(fields) > 1 else None
-    except (OSError, ValueError, IndexError):
-        return None
-    if pid == os.getpid():
-        return "verified"
-    if recorded is not None:
-        current = _proc_start_time(pid)
-        if current is not None:
-            return "verified" if current == recorded else None
-        # /proc says nothing: either the pid is dead (ProcessLookup
-        # path below resolves it) or this platform has no /proc —
-        # fall through to the legacy probe
-    try:
-        os.kill(pid, 0)
-        return "legacy"
-    except ProcessLookupError:
-        return None
-    except PermissionError:  # alive under another uid
-        return "legacy"
-    except OSError:
-        return None
-
-
-#: one recognizable stamp on EVERY engine-created temp dir (scratch
-#: dirs and the installed checkpoint dir alike), so a startup sweep
-#: can tell the engine's orphans apart from anything else in tmp.
-ENGINE_TMP_PREFIX = "spark-graft-"
-
-#: run the orphan sweep once per process (it is idempotent, but one
-#: glob of tmp per session start is all that's needed)
-_STARTUP_SWEEP_DONE = False
-
-
-def sweep_stale_engine_dirs(
-    max_age_seconds: int = 3 * 3600, tmp_root: str | None = None
-) -> list[str]:
-    """Remove engine-prefixed temp dirs orphaned by KILLED processes.
-
-    The atexit sweep covers every normal exit, but a SIGKILLed or
-    OOM-killed JVM never runs atexit, so its ``spark-graft-*``
-    checkpoint/scratch dirs survive in tmp forever. On session start we reclaim any engine-prefixed
-    dir that (a) carries no VERIFIED-live owner marker (every engine
-    dir is stamped with its creator's pid + kernel starttime at track
-    time; a matching (pid, starttime) incarnation protects the dir
-    unconditionally — a concurrent session's write-once dirs, whose
-    mtimes never refresh, stay safe across the age threshold — while
-    a pid whose starttime DIFFERS is a detected recycle and protects
-    nothing) and (b) has an mtime older than ``max_age_seconds``
-    (default 3 h — the fallback rule for markerless orphans).
-    Markers that can only be judged by the bare-pid probe (legacy
-    stamp or no /proc) protect their dir only up to
-    :data:`LEGACY_MARKER_MAX_AGE` — a recycled pid answering the
-    probe must not pin an orphan forever. Dirs tracked by THIS
-    process are never touched. Returns the swept paths."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    root = tmp_root or tempfile.gettempdir()
-    now = time.time()
-    swept: list[str] = []
-    for d in glob.glob(os.path.join(root, ENGINE_TMP_PREFIX + "*")):
-        try:
-            if not os.path.isdir(d) or d in _EXIT_SWEEP_DIRS:
-                continue
-            age = now - os.path.getmtime(d)
-            verdict = _owner_alive(os.path.join(d, OWNER_MARKER))
-            if verdict == "verified":
-                continue  # the exact owner incarnation is running
-            if verdict == "legacy" and age < LEGACY_MARKER_MAX_AGE:
-                continue  # benefit of the doubt, but bounded
-            if age < max_age_seconds:
-                continue
-        except OSError:  # raced with another cleanup — skip
-            continue
-        shutil.rmtree(d, ignore_errors=True)
-        swept.append(d)
-    return swept
-
-
-def startup_sweep_once() -> None:
-    """Run :func:`sweep_stale_engine_dirs` the first time the engine
-    starts in this process (called from the session factory and from
-    :func:`ensure_checkpoint_dir`)."""
-    global _STARTUP_SWEEP_DONE
-    if not _STARTUP_SWEEP_DONE:
-        _STARTUP_SWEEP_DONE = True
-        sweep_stale_engine_dirs()
+def _root() -> str:
+    """This process's scratch root. The first call deletes the roots
+    of engine processes that are gone, creates this one and registers
+    its removal at exit."""
+    global _ROOT
+    if _ROOT is None:
+        tmp = tempfile.gettempdir()
+        start = _proc_start_time(os.getpid())
+        if start is not None:
+            for name in os.listdir(tmp):
+                m = _ROOT_NAME.fullmatch(name)
+                if m and _proc_start_time(int(m[1])) != int(m[2]):
+                    shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+        _ROOT = os.path.join(tmp, f"sparkgraft-{os.getpid()}-{start or 0}")
+        os.makedirs(_ROOT, exist_ok=True)
+        atexit.register(shutil.rmtree, _ROOT, True)
+    return _ROOT
 
 
 def engine_tmpdir(prefix: str) -> str:
-    """mkdtemp that the engine OWNS: tracked for the per-query sweep
-    in :func:`release_all` and belt-and-braces rmtree'd at process
-    exit (one shared atexit handler, not one per dir). Every
+    """A fresh per-query scratch dir under the scratch root. Every
     engine-internal scratch dir (parity sinks, streaming checkpoints,
-    layout fixtures) must come from here — a bare tempfile.mkdtemp in
-    query code is a leak by construction.
+    layout fixtures) comes from here or :func:`session_dir`.
 
     LIFECYCLE CONTRACT: dirs from here live until the NEXT
     :func:`release_all` (the registry calls it on entry to each
@@ -273,31 +132,19 @@ def engine_tmpdir(prefix: str) -> str:
     entry — after the sweep the path is gone and the read fails with
     a missing-path error. Parity queries satisfy this by contract
     (the driver collects each query's result before invoking the
-    next); anything longer-lived belongs in :func:`track_session_dir`
-    instead."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=ENGINE_TMP_PREFIX + prefix)
+    next); anything longer-lived belongs in :func:`session_dir`."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=_root())
     _TMP_DIRS.append(path)
-    _track_for_exit(path)
     return path
 
 
-def track_session_dir(path: str) -> None:
-    """Register a session-lived engine dir (persisted index builds)
-    for removal at process exit only — release_all() must NOT touch
-    it, later queries in this session serve from it."""
-    if path not in _SESSION_DIRS:
-        _SESSION_DIRS.append(path)
-        _track_for_exit(path)
-
-#: the checkpoint dir ensure_checkpoint_dir() itself installed (None
-#: if the deployment configured one first). Engine-installed ⇒
-#: engine-owned lifecycle: release_all() auto-sweeps rdd-N dirs under
-#: THIS prefix by default, so a long bench/gate session doesn't
-#: accumulate checkpoint files in tmp between queries; a
-#: deployment-configured dir is never auto-touched.
-_ENGINE_CKPT_DIR: str | None = None
+def session_dir(name: str) -> str:
+    """The session-lived dir ``name`` under the scratch root, created
+    if missing. No :func:`release_all` touches it: later queries in
+    the process serve from it, and it goes with the root at exit."""
+    path = os.path.join(_root(), name)
+    os.makedirs(path, exist_ok=True)
+    return path
 
 
 def ensure_checkpoint_dir(spark) -> None:
@@ -314,27 +161,14 @@ def ensure_checkpoint_dir(spark) -> None:
     rounds, and d is data-dependent — no fixed round budget is safe.
 
     If the deployment already configured a durable dir (HDFS/S3 on a
-    cluster), it is respected. Otherwise a process-local temp dir is
-    installed — correct on local[*] (one JVM); a multi-node cluster
+    cluster), it is respected. Otherwise a dir under the scratch root
+    is installed — correct on local[*] (one JVM); a multi-node cluster
     should always configure a shared dir instead."""
     global _ENGINE_CKPT_DIR
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
-        import tempfile
-
-        # before installing a fresh dir, reclaim orphans a killed
-        # predecessor left behind (atexit can't cover SIGKILL)
-        startup_sweep_once()
-        path = tempfile.mkdtemp(prefix=ENGINE_TMP_PREFIX + "ckpt-")
-        sc.setCheckpointDir(path)
-        _ENGINE_CKPT_DIR = path
-        # engine-installed dir → engine-owned lifecycle: remove it at
-        # process exit so long-lived drivers don't leak checkpoint
-        # files into /tmp (a DEPLOYMENT-configured dir is never
-        # touched — its retention belongs to the deployment), and
-        # release_all() sweeps finished frames' rdd-N dirs between
-        # queries (same ownership rule)
-        _track_for_exit(path)
+        _ENGINE_CKPT_DIR = tempfile.mkdtemp(prefix="ckpt-", dir=_root())
+        sc.setCheckpointDir(_ENGINE_CKPT_DIR)
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -368,91 +202,42 @@ def _checkpoint_file(df: DataFrame) -> str | None:
         return None
 
 
-def _delete_fs_path(df: DataFrame, path: str) -> None:
-    """Recursive delete via the Hadoop FileSystem API — works for any
-    checkpoint-dir scheme (local, HDFS, S3A), same as Spark's own
-    cleanCheckpoints cleaner."""
-    spark = df.sparkSession
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-
-
-def release(df: DataFrame, clean_checkpoint: bool = False) -> None:
-    """Drop a materialized intermediate's blocks. For a checkpointed
-    frame, ``clean_checkpoint=True`` additionally deletes its rdd-N
-    files — only safe once no un-executed plan still references it."""
+def release(df: DataFrame) -> None:
+    """Drop a materialized intermediate's blocks and stop tracking it.
+    A checkpointed frame's files stay: an un-executed plan may still
+    read them."""
     try:
         df.unpersist()
     except Exception:  # pragma: no cover — best-effort cleanup
         pass
     _LIVE[:] = [d for d in _LIVE if d is not df]
-    if any(d is df for d in _LIVE_CKPT):
-        if clean_checkpoint:
-            path = _checkpoint_file(df)
-            if path is not None:
-                _delete_fs_path(df, path)
-        _LIVE_CKPT[:] = [d for d in _LIVE_CKPT if d is not df]
+    _LIVE_CKPT[:] = [d for d in _LIVE_CKPT if d is not df]
 
 
-def release_all(clean_checkpoints: bool | None = None) -> None:
-    """Unpersist every still-live materialized frame. Called by the
-    query registry on entry to each query, so blocks from FINISHED
-    queries never pile up across a long gate/bench session — only
-    the engine's own frames are touched (never a caller's caches,
-    unlike ``spark.catalog.clearCache()``).
-
-    Checkpoint files: ``True`` deletes every tracked rdd-N dir (for
-    batch sessions that know the previous query's checkpoints are
-    dead); ``False`` leaves all of them to the deployment's retention
-    policy. The default (``None``) deletes only dirs under the
-    checkpoint root the ENGINE itself installed
-    (:func:`ensure_checkpoint_dir`) — engine-installed means
-    engine-owned, so a long gate/bench session doesn't pile rdd-N
-    dirs into tmp between queries, while a deployment-configured
-    dir is never auto-touched."""
+def release_all() -> None:
+    """Release every tracked frame and delete the per-query scratch
+    dirs. Called by the query registry on entry to each query, so
+    blocks, checkpoint files and scratch dirs from FINISHED queries
+    never pile up across a long gate/bench session — only the
+    engine's own frames are touched (never a caller's caches, unlike
+    ``spark.catalog.clearCache()``). A checkpointed frame's rdd-N dir
+    is deleted only under the engine-installed checkpoint dir."""
     for df in _LIVE:
         try:
             df.unpersist()
         except Exception:  # pragma: no cover
             pass
     _LIVE.clear()
-    # checkpointed frames stay tracked until a sweep actually deletes
-    # their files — a per-query release_all() must not forget files a
-    # session-end cleanup still wants to remove (the handles are tiny
-    # logical plans, not blocks)
-    keep: list[DataFrame] = []
     for df in _LIVE_CKPT:
         path = _checkpoint_file(df)
-        if path is None:  # lazy checkpoint that never executed
-            continue
-        sweep = (
-            clean_checkpoints
-            if clean_checkpoints is not None
-            else (
-                _ENGINE_CKPT_DIR is not None
-                # strip any scheme (file:/...) before the prefix test
-                and path.split(":", 1)[-1].lstrip("/").startswith(
-                    _ENGINE_CKPT_DIR.lstrip("/")
-                )
-            )
-        )
-        if sweep:
-            _delete_fs_path(df, path)
-        else:
-            keep.append(df)
-    _LIVE_CKPT[:] = keep
-    # per-query scratch dirs (engine_tmpdir): dead once the previous
-    # query's result is collected — same lifecycle as its blocks.
-    # (See engine_tmpdir's LIFECYCLE CONTRACT: a lazy frame reading
-    # one of these dirs must be collected before this sweep runs.)
-    if _TMP_DIRS:
-        import shutil
-
-        for d in _TMP_DIRS:
-            shutil.rmtree(d, ignore_errors=True)
-            # already gone — drop from the exit sweep so ITS list
-            # doesn't grow unboundedly over a long session either
-            if d in _EXIT_SWEEP_DIRS:
-                _EXIT_SWEEP_DIRS.remove(d)
-        _TMP_DIRS.clear()
+        # the engine-installed dir is local (mkdtemp): strip the
+        # file: scheme Spark reports and delete with the local FS
+        local = "/" + path.split(":", 1)[-1].lstrip("/") if path else ""
+        if _ENGINE_CKPT_DIR and local.startswith(_ENGINE_CKPT_DIR + "/"):
+            shutil.rmtree(local, ignore_errors=True)
+    _LIVE_CKPT.clear()
+    # (engine_tmpdir's LIFECYCLE CONTRACT: a lazy frame reading one of
+    # these dirs must be collected before this sweep runs)
+    for d in _TMP_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+    _TMP_DIRS.clear()

@@ -21,7 +21,7 @@ from ..operators import similarity as sim
 from ..operators import textstats as ts
 from .queries import _drain, _staged_stream, _stream_t, _t, register
 
-# --- shared SQL fragments (one token alphabet everywhere: ADVICE r1) ---
+# --- shared SQL fragments (one token alphabet everywhere) ---
 
 #: DuckDB uses RE2 which understands the same \p{L}\p{N} classes as
 #: Spark's Java regex — verified; this is THE token alphabet.
@@ -431,30 +431,37 @@ LIMIT 10
 assert _ivf_oracle(1) != _ivf_oracle(3)
 
 
-#: one persisted IVF index per (session, sf_dir): built on first use
-#: (the offline indexing job), reused by every subsequent IVF query in
-#: the session — the query path never re-aggregates the corpus.
-_IVF_INDEX_CACHE: dict[tuple[str, ...], str] = {}
+#: persisted indexes, one per (kind, session, sf_dir): built on first
+#: use (the offline indexing job), reused by every later query in the
+#: session — the query path never re-aggregates the corpus.
+_INDEX_CACHE: dict[tuple[str, ...], str] = {}
+
+
+def _session_index(spark: SparkSession, kind: str, sf_dir: str, build) -> str:
+    """The session-lived dir of index ``kind`` over ``sf_dir``, built
+    by ``build(path)`` on the session's first call. The dir is claimed
+    under the engine's scratch root before the build starts, so a
+    build that dies midway leaves nothing outside that root; no
+    release_all() deletes it."""
+    key = (kind, spark.sparkContext.applicationId, sf_dir)
+    if key not in _INDEX_CACHE:
+        import re
+
+        from ..materialize import session_dir
+
+        path = session_dir(re.sub(r"[^A-Za-z0-9_]", "_", "_".join(key)))
+        build(path)
+        _INDEX_CACHE[key] = path
+    return _INDEX_CACHE[key]
 
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
-        import os
-        import re
-        import tempfile
-
-        from ..materialize import track_session_dir
-
-        tag = re.sub(r"[^A-Za-z0-9_]", "_", "_".join(key))
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{tag}")
-        sim.build_ivf_index(_t(spark, sf_dir, "embeddings"), _EMB_DIM, path)
-        # session-scoped (every later IVF query serves from it) →
-        # swept at process exit, never by release_all (r8 verdict
-        # measured ~220 orphan index dirs / 670 MB per judge session)
-        track_session_dir(path)
-        _IVF_INDEX_CACHE[key] = path
-    return _IVF_INDEX_CACHE[key]
+    return _session_index(
+        spark, "ivf", sf_dir,
+        build=lambda path: sim.build_ivf_index(
+            _t(spark, sf_dir, "embeddings"), _EMB_DIM, path
+        ),
+    )
 
 
 @register("emb_ivf_topk", oracle=_ivf_oracle(1), tags=("LLM", "similarity"))
@@ -463,8 +470,8 @@ def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py:build_ivf_index + ivf_search): k-means
     cells trained once offline, corpus stored partitionBy(cell); the
     query path reads the tiny centroid table, routes, and scans only
-    the probed cell's partition — no full-corpus aggregate per query
-    (the r3 review's fix). Plan-pinned by
+    the probed cell's partition — no full-corpus aggregate per query.
+    Plan-pinned by
     tests/test_llm_operators.py::test_ivf_search_plan_has_no_corpus_aggregate."""
     emb = _t(spark, sf_dir, "embeddings")
     q = sim.query_vector(emb, _QUERY_VEC_ID)
@@ -767,7 +774,7 @@ LIMIT 10
 
 
 #: trained PQ codebooks per (session, sf_dir) — training is the
-#: offline job, serving reuses it (the _IVF_INDEX_CACHE pattern)
+#: offline job, serving reuses it (the _INDEX_CACHE pattern)
 _PQ_BOOKS_CACHE: dict[tuple[str, ...], list] = {}
 
 
@@ -780,28 +787,13 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list:
     return _PQ_BOOKS_CACHE[key]
 
 
-#: one persisted IVF-PQ index per (session, sf_dir) — the
-#: _IVF_INDEX_CACHE pattern for the two-level index
-_IVFPQ_INDEX_CACHE: dict[tuple[str, ...], str] = {}
-
-
 def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_INDEX_CACHE:
-        import os
-        import re
-        import tempfile
-
-        from ..materialize import track_session_dir
-
-        tag = re.sub(r"[^A-Za-z0-9_]", "_", "_".join(key))
-        path = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_ivfpq_{tag}"
-        )
-        sim.build_ivfpq_index(_t(spark, sf_dir, "embeddings"), _EMB_DIM, path)
-        track_session_dir(path)
-        _IVFPQ_INDEX_CACHE[key] = path
-    return _IVFPQ_INDEX_CACHE[key]
+    return _session_index(
+        spark, "ivfpq", sf_dir,
+        build=lambda path: sim.build_ivfpq_index(
+            _t(spark, sf_dir, "embeddings"), _EMB_DIM, path
+        ),
+    )
 
 
 @register(
@@ -952,18 +944,12 @@ def _ivf_appended_index_path(
     """Base index trained on 80% of the vectors + the other 20%
     appended as two delta batches — the shared fixture of the append
     and compact registry queries (built once per app+sf+variant; the
-    deterministic k-means makes every build identical)."""
-    import os
-    import re
-    import tempfile
-
-    from ..materialize import track_session_dir
+    deterministic k-means makes every build identical). The
+    ``"compact"`` variant then folds the two delta batches with
+    ``ivf_compact``."""
     from ..streaming.sinks import ivf_append_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key not in _IVF_INDEX_CACHE:
-        tag = re.sub(r"[^A-Za-z0-9_]", "_", "_".join(key))
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{tag}")
+    def build(path: str) -> None:
         emb = _t(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") % 5 != 0)
         sim.build_ivf_index(base, _EMB_DIM, path)
@@ -971,9 +957,10 @@ def _ivf_appended_index_path(
         append = ivf_append_sink(path)
         append(late.filter(F.col("vec_id") % 2 == 0), 0)
         append(late.filter(F.col("vec_id") % 2 != 0), 1)
-        track_session_dir(path)
-        _IVF_INDEX_CACHE[key] = path
-    return _IVF_INDEX_CACHE[key]
+        if variant == "compact":
+            sim.ivf_compact(spark, path)
+
+    return _session_index(spark, "ivf_" + variant, sf_dir, build=build)
 
 
 @register(
@@ -992,16 +979,11 @@ def emb_ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, from two file sets per cell instead of three. Both the
     fold (returns 2 batches the first time) and the served results
     are therefore under the oracle's hash check."""
-    key = (spark.sparkContext.applicationId, sf_dir, "compacted")
-    if key not in _IVF_INDEX_CACHE:
-        idx = _ivf_appended_index_path(spark, sf_dir, "compact")
-        sim.ivf_compact(spark, idx)
-        _IVF_INDEX_CACHE[key] = idx
+    idx = _ivf_appended_index_path(spark, sf_dir, "compact")
     emb = _t(spark, sf_dir, "embeddings")
     q = sim.query_vector(emb, _QUERY_VEC_ID)
     return sim.ivf_search(
-        spark, _IVF_INDEX_CACHE[key], q, k=10,
-        exclude_id=_QUERY_VEC_ID, probes=2,
+        spark, idx, q, k=10, exclude_id=_QUERY_VEC_ID, probes=2
     )
 
 
@@ -1367,7 +1349,7 @@ GROUP BY s.source
     tags=("LLM", "pipeline"),
 )
 def corpus_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r4 curation pipeline composed as ONE plan: per-source
+    """The curation pipeline composed as ONE plan: per-source
     ADAPTIVE quality gate (each source keeps its ≥-median half) ∧
     C4 span hygiene (docs losing > half their chunks to corpus-wide
     span removal drop) ∧ DSIR importance (top quartile vs the
@@ -2209,7 +2191,7 @@ def doc_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sign-LSH embedding near-dup + tf-idf (added r2)
+# Sign-LSH embedding near-dup + tf-idf
 # ---------------------------------------------------------------------------
 
 
@@ -2274,17 +2256,15 @@ verified{s} AS (
 #: bands — the auto_lsh_params answer for a ~4k corpus. A fixed pin
 #: exists so a static oracle can bake the plane/band literals; 6
 #: keeps the candidate self-join sub-quadratic at bench SFs, where
-#: the 4×4 pin the registry carried through r5 was the bench's last
-#: quadratic-by-construction plan (r5 verdict: ×11 at the ×10 probe).
+#: a 4×4 pin is quadratic by construction (×11 time at ×10 corpus).
 _LSH_PIN = 6
 
 #: exact fixture row counts from parquet FOOTERS, keyed
 #: (abspath(sf_dir), table) — feeds ``approx_count`` at every
 #: pinned-knob registry call site so the fixed-knob guard's corpus
-#: check never runs a Spark job at plan-build time (r9 ADVICE: the
-#: guard's eager emb.count() charged a full corpus count to every
-#: invocation, including both timed bench passes, and made plan
-#: construction side-effectful).
+#: check never runs a Spark job at plan-build time (an eager
+#: emb.count() would charge a full corpus count to every invocation
+#: and make plan construction side-effectful).
 _COUNT_CACHE: dict[tuple[str, str], int] = {}
 
 
@@ -2653,10 +2633,9 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark loop is checked by a different algorithm. Bands are passed
     EXPLICITLY (the library default is N-derived via auto_lsh_params)
     because the oracle bakes the same plane/band literals — pinned at
-    6×6 (_LSH_PIN), not the quadratic-by-construction 4×4 the
-    registry carried through r5. GUARD-PROTECTED (r9): this pinned
-    width measured ×422.6 at ×100 corpus (PROBE_r08.json), so
-    rh_near_dup_pairs now raises past
+    6×6 (_LSH_PIN), not the quadratic-by-construction 4×4.
+    GUARD-PROTECTED: this pinned width measured ×422.6 at ×100
+    corpus, so rh_near_dup_pairs raises past
     similarity.FIXED_KNOB_GUARD_N=50k vectors — the fixture here is
     2k rows at sf0.1, far under; at production N this exact call
     fails fast and points at emb_semantic_dedup_auto's path."""
@@ -2735,8 +2714,8 @@ def emb_semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of LSH bucket luck, and the coarse quantizer is the
     session's PERSISTED IVF index reused verbatim — one training job
     feeds ANN serving, cluster profiling, and dedup.
-    GUARD-PROTECTED (r9): this FIXED-k=8 shape measured ×155.8 at
-    ×100 corpus (PROBE_r08.json); cluster_near_dup_pairs now raises
+    GUARD-PROTECTED: this FIXED-k=8 shape measured ×155.8 at ×100
+    corpus; cluster_near_dup_pairs raises
     when an under-provisioned quantizer (expected cell > 4·512)
     meets >50k vectors — the fixture stays ≤2k; at production N use
     emb_semantic_dedup_clustered_auto's k=auto_k_cells(n)."""
@@ -2804,7 +2783,7 @@ def emb_semantic_dedup_clustered_auto(
     """Cluster-pruned SemDeDup at its PUBLISHED operating point: the
     cell count grows with the corpus (k = clamp(N/512, 8, 1024)) so
     expected cluster size stays put and within-cell pair work stays
-    linear — the r8 ×100 probe measured this at ×12 where the
+    linear — at ×100 corpus this measured ×12 where the
     fixed-k twin (emb_semantic_dedup_clustered) measured ×155.8.
     Training runs the same deterministic Lloyd recipe at the derived
     k (dispatching to the Arrow matmul assign above LARGE_K_ASSIGN);
@@ -2841,31 +2820,17 @@ LIMIT 10
 """
 
 
-#: one persisted AUTO-K IVF index per (session, sf_dir) — the
-#: production-knob sibling of _IVF_INDEX_CACHE (fixed IVF_CELLS,
-#: which the bulk of the serving oracles replay)
-_IVF_AUTO_INDEX_CACHE: dict[tuple[str, ...], str] = {}
-
-
 def _ivf_auto_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_AUTO_INDEX_CACHE:
-        import os
-        import re
-        import tempfile
-
-        from ..materialize import track_session_dir
-
-        emb = _t(spark, sf_dir, "embeddings")
-        k = _autok(_corpus_count(sf_dir))
-        tag = re.sub(r"[^A-Za-z0-9_]", "_", "_".join(key))
-        path = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_ivfauto_{tag}"
-        )
-        sim.build_ivf_index(emb, _EMB_DIM, path, n_cells=k)
-        track_session_dir(path)
-        _IVF_AUTO_INDEX_CACHE[key] = path
-    return _IVF_AUTO_INDEX_CACHE[key]
+    """The AUTO-K IVF index: the production-knob sibling of
+    :func:`_ivf_index_path` (fixed IVF_CELLS, which the bulk of the
+    serving oracles replay)."""
+    return _session_index(
+        spark, "ivfauto", sf_dir,
+        build=lambda path: sim.build_ivf_index(
+            _t(spark, sf_dir, "embeddings"), _EMB_DIM, path,
+            n_cells=_autok(_corpus_count(sf_dir)),
+        ),
+    )
 
 
 @register(
@@ -2878,9 +2843,9 @@ def emb_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (k = clamp(N/512, 8, 1024) — fixed ~512-vector cells at any
     corpus size, so per-query serve cost is probes × 512 vectors
     FOREVER, where the fixed-IVF_CELLS registry index's cells grow
-    with N: the r9 ×100 probe measured the streaming serve through
-    the fixed-k index at ×112.5 vs the auto-k serve core's
-    near-flat economics). The driver-hash closes the asymmetry where
+    with N: at ×100 corpus the streaming serve through the fixed-k
+    index measured ×112.5 against the auto-k serve core's near-flat
+    economics). The oracle hash closes the asymmetry where
     only fixed-k serving was oracle-gated: the oracle re-derives k
     from count(*) with the same clamp and replays Lloyd + routing +
     the pruned scan."""
@@ -2894,8 +2859,8 @@ def emb_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: forces the Arrow matmul assignment path: k strictly above the
 #: LARGE_K_ASSIGN=64 dispatch cutover at EVERY test SF (the auto-k
-#: queries only cross it past ~33k vectors, so until r9 the Arrow
-#: path was pytest-pinned but never driver-hashed)
+#: queries only cross it past ~33k vectors, so without this query
+#: the Arrow path would be pytest-pinned but never oracle-hashed)
 _ARROW_ASSIGN_K = sim.LARGE_K_ASSIGN + 32
 
 
@@ -2924,11 +2889,11 @@ def emb_cells_arrow_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic Lloyd quantizer at k=96 — above the
     LARGE_K_ASSIGN=64 cutover, so BOTH the training rounds and the
     final assignment dispatch to the one-BLAS-matmul-per-Arrow-batch
-    kernel the registry's small-k queries never exercise (r8
-    measured the JVM literal argmax at 384 s for 200k×k391 where the
-    matmul takes seconds — this is the production large-k path, and
-    as of r9 it is driver-hashed, not just pytest-pinned against
-    the literal path)."""
+    kernel the registry's small-k queries never exercise (the JVM
+    literal argmax measured 384 s for 200k×k391 where the matmul
+    takes seconds — this is the production large-k path, and here it
+    is oracle-hashed, not just pytest-pinned against the literal
+    path)."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = sim.train_kmeans_cells(
         emb, dim=_EMB_DIM, n_cells=_ARROW_ASSIGN_K, iters=sim.IVF_ITERS
@@ -2990,8 +2955,8 @@ def emb_semantic_dedup_clustered_banded(
     cell count. The cell id rides the bucket explode (zero extra
     shuffle); band width pinned 6×6 here so the oracle bakes the
     same plane literals (the library default is N-derived).
-    GUARD-PROTECTED (r9): the 6×6 pin measured ×126.5 at ×100
-    corpus (PROBE_r08.json); cluster_banded_near_dup_pairs raises on
+    GUARD-PROTECTED: the 6×6 pin measured ×126.5 at ×100 corpus;
+    cluster_banded_near_dup_pairs raises on
     a pinned band width past 50k vectors (fixed CELL count alone is
     fine here — the band term is what keeps it linear; the auto-band
     twin over the same k=8 quantizer probed ×9.45)."""

@@ -250,8 +250,8 @@ def dau_warehouse_day_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the "serving" read: one day (the endpoint's `td` request param,
     # here data-derived for determinism), pruned at the source. The
     # served day comes from the warehouse's partition DIRECTORY
-    # listing — FileStatus metadata, not a second full scan of events
-    # (the r3-flagged double-scan). The partition column reads back
+    # listing — FileStatus metadata, not a second full scan of
+    # events. The partition column reads back
     # type-inferred (DATE for yyyy-MM-dd values); filter BEFORE the
     # to-string cast so pruning stays static, then normalize to the
     # oracle's string dt.
@@ -695,20 +695,16 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at write time and amortized over every subsequent join. The oracle
     runs the plain join, proving the bucketed layout changes the plan,
     not the answer."""
-    import os
-    import tempfile
-
-    from ..materialize import track_session_dir
+    from ..materialize import session_dir
     from ..sources.warehouse import write_bucketed
 
     # fixed per-session table names + paths, overwritten on every
     # call: repeated invocations (warm-up + timed bench passes) stay
     # bounded at one table pair instead of leaking uuid-named catalog
-    # entries and tmpdirs; the applicationId suffix keeps concurrent
-    # sessions (parallel gate + bench JVMs) from clobbering each other.
+    # entries and dirs; the applicationId suffix keeps two sessions of
+    # one process from clobbering each other's tables.
     app = spark.sparkContext.applicationId.replace("-", "_")
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_bucketed_{app}")
-    track_session_dir(base)
+    base = session_dir(f"bucketed_{app}")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -959,7 +955,7 @@ def order_wide_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     order key; ``nation`` (fixed 25 rows) is hint-broadcast;
     ``customer`` SCALES with the data (~15 GB at the 100 TB point) so
     no forced broadcast — AQE picks BHJ while it fits and falls back
-    to SMJ beyond (VERDICT r1 #3)."""
+    to SMJ beyond."""
     l = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
@@ -1661,9 +1657,9 @@ def filtered_sorted_paginated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ES ``from(5).size(20)`` is top-25-then-drop-5: take the top 25 via
     ``orderBy().limit(25)`` — TakeOrderedAndProject, per-partition
     partial top-k, no global sort — then number the 25 survivors with
-    a window that is trivially single-task *on 25 rows* (VERDICT r1:
-    the old unpartitioned window ranked every filtered row in one
-    task)."""
+    a window that is trivially single-task *on 25 rows* (an
+    unpartitioned window over every filtered row would rank them all
+    in one task)."""
     from pyspark.sql import Window
 
     p = _t(spark, sf_dir, "part")
@@ -4154,12 +4150,12 @@ def part_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_link_prediction_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part_link_prediction with the EXACT threshold prune
-    (operators/graph.py:link_prediction threshold_prune=True —
-    PROBE_r12's residual-bottleneck fix): a hub-subset probe lower-
-    bounds the k-th common-neighbor count τ, and the containment
+    (operators/graph.py:link_prediction threshold_prune=True): a
+    hub-subset probe lower-bounds the k-th common-neighbor count τ,
+    and the containment
     bound common_n(v,w) ≤ min(deg v, deg w) drops every wedge pair
-    with min(deg) < τ BEFORE the pair shuffle — the shuffle the r12
-    probe measured as the post-cap bottleneck (map-side combine
+    with min(deg) < τ BEFORE the pair shuffle — the shuffle measured
+    as the bottleneck once hub degrees are capped (map-side combine
     cannot reduce ~wedge-count nearly-distinct pairs; this filter
     can). Subset top-k underestimates global top-k, so τ is always
     valid and the result must hash-equal the unpruned operator under

@@ -111,12 +111,6 @@ def get_spark(
     driver JVM this call starts uses the class-data-sharing archive
     (module docstring).
     """
-    # reclaim spark-graft-* tmp orphans a SIGKILLed predecessor left
-    # (atexit sweeps cover normal exits only); once per process
-    from .materialize import startup_sweep_once
-
-    startup_sweep_once()
-
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
 

@@ -143,8 +143,7 @@ def _rename_or_raise(fs, src, dst) -> None:
     RETURN, not an exception (unlike os.rename) — a silently failed
     swap rename would let the compaction proceed into its cleanup
     steps from an unswapped state. Every swap rename goes through
-    this raising wrapper (same contract as the IVF index's helper in
-    operators/similarity.py)."""
+    this wrapper: a failed rename raises."""
     if not fs.rename(src, dst):
         raise IOError(f"rename failed: {src} -> {dst}")
 

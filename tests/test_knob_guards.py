@@ -1,12 +1,12 @@
-"""Fixed-knob corpus-size guards (r9).
+"""Fixed-knob corpus-size guards.
 
-PROBE_r08 measured the three pinned-knob registry twins quadratic at
-×100 corpus (emb_semantic_dedup 6×6 ×422.6, fixed-k clustered
-×155.8, 6×6 cluster∩band ×126.5) while their N-derived twins probed
-×9–×12. The guards under test here make the quadratic setting
-IMPOSSIBLE to lift into a big job: any explicitly pinned band width
-(or an under-provisioned fixed quantizer) on a corpus over
-similarity.FIXED_KNOB_GUARD_N raises at plan-build time unless the
+The three pinned-knob registry twins run quadratic in the corpus:
+at ×100 corpus emb_semantic_dedup's 6×6 pin took ×422.6, the fixed-k
+clustered one ×155.8 and the 6×6 cluster∩band one ×126.5, while
+their N-derived twins took ×9–×12. The guards under test here make
+the quadratic setting IMPOSSIBLE to lift into a big job: any
+explicitly pinned band width (or an under-provisioned fixed
+quantizer) on a corpus over similarity.FIXED_KNOB_GUARD_N raises at plan-build time unless the
 caller passes allow_fixed_knobs=True.
 
 All tests build plans only — the guard must fire BEFORE any heavy
@@ -141,13 +141,10 @@ def test_autok_registry_alias_is_shared():
 
 
 def test_pinned_registry_plan_building_runs_zero_spark_jobs(spark, sf_dir, monkeypatch):
-    """r9 ADVICE: the fixed-knob guard's corpus check used to run an
-    eager emb.count() Spark job at plan-BUILD time on every pinned
-    registry invocation (both timed bench passes included). The
-    registry now feeds the guard from parquet footer metadata
-    (llm_queries._corpus_count), so building any pinned-knob plan
-    must touch zero Spark actions — pinned here by making count()
-    explode."""
+    """Building a pinned-knob registry plan runs no Spark job: the
+    fixed-knob guard reads the corpus size from parquet footer
+    metadata (llm_queries._corpus_count), not from an eager
+    emb.count() — pinned here by making count() explode."""
     from pyspark.sql import DataFrame
 
     from sparkstreaming_realtime_spark.plans import llm_queries as lq

@@ -1,14 +1,15 @@
 """The scaling generator's embedding transform must be injective per
-copy (ADVICE r4): the circular shift alone cycles with period 63, so
+copy: the circular shift alone cycles with period 63, so
 copies i and i+63 used to apply the identical rotation — exact
 duplicate vectors (and the quadratic pair-graph artifact the rotation
 exists to prevent) reappeared past factor 63."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_copy_transforms_are_distinct_past_the_shift_period(spark):
@@ -37,7 +38,7 @@ def test_copy_transforms_are_distinct_past_the_shift_period(spark):
 
 
 def test_document_transforms_are_distinct_and_never_identity(spark):
-    """The text analog of the embedding-injectivity bug (r9): the old
+    """The text analog of the embedding-injectivity bug: the old
     per-copy letter ROTATION ``src[i:] + src[:i]`` is the identity for
     every i >= 26 (slicing caps at the string end), so a ×100 fixture
     carried ~74 verbatim twins of every base doc and the document
@@ -52,7 +53,7 @@ def test_document_transforms_are_distinct_and_never_identity(spark):
     assert len(set(perms.values())) == len(perms)
     # deterministic across calls (fixture rebuilds must reproduce)
     assert _letter_perm(src, 27) == perms[27]
-    # VERSION-stable (r9 ADVICE): the permutation is pinned to the md5
+    # VERSION-stable: the permutation is pinned to the md5
     # SPEC (letters sorted by md5(f"{seed}:{ch}")), not to
     # random-module internals — a fixture regenerated on any
     # interpreter must byte-match the one behind recorded probe

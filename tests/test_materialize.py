@@ -1,8 +1,14 @@
-"""materialize.py lifecycle: DISK_ONLY persist tracking, and the
-opt-in reliable-checkpoint retention sweep (VERDICT r3 #7)."""
+"""materialize.py lifecycle: DISK_ONLY persist tracking, the sweep of
+rdd-N dirs under the engine-installed checkpoint dir, and the
+per-process scratch root (per-query dirs, session dirs, the start-up
+sweep of dead processes' roots)."""
 
 import os
+import subprocess
+import sys
+import textwrap
 
+from sparkstreaming_realtime_spark import materialize as m
 from sparkstreaming_realtime_spark.materialize import (
     _checkpoint_file,
     _LIVE,
@@ -11,6 +17,8 @@ from sparkstreaming_realtime_spark.materialize import (
     release,
     release_all,
 )
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _local(path: str) -> str:
@@ -26,8 +34,52 @@ def _unset_checkpoint_dir(spark) -> None:
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
 
 
+#: a stand-in session for engine processes started by these tests: the
+#: scratch-root code needs only the checkpoint-dir accessors and an
+#: applicationId, so no JVM is started
+_STUB_SPARK = """
+import os, signal
+from sparkstreaming_realtime_spark import materialize as m
+
+
+class _SC:
+    applicationId = "local-stub"
+    _dir = None
+
+    def getCheckpointDir(self):
+        return self._dir
+
+    def setCheckpointDir(self, d):
+        self._dir = d
+
+
+class _Spark:
+    sparkContext = _SC()
+
+
+spark = _Spark()
+"""
+
+
+def _engine_proc(tmp, code: str) -> subprocess.CompletedProcess:
+    """Run ``code`` (after the stub-session prelude) in a fresh
+    interpreter whose temp dir is ``tmp``."""
+    env = dict(os.environ, TMPDIR=str(tmp))
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
+    return subprocess.run(
+        [sys.executable, "-c", _STUB_SPARK + textwrap.dedent(code)],
+        env=env, cwd=_REPO, capture_output=True, text=True, timeout=120,
+    )
+
+
+def _root_name(pid: int, start) -> str:
+    return f"sparkgraft-{pid}-{start}"
+
+
 def test_persist_branch_tracks_and_releases(spark):
-    release_all(clean_checkpoints=True)  # isolate from other tests
+    release_all()  # isolate from other tests
     _unset_checkpoint_dir(spark)
     df = materialize(spark.range(100).selectExpr("id", "id * 2 AS v"))
     assert any(d is df for d in _LIVE)
@@ -38,8 +90,10 @@ def test_persist_branch_tracks_and_releases(spark):
     assert not df.storageLevel.useDisk
 
 
-def test_checkpoint_cleanup_is_opt_in(spark, tmp_path):
-    release_all(clean_checkpoints=True)
+def test_deployment_checkpoint_dir_is_never_touched(spark, tmp_path):
+    """release_all() deletes no checkpoint file under a checkpoint
+    dir the deployment configured, and stops tracking its frames."""
+    release_all()
     _unset_checkpoint_dir(spark)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
@@ -49,53 +103,46 @@ def test_checkpoint_cleanup_is_opt_in(spark, tmp_path):
         b = materialize(spark.range(60).selectExpr("id"), eager=True)
         pa, pb = _local(_checkpoint_file(a)), _local(_checkpoint_file(b))
         assert os.path.isdir(pa) and os.path.isdir(pb)
-        # default release_all: files SURVIVE (deployment owns retention)
+        assert len(_LIVE_CKPT) == 2
         release_all()
         assert os.path.isdir(pa) and os.path.isdir(pb)
-        # frames stay tracked, so a later opt-in sweep still deletes
-        assert len(_LIVE_CKPT) == 2
-        release_all(clean_checkpoints=True)
-        assert not os.path.exists(pa) and not os.path.exists(pb)
         assert _LIVE_CKPT == []
     finally:
         # unset so later tests see the engine's no-checkpoint default
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
+        _unset_checkpoint_dir(spark)
 
 
-def test_release_single_checkpointed_frame(spark, tmp_path):
-    release_all(clean_checkpoints=True)
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "ck2"))
+def test_release_single_checkpointed_frame(spark):
+    """release(df) stops tracking one checkpointed frame and keeps its
+    files, even under the engine-installed dir; release_all() then
+    deletes only the frames still tracked."""
+    release_all()
+    _unset_checkpoint_dir(spark)
+    m.ensure_checkpoint_dir(spark)
     try:
         a = materialize(spark.range(10).selectExpr("id"), eager=True)
         b = materialize(spark.range(20).selectExpr("id"), eager=True)
         pa, pb = _local(_checkpoint_file(a)), _local(_checkpoint_file(b))
-        release(a, clean_checkpoint=True)
-        assert not os.path.exists(pa)  # a's files gone ...
-        assert os.path.isdir(pb)  # ... b's untouched
+        release(a)
+        assert os.path.isdir(pa) and os.path.isdir(pb)
         assert [d is b for d in _LIVE_CKPT] == [True]
-        release_all(clean_checkpoints=True)
+        release_all()
+        assert os.path.isdir(pa)  # released alone: its files stay
         assert not os.path.exists(pb)
     finally:
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.empty())
+        _unset_checkpoint_dir(spark)
 
 
 def test_engine_owned_checkpoints_autosweep_between_queries(spark):
-    """The default release_all() (what every registry query runs on
-    entry) must delete finished frames' rdd-N dirs when the engine
-    itself installed the checkpoint dir — a long gate/bench session
-    previously accumulated one dir per iterative query until process
-    exit. A deployment-configured dir (the tests above) still
-    survives the default sweep."""
+    """The release_all() every registry query runs on entry deletes
+    finished frames' rdd-N dirs when the engine itself installed the
+    checkpoint dir, so a long gate/bench session does not pile up one
+    dir per iterative query until process exit."""
     import glob
 
-    from sparkstreaming_realtime_spark.materialize import (
-        ensure_checkpoint_dir,
-    )
-
-    release_all(clean_checkpoints=True)
+    release_all()
     _unset_checkpoint_dir(spark)
-    ensure_checkpoint_dir(spark)
+    m.ensure_checkpoint_dir(spark)
     root = _local(spark.sparkContext.getCheckpointDir())
     try:
         # a 3-query sequence: each query checkpoints an intermediate,
@@ -113,23 +160,20 @@ def test_engine_owned_checkpoints_autosweep_between_queries(spark):
 
 
 def test_ensure_checkpoint_dir_installs_and_respects(spark, tmp_path):
-    """ensure_checkpoint_dir: installs a dir when none is set (so
-    iterative loops always cut lineage), and NEVER overrides a
-    deployment-configured one."""
-    from sparkstreaming_realtime_spark.materialize import (
-        ensure_checkpoint_dir,
-    )
-
+    """ensure_checkpoint_dir: installs a dir under the scratch root
+    when none is set (so iterative loops always cut lineage), and
+    NEVER overrides a deployment-configured one."""
     sc = spark.sparkContext
     _unset_checkpoint_dir(spark)
     assert sc.getCheckpointDir() is None
-    ensure_checkpoint_dir(spark)
+    m.ensure_checkpoint_dir(spark)
     installed = sc.getCheckpointDir()
     assert installed is not None
+    assert _local(installed).startswith(m._root() + "/ckpt-")
     try:
         configured = str(tmp_path / "deploy_ck")
         sc.setCheckpointDir(configured)
-        ensure_checkpoint_dir(spark)
+        m.ensure_checkpoint_dir(spark)
         assert configured in sc.getCheckpointDir()
     finally:
         _unset_checkpoint_dir(spark)
@@ -137,269 +181,185 @@ def test_ensure_checkpoint_dir_installs_and_respects(spark, tmp_path):
 
 def test_engine_tmpdirs_swept_by_release_all(spark):
     """Per-query scratch dirs (engine_tmpdir) die at the next
-    release_all — the r8 verdict measured ~220 orphan parity/index
-    dirs (670 MB) per judge session from bare mkdtemp in query code;
-    this pins the zero-orphan contract."""
-    from sparkstreaming_realtime_spark.materialize import (
-        _TMP_DIRS,
-        engine_tmpdir,
-    )
-
-    d1 = engine_tmpdir("t_sweep_a_")
-    d2 = engine_tmpdir("t_sweep_b_")
+    release_all: a long session keeps no finished query's parity or
+    layout dirs."""
+    d1 = m.engine_tmpdir("t_sweep_a_")
+    d2 = m.engine_tmpdir("t_sweep_b_")
     with open(os.path.join(d1, "x"), "w") as f:
         f.write("scratch")
-    assert os.path.isdir(d1) and os.path.isdir(d2)
-    assert d1 in _TMP_DIRS and d2 in _TMP_DIRS
+    assert os.path.dirname(d1) == os.path.dirname(d2) == m._root()
+    assert d1 in m._TMP_DIRS and d2 in m._TMP_DIRS
     release_all()
     assert not os.path.exists(d1) and not os.path.exists(d2)
-    assert not _TMP_DIRS
+    assert not m._TMP_DIRS
 
 
-def test_session_dirs_survive_release_all(spark, tmp_path):
-    """Session-scoped dirs (persisted IVF indexes) must NOT be swept
-    mid-session — later queries serve from them; they are removed at
-    process exit only."""
-    from sparkstreaming_realtime_spark.materialize import (
-        _SESSION_DIRS,
-        track_session_dir,
-    )
-
-    d = str(tmp_path / "ivf_like")
-    os.makedirs(d)
-    track_session_dir(d)
-    track_session_dir(d)  # idempotent — one atexit entry
+def test_session_dirs_survive_release_all(spark):
+    """Session dirs (persisted indexes) live under the scratch root
+    and survive release_all — later queries serve from them."""
+    d = m.session_dir("t_session_ivf_like")
+    assert d == os.path.join(m._root(), "t_session_ivf_like")
+    with open(os.path.join(d, "part"), "w") as f:
+        f.write("index")
+    assert m.session_dir("t_session_ivf_like") == d  # same dir again
     release_all()
-    assert os.path.isdir(d)
-    assert _SESSION_DIRS.count(d) == 1
+    assert os.path.isfile(os.path.join(d, "part"))
 
 
 def test_parity_query_leaves_no_orphan_tmpdirs(spark, sf_dir):
-    """End-to-end: run a streaming-parity registry query (the r8
-    leak's biggest contributor), collect, then release_all — every
-    engine temp dir it created must be gone."""
-    import glob
-    import tempfile
-
+    """End-to-end: after a streaming-parity registry query is
+    collected, the next release_all leaves no new dir in the scratch
+    root."""
     from sparkstreaming_realtime_spark.plans import queries
 
     release_all()  # clean slate
-    pats = [
-        os.path.join(tempfile.gettempdir(), "*idem_parity_*"),
-        os.path.join(tempfile.gettempdir(), "*observe_parity_*"),
-    ]
-    before = {p for pat in pats for p in glob.glob(pat)}
-    qs = queries()
-    qs["streaming_observe_metrics_parity"](spark, sf_dir).collect()
+    before = set(os.listdir(m._root()))
+    queries()["streaming_observe_metrics_parity"](spark, sf_dir).collect()
+    assert set(os.listdir(m._root())) - before  # it did use the root
     release_all()
-    after = {p for pat in pats for p in glob.glob(pat)}
+    after = set(os.listdir(m._root()))
     assert after - before == set(), f"orphans: {after - before}"
 
 
-def test_exit_sweep_is_one_handler_and_tracks_both_dir_kinds(spark):
-    """r9 ADVICE: engine_tmpdir used to register one atexit rmtree
-    PER DIRECTORY — unbounded handler growth over a long session.
-    Now a single shared sweep callback owns every engine dir: tmp
-    dirs leave the exit list when release_all sweeps them, session
-    dirs stay until _exit_sweep() itself runs."""
-    from sparkstreaming_realtime_spark import materialize as m
-
-    d1 = m.engine_tmpdir("t_exit_a_")
-    assert m._EXIT_SWEEP_REGISTERED  # lazily registered, exactly once
-    assert d1 in m._EXIT_SWEEP_DIRS
-    release_all()
-    # swept dirs leave the exit list too — neither list grows forever
-    assert d1 not in m._EXIT_SWEEP_DIRS and not os.path.exists(d1)
-
-    import tempfile
-
-    d2 = tempfile.mkdtemp(prefix="t_exit_session_")
-    m.track_session_dir(d2)
-    m.track_session_dir(d2)  # idempotent — one entry
-    assert m._EXIT_SWEEP_DIRS.count(d2) == 1
-    release_all()
-    assert os.path.isdir(d2)  # session dirs survive the query sweep
-    # run the exit sweep against THIS test's dir only — running it on
-    # the shared list mid-session would delete the session's live
-    # persisted-index dirs out from under the IVF query cache (it
-    # did: 9 later oracle tests failed on a missing centroids path)
-    saved = m._EXIT_SWEEP_DIRS[:]
-    m._EXIT_SWEEP_DIRS[:] = [d2]
-    try:
-        m._exit_sweep()  # what atexit will run
-        assert not os.path.exists(d2)
-        assert not m._EXIT_SWEEP_DIRS
-    finally:
-        m._EXIT_SWEEP_DIRS[:] = [d for d in saved if d != d2]
-        m._SESSION_DIRS.remove(d2)
+def test_exit_sweep_is_one_handler_and_tracks_both_dir_kinds(tmp_path):
+    """One atexit handler per process removes the whole root on a
+    normal exit: per-query dirs, session dirs and the engine
+    checkpoint dir alike."""
+    proc = _engine_proc(tmp_path, """
+        import atexit
+        handlers = atexit._ncallbacks()
+        m.engine_tmpdir("qa_")
+        m.session_dir("idx")
+        m.ensure_checkpoint_dir(spark)
+        m.engine_tmpdir("qb_")
+        assert atexit._ncallbacks() == handlers + 1
+        kinds = sorted(name[:3] for name in os.listdir(m._root()))
+        assert kinds == ["ckp", "idx", "qa_", "qb_"], kinds
+        print(m._root())
+    """)
+    assert proc.returncode == 0, proc.stderr
+    root = proc.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
 
 
 def test_startup_sweep_reclaims_sigkill_orphans(tmp_path):
-    """VERDICT r11 #3: atexit never runs for a SIGKILLed/OOM-killed
-    JVM, so its spark-graft-* tmp dirs used to survive forever (six
-    observed). The startup sweep reclaims engine-prefixed dirs older
-    than the age threshold, and ONLY those: fresh dirs (a live
-    concurrent session), this process's own tracked dirs, and
-    foreign-named dirs all survive."""
-    import time
+    """A SIGKILLed engine process runs no atexit handler. The next
+    engine process's first dir creation deletes its whole root: the
+    per-query dir, the index dir claimed before its (stubbed) build
+    and the engine checkpoint dir. A live peer's root, a live pid-1
+    root and a foreign spark-graft-* dir survive; a pid-1 root with a
+    wrong starttime goes."""
+    killed = _engine_proc(tmp_path, """
+        from sparkstreaming_realtime_spark.plans import llm_queries as lq
+        m.engine_tmpdir("idem_parity_")
+        lq._session_index(
+            spark, "ivf", "/data/sf0.01",
+            build=lambda p: open(os.path.join(p, "centroids"), "w").close(),
+        )
+        m.ensure_checkpoint_dir(spark)
+        print(m._root(), flush=True)
+        os.kill(os.getpid(), signal.SIGKILL)
+    """)
+    assert killed.returncode == -9, killed.stderr
+    dead = killed.stdout.strip()
+    assert sorted(n[:4] for n in os.listdir(dead)) == [
+        "ckpt", "idem", "ivf_"
+    ]
+    start1 = m._proc_start_time(1)
+    assert start1 is not None
+    peer = tmp_path / _root_name(os.getpid(), m._proc_start_time(os.getpid()))
+    pid1_live = tmp_path / _root_name(1, start1)
+    pid1_recycled = tmp_path / _root_name(1, start1 + 7)
+    foreign = tmp_path / "spark-graft-ckpt-old"
+    for d in (peer, pid1_live, pid1_recycled, foreign):
+        (d / "sub").mkdir(parents=True)
 
-    from sparkstreaming_realtime_spark import materialize as m
-
-    root = str(tmp_path)
-    old_orphan = tmp_path / "spark-graft-ckpt-dead1"
-    old_scratch = tmp_path / "spark-graft-idem_parity_dead2"
-    fresh = tmp_path / "spark-graft-ckpt-live"
-    foreign = tmp_path / "someone-elses-dir"
-    for d in (old_orphan, old_scratch, fresh, foreign):
-        d.mkdir()
-        (d / "f").write_text("x")
-    stale = time.time() - 4 * 3600
-    for d in (old_orphan, old_scratch, foreign):
-        os.utime(d, (stale, stale))
-    # a dir tracked by THIS process is never touched, however old
-    mine = tmp_path / "spark-graft-ckpt-mine"
-    mine.mkdir()
-    os.utime(mine, (stale, stale))
-    m._EXIT_SWEEP_DIRS.append(str(mine))
-    try:
-        swept = m.sweep_stale_engine_dirs(tmp_root=root)
-    finally:
-        m._EXIT_SWEEP_DIRS.remove(str(mine))
-    assert sorted(swept) == sorted([str(old_orphan), str(old_scratch)])
-    assert not old_orphan.exists() and not old_scratch.exists()
-    assert fresh.is_dir() and foreign.is_dir() and mine.is_dir()
+    nxt = _engine_proc(tmp_path, """
+        m.engine_tmpdir("next_")
+        print(m._root())
+    """)
+    assert nxt.returncode == 0, nxt.stderr
+    left = set(os.listdir(tmp_path))
+    assert os.path.basename(dead) not in left
+    assert pid1_recycled.name not in left
+    assert {peer.name, pid1_live.name, foreign.name} <= left
+    # the next process's own root is gone too: it exited normally
+    assert not os.path.exists(nxt.stdout.strip())
 
 
 def test_startup_sweep_respects_live_owner_marker(tmp_path):
-    """ADVICE r12: a concurrent LIVE session's write-once dirs (an
-    IVF index dir, an idle checkpoint) never refresh their mtime, so
-    the age rule alone could reclaim them from under the peer. The
-    pid liveness marker protects them — and a DEAD owner's marker
-    does not block reclamation."""
-    import subprocess
-    import time
-
-    from sparkstreaming_realtime_spark import materialize as m
-
-    live = tmp_path / "spark-graft-peer-live"
-    dead = tmp_path / "spark-graft-peer-dead"
-    for d in (live, dead):
+    """A root named after a LIVE process incarnation is that process's
+    own: the sweep keeps it. A root named after a reaped child goes."""
+    child = subprocess.Popen(["true"])
+    child.wait()
+    live = tmp_path / _root_name(os.getpid(), m._proc_start_time(os.getpid()))
+    gone = tmp_path / _root_name(child.pid, 12345)
+    for d in (live, gone):
         d.mkdir()
-    # this process stands in for the live peer; a reaped child for
-    # the dead one
-    (live / m.OWNER_MARKER).write_text(str(os.getpid()))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    (dead / m.OWNER_MARKER).write_text(str(proc.pid))
-    stale = time.time() - 4 * 3600
-    for d in (live, dead):
-        os.utime(d, (stale, stale))
-    swept = m.sweep_stale_engine_dirs(tmp_root=str(tmp_path))
-    assert swept == [str(dead)]
-    assert live.is_dir() and not dead.exists()
-
-
-def test_engine_tmpdir_stamps_owner_marker():
-    """Every engine-owned tmp dir carries its creator's pid AND
-    kernel starttime — the pair names a process INCARNATION, so a
-    later process that recycles the pid can't impersonate the owner
-    (ADVICE r13)."""
-    import shutil
-
-    from sparkstreaming_realtime_spark import materialize as m
-
-    d = m.engine_tmpdir("markertest_")
-    try:
-        marker = os.path.join(d, m.OWNER_MARKER)
-        with open(marker) as f:
-            fields = f.read().split()
-        assert fields[0] == str(os.getpid())
-        start = m._proc_start_time(os.getpid())
-        if start is not None:  # Linux: starttime recorded and correct
-            assert fields[1] == str(start)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        m._TMP_DIRS.remove(d)
-        m._EXIT_SWEEP_DIRS.remove(d)
+    proc = _engine_proc(tmp_path, "m.session_dir('x')")
+    assert proc.returncode == 0, proc.stderr
+    assert live.is_dir() and not gone.exists()
 
 
 def test_startup_sweep_detects_recycled_pid(tmp_path):
-    """ADVICE r13: a marker whose pid is alive but whose recorded
-    starttime doesn't match the CURRENT incarnation is a recycled
-    pid — it must not pin the orphan. The correct-incarnation marker
-    of the same pid still protects."""
-    import time
-
-    from sparkstreaming_realtime_spark import materialize as m
-
+    """A root whose pid is alive but whose starttime is not the
+    running incarnation's belongs to a dead process whose pid was
+    reused: it goes. The same pid with the right starttime stays."""
     start = m._proc_start_time(1)  # pid 1 is always alive
     if start is None:
         import pytest
 
         pytest.skip("no /proc on this platform")
-    recycled = tmp_path / "spark-graft-recycled"
-    genuine = tmp_path / "spark-graft-genuine"
+    recycled = tmp_path / _root_name(1, start + 7)
+    genuine = tmp_path / _root_name(1, start)
     for d in (recycled, genuine):
         d.mkdir()
-    (recycled / m.OWNER_MARKER).write_text(f"1 {start + 7}")  # wrong gen
-    (genuine / m.OWNER_MARKER).write_text(f"1 {start}")
-    stale = time.time() - 4 * 3600
-    for d in (recycled, genuine):
-        os.utime(d, (stale, stale))
-    swept = m.sweep_stale_engine_dirs(tmp_root=str(tmp_path))
-    assert swept == [str(recycled)]
+    proc = _engine_proc(tmp_path, "m.engine_tmpdir('x_')")
+    assert proc.returncode == 0, proc.stderr
     assert genuine.is_dir() and not recycled.exists()
 
 
-def test_startup_sweep_caps_legacy_marker_protection(tmp_path):
-    """A bare-pid marker (pre-starttime stamp) that some process
-    answers to protects its dir only up to LEGACY_MARKER_MAX_AGE —
-    an unverifiable owner can't pin an orphan forever (ADVICE r13's
-    PermissionError/recycled-pid path)."""
-    import time
-
-    from sparkstreaming_realtime_spark import materialize as m
-
-    young = tmp_path / "spark-graft-legacy-young"
-    ancient = tmp_path / "spark-graft-legacy-ancient"
-    for d in (young, ancient):
-        d.mkdir()
-        # pid 1: alive forever, and NOT this process — the bare-pid
-        # probe says "something answers", which is all legacy gives
-        (d / m.OWNER_MARKER).write_text("1")
-    t_young = time.time() - 4 * 3600  # past the 3 h age rule
-    t_ancient = time.time() - m.LEGACY_MARKER_MAX_AGE - 3600
-    os.utime(young, (t_young, t_young))
-    os.utime(ancient, (t_ancient, t_ancient))
-    swept = m.sweep_stale_engine_dirs(tmp_root=str(tmp_path))
-    assert swept == [str(ancient)]
-    assert young.is_dir() and not ancient.exists()
+def test_startup_sweep_runs_on_checkpoint_install(tmp_path):
+    """Kill-then-restart: when installing the checkpoint dir is a
+    process's first engine dir, it sweeps a dead predecessor's root
+    — and only once per process."""
+    orphan = tmp_path / _root_name(1, m._proc_start_time(1) + 3)
+    (orphan / "ckpt-killed").mkdir(parents=True)
+    proc = _engine_proc(tmp_path, f"""
+        m.ensure_checkpoint_dir(spark)
+        assert not os.path.exists({str(orphan)!r})
+        os.makedirs({str(orphan)!r})
+        m.engine_tmpdir("later_")  # the root exists: no second sweep
+        assert os.path.isdir({str(orphan)!r})
+    """)
+    assert proc.returncode == 0, proc.stderr
 
 
-def test_startup_sweep_runs_on_checkpoint_install(spark, tmp_path, monkeypatch):
-    """Kill-then-restart: a fresh engine session (here: the next
-    ensure_checkpoint_dir install) sweeps a predecessor's stale
-    checkpoint dir from tmp."""
-    import tempfile
-    import time
+def test_only_materialize_picks_temp_paths():
+    """Every engine dir lives under the one scratch root, so no module
+    of the package (nor bench.py) but materialize.py may ask
+    ``tempfile`` for a path of its own."""
+    import ast
+    import glob
 
-    from sparkstreaming_realtime_spark import materialize as m
-    from sparkstreaming_realtime_spark.materialize import (
-        ensure_checkpoint_dir,
-    )
-
-    orphan = tmp_path / "spark-graft-ckpt-killed"
-    orphan.mkdir()
-    stale = time.time() - 4 * 3600
-    os.utime(orphan, (stale, stale))
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    monkeypatch.setattr(m, "_STARTUP_SWEEP_DONE", False)
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is not None:  # isolate from other tests
-        _unset_checkpoint_dir(spark)
-    try:
-        ensure_checkpoint_dir(spark)
-        assert not orphan.exists()
-        assert m._STARTUP_SWEEP_DONE  # and only once per process
-    finally:
-        _unset_checkpoint_dir(spark)
+    banned = {"mkdtemp", "mkstemp", "gettempdir", "TemporaryDirectory"}
+    pkg = os.path.join(_REPO, "sparkstreaming_realtime_spark")
+    files = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    files.append(os.path.join(_REPO, "bench.py"))
+    sites = []
+    for path in files:
+        if path == os.path.join(pkg, "materialize.py"):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                fn, "id", None
+            )
+            if name in banned:
+                sites.append(f"{os.path.relpath(path, _REPO)}:{node.lineno}")
+    assert sites == [], sites
