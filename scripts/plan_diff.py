@@ -1,6 +1,6 @@
 """Normalized diff of the ``plans/r<N>/<query>_{before,after}.txt``
 captures: strips the session-dependent artifacts (expression ids,
-plan ids, lambda variable names, engine tmpdir timestamps,
+plan ids, lambda variable names, engine scratch paths,
 MapPartitionsRDD numbers, batch ids) and reports whether each pair is
 shape-identical. The optimization rounds' claim "this change alters
 no physical plan" is checked by exactly this normalization.
@@ -17,11 +17,20 @@ import os
 import re
 
 
+#: a path into an engine scratch dir, under any temp dir: the per-process
+#: root ``sparkgraft-<pid>-<starttime>`` (materialize.py) or the older
+#: ``spark-graft-*``/``spark_graft_*`` dirs, with the rest of the path
+_SCRATCH = re.compile(
+    r"(?:/[^\s,()\[\]/]+)*/(?:sparkgraft-\d+-\d+|spark[-_]graft[-_])"
+    r"[^\s,)\]]*"
+)
+
+
 def norm(path: str) -> str:
     t = open(path).read()
     t = re.sub(r"#\d+", "#N", t)  # expression ids
     t = re.sub(r"plan_id=\d+", "plan_id=N", t)
-    t = re.sub(r"/tmp/spark[-_]graft[-_][^\s,\)\]]*", "TMP", t)
+    t = _SCRATCH.sub("TMP", t)
     t = re.sub(r"spark-warehouse[^\s,\)\]]*", "WH", t)
     t = re.sub(r"cachedrdd-\d+", "cachedrdd-N", t)
     t = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[N]", t)

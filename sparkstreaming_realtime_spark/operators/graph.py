@@ -297,7 +297,7 @@ def link_prediction(
     aa_score) ordered by (common_n desc, aa_micro desc, node_a,
     node_b).
 
-    ``threshold_prune`` (PROBE_r12's residual-bottleneck fix): after
+    ``threshold_prune`` (the cost left once degrees are capped): after
     the ``max_degree`` cap, the cost is the (v, w) pair-shuffle —
     ~wedge-count nearly-distinct pairs that map-side combine cannot
     reduce. The served top-k admits an EXACT prune via the containment

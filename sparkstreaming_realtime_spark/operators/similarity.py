@@ -574,7 +574,7 @@ RH_TARGET_LOG_BUCKET = 4
 #: makes the candidate self-join quadratic in N — measured, not
 #: theorized: at ×100 corpus the 6×6-pinned LSH dedup cost ×422.6,
 #: fixed k=8 clustered SemDeDup ×155.8, the 6×6-pinned cluster∩band
-#: composition ×126.5 (PROBE_r08.json), vs ×9–×12 for the N-derived
+#: composition ×126.5 (scripts/scale_probe.py), vs ×9–×12 for the N-derived
 #: twins of the SAME operators. Below this bound a pinned config is
 #: harmless (the oracle-checked registry fixtures pin knobs for
 #: cross-engine reproducibility and stay ≤2k vectors); above it the
@@ -612,7 +612,7 @@ def _guard_fixed_knobs(n: int, detail: str) -> None:
         f"pinned scale knob on a {n:,}-row corpus "
         f"(> FIXED_KNOB_GUARD_N={FIXED_KNOB_GUARD_N:,}): {detail}. "
         "Candidate pairs grow quadratically at a fixed knob — "
-        "measured ×127–×423 cost at ×100 corpus (PROBE_r08.json). "
+        "measured ×127–×423 cost at ×100 corpus. "
         "Use the N-derived defaults (rows_per_band=None / "
         "k=auto_k_cells(n)) or pass allow_fixed_knobs=True if the "
         "quadratic cost is understood and bounded."
@@ -787,7 +787,7 @@ def rh_near_dup_pairs(
     reproducibility across engines) — but a pinned width on a corpus
     over :data:`FIXED_KNOB_GUARD_N` raises unless
     ``allow_fixed_knobs=True``, because the measured cost of that
-    exact mistake is ×422.6 at ×100 corpus (PROBE_r08.json).
+    exact mistake is ×422.6 at ×100 corpus (scripts/scale_probe.py).
     ``max_bucket`` hard-caps degenerate buckets (identical to the
     MinHash cap in dedup.near_dup_join)."""
     from ..materialize import materialize
@@ -1692,7 +1692,7 @@ def cluster_near_dup_pairs(
     n/k exceeds 4·:data:`AUTOK_CELL` on a corpus over
     :data:`FIXED_KNOB_GUARD_N` is an under-provisioned quantizer —
     Θ(N²/k) candidates (measured ×155.8 at ×100 corpus with fixed
-    k=8, PROBE_r08.json) AND, when ``max_cluster`` is set, most
+    k=8, scripts/scale_probe.py) AND, when ``max_cluster`` is set, most
     cells blow the cap and get dropped whole (a recall collapse, not
     just a cost blowup). Raises unless ``allow_fixed_knobs=True``;
     pass k=:func:`auto_k_cells`(n) centroids to stay in the
@@ -1795,7 +1795,7 @@ def cluster_banded_near_dup_pairs(
     :func:`rh_near_dup_pairs` — and like it, an explicitly pinned
     width on a corpus over :data:`FIXED_KNOB_GUARD_N` raises unless
     ``allow_fixed_knobs=True`` (the 6×6 pin measured ×126.5 at ×100
-    corpus, PROBE_r08.json; the cell term alone does not save a
+    corpus, scripts/scale_probe.py; the cell term alone does not save a
     pinned band width). A fixed CELL count is deliberately NOT
     guarded here: the band term is what keeps within-cluster work
     near-linear when a fixed quantizer meets growing N — that is

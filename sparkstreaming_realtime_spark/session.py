@@ -10,7 +10,10 @@ checkpoints, so no sidecar config exists here.
 Scale notes: AQE on (runtime coalesce + skew-join), shuffle
 partitions sized by env for local runs but left to the cluster
 manager on a real deployment, UTC session timezone pinned so results
-hash-match the DuckDB oracle.
+hash-match the DuckDB oracle. Spark turns AQE off for a stateful
+query's micro-batches; the stream bindings in streaming/pipelines.py
+give the ``foreachBatch`` writer this session's setting back for each
+call.
 
 Streaming checkpoints commit through Spark's
 ``FileSystemBasedCheckpointFileManager`` instead of the default

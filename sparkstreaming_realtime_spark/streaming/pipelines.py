@@ -97,6 +97,41 @@ def streaming_order_wide(
     return info.join(detail, cond, "inner").select(*info_cols, *detail_cols)
 
 
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def _writer_with_session_aqe(df: DataFrame, sink_fn):
+    """``sink_fn`` run with the starting session's AQE setting.
+
+    Spark turns AQE off in the session of every stateful query
+    (``MicroBatchExecution`` logs "AQE is not supported in stateful
+    workloads"), and the ``foreachBatch`` writer runs in that session,
+    so its own shuffles and writes would run at
+    ``spark.sql.shuffle.partitions`` tasks: a 500-row batch writes one
+    file per shuffle partition. By the time the writer is called,
+    ``ForeachBatchSink`` has already planned the stateful part as a
+    non-adaptive RDD with its fixed state partitioning, and the
+    writer's frame is a ``LogicalRDD`` over it. Setting AQE back for
+    the writer call alone therefore lets AQE plan only what the writer
+    adds (its shuffles, writes and the compaction beside them): a
+    small batch writes one task and one file, a large one keeps its
+    parallelism. The value comes from the session that starts the
+    query, so a session with AQE off keeps it off, and the batch
+    session's own value is restored after each call."""
+    aqe = df.sparkSession.conf.get(_AQE)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        conf = batch_df.sparkSession.conf
+        prev = conf.get(_AQE)
+        conf.set(_AQE, aqe)
+        try:
+            sink_fn(batch_df, batch_id)
+        finally:
+            conf.set(_AQE, prev)
+
+    return write
+
+
 def run_available_now(
     df: DataFrame, sink_fn, checkpoint: str, query_name: str = "q"
 ):
@@ -104,13 +139,19 @@ def run_available_now(
     write through ``sink_fn`` (foreachBatch), commit offsets in the
     checkpoint (S3/S4/K10 built in), then stop.
 
+    Spark runs a stateful query's micro-batches with AQE off; the
+    binding gives ``sink_fn`` the starting session's AQE setting back
+    for each call (see :func:`_writer_with_session_aqe`), so the
+    writer's own shuffles coalesce while the state keeps its fixed
+    partitioning.
+
     Under ``session.get_spark`` the checkpoint and state-store files
     commit through ``FileSystemBasedCheckpointFileManager``, whose
     rename forks no ``readlink`` on ``file:`` (see the session module
     docstring). A stock session keeps Spark's default manager: same
     results, more forked processes per batch."""
     return (
-        df.writeStream.foreachBatch(sink_fn)
+        df.writeStream.foreachBatch(_writer_with_session_aqe(df, sink_fn))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .queryName(query_name)
@@ -131,13 +172,14 @@ def run_processing_time(
     plan and state semantics to :func:`run_available_now` (the tests'
     bounded trigger); only the trigger differs, so everything the
     AvailableNow suites pin — cross-batch state, replay idempotency,
-    offset restore — holds verbatim under this binding. The checkpoint
-    commits through the same manager as :func:`run_available_now`
-    (``FileSystemBasedCheckpointFileManager`` under
-    ``session.get_spark``, Spark's default on a stock session). Returns
-    the running query; callers own ``awaitTermination``."""
+    offset restore — holds verbatim under this binding. The writer
+    gets the starting session's AQE setting back in the same way, and
+    the checkpoint commits through the same manager as
+    :func:`run_available_now` (``FileSystemBasedCheckpointFileManager``
+    under ``session.get_spark``, Spark's default on a stock session).
+    Returns the running query; callers own ``awaitTermination``."""
     return (
-        df.writeStream.foreachBatch(sink_fn)
+        df.writeStream.foreachBatch(_writer_with_session_aqe(df, sink_fn))
         .option("checkpointLocation", checkpoint)
         .trigger(processingTime=interval)
         .queryName(query_name)

@@ -480,10 +480,14 @@ def compact_additive(
                 return sub, keep + [m_rel], merge
             return sub, segs, []
         merged = tail_df
-        for s in prior:
-            merged = merged.unionByName(
-                spark.read.parquet(os.path.join(path, s))
-            )
+        if prior:
+            # a prior segment holds the fold's output: read it with that
+            # schema (analysis only), not with a schema-inference job
+            seg_reader = spark.read.schema(spec.fold(tail_df).schema)
+            for s in prior:
+                merged = merged.unionByName(
+                    seg_reader.parquet(os.path.join(path, s))
+                )
         _write_segment(path, out_rel, spec.fold(merged), spec)
         return sub, [out_rel], list(prior)
 

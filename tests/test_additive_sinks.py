@@ -243,16 +243,17 @@ def test_additive_sink_reads_its_one_shot_fold(spark, tmp_path, name):
     assert read(spark, path) == want
 
 
-def _jobs_since(spark, since: int) -> list[int]:
-    """Ungrouped job ids above ``since``, read once the listener bus
-    has caught up: a barrier job in a group of its own is submitted
-    last, and the tracker lists it only after every earlier job."""
+def _jobs_since(spark, since: int, group: str | None = None) -> list[int]:
+    """Ids above ``since`` of the jobs in job group ``group`` (None:
+    ungrouped), read once the listener bus has caught up: a barrier job
+    in a group of its own is submitted last, and the tracker lists it
+    only after every earlier job."""
     import time
     import uuid
 
     sc = spark.sparkContext
-    group = "barrier-" + uuid.uuid4().hex
-    sc.setJobGroup(group, "listener bus barrier")
+    barrier = "barrier-" + uuid.uuid4().hex
+    sc.setJobGroup(barrier, "listener bus barrier")
     try:
         spark.range(1).collect()
     finally:
@@ -260,13 +261,15 @@ def _jobs_since(spark, since: int) -> list[int]:
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
     deadline = time.time() + 60
-    while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
+    while not tracker.getJobIdsForGroup(barrier) and time.time() < deadline:
         time.sleep(0.05)
-    return sorted(j for j in tracker.getJobIdsForGroup() if j > since)
+    return sorted(j for j in tracker.getJobIdsForGroup(group) if j > since)
 
 
-#: Spark jobs one ``write`` launches: (batch 1, which does not compact,
-#: batch 2, which folds batches 0-1 at compact_every=2).
+#: Spark jobs one ``write`` launches: (a batch that does not compact, a
+#: batch that folds the two before it at compact_every=2). Batches 1 and
+#: 3 are plain; batch 2 runs the first fold, batch 4 the second, which
+#: also reads the first fold's segment and costs no more.
 JOB_BUDGET = {
     "bm25": (6, 15),
     "copurchase": (8, 17),
@@ -286,15 +289,45 @@ JOB_BUDGET = {
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_additive_sink_jobs_per_batch(spark, tmp_path, name):
-    """Jobs per ``write`` on a plain batch and on a compacting batch
-    stay at the pinned budget."""
+    """Jobs per ``write`` on plain batches and on compacting batches
+    stay at the pinned budget, the second fold included."""
     make, batch, _read, _one_shot = CASES[name]
     sink = make(str(tmp_path / name))
-    frames = [batch(spark, b) for b in range(3)]
+    frames = [batch(spark, b) for b in range(5)]
     sink(frames[0], 0)
     got = []
-    for b in (1, 2):
+    for b in (1, 2, 3, 4):
         mark = max(_jobs_since(spark, -1), default=-1)
         sink(frames[b], b)
         got.append(len(_jobs_since(spark, mark)))
-    assert tuple(got) == JOB_BUDGET[name]
+    assert tuple(got) == JOB_BUDGET[name] * 2
+
+
+@pytest.mark.parametrize("name", ["idempotent", "rollup_sum"])
+def test_streamed_batch_stays_within_the_job_budget(spark, tmp_path, name):
+    """A batch of a stateful query, written through the stream binding,
+    launches the plain-batch figure of :data:`JOB_BUDGET`: Spark runs
+    the query's batches with AQE off, and the binding gives the writer
+    the session's AQE back. The staged stream passes a stateful dedup
+    first; a stateless query keeps AQE on by itself."""
+    from sparkstreaming_realtime_spark.plans.queries import (
+        _drain,
+        _staged_stream,
+    )
+
+    _make, batch, _read, _one_shot = CASES[name]
+    rows = batch(spark, 0)
+    for b in range(1, 4):
+        rows = rows.unionByName(batch(spark, b))
+    root = str(tmp_path / name)
+    store = f"{root}/store"
+    # four batches stay below the default cadence: none compacts
+    sink = (sinks.idempotent_parquet_sink(store, key_cols=("k",))
+            if name == "idempotent"
+            else sinks.rollup_sum_sink(store, ("k",), "v"))
+    stream = _staged_stream(spark, rows, root).dropDuplicates()
+    q = _drain(stream, sink, name)
+    n_batches = len([p for p in q.recentProgress if p["numInputRows"]])
+    jobs = _jobs_since(spark, -1, group=str(q.runId))
+    assert n_batches == 4
+    assert len(jobs) == n_batches * JOB_BUDGET[name][0]

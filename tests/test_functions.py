@@ -113,7 +113,7 @@ def test_cosine_similarity(spark):
 
 
 def test_vector_expr_fast_path_bit_equals_lambda_path(spark):
-    """The one-``F.expr``-call fast path (r15 — plan-build cost only)
+    """The one-``F.expr``-call fast path (it saves plan-build cost only)
     must produce BIT-identical doubles to the lambda-HOF path for
     every vector function, on double and float arrays alike: same
     zip-then-fold shape, same left-to-right accumulation order. A

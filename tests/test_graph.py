@@ -44,7 +44,7 @@ def test_pagerank_is_partitioning_independent(spark):
     assert len(ra) == len({s for s, _ in edges})
 
 def test_order_graph_supplier_namespace_disjoint_on_scaled_fixtures(spark):
-    """r10 ADVICE regression: the order-graph query namespaces
+    """The order-graph query namespaces
     suppliers by NEGATION (s = -l_suppkey - 1), never by adding an
     offset — make_scaled offsets copy i's keys by i * BASE
     (1_000_000_000), so an additive supplier offset equal to BASE

@@ -479,9 +479,8 @@ def test_assign_cell_scored_matches_assign_cell_and_driver_math(spark):
 
 
 def test_ivf_search_plan_has_no_corpus_aggregate(spark, tmp_path):
-    """The r3 review flagged per-query centroid recomputation (a
-    full-corpus aggregate on the query path). Pin the fix: the serving
-    plan reads the persisted centroid table — it contains NO aggregate
+    """No per-query centroid recomputation (a full-corpus aggregate
+    on the query path): the serving plan reads the persisted centroid table — it contains NO aggregate
     node at all, and the corpus join is broadcast on the routed cells."""
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0], 0) for i in range(20)],
@@ -801,7 +800,7 @@ def test_auto_lsh_params_track_corpus_size():
 
 
 def test_auto_lsh_banding_keeps_candidate_growth_subquadratic(spark):
-    """The r4 scale-probe finding, pinned: at x10 corpus size the
+    """At x10 corpus size the
     LSH candidate-pair count with AUTO banding must grow ~linearly
     (<= ~3x per row, i.e. <= 30x total), where the old fixed 4-bit
     default grew quadratically (~100x). Deterministic pseudo-random
@@ -1413,7 +1412,7 @@ def test_connected_components_strategies_agree(spark):
 
 def test_connected_components_self_loops_dropped_consistently(spark):
     """Self-loop pairs (a == b) carry no component information, and
-    before r7 the three physical strategies DISAGREED on them: the
+    the three physical strategies once DISAGREED on them: the
     driver union-find emitted a self-loop-only node, while star
     contraction filters node != nbr and dropped it. They are now
     stripped once at entry, so every strategy returns the same node
@@ -1438,7 +1437,7 @@ def test_connected_components_self_loops_dropped_consistently(spark):
 
 
 def test_connected_components_long_chain_star_contraction(spark):
-    """The diameter pathology (PERF.md known limit, closed r6): a
+    """The diameter pathology (a PERF.md known limit, now closed): a
     10k-node PATH graph has diameter 9999, so min-label propagation
     with pointer jumping needs ~log2(10k) ≈ 14 rounds — and with
     max_iters=10 the old loop burned its whole budget and returned
@@ -2185,7 +2184,7 @@ def test_exact_substr_short_docs_pass_through(spark):
 def test_line_dedup_family_drops_null_text_consistently(spark):
     """NULL text must vanish from BOTH line operators the same way —
     line_dedup's posexplode drops it structurally; intra_line_dedup
-    now filters it explicitly (r8 ADVICE: it used to emit a
+    now filters it explicitly (it used to emit a
     (doc_id, NULL, NULL, NULL) row its sibling and the DuckDB unnest
     oracle never produce)."""
     docs = _docs(spark, [(1, "x\nx"), (2, None), (3, "y")])
@@ -2321,7 +2320,7 @@ def test_semantic_decontaminate_guards_pinned_width_at_scale(spark):
 
 
 def test_semantic_decontaminate_honors_custom_vec_col(spark):
-    """r10 ADVICE regression: vec_col must thread through to the LSH
+    """vec_col must thread through to the LSH
     bucketing, not just the exact-cosine verify — the frames here
     have NO 'embedding' column at all, so a stale hardcode in
     rh_band_buckets would raise AnalysisException instead of
@@ -2350,7 +2349,7 @@ def test_semantic_decontaminate_honors_custom_vec_col(spark):
 
 
 def test_bm25_scores_are_partitioning_independent(spark):
-    """r10 ADVICE regression: per-term scores quantize to integer
+    """Per-term scores quantize to integer
     micro-units BEFORE the per-doc sum, so the 4dp score cannot flip
     with Spark's partial-aggregation combine order — the same corpus
     through different physical partitionings must produce identical
@@ -2495,7 +2494,7 @@ def test_kmv_grouped_matches_per_group_single_sketches(spark):
 
 
 def test_cluster_banded_pairs_honor_custom_vec_col(spark):
-    """Same bug class as the semantic_decontaminate r10 ADVICE: the
+    """Same bug class as the semantic_decontaminate vec_col test: the
     cell∩band candidate generator exposes vec_col and must thread it
     into BOTH the cell assignment and the LSH bucketing — frames here
     have no 'embedding' column at all."""
@@ -2666,7 +2665,7 @@ def test_key_skew_profile_hand_computed(spark):
 
 
 def test_key_skew_profile_requires_exactly_one_input(spark):
-    """ADVICE r12: both df and counts (or neither) must fail loudly
+    """Both df and counts (or neither) must fail loudly
     up front, not with an AttributeError deep in the plan builder."""
     import pytest
 
@@ -2821,7 +2820,7 @@ def test_split_leakage_report_counts_crossings(spark):
 
 
 def test_split_leakage_report_rejects_empty_policies(spark):
-    """ADVICE r11: an empty policies dict is a caller error, not an
+    """An empty policies dict is a caller error, not an
     AttributeError on None deep in the plan builder."""
     import pytest
 

@@ -1,6 +1,6 @@
 """Physical-plan regression tests: pin the plan *shapes* the 100 TB
 design depends on, so a refactor can't silently reintroduce a
-scale-killer (VERDICT r1: unpartitioned window, forced broadcasts).
+scale-killer (an unpartitioned window, a forced broadcast).
 
 These assert on `explain("formatted")` output — cheap, no execution.
 """
@@ -199,8 +199,8 @@ def test_warehouse_day_slice_prunes_partitions(spark, sf_dir):
 def test_docs_registry_count_matches_live():
     """The registry count in README/COVERAGE/PERF must track the live
     ``queries()`` length — the count is the first credibility check a
-    reviewer runs against the registry, and it drifted silently in
-    r6 (docs said 138, live was 139). Each doc carries exactly one
+    reviewer runs against the registry, and it has drifted silently
+    before (docs said 138, live was 139). Each doc carries exactly one
     sentinel phrase this test greps."""
     import re
 
@@ -256,7 +256,7 @@ def test_gate_window_order_is_pinned():
 
 
 def test_rollup_window_queries_aggregate_before_windowing(spark, sf_dir):
-    """The r11 time-series claims, pinned: in revenue_rolling_windows
+    """The time-series plan shapes, pinned: in revenue_rolling_windows
     and revenue_anomaly_days the Window node must sit ABOVE a
     HashAggregate (facts aggregate FIRST; plans print top-down, so
     the aggregate appears after the window in the text) — a refactor

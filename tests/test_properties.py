@@ -56,7 +56,7 @@ def test_hash60_spark_matches_python_reference(spark, strings):
 @settings(max_examples=50, deadline=None)
 @given(TEXT)
 def test_token_alphabet_python_equals_duckdb(s):
-    """One token alphabet (ADVICE r1): the Python query-side tokenizer
+    """One token alphabet: the Python query-side tokenizer
     and the DuckDB oracle regex agree on arbitrary text.
 
     Known boundary (found by this fuzzer, twice): the two engines ship
@@ -360,7 +360,7 @@ def test_star_contraction_agrees_with_union_find(spark, edge_list):
 
 
 def test_components_budget_fuzz_all_strategies_agree(spark):
-    """Budget fuzz (r7 verdict item 6): the r7 bug class was
+    """Budget fuzz: the bug class this pins is
     strategy divergence under odd caller-supplied budgets —
     `_star_contraction_labels` returned partial labels when
     `max_iters` exhausted before the fixpoint. This pins the

@@ -1,8 +1,7 @@
-"""Data-shape robustness for the driver tables (the r1+r2 blocker
-class): every temporal column must read correctly whatever parquet
-timestamp encoding the driver's regeneration picked — TIMESTAMP(NANOS)
-(r1), plain timestamp[us] → TIMESTAMP_NTZ under Spark 4 (r2), or
-native TIMESTAMP — via ``sources.files.read_table``'s schema dispatch.
+"""Data-shape robustness for the driver tables: every temporal column
+must read correctly whatever parquet timestamp encoding the driver's
+regeneration picked — TIMESTAMP(NANOS), plain timestamp[us] →
+TIMESTAMP_NTZ under Spark 4, or native TIMESTAMP — via ``sources.files.read_table``'s schema dispatch.
 """
 
 from __future__ import annotations
@@ -57,7 +56,7 @@ def test_temporal_encodings_normalize(spark, tmp_path, table, col, unit):
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
 def test_normalize_pins_utc_under_non_utc_session(spark, tmp_path, unit):
-    """ADVICE r3: the UTC session-tz pin must fire for EVERY to_ltz
+    """The UTC session-tz pin must fire for EVERY to_ltz
     shape — the nanos-as-long branch included (streaming callers reach
     _normalize_temporal via events_with_ts without read_table's pin).
     Under a non-UTC session tz, date_format over the normalized column

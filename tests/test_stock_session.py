@@ -1,15 +1,15 @@
-"""Environment-coupling regression gate (VERDICT r1 + r2).
+"""Environment-coupling regression gate.
 
-Both round blockers were the same failure class: the engine worked on
-`get_spark()`'s carefully-configured session but broke on the driver
-harness's *stock* session + regenerated parquet (r1: TIMESTAMP(NANOS)
-needing `nanosAsLong`; r2: plain timestamp[us] read as TIMESTAMP_NTZ
-breaking `unix_millis`). This test launches a SUBPROCESS (a fresh JVM
+The failure class it pins: an engine that works on `get_spark()`'s
+carefully-configured session but breaks on the driver harness's
+*stock* session + regenerated parquet (TIMESTAMP(NANOS) needing
+`nanosAsLong`; plain timestamp[us] read as TIMESTAMP_NTZ breaking
+`unix_millis`). This test launches a SUBPROCESS (a fresh JVM
 — `getOrCreate()` in-process would just reuse the configured test
 session) that builds a vanilla `SparkSession` and runs one
 oracle-checked smoke query per module family through
-`scripts/check_oracle.py --stock`, including every query the r2 NTZ
-bug broke. Full-registry value parity is covered by the non-stock
+`scripts/check_oracle.py --stock`, including every query that the
+TIMESTAMP_NTZ read broke. Full-registry value parity is covered by the non-stock
 gate; this pins that no query *depends* on `get_spark`'s confs.
 """
 
@@ -21,19 +21,19 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# one per module family + the full r2 NTZ-failure set
+# one per module family + every query the TIMESTAMP_NTZ read broke
 SMOKE = [
     # plans/queries.py (events ts path + TPC-H + ES-style)
     "dau_by_hour",
     "pricing_summary",
     "get_by_id",
-    # log_queries / operators/log_split.py — the r2 NTZ family
+    # log_queries / operators/log_split.py — a TIMESTAMP_NTZ family
     "log_split_error",
     "log_split_page",
     "log_split_displays",
     "log_split_actions",
     "log_split_start",
-    # cdc_queries / operators/cdc.py — the r2 NTZ family
+    # cdc_queries / operators/cdc.py — a TIMESTAMP_NTZ family
     "cdc_route_counts",
     "cdc_fact_rows",
     "cdc_dim_snapshot",
@@ -48,13 +48,13 @@ SMOKE = [
     "emb_ivf_multiprobe_topk",
     # warehouse round-trip on a stock session
     "dau_warehouse_day_slice",
-    # r5 additions: maintenance/layout/gate paths run FS + swap +
+    # maintenance/layout/gate paths run FS + swap +
     # bit-arithmetic code that must not depend on get_spark confs
     "events_quality_expectations",
     "zordered_two_dim_lookup",
     "warehouse_compaction_roundtrip",
     "emb_ivf_append_topk",
-    # r6 additions: compacted-index serving (store fold + manifest),
+    # compacted-index serving (store fold + manifest),
     # the resize mapInPandas path, and the streaming gate's
     # foreachBatch routing — all stock-session-sensitive surfaces
     "emb_ivf_compact_topk",

@@ -245,6 +245,67 @@ def test_dau_drain_checksums_state_and_restarts_without_replay(spark, tmp_path):
     assert [m for _, ms in seen for m in ms] == ["m4"]
 
 
+def test_dau_drain_writer_plans_adaptively_state_does_not(spark, tmp_path):
+    """Spark runs a stateful query's micro-batches with AQE off; the
+    binding gives the writer the starting session's setting back, so a
+    small DAU batch writes one file per ``dt`` dir instead of one per
+    shuffle partition. The state keeps ``spark.sql.shuffle.partitions``
+    partitions and a non-adaptive plan, a restart runs only new batch
+    ids, and a query started from a session with AQE off keeps it off."""
+    aqe = "spark.sql.adaptive.enabled"
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    def entries(batch: int) -> list[dict]:
+        return [{"mid": f"m{batch}_{i}", "last_page_id": None,
+                 "page_id": "home", "event_time": f"2024-01-0{1 + i % 2} 08:00:00"}
+                for i in range(60)]
+
+    _write_jsonl(f"{src}/b1.json", seq=1, rows=entries(1))
+    _write_jsonl(f"{src}/b2.json", seq=2, rows=entries(2))
+    seen: list[tuple[int, str]] = []
+
+    def drain(session, sink_out: str, ckpt_dir: str):
+        inner = idempotent_parquet_sink(sink_out, key_cols=("mid", "dt"))
+
+        def sink(bdf, bid):
+            seen.append((bid, bdf.sparkSession.conf.get(aqe)))
+            inner(bdf, bid)
+
+        stream = file_stream(session, src, PAGE_SCHEMA, max_files_per_trigger=1)
+        q = run_available_now(streaming_dau_dedup(stream), sink, ckpt_dir)
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+        return q
+
+    q = drain(spark, out, ckpt)
+    assert seen == [(0, "true"), (1, "true")]
+    assert spark.conf.get(aqe) == "true"
+    dt_dirs = [os.path.join(out, f"batch={b}", d)
+               for b in (0, 1) for d in os.listdir(os.path.join(out, f"batch={b}"))
+               if d.startswith("dt=")]
+    assert len(dt_dirs) == 4
+    for d in dt_dirs:
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1, d
+    parts = os.listdir(os.path.join(ckpt, "state", "0"))
+    assert len([p for p in parts if p.isdigit()]) == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+    plan = q._jsq.explainInternal(False)
+    assert "Deduplicate" in plan and "AdaptiveSparkPlan" not in plan
+    assert sorted(r["mid"] for r in read_sink(spark, out).collect()) == sorted(
+        r["mid"] for b in (1, 2) for r in entries(b))
+
+    _write_jsonl(f"{src}/b3.json", seq=3, rows=entries(3))
+    seen.clear()
+    drain(spark, out, ckpt)
+    assert seen == [(2, "true")]
+
+    off = spark.newSession()
+    off.conf.set(aqe, "false")
+    seen.clear()
+    drain(off, str(tmp_path / "out_off"), str(tmp_path / "ckpt_off"))
+    assert seen == [(0, "false"), (1, "false"), (2, "false")]
+
+
 def test_idempotent_sink_replay_overwrites(spark, tmp_path):
     """T5: replaying the same batch id must not duplicate output —
     the engine analog of ES doc-id overwrites (MyEsUtils.scala:47)."""

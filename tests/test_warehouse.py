@@ -41,8 +41,8 @@ def test_partition_pruning_skips_other_days(spark, tmp_path):
 
 def test_partition_values_lists_days_without_scanning(spark, tmp_path):
     """partition_values answers "which days exist?" from the partition
-    DIRECTORY names — the metadata-only day lookup that replaced the
-    r3-flagged second scan of events in dau_warehouse_day_slice."""
+    DIRECTORY names — the metadata-only day lookup, so
+    dau_warehouse_day_slice does not scan events a second time."""
     from sparkstreaming_realtime_spark.sources.warehouse import (
         partition_values,
     )
